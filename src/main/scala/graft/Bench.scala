@@ -1,46 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
+import graft.tools.Measure
 
 /** Driver-run benchmark: one JSON line with per-query wall-clock at the
-  * SPARK_GRAFT_SF_DIR scale factor.
+  * SPARK_GRAFT_SF_DIR scale factor, stamped with the host it ran on.
   *
-  * Each query gets one untimed warm-up run so the timed run measures
-  * steady-state engine throughput (whole-stage codegen compiled, JIT warm,
-  * parquet footers cached) rather than single-JVM startup costs that a
-  * long-lived cluster never pays per-query.
+  * Each query runs through [[Measure.timed]]: untimed warm-ups so the
+  * timed runs measure steady-state engine throughput (whole-stage codegen
+  * compiled, JIT warm, parquet footers cached) rather than single-JVM
+  * startup costs that a long-lived cluster never pays per query, then
+  * the median of three timed runs with its min/max spread.
   */
 object Bench {
-  /** Materialize EVERY column of every row. A bare `count()` lets Catalyst
-    * prune unreferenced projections and eliminate final sorts, so map-only
-    * queries would time little more than the parquet scan; hashing a struct
-    * of all columns into one aggregate forces the full projection through
-    * codegen while still returning a single driver-side long (no collect).
-    * bit_xor, NOT sum: summing uniform 64-bit hashes overflows Long, which
-    * ANSI mode (Spark 4 default) turns into a query-aborting exception.
-    */
-  private def materialize(df: DataFrame): Unit = {
-    df.agg(bit_xor(xxhash64(struct(df.columns.map(col): _*)))).head()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_ONLY=q26_scored_tagger,q27_fuzzy_feedback limits the run
-    // for local iteration; the driver leaves it unset (full set)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val base = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val spark = Measure.session()
+    val base = Measure.selected
     // SPARK_GRAFT_ORDER=reverse|first:qNN[,qMM] reorders the run — the
     // diagnostic for "does a query's number depend on what ran before it"
     // (block churn / ordering pressure vs genuine cost): if a late query
@@ -56,78 +31,13 @@ object Bench {
       case other => sys.error(
         s"SPARK_GRAFT_ORDER must be sorted|reverse|first:<q,...>, got $other")
     }
-    // per-query: TWO untimed warm-up runs (the UDF-heavy tagger stages
-    // spend their first and often second execution inside C2 JIT
-    // compilation — measured 5-9s on run 2 vs 1.2-2s steady state), a GC
-    // point so neighbor cleanup doesn't bleed into the measurement, then
-    // THREE timed runs reported as the MEDIAN. Best-of-2 min hid a 41%
-    // no-code-change swing on the headline query between rounds (GC/JIT
-    // tail noise); the median is robust to a single slow outlier while
-    // not rewarding a single lucky fast run, and the min/max spread is
-    // emitted alongside so a reader can tell signal from noise.
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
-      // queries are contractually self-contained (they unpersist what they
-      // persist), but a single leftover cache entry pins EVERY later local
-      // checkpoint's blocks (the ContextCleaner stops reclaiming them
-      // while the CacheManager holds plans), so stray block buildup from
-      // one query would bleed into every following measurement
-      spark.catalog.clearCache()
-      (1 to 2).foreach { _ =>
-        try materialize(fn(spark, sfDir)) catch { case _: Throwable => }
-        // GC between runs lets the ContextCleaner release the previous
-        // construction's localCheckpoint blocks before the next run
-        System.gc()
-      }
-      // a query that throws must NOT report its time-to-exception as a
-      // fast success: any failed timed run poisons the result to -1.0,
-      // which is visible in BENCH output
-      val timed = (1 to 3).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        val ok =
-          try { materialize(fn(spark, sfDir)); true }
-          catch { case _: Throwable => false }
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
-      val failed = timed.contains(-1.0)
-      val sortedT = timed.sorted
-      val median = if (failed) -1.0 else sortedT(sortedT.size / 2)
-      (name, median, if (failed) -1.0 else sortedT.head,
-        if (failed) -1.0 else sortedT.last)
+      name -> Measure.timed(spark)(Measure.materialize(fn(spark, sfDir)))
     }
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    // MIN-MERGE IN PLACE (default): the committed bench_out.json is a
-    // per-query min across sessions; three rounds running, a fresh
-    // single-session run overwrote it in the worktree and a human had to
-    // restore the merge by hand. The writer now does the merge itself:
-    // read the existing artifact, keep the better (lower) median per
-    // query, widen the recorded spread, and carry forward queries this
-    // session didn't run (SPARK_GRAFT_ONLY subsets stay safe). Escapes:
-    //   SPARK_GRAFT_BENCH_FRESH=1          — ignore the existing file
-    //   SPARK_GRAFT_BENCH_REPLACE=qNN,qMM  — the engine-changed rule:
-    //     discard those queries' history (an engine change invalidates
-    //     old mins; merging would report the retired engine's number)
-    // A failed run (-1.0) always surfaces: it is never masked by a
-    // historical success for a query that was actually attempted.
-    val fresh = sys.env.get("SPARK_GRAFT_BENCH_FRESH").contains("1")
-    val replace = sys.env.get("SPARK_GRAFT_BENCH_REPLACE")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val (prevQ, prevS) =
-      if (fresh) (Map.empty[String, Double], Map.empty[String, (Double, Double)])
-      else try historyFor(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(outPath)), sfDir)
-      catch { case _: Throwable =>
-        (Map.empty[String, Double], Map.empty[String, (Double, Double)]) }
-    val all = minMerge(results, prevQ, prevS, replace)
-    val qs = all.map { case (k, med, _, _) => s"\"" + k + "\":" + med }
-      .mkString("{", ",", "}")
-    val spread = all
-      .map { case (k, _, mn, mx) => s"\"" + k + "\":[" + mn + "," + mx + "]" }
-      .mkString("{", ",", "}")
-    val total = if (all.nonEmpty) all.map(_._2).sum else 0.0
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"order":"$order","sf":"$sfDir","out":"$outPath"}"""
+    val json = line(results, Measure.host(spark),
+      Seq("order" -> order, "sf" -> sfDir, "out" -> outPath))
     // the driver captures only a truncated stdout tail, which in past
     // rounds cut the leading per-query numbers out of the committed
     // artifact — persist the full line to a file so every timing survives
@@ -138,91 +48,23 @@ object Bench {
     spark.stop()
   }
 
-  /** The min-merge itself: per ran query, keep the better (lower)
-    * median unless the query is in `replace` (engine-changed rule) or
-    * this session FAILED it (-1.0 always surfaces); widen the spread
-    * when history is kept; carry forward history for queries this
-    * session didn't run. Output sorted by name.
+  /** The bench's JSON line: the driver's `metric`/`value`/`queries`/
+    * `spread` keys, the `host` stamp, then `extra` string fields.
+    * `value` is the sum of the medians, or -1.0 when any query failed:
+    * adding a failed query's -1.0 to the sum would make a failure read
+    * as a faster total.
     */
-  private[graft] def minMerge(
-      results: Seq[(String, Double, Double, Double)],
-      prevQ: Map[String, Double],
-      prevS: Map[String, (Double, Double)],
-      replace: Set[String]): Seq[(String, Double, Double, Double)] = {
-    val ran = results.map { case (k, med, mn, mx) =>
-      val old = if (replace(k)) None else prevQ.get(k).filter(_ >= 0)
-      val merged =
-        if (med < 0) med                       // failure surfaces
-        else old.fold(med)(math.min(_, med))
-      val (smn, smx) = prevS.get(k) match {
-        case Some((omn, omx)) if old.isDefined && med >= 0 =>
-          (math.min(omn, mn), math.max(omx, mx))
-        case _ => (mn, mx)
-      }
-      (k, merged, smn, smx)
-    }
-    val ranKeys = ran.map(_._1).toSet
-    val carried = prevQ.toSeq
-      .filter { case (k, _) => !ranKeys(k) && !replace(k) }
-      .map { case (k, v) =>
-        val (mn, mx) = prevS.getOrElse(k, (v, v))
-        (k, v, mn, mx)
-      }
-    (ran ++ carried).sortBy(_._1)
-  }
-
-  /** The min-merge history carried by a prior artifact — PROVENANCE
-    * GATED: the artifact records which corpus ("sf") it was measured
-    * on; a prior run against a DIFFERENT scale factor at the same out
-    * path must not min-merge — the historical min would be a different
-    * workload's number and any engine slowdown on the current corpus
-    * would stay masked behind it. A mismatched or absent "sf" (the
-    * pre-provenance artifact format) parses to empty history, the same
-    * treatment a corrupt file gets. "order" is deliberately NOT gated:
-    * the SPARK_GRAFT_ORDER diagnostic reruns the SAME queries on the
-    * SAME corpus, so its mins are genuine floors of the same
-    * measurement and merging them is the diagnostic's purpose.
-    */
-  private[graft] def historyFor(txt: String, sfDir: String)
-      : (Map[String, Double], Map[String, (Double, Double)]) = {
-    val sfRe = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r
-    val prevSf = sfRe.findFirstMatchIn(txt).map(_.group(1))
-    if (!prevSf.contains(sfDir)) {
-      if (prevSf.isDefined) System.err.println(
-        s"[bench] prior artifact is for sf=${prevSf.get}, current run " +
-          s"is sf=$sfDir — treating history as empty (no min-merge)")
-      (Map.empty[String, Double], Map.empty[String, (Double, Double)])
-    } else parsePrev(txt)
-  }
-
-  /** Parse a previous bench artifact's "queries" and "spread" objects.
-    * The format is this file's own output — flat name→number and
-    * name→[min,max] maps with no nested braces — so a two-regex scan is
-    * complete. Any malformed file parses to empty (treated as no
-    * history), never an exception: a corrupt artifact must not block a
-    * bench run.
-    */
-  private[graft] def parsePrev(
-      s: String): (Map[String, Double], Map[String, (Double, Double)]) = {
-    // tolerate python-json spacing ("key": { ... }) as well as this
-    // file's own compact output — past artifacts carry both forms
-    def obj(key: String): String = {
-      val m = ("\"" + key + "\"\\s*:\\s*\\{").r.findFirstMatchIn(s)
-      m.fold("") { mm =>
-        val start = s.indexOf('{', mm.start)
-        val end = s.indexOf('}', start)
-        if (end < 0) "" else s.substring(start + 1, end)
-      }
-    }
-    val num = "-?[0-9][0-9.eE+-]*"
-    val qRe = ("\"([^\"]+)\"\\s*:\\s*(" + num + ")").r
-    val sRe = ("\"([^\"]+)\"\\s*:\\s*\\[\\s*(" + num + ")\\s*,\\s*(" + num + ")\\s*\\]").r
-    val qs = qRe.findAllMatchIn(obj("queries"))
-      .flatMap(m => m.group(2).toDoubleOption.map(m.group(1) -> _)).toMap
-    val sp = sRe.findAllMatchIn(obj("spread"))
-      .flatMap(m => for {
-        a <- m.group(2).toDoubleOption; b <- m.group(3).toDoubleOption
-      } yield m.group(1) -> (a, b)).toMap
-    (qs, sp)
+  private[graft] def line(results: Seq[(String, Measure.Timing)], host: String,
+      extra: Seq[(String, String)]): String = {
+    val qs = results.map { case (k, t) => s"${Measure.jsonString(k)}:${t.median}" }
+      .mkString("{", ",", "}")
+    val spread = results
+      .map { case (k, t) => s"${Measure.jsonString(k)}:[${t.min},${t.max}]" }
+      .mkString("{", ",", "}")
+    val total =
+      if (results.exists(_._2.failed)) -1.0 else results.map(_._2.median).sum
+    val rest = extra.map { case (k, v) =>
+      s",${Measure.jsonString(k)}:${Measure.jsonString(v)}" }.mkString
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"host":$host$rest}"""
   }
 }

@@ -356,7 +356,7 @@ object Bpe {
 
   /** The trigram-unit weighted vocabulary, collected (bounded — the
     * dimension-collect rule; units are corpus-sublinear like words).
-    * Shared by q122 and [[graft.tools.BpeDeepBench]].
+    * Used by q122.
     */
   private[graft] def triVocab(s: SparkSession, dir: String): Seq[(String, Long)] =
     triVocabDf(s, dir)

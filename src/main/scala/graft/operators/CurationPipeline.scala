@@ -88,7 +88,7 @@ object CurationPipeline {
     stageDir match {
       case None =>
         // per-stage call-site tag: all six pins otherwise share one
-        // localCheckpoint line and StageProfile's attribution collapses
+        // localCheckpoint line and the call-site attribution collapses
         // into a single bucket (the round-13 profiling blind spot)
         val sc = s.sparkContext
         sc.setCallSite(s"$qtag:$stage localCheckpoint")
@@ -272,7 +272,7 @@ object CurationPipeline {
     // CpuSpread.byKey restoring the width (q115 8.7→8.2, q131 9.1→7.9
     // — but q137's in-session bench cost rose ~+2.5 s reproducibly
     // across three paired sessions, unattributable by solo-run
-    // StageProfile, which measured the opposite). The keyed⋈firsts
+    // call-site profile, which measured the opposite). The keyed⋈firsts
     // shape stays until a quieter host can adjudicate the poisoned
     // rung; the duplicated exactKeyCol pass it pays is ~0.7% of the
     // capstone (ps1 in plans/r16/q137_stageprofile_*).
@@ -495,7 +495,7 @@ object CurationPipeline {
     // collect_list(when(mightContain...)) projection inside one per-doc
     // aggregate, confirm join over the collected candidates — was built
     // to stop the two consumers below re-evaluating the shingle subtree
-    // twice. StageProfile showed the stage's exec time DOUBLING (q137
+    // twice. The call-site profile showed the stage's exec time DOUBLING (q137
     // ps4 5.6 -> 10.8 exec-s): the per-doc ObjectHashAggregate
     // (list building, two final aggregate evaluations over the shared
     // exchange) costs more than the duplicated split+trigram+distinct

@@ -91,7 +91,7 @@ object TextAnalysis {
     // vocab, scoring — duplicate the tokenize subtree, but they run as
     // CONCURRENT single-job branches, and at bench scale that beats a
     // serialized pin job by ~0.3 s (measured both ways this round;
-    // Repeat steady-state: lazy 1.15 s vs all-pinned 1.55 s / one-pin
+    // steady-state repeat runs: lazy 1.15 s vs all-pinned 1.55 s / one-pin
     // 1.40 s on q111). The FROZEN-model path, which must pin the model
     // anyway and scores eagerly, uses [[lmModelWords]] — there the pin
     // is free and the pass reduction is pure win (q118 0.72x).

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for a list of queries to files.
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>
   * Writes <outDir>/<query>_<suffix>.txt for each query, one shared JVM.
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Measure.session()
     new File(outDir).mkdirs()
     for (name <- names.split(",")) {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -42,9 +42,6 @@ import graft.SparkEntry
   */
 object ScaleBench {
 
-  private def materialize(df: DataFrame): Unit =
-    df.agg(bit_xor(xxhash64(struct(df.columns.map(col): _*)))).head()
-
   private val rotQueries = Seq("q26_scored_tagger", "q27_fuzzy_feedback",
     // boilerplate extraction: the native expression is per-row map-side
     // (the only exchange is the output sort), so the curve must track
@@ -265,15 +262,7 @@ object ScaleBench {
     val workDir = if (args.length > 2) args(2) else "/tmp/graft-scale"
     val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "1,2,4,8")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
 
     val docs = spark.read.parquet(s"$baseDir/documents.parquet")
       .select("doc_id", "text", "lang", "source", "n_chars")
@@ -492,31 +481,10 @@ object ScaleBench {
       (rotDir, sufDir, chnDir, skwDir, zpfDir, dnsDir)
     }
 
-    // one untimed warm-up then SPARK_GRAFT_SCALE_REPEATS (default 3)
-    // timed runs reported as the MEDIAN by default: a min-of-2 first cut
-    // produced non-monotonic curves (single GC/JIT outliers at one
-    // factor masked the shape), and the curve SHAPE across factors is
-    // the whole point of this harness. SPARK_GRAFT_SCALE_STAT=min
-    // switches to the minimum — the floor statistic for curving a
-    // HOST-NOISE-dominated family (q26's repeat envelope spans 3.7×:
-    // the median tracks the noise, the min tracks the engine).
-    val repeats = sys.env.get("SPARK_GRAFT_SCALE_REPEATS")
-      .map(_.trim.toInt).getOrElse(3)
-    val useMin = sys.env.get("SPARK_GRAFT_SCALE_STAT").contains("min")
-    def time(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
-      spark.catalog.clearCache() // see Bench: stray cache pins checkpoint blocks
-      try materialize(fn(spark, dir)) catch { case _: Throwable => return -1.0 }
-      val t = (1 to repeats).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        try { materialize(fn(spark, dir)); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
-      }
-      if (t.contains(-1.0)) -1.0
-      else if (useMin) t.min
-      else t.sorted.apply(t.size / 2)
-    }
-
+    // every point is Bench's statistic, the median of Measure.timed: a
+    // min-of-2 first cut produced non-monotonic curves (single GC/JIT
+    // outliers at one factor masked the shape), and the curve SHAPE
+    // across factors is the whole point of this harness.
     // SPARK_GRAFT_SCALE_ONLY=key1,key2 limits the run to those result
     // keys (chain mode's key is q48_dedup_clusters_star_chain) — for
     // adding one family's curve without re-timing the whole set
@@ -598,29 +566,22 @@ object ScaleBench {
           ("q141_history_fold_major", "__histfoldmaj__", rotDir)))
         .filter { case (key, _, _) => only.forall(_.contains(key)) }
         .foreach { case (key, q, d) =>
-          // the lake-mode pair needs per-run stage-root control the
-          // generic harness has no seam for: WRITE times a run whose
-          // stage root is cleared before every execution (in-engine
-          // cost + the snapshot writes), RESUME times a run whose
-          // snapshots are all fresh (every stage served from parquet)
+          // the lake-mode pair sets the stage root per run through the
+          // loop's prepare hook: WRITE times a run whose stage root is
+          // cleared before every execution (in-engine cost + the
+          // snapshot writes), RESUME times a run whose snapshots are
+          // all fresh (every stage served from parquet)
           def timeLake(resume: Boolean): Double = {
             val stage = s"$workDir/x$n-lakestage"
             System.setProperty("graft.stage.dir", stage)
             try {
               val fn = SparkEntry.queries("q115_full_curation")
-              def once(clear: Boolean): Double = {
-                if (clear) graft.core.Lake.deleteTree(stage)
-                spark.catalog.clearCache()
-                System.gc()
-                val t0 = System.nanoTime()
-                try { materialize(fn(spark, d)); (System.nanoTime() - t0) / 1e9 }
-                catch { case _: Throwable => -1.0 }
-              }
-              once(clear = true) // warm-up; leaves fresh snapshots
-              val t = (1 to repeats).map(_ => once(clear = !resume))
-              if (t.contains(-1.0)) -1.0
-              else if (useMin) t.min
-              else t.sorted.apply(t.size / 2)
+              // the first warm-up always starts cleared and leaves fresh
+              // snapshots for the resume leg
+              graft.core.Lake.deleteTree(stage)
+              Measure.timed(spark, prepare = () =>
+                if (!resume) graft.core.Lake.deleteTree(stage)
+              )(Measure.materialize(fn(spark, d))).median
             } finally System.clearProperty("graft.stage.dir")
           }
           // the fold pair drives a synthetic decision log whose FOLDED
@@ -648,26 +609,15 @@ object ScaleBench {
               (1 to 4).foreach(_ => addBatch())
               VersionedPointer.compactHistory(spark, log, keepLast = 0)
             }
-            def once(): Double = {
+            // the major leg folds its delta first so the timed merge
+            // sees the steady-state shape: one big chain + one minor
+            // (its first warm-up also collapses the chain)
+            Measure.timed(spark, prepare = { () =>
               (1 to 4).foreach(_ => addBatch())
-              // the major leg folds its delta first so the timed merge
-              // sees the steady-state shape: one big chain + one minor
               if (majorLeg)
                 VersionedPointer.compactHistory(spark, log, keepLast = 0)
-              spark.catalog.clearCache()
-              System.gc()
-              val t0 = System.nanoTime()
-              try {
-                VersionedPointer.compactHistory(spark, log, keepLast = 0,
-                  major = majorLeg)
-                (System.nanoTime() - t0) / 1e9
-              } catch { case _: Throwable => -1.0 }
-            }
-            once() // warm-up (the major warm-up also collapses the chain)
-            val t = (1 to repeats).map(_ => once())
-            if (t.contains(-1.0)) -1.0
-            else if (useMin) t.min
-            else t.sorted.apply(t.size / 2)
+            })(VersionedPointer.compactHistory(spark, log, keepLast = 0,
+              major = majorLeg)).median
           }
           val s =
             if (q == "__lakewrite__") timeLake(resume = false)
@@ -689,7 +639,7 @@ object ScaleBench {
                 else if (q == "__vidfeat__")
                   (sp, dd) => graft.operators.Clustering.videoFeatures(sp, dd)
                 else SparkEntry.queries(q)
-              time(fn, d)
+              Measure.timed(spark)(Measure.materialize(fn(spark, d))).median
             }
           results(key) = results.getOrElse(key, Seq.empty) :+ s
           println(f"[scale] x$n%-2d $key%-28s $s%8.2f s")
@@ -700,10 +650,17 @@ object ScaleBench {
       // slope: time(xMAX)/time(x1) relative to the MAXx linear ideal
       val rel = if (ts.head > 0 && ts.last > 0)
         (ts.last / ts.head) / (factors.last.toDouble / factors.head) else -1.0
-      s""""$q":{"sec":{$pts},"x${factors.last}_vs_linear":${f"$rel%.3f"}}"""
+      // growth per octave, t(2n)/t(n), keyed by 2n: the end-to-end ratio
+      // above averages a knee away, this shows which doubling has it
+      val octaves = factors.zip(ts).sliding(2).collect {
+        case Seq((a, ta), (b, tb)) if b == 2 * a =>
+          f"\"$b\":${if (ta > 0 && tb > 0) tb / ta else -1.0}%.3f"
+      }.mkString(",")
+      println(f"[scale] $q%-28s octaves {$octaves} x${factors.last}_vs_linear=$rel%.3f")
+      s""""$q":{"sec":{$pts},"x${factors.last}_vs_linear":${f"$rel%.3f"},"octave_growth":{$octaves}}"""
     }.mkString("{", ",", "}")
     val json =
-      s"""{"base":"$baseDir","factors":[${factors.mkString(",")}],"queries":$qJson}"""
+      s"""{"base":"$baseDir","factors":[${factors.mkString(",")}],"host":${Measure.host(spark)},"queries":$qJson}"""
     Files.writeString(Paths.get(outJson), json + "\n")
     println(json)
     spark.stop()
