@@ -9,21 +9,16 @@ import graft.tagger.{DrugTagger, LookupWaterfall}
 /** The C1 lookup waterfall over a STREAM of texts with a static broadcast
   * catalog (SURVEY §2.10's streaming demo shape).
   *
-  * The batch waterfall encodes leg short-circuiting with anti-joins whose
-  * right side derives from the stream — a stream-stream anti join, which
-  * Structured Streaming does not support. Here every leg joins the probe
-  * stream against the STATIC catalog independently (stream-static
-  * broadcast joins, all supported), and the per-probe short-circuit
-  * (exact beats prefix beats fuzzy for the same probe string — identical
-  * semantics, since a probe string's exact hit is a property of the
-  * static catalog, not of the batch) moves into the per-id state
-  * function, along with the (leg, score, probe_pos, key) top-1.
+  * The waterfall itself is the batch one: [[graft.tagger.LookupWaterfall
+  * .hits]] probes the static catalog's broadcast index in one narrow
+  * `mapPartitions`, which a streaming frame supports (only the batch
+  * path's eager checkpoint does not). The per-id state function keeps
+  * the (leg, score, probe_pos, key) top-1.
   */
 object TaggerStream {
 
-  final case class StreamHit(id: Long, probe: String, probe_pos: Int,
-      key: String, generic_name: String, atc_code: String, leg: Int,
-      score: Int)
+  final case class StreamHit(id: Long, probe_pos: Int, key: String,
+      generic_name: String, atc_code: String, leg: Int, score: Int)
   final case class StreamTag(id: Long, key: String, generic_name: String,
       atc_code: String, match_reason: String)
 
@@ -34,27 +29,10 @@ object TaggerStream {
   def tagStream(spark: SparkSession, texts: DataFrame, catalog: DataFrame,
       cfg: LookupWaterfall.Config = LookupWaterfall.Config()): DataFrame = {
     import spark.implicits._
-    val probes = DrugTagger.probeFrame(texts, cfg)
-    val cat = broadcast(catalog.select("key", "generic_name", "atc_code"))
-
-    val exact = probes.join(cat, col("probe") === col("key"))
-      .withColumn("leg", lit(1)).withColumn("score", lit(0))
-    val prefixCond = cfg.prefixMode match {
-      case "char" => col("key").startsWith(substring(col("probe"), 1, cfg.prefixLen)) &&
-        col("key") =!= col("probe")
-      case _ => col("key").startsWith(concat(col("probe"), lit(" ")))
-    }
-    val prefix = probes.join(cat, prefixCond)
-      .withColumn("leg", lit(2)).withColumn("score", length(col("key")))
-    val lev = levenshtein(col("probe"), col("key"), cfg.fuzzyMaxDist)
-    val fuzzy = probes.join(cat,
-        abs(length(col("probe")) - length(col("key"))) <= cfg.fuzzyMaxDist &&
-          lev >= 0 && col("key") =!= col("probe"))
-      .withColumn("leg", lit(3)).withColumn("score", lev)
-
-    val hits = exact.unionByName(prefix).unionByName(fuzzy)
-      .select(col("id"), col("probe"), col("probe_pos"), col("key"),
-        col("generic_name"), col("atc_code"), col("leg"), col("score"))
+    val hits = LookupWaterfall.hits(DrugTagger.probeFrame(texts, cfg),
+        catalog.select("key", "generic_name", "atc_code"), cfg)
+      .select(col("id"), col("probe_pos"), col("key"), col("generic_name"),
+        col("atc_code"), col("leg"), col("score"))
       .as[StreamHit]
 
     // flatMapGroupsWithState is used ONLY for arbitrary per-id logic in
@@ -67,15 +45,7 @@ object TaggerStream {
     hits.groupByKey(_.id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (id: Long, rows: Iterator[StreamHit], state: GroupState[Boolean]) =>
-          val all = rows.toList
-          // per-probe short-circuit: keep only the best leg per probe
-          val bestLegPerProbe = all.groupBy(_.probe).map {
-            case (p, hs) => p -> hs.map(_.leg).min
-          }
-          val surviving = all.filter(h => h.leg == bestLegPerProbe(h.probe))
-          surviving
-            .sortBy(h => (h.leg, h.score, h.probe_pos, h.key, h.generic_name))
-            .headOption
+          rows.minByOption(h => (h.leg, h.score, h.probe_pos, h.key, h.generic_name))
             .map(h => StreamTag(id, h.key, h.generic_name, h.atc_code, "matched"))
             .iterator
       }

@@ -1,26 +1,37 @@
 package graft.tagger
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
+
+import scala.collection.mutable
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.FuzzyLib
 
 /** The reference's core lookup pattern (SURVEY §2.9 C1): a prioritized
   * first-match-wins waterfall of exact -> prefix -> fuzzy catalog lookups
-  * (`lookup.py:223-306`), re-expressed set-oriented:
+  * (`lookup.py:223-306`), run the way the reference runs it — every
+  * probe string is looked up in an in-memory index of the catalog:
   *
-  *   - each leg is a broadcast join of the *remaining misses* (anti-join
-  *     chaining encodes the reference's short-circuit semantics — SURVEY
-  *     §7.4 risk 2: without explicit leg priority the results differ);
-  *   - the fuzzy leg therefore only ever sees the small residue, like the
-  *     reference's "fuzzy only on lookup misses" optimization
-  *     (`lookup.py:287-304`);
-  *   - candidate ranking is a row_number window over (leg, score, probe
-  *     position, key) — fully deterministic.
+  *   - the catalog is a dimension table (reference catalogs are
+  *     10^4–10^5 rows): it is collected once per call, built into a
+  *     `CatalogIndex` on the driver and broadcast;
+  *   - probe rows stream through ONE narrow `mapPartitions` with no
+  *     exchange, join or window: each distinct probe string of a
+  *     partition is looked up once — prefix only on an exact miss, fuzzy
+  *     only on a prefix miss, like the reference's "fuzzy only on lookup
+  *     misses" (`lookup.py:287-304`);
+  *   - the top-1 ranking of [[tag]] is a row_number window over (leg,
+  *     score, probe position, key) — fully deterministic.
   *
-  * At scale: the catalog side is always broadcast (reference catalogs are
-  * 10^4–10^5 rows); probes stream through three narrow joins with no
-  * repartition of the big side except the final per-id window (one shuffle
-  * on id).
+  * Strings compare as Spark compares them: lengths count code points,
+  * key order is `UTF8String.compareTo` and edit distance is
+  * `UTF8String.levenshteinDistance`.
   */
 object LookupWaterfall {
 
@@ -28,20 +39,19 @@ object LookupWaterfall {
     *                   `prefixLen` chars of the probe (q23 demo form);
     *                   "token": catalog key starts with `probe + " "`
     *                   (the reference's LIKE 'TOKEN %' fallback,
-    *                   `lookup.py:117-137`)
-    * @param fuzzyMode  "scan": levenshtein <= fuzzyMaxDist over the
-    *                   miss-residue x broadcast catalog nested loop with
-    *                   length-band + threshold-levenshtein pruning —
-    *                   right while the catalog broadcasts (reference
-    *                   catalogs are 10^4-10^5 rows);
-    *                   "blocked": SymSpell-style deletion-neighborhood
-    *                   equi-join (candidates share a <=d-deletion
-    *                   variant, then exact verify) — one shuffle on the
-    *                   variant key, no nested loop, the shape for
-    *                   catalogs too large to broadcast. IDENTICAL
-    *                   results to scan (lev(a,b) <= d iff the two
-    *                   deletion neighborhoods intersect; exact
-    *                   levenshtein verifies every candidate pair);
+    *                   `lookup.py:117-137`). Either is a range scan over
+    *                   the index's sorted keys.
+    * @param fuzzyMode  "scan": levenshtein <= fuzzyMaxDist against every
+    *                   key whose length is within fuzzyMaxDist of the
+    *                   probe's (the index's length buckets);
+    *                   "blocked": SymSpell-style candidates — the keys
+    *                   that share a <=fuzzyMaxDist-deletion variant with
+    *                   the probe (the index's variant map, built on
+    *                   first use in each executor JVM), each verified
+    *                   by exact levenshtein. IDENTICAL results to scan
+    *                   (lev(a,b) <= d iff the two deletion neighborhoods
+    *                   intersect), with fewer comparisons when the length
+    *                   buckets are crowded;
     *                   "ratio": the REFERENCE's fuzzy semantics
     *                   (`lookup.py:164-220`): rapidfuzz fuzz.ratio >=
     *                   fuzzyRatioMin, probes shorter than 4 chars never
@@ -88,34 +98,8 @@ object LookupWaterfall {
 
   /** Every leg hit (no top-1 ranking) — the candidate set the scoring
     * layer consumes (`tagger.py:728-771` collects all candidates before
-    * `select_best_candidate`). Anti-join chaining between legs still
-    * applies: later legs only fire for ids the earlier legs missed.
-    *
-    * Lifecycle: the probe frame is persisted for the duration of ONE
-    * eager materialization (it feeds five plan branches; an unpersisted
-    * UDF-derived probe frame is re-evaluated per branch — the dominant
-    * cost when probes come from the tagger's tokenization UDF), then
-    * unpersisted, so repeated calls in a long-lived session do not
-    * accumulate cached probe partitions. The materialized result is a
-    * local checkpoint: it frees itself via the ContextCleaner when the
-    * returned frame is dropped. (On a multi-executor cluster a lost
-    * executor invalidates local checkpoints; there, prefer a reliable
-    * `spark.sparkContext.setCheckpointDir` + `.checkpoint()` — the
-    * candidate frame is small, one row per (id, candidate).)
-    */
-  def allMatches(probes0: DataFrame, catalog: DataFrame,
-      cfg: Config = Config()): DataFrame = {
-    val probes = probes0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val all = legsUnion(probes, catalog, cfg)
-    val mat = all.localCheckpoint(eager = true)
-    probes.unpersist()
-    mat
-  }
-
-  /** The lazy three-leg union plan over an (ideally cached) probe frame.
-    * Callers that already manage probe persistence (ScoredTagger) use
-    * this directly to avoid a second materialization barrier.
+    * `select_best_candidate`): probe cols, then catalog cols (with
+    * `exact_only`), then leg and score.
     *
     * Waterfall granularity is the PROBE STRING, matching the reference:
     * `lookup.py:223-306` short-circuits exact -> prefix -> fuzzy per
@@ -124,142 +108,187 @@ object LookupWaterfall {
     * never reaches the fuzzy leg, but a *different* probe of the same id
     * still can — mixed exact + fuzzy candidate sets per id are the norm
     * (that is what feeds the fuzzy-correction feedback, tagger.py:884-896).
-    * The anti-join right sides are distinct matched strings (bounded by
-    * the broadcastable catalog's key universe), so AQE broadcasts them.
+    *
+    * Two optional boolean columns narrow the legs:
+    *   - catalog `exact_only`: only rows where it is false (not null)
+    *     enter the prefix and fuzzy legs, and only an exact hit on such a
+    *     row stops a probe's chain. The reference reaches mixture rows ONLY through
+    *     key equality (`WHERE UPPER(mixture_name) = ?` / `WHERE
+    *     component_key = ?`, tagger.py:788/341) — a separate table
+    *     outside the unified prefix/fuzzy lookup universe.
+    *   - probe `exact_probe`: unless false, the probe is an equality
+    *     lookup only (pipe-joined mixture component keys,
+    *     `tagger.py:327-360`) and never reaches the prefix or fuzzy legs.
+    *
+    * Lifecycle: one job collects the catalog, one eager local checkpoint
+    * materializes the hits; the probe frame is read once. The broadcast
+    * index is destroyed once the checkpoint holds the result, and the
+    * checkpoint frees itself via the ContextCleaner when the returned
+    * frame is dropped. (On a multi-executor cluster a lost executor
+    * invalidates local checkpoints; there, prefer a reliable
+    * `spark.sparkContext.setCheckpointDir` + `.checkpoint()` — the
+    * candidate frame is small, one row per (id, candidate).)
     */
-  private[tagger] def legsUnion(probes: DataFrame, catalog: DataFrame,
+  def allMatches(probes: DataFrame, catalog: DataFrame,
       cfg: Config = Config()): DataFrame = {
-    // an optional boolean `exact_only` column restricts rows to the exact
-    // leg: the reference reaches mixture rows ONLY through key equality
-    // (`WHERE UPPER(mixture_name) = ?` / `WHERE component_key = ?`,
-    // tagger.py:788/341) — they are a separate table outside the
-    // unified prefix/fuzzy lookup universe
-    val hasExactOnly = catalog.columns.contains("exact_only")
-    val cat0 =
-      if (hasExactOnly) catalog
-      else catalog.withColumn("exact_only", lit(false))
-    val cat = broadcast(cat0)
-    // without the column the two sides are identical — reuse ONE
-    // broadcast instead of re-executing the catalog subplan (q26's demo
-    // catalog is a scan+distinct shuffle; computing it twice measurably
-    // regressed the bench)
-    val catFuzzy =
-      if (hasExactOnly) broadcast(cat0.filter(!col("exact_only"))) else cat
-
-    val exact = probes.join(cat, col("probe") === col("key"))
-      .withColumn("leg", lit(1)).withColumn("score", lit(0))
-
-    // the probe-side mirror of exact_only: an optional boolean
-    // `exact_probe` column marks probes that exist ONLY as equality
-    // lookups in the reference (pipe-joined mixture component keys,
-    // `tagger.py:327-360` WHERE component_key = ?) — they never enter
-    // the prefix or fuzzy legs against the generics universe
-    val unifiedProbes =
-      if (probes.columns.contains("exact_probe"))
-        probes.filter(!col("exact_probe"))
-      else probes
-    // the miss-chain tracks the UNIFIED lookup only: an exact hit on an
-    // exact_only (mixture) row is a separate-table lookup in the
-    // reference and must NOT stop the probe from running the prefix and
-    // fuzzy legs against the generics universe
-    val missExact = unifiedProbes.join(
-      exact.filter(!col("exact_only")).select("probe").distinct(),
-      Seq("probe"), "left_anti")
-    val prefixCond: Column = cfg.prefixMode match {
-      case "char" => col("key").startsWith(substring(col("probe"), 1, cfg.prefixLen)) &&
-        col("key") =!= col("probe")
-      case _ => col("key").startsWith(concat(col("probe"), lit(" ")))
-    }
-    val prefix0 = missExact.join(catFuzzy, prefixCond)
-      .withColumn("leg", lit(2)).withColumn("score", length(col("key")))
-    val prefix =
-      if (cfg.prefixLimit <= 0) prefix0
-      else {
-        // reference: 5 shortest keys per probe string; computed on the
-        // distinct (probe, key) pairs so repeated probes across ids
-        // share one ranking
-        val wpp = Window.partitionBy("probe")
-          .orderBy(length(col("key")), col("key"))
-        val keep = prefix0.select("probe", "key").distinct()
-          .withColumn("rnp", row_number().over(wpp))
-          .filter(col("rnp") <= cfg.prefixLimit)
-          .drop("rnp")
-        prefix0.join(keep, Seq("probe", "key"), "left_semi")
-      }
-
-    val missPrefix = missExact.join(prefix.select("probe").distinct(), Seq("probe"), "left_anti")
-    // length-band pre-filter: levenshtein <= d implies |len(a)-len(b)| <= d,
-    // so the cheap predicate prunes most of the broadcast nested loop;
-    // the threshold form of levenshtein (Spark 3.5+) early-exits the
-    // O(len^2) DP as soon as the band exceeds d (returns -1 above d)
-    val lev = levenshtein(col("probe"), col("key"), cfg.fuzzyMaxDist)
-    val fuzzy = cfg.fuzzyMode match {
-      case "ratio" =>
-        // reference semantics: fuzz.ratio >= threshold, len(probe) >= 4,
-        // top-N catalog KEYS per distinct probe string by ratio (the
-        // rapidfuzz extract over the cached generic list,
-        // `lookup.py:185-192`; ties pinned by key). Prefilter: ratio >=
-        // t implies indel <= (1-t/100)(la+lb) implies the length band.
-        val ratioUdf = udf((p: String, k: String) =>
-          graft.functions.FuzzyLib.ratio(p.toUpperCase, k.toUpperCase))
-        val frac = 1.0 - cfg.fuzzyRatioMin / 100.0
-        val wp = Window.partitionBy("probe")
-          .orderBy(col("ratio").desc, col("key"))
-        val topKeys = missPrefix.select("probe").distinct()
-          .filter(length(col("probe")) >= 4)
-          .join(catFuzzy.select("key").distinct(),
-            abs(length(col("probe")) - length(col("key"))) <=
-              (length(col("probe")) + length(col("key"))) * frac &&
-              col("key") =!= col("probe"))
-          .withColumn("ratio", ratioUdf(col("probe"), col("key")))
-          .filter(col("ratio") >= cfg.fuzzyRatioMin)
-          .withColumn("rnf", row_number().over(wp))
-          .filter(col("rnf") <= cfg.fuzzyLimit)
-          .select(col("probe"), col("key").as("k2"), col("ratio"))
-        missPrefix.join(topKeys, Seq("probe"))
-          .join(catFuzzy, col("k2") === col("key"))
-          .drop("k2")
-          .withColumn("leg", lit(3))
-          .withColumn("score", round(lit(100.0) - col("ratio")).cast("int"))
-          .drop("ratio")
-      case "blocked" =>
-        val d = cfg.fuzzyMaxDist
-        val delUdf = udf((s: String) => deleteVariants(s, d))
-        val keyVars = cat0.filter(!col("exact_only"))
-          .select(col("key")).distinct()
-          .select(col("key"), explode(delUdf(col("key"))).as("variant"))
-        val probeVars = missPrefix.select(col("probe")).distinct()
-          .select(col("probe"), explode(delUdf(col("probe"))).as("variant"))
-        val candPairs = probeVars.join(keyVars, Seq("variant"))
-          .select("probe", "key").distinct()
-        missPrefix.join(candPairs, Seq("probe"))
-          .join(catFuzzy.withColumnRenamed("key", "k2"), col("key") === col("k2"))
-          .drop("k2")
-          .filter(lev >= 0 && col("key") =!= col("probe"))
-          .withColumn("leg", lit(3))
-          .withColumn("score", lev)
-      case _ =>
-        // scan mode keeps the per-row nested loop DELIBERATELY: a
-        // dedup-before-compute rewrite (distinct probes × distinct keys,
-        // then two join-backs — the ratio/blocked shape) was built and
-        // measured in round 12 and REGRESSED both base scale (q26 3.2 →
-        // 5.0 s, q23 0.9 → 1.3 s) and the ×32 floor (unchanged ~21 s):
-        // with the codegen'd threshold-levenshtein the per-row band scan
-        // is cheaper than the added distinct + broadcast join-backs at
-        // every measured factor. The modes that pay real per-pair cost
-        // (ratio's rapidfuzz UDF, blocked's variant explode) already
-        // dedup; scan's per-pair cost is too cheap for dedup to win.
-        missPrefix.join(catFuzzy,
-            abs(length(col("probe")) - length(col("key"))) <= cfg.fuzzyMaxDist &&
-              lev >= 0 && col("key") =!= col("probe"))
-          .withColumn("leg", lit(3))
-          .withColumn("score", lev)
-    }
-
-    exact.unionByName(prefix).unionByName(fuzzy)
+    val (all, index) = indexed(probes, catalog, cfg)
+    try all.localCheckpoint(eager = true) finally index.destroy()
   }
 
-  /** All strings reachable from `s` by deleting up to `d` characters —
+  /** The hits of [[allMatches]] as a lazy frame, without the checkpoint:
+    * one narrow `mapPartitions`, so it also runs over a STREAMING probe
+    * frame ([[graft.streaming.TaggerStream]]). The broadcast index lives
+    * until the ContextCleaner collects it.
+    */
+  def hits(probes: DataFrame, catalog: DataFrame, cfg: Config = Config()): DataFrame =
+    indexed(probes, catalog, cfg)._1
+
+  private def indexed(probes: DataFrame, catalog: DataFrame,
+      cfg: Config): (DataFrame, Broadcast[CatalogIndex]) = {
+    val cat =
+      if (catalog.columns.contains("exact_only")) catalog
+      else catalog.withColumn("exact_only", lit(false))
+    val index = probes.sparkSession.sparkContext.broadcast(
+      CatalogIndex(cat.collect(), cat.schema, cfg))
+    val probeAt = probes.schema.fieldIndex("probe")
+    val exactProbeAt =
+      Some(probes.columns.indexOf("exact_probe")).filter(_ >= 0)
+    val schema = StructType(probes.schema.fields ++ cat.schema.fields ++ Seq(
+      StructField("leg", IntegerType, nullable = false),
+      StructField("score", IntegerType)))
+    val all = probes.mapPartitions { rows =>
+      val idx = index.value
+      val memo = mutable.HashMap.empty[String, Hits]
+      rows.flatMap { r =>
+        if (r.isNullAt(probeAt)) Iterator.empty
+        else {
+          val p = r.getString(probeAt)
+          val h = memo.getOrElseUpdate(p, idx.lookup(p))
+          val unified = exactProbeAt.forall(i => !r.isNullAt(i) && !r.getBoolean(i))
+          val vals = r.toSeq
+          (if (unified) h.all else h.exact).iterator.map(c => Row.fromSeq(vals ++ c))
+        }
+      }
+    }(Encoders.row(schema))
+    (all, index)
+  }
+
+  private object CatalogIndex {
+    def apply(rows: Array[Row], schema: StructType, cfg: Config): CatalogIndex = {
+      val keyAt = schema.fieldIndex("key")
+      val onlyAt = schema.fieldIndex("exact_only")
+      def rowsByKey(keep: Row => Boolean): Map[String, Array[Int]] =
+        rows.indices.filter(i => !rows(i).isNullAt(keyAt) && keep(rows(i)))
+          .groupBy(rows(_).getString(keyAt)).map { case (k, is) => k -> is.toArray }
+      new CatalogIndex(rows.map(_.toSeq), rowsByKey(_ => true),
+        rowsByKey(r => !r.isNullAt(onlyAt) && !r.getBoolean(onlyAt)), cfg)
+    }
+  }
+
+  /** One probe string's hits, each as catalog values ++ (leg, score):
+    * `exact` for equality-only probes, `all` for the full waterfall.
+    */
+  private final class Hits(val exact: Array[Seq[Any]], later: => Array[Seq[Any]]) {
+    lazy val all: Array[Seq[Any]] = exact ++ later
+  }
+
+  /** A distinct key of the prefix/fuzzy universe in Spark's terms. */
+  private final class Key(val s: String) extends Serializable {
+    val u: UTF8String = UTF8String.fromString(s)
+    val len: Int = u.numChars
+    val upper: String = s.toUpperCase
+  }
+
+  /** The catalog as the waterfall probes it, built once on the driver:
+    * rows by key (exact leg); the sorted distinct keys of the
+    * `exact_only = false` rows (prefix range scans); and those keys
+    * bucketed by length (scan and ratio). The deletion variants of those
+    * keys (blocked) are built lazily on the executor side.
+    * `values` holds each row's catalog values, `byKey` and `unified` map
+    * a key to its rows in the whole catalog and in that universe.
+    */
+  private final class CatalogIndex(values: Array[Seq[Any]],
+      byKey: Map[String, Array[Int]], unified: Map[String, Array[Int]],
+      cfg: Config) extends Serializable {
+    private val sorted =
+      unified.keys.map(new Key(_)).toArray.sortWith((a, b) => a.u.compareTo(b.u) < 0)
+    private val byLength: Map[Int, Array[Key]] = sorted.groupBy(_.len)
+    // O(keys * len^d) strings: built where the first probe reaches the
+    // blocked leg (once per executor JVM), never shipped in the broadcast
+    @transient private lazy val variants: Map[String, Array[Key]] =
+      sorted.flatMap(k => deleteVariants(k.s, cfg.fuzzyMaxDist).map(_ -> k))
+        .groupBy(_._1).map { case (v, ks) => v -> ks.map(_._2) }
+
+    private def hits(k: Key, leg: Int, score: Int): Array[Seq[Any]] =
+      unified(k.s).map(values(_) ++ Seq(leg, score))
+
+    def lookup(p: String): Hits = new Hits(
+      byKey.getOrElse(p, Array.empty[Int]).map(values(_) ++ Seq(1, 0)),
+      // only an exact hit on the unified universe stops the chain
+      if (unified.contains(p)) Array.empty else {
+        val pu = UTF8String.fromString(p)
+        val pre = prefixKeys(p, pu)
+        if (pre.nonEmpty) pre.flatMap(k => hits(k, 2, k.len)) else fuzzy(p, pu)
+      })
+
+    /** Keys in the prefix range, the `prefixLimit` shortest by
+      * (length, key) when limited.
+      */
+    private def prefixKeys(p: String, pu: UTF8String): Array[Key] = {
+      val start = cfg.prefixMode match {
+        case "char" => pu.substringSQL(1, cfg.prefixLen)
+        case _ => UTF8String.fromString(p + " ")
+      }
+      var lo = 0
+      var hi = sorted.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (sorted(mid).u.compareTo(start) < 0) lo = mid + 1 else hi = mid
+      }
+      val range = sorted.iterator.drop(lo).takeWhile(_.u.startsWith(start))
+        .filter(_.s != p).toArray
+      // sortBy is stable: equal lengths keep key order
+      if (cfg.prefixLimit <= 0) range
+      else range.sortBy(_.len).take(cfg.prefixLimit)
+    }
+
+    private def fuzzy(p: String, pu: UTF8String): Array[Seq[Any]] = {
+      val lp = pu.numChars
+      val d = cfg.fuzzyMaxDist
+      def verified(keys: Iterator[Key]): Array[Seq[Any]] =
+        keys.filter(_.s != p).flatMap { k =>
+          val dist = pu.levenshteinDistance(k.u, d)
+          if (dist >= 0) hits(k, 3, dist) else Array.empty[Seq[Any]]
+        }.toArray
+      cfg.fuzzyMode match {
+        case "ratio" =>
+          // ratio >= t implies indel <= (1-t/100)(la+lb), hence the band
+          val frac = 1.0 - cfg.fuzzyRatioMin / 100.0
+          if (lp < 4) Array.empty
+          else {
+            val up = p.toUpperCase
+            byLength.iterator
+              .filter { case (lk, _) => math.abs(lp - lk) <= (lp + lk) * frac }
+              .flatMap(_._2).filter(_.s != p)
+              .map(k => (k, FuzzyLib.ratio(up, k.upper)))
+              .filter(_._2 >= cfg.fuzzyRatioMin).toArray
+              .sortWith { case ((ka, ra), (kb, rb)) =>
+                ra > rb || (ra == rb && ka.u.compareTo(kb.u) < 0) }
+              .take(cfg.fuzzyLimit)
+              .flatMap { case (k, r) => hits(k, 3, JBigDecimal.valueOf(100.0 - r)
+                .setScale(0, RoundingMode.HALF_UP).intValue) }
+          }
+        case "blocked" =>
+          verified(deleteVariants(p, d).iterator
+            .flatMap(v => variants.getOrElse(v, Array.empty[Key]).iterator).distinctBy(_.s))
+        case _ =>
+          verified((lp - d to lp + d).iterator
+            .flatMap(l => byLength.getOrElse(l, Array.empty[Key]).iterator))
+      }
+    }
+  }
+
+  /** All strings reachable from `s` by deleting up to `d` code points —
     * the SymSpell neighborhood: lev(a, b) <= d implies the neighborhoods
     * of a and b intersect (delete each side's unmatched alignment
     * positions), so variant equality is a complete candidate generator
@@ -270,8 +299,11 @@ object LookupWaterfall {
     var cur = Set(s)
     var all = Set(s)
     for (_ <- 1 to d) {
-      cur = cur.flatMap(w =>
-        (0 until w.length).map(i => w.substring(0, i) + w.substring(i + 1)))
+      cur = cur.flatMap { w =>
+        val cps = w.codePoints.toArray
+        cps.indices.map(i =>
+          new String(cps, 0, i) + new String(cps, i + 1, cps.length - i - 1))
+      }
       all ++= cur
     }
     all.toSeq

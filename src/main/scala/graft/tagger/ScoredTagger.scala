@@ -642,8 +642,9 @@ object ScoredTagger {
       texts.groupBy("text").agg(min(col("id")).as("id")), col("id"))
     // ONE extraction pass per unique text produces both the probe
     // universe and the shape; the local checkpoint pins that single
-    // evaluation for the two consumers (probe path + shape join) — same
-    // lifecycle notes as LookupWaterfall.allMatches.
+    // evaluation for its two consumers: the waterfall's one pass over the
+    // probes and the shape join below. It frees itself via the
+    // ContextCleaner once the returned frame is dropped.
     val shapes = uniq
       .select(col("id"), shapeUdf(brandMap, mw, syn)(col("text")).as("shape"))
       .select(col("id"), col("shape.*"))

@@ -29,4 +29,15 @@ class FuzzyLibSpec extends AnyFunSuite {
     assert(FuzzyLib.ratio("CEFALEXIM", "CEFALEXIN") >= 85.0)
     assert(FuzzyLib.ratio("SPARK", "PART") < 85.0)
   }
+
+  test("astral characters count once, like rapidfuzz's code points") {
+    // "A😀B" is 3 code points (4 UTF-16 units): lsum 5, indel 1 -> 80.0
+    // (UTF-16 units would give lsum 6, indel 2 -> 66.7)
+    assert(FuzzyLib.indelDistance("A😀B", "AB") == 1)
+    assert(FuzzyLib.ratio("A😀B", "AB") == 80.0)
+    // astral code points sharing a high surrogate share nothing
+    // (UTF-16 units would match the surrogate: 50.0)
+    assert(FuzzyLib.ratio("😀", "😁") == 0.0)
+    assert(FuzzyLib.ratio("É😀", "É😀") == 100.0)
+  }
 }
