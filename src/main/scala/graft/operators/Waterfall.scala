@@ -73,7 +73,7 @@ object Waterfall {
              |ORDER BY doc_id""".stripMargin)),
 
     // ---- full C1 selection core (waterfall candidate gathering + G2 ATC
-    //      explode + rank-tuple validity filter + row_number selection)
+    //      explode + rank-tuple validity filter + total-order pick)
     //      through ScoredTagger.tagCandidates, oracle-checked end to end.
     //      Probes and shapes are SQL-defined over the fixed demo
     //      vocabulary (31 words, inert under synonym/salt normalization —
@@ -225,7 +225,7 @@ object Waterfall {
           lit(false).as("has_plus"), lit(false).as("has_in"),
           array(upper(first)).as("stripped"),
           typedLit(Map.empty[String, String]).as("details"))
-        // blocked fuzzy mode: the deletion-neighborhood equi-join must
+        // blocked fuzzy mode: the deletion-variant candidate lookup must
         // produce byte-identical results to the scan-mode semantics the
         // oracle encodes — this query keeps the blocked path under the
         // hash gate

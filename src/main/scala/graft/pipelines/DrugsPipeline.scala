@@ -59,13 +59,14 @@ final class DrugsTaggingPipeline(
       brandMap, synonyms = synonyms)
     // The fallback and annex branches each consume the tagger output
     // TWICE in one plan (residue-derive + rejoin; items-derive + rejoin).
-    // Without pinning, the whole scored-selection lineage (joins, window,
-    // mixture branches) appears 2+ times in the final plan and executes
-    // per copy — the double-materialization the registry-level persist
-    // can't see because it lives inside matchRecords. An eager local
-    // checkpoint materializes the tagger ONCE and truncates the lineage,
-    // so every downstream consumer reads stored blocks; the blocks are
-    // reclaimed by the ContextCleaner when the frame is collected.
+    // Without pinning, the tagger's lineage — its spread and its one
+    // per-text pass of extraction, index probes and selection — appears
+    // 2+ times in the final plan and executes per copy — the
+    // double-materialization the registry-level persist can't see
+    // because it lives inside matchRecords. An eager local checkpoint
+    // runs the pass ONCE and truncates the lineage, so every downstream
+    // consumer reads stored blocks; the blocks are reclaimed by the
+    // ContextCleaner when the frame is collected.
     val tagged0 =
       if (fdaFood.isDefined || annex.isDefined) taggedRaw.localCheckpoint(true)
       else taggedRaw

@@ -145,42 +145,47 @@ object LookupWaterfall {
 
   private def indexed(probes: DataFrame, catalog: DataFrame,
       cfg: Config): (DataFrame, Broadcast[CatalogIndex]) = {
-    val cat =
-      if (catalog.columns.contains("exact_only")) catalog
-      else catalog.withColumn("exact_only", lit(false))
-    val index = probes.sparkSession.sparkContext.broadcast(
-      CatalogIndex(cat.collect(), cat.schema, cfg))
+    val idx = this.index(catalog, cfg)
+    val index = probes.sparkSession.sparkContext.broadcast(idx)
     val probeAt = probes.schema.fieldIndex("probe")
     val exactProbeAt =
       Some(probes.columns.indexOf("exact_probe")).filter(_ >= 0)
-    val schema = StructType(probes.schema.fields ++ cat.schema.fields ++ Seq(
+    val schema = StructType(probes.schema.fields ++ idx.schema.fields ++ Seq(
       StructField("leg", IntegerType, nullable = false),
       StructField("score", IntegerType)))
     val all = probes.mapPartitions { rows =>
-      val idx = index.value
-      val memo = mutable.HashMap.empty[String, Hits]
+      val lookup = index.value.memoized()
       rows.flatMap { r =>
         if (r.isNullAt(probeAt)) Iterator.empty
         else {
-          val p = r.getString(probeAt)
-          val h = memo.getOrElseUpdate(p, idx.lookup(p))
           val unified = exactProbeAt.forall(i => !r.isNullAt(i) && !r.getBoolean(i))
           val vals = r.toSeq
-          (if (unified) h.all else h.exact).iterator.map(c => Row.fromSeq(vals ++ c))
+          lookup(r.getString(probeAt), unified).iterator.map(c => Row.fromSeq(vals ++ c))
         }
       }
     }(Encoders.row(schema))
     (all, index)
   }
 
-  private object CatalogIndex {
+  /** The catalog collected once (no job for a local frame) and built
+    * into its probe index on the driver; callers broadcast it.
+    * A catalog without an `exact_only` column gets one, all false.
+    */
+  private[tagger] def index(catalog: DataFrame, cfg: Config): CatalogIndex = {
+    val cat =
+      if (catalog.columns.contains("exact_only")) catalog
+      else catalog.withColumn("exact_only", lit(false))
+    CatalogIndex(cat.collect(), cat.schema, cfg)
+  }
+
+  private[tagger] object CatalogIndex {
     def apply(rows: Array[Row], schema: StructType, cfg: Config): CatalogIndex = {
       val keyAt = schema.fieldIndex("key")
       val onlyAt = schema.fieldIndex("exact_only")
       def rowsByKey(keep: Row => Boolean): Map[String, Array[Int]] =
         rows.indices.filter(i => !rows(i).isNullAt(keyAt) && keep(rows(i)))
           .groupBy(rows(_).getString(keyAt)).map { case (k, is) => k -> is.toArray }
-      new CatalogIndex(rows.map(_.toSeq), rowsByKey(_ => true),
+      new CatalogIndex(schema, rows.map(_.toSeq), rowsByKey(_ => true),
         rowsByKey(r => !r.isNullAt(onlyAt) && !r.getBoolean(onlyAt)), cfg)
     }
   }
@@ -204,12 +209,14 @@ object LookupWaterfall {
     * `exact_only = false` rows (prefix range scans); and those keys
     * bucketed by length (scan and ratio). The deletion variants of those
     * keys (blocked) are built lazily on the executor side.
-    * `values` holds each row's catalog values, `byKey` and `unified` map
-    * a key to its rows in the whole catalog and in that universe.
+    * `values` holds each row's catalog values in `schema`'s order,
+    * `byKey` and `unified` map a key to its rows in the whole catalog and
+    * in that universe. [[memoized]] is the one per-probe lookup every
+    * caller runs.
     */
-  private final class CatalogIndex(values: Array[Seq[Any]],
-      byKey: Map[String, Array[Int]], unified: Map[String, Array[Int]],
-      cfg: Config) extends Serializable {
+  private[tagger] final class CatalogIndex(val schema: StructType,
+      val values: Array[Seq[Any]], byKey: Map[String, Array[Int]],
+      unified: Map[String, Array[Int]], cfg: Config) extends Serializable {
     private val sorted =
       unified.keys.map(new Key(_)).toArray.sortWith((a, b) => a.u.compareTo(b.u) < 0)
     private val byLength: Map[Int, Array[Key]] = sorted.groupBy(_.len)
@@ -222,7 +229,20 @@ object LookupWaterfall {
     private def hits(k: Key, leg: Int, score: Int): Array[Seq[Any]] =
       unified(k.s).map(values(_) ++ Seq(leg, score))
 
-    def lookup(p: String): Hits = new Hits(
+    /** A probe string's hits (catalog values ++ (leg, score)), memoized
+      * per distinct string for the caller's lifetime (one partition):
+      * `unified = false` is an equality lookup only, `true` runs the
+      * whole exact -> prefix -> fuzzy chain.
+      */
+    def memoized(): (String, Boolean) => Array[Seq[Any]] = {
+      val memo = mutable.HashMap.empty[String, Hits]
+      (p, unified) => {
+        val h = memo.getOrElseUpdate(p, lookup(p))
+        if (unified) h.all else h.exact
+      }
+    }
+
+    private def lookup(p: String): Hits = new Hits(
       byKey.getOrElse(p, Array.empty[Int]).map(values(_) ++ Seq(1, 0)),
       // only an exact hit on the unified universe stops the chain
       if (unified.contains(p)) Array.empty else {

@@ -1,10 +1,10 @@
 package graft.tagger
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.functions.{Constants, DetailsLib, SaltLib, TextNorm, TokenLib, VaccineLib}
+import graft.functions.{Constants, DetailsLib, SaltLib, TokenLib, VaccineLib}
 
 /** The composed C1 tagging flow (`tagger.py:560-1030`, Parts 2/3): probe
   * generation -> waterfall candidate gathering (ALL hits, not top-1) ->
@@ -12,25 +12,25 @@ import graft.functions.{Constants, DetailsLib, SaltLib, TextNorm, TokenLib, Vacc
   * rule-based candidate selection -> the reference's full ~25-column
   * result schema with match_reason in {matched, no_candidates, no_match}.
   *
-  * Execution shape (100 TB design):
-  *   - distinct texts are tagged ONCE and re-joined by text (D1, the
-  *     reference's `drop_duplicates` optimization `tagger.py:436-441`,
-  *     `runners.py:192-230`) — duplication factor never multiplies the
-  *     probe/classify UDF cost;
-  *   - the candidate path carries only `id` + catalog payload, never the
-  *     raw text: shape classification runs once per unique text into a
-  *     compact keyed frame joined back on id (same hash partitioning the
-  *     selection window needs, so the join output feeds the window with
-  *     no extra exchange);
-  *   - selection is rank columns (one struct-valued UDF eval per
-  *     candidate row — [[Scoring.candidateRank]]) + a `row_number`
-  *     window over a TOTAL order (SURVEY §2.10 D3 preferred form):
-  *     whole-stage codegen spans the join/window path instead of the
-  *     round-1 `mapGroups` object path, and the selection is
-  *     oracle-expressible (q26);
-  *   - the fuzzy-correction feedback (`tagger.py:880-908`) is a tiny
-  *     per-id aggregate over the leg-3 hits joined back into the shape
-  *     finalization — no extra pass over the text.
+  * Execution shape: the reference tags each unique text with one
+  * function over an in-memory catalog (extract -> batch lookup ->
+  * `select_best_candidate`, `tagger.py:728-1028`); so does graft:
+  *   - the catalog is a dimension table: it is collected ONCE per call
+  *     into [[LookupWaterfall]]'s probe index (which also yields the
+  *     multiword dictionary) and broadcast;
+  *   - the texts cross one exchange, a pinned-count spread by text
+  *     ([[graft.core.CpuSpread]]), so every copy of a text shares a
+  *     partition; sorted there, copies are adjacent and each distinct
+  *     text is tagged ONCE (D1, the reference's `drop_duplicates`
+  *     optimization `tagger.py:436-441`, `runners.py:192-230`) —
+  *     duplication never multiplies the extraction or selection cost;
+  *   - ONE narrow pass then does a text's whole flow in plain Scala:
+  *     [[shapeRowOf]], each probe looked up in the index (memoized per
+  *     partition), [[Selection.select]] (J12 gate, fuzzy-correction
+  *     feedback, [[Scoring.candidateRank]] and a total order, mixture
+  *     branches) and the output columns; no join, window or pin.
+  * [[tagCandidates]] runs the same selection over caller-supplied probe
+  * and shape frames (the q26/q27 oracle demos).
   */
 object ScoredTagger {
 
@@ -55,8 +55,8 @@ object ScoredTagger {
       details = s.details)
   }
 
-  /** Column-shaped per-unique-text analysis: everything the selection and
-    * the output schema need, computed in ONE UDF eval per text. The
+  /** Per-unique-text analysis: everything the selection and the output
+    * schema need, computed in ONE [[shapeRowOf]] call per text. The
     * normalized-generic set and the shape flags are NOT here — they
     * depend on the fuzzy-correction feedback and are finalized per id
     * after candidate gathering ([[finalizeShape]]).
@@ -355,238 +355,160 @@ object ScoredTagger {
         (if (isIv) 4 else 0))
   }
 
-  // asNondeterministic is an OPTIMIZER BARRIER here, not a semantic
-  // marker: extracting N fields from a struct-valued UDF in a collapsed
-  // Project re-evaluates the UDF N times (the round-1 lambda-inlining
-  // trap, Dedup.scala:27-36). Nondeterministic expressions are never
-  // duplicated by CollapseProject, so the struct materializes once and
-  // field reads are GetStructField over the attribute.
-  private def shapeUdf(brandMap: Map[String, String], mw: MwDict,
-      syn: Map[String, String]) =
-    udf((text: String) => shapeRowOf(text, brandMap, mw, syn))
-      .asNondeterministic()
-
-  private def finalizeUdf(syn: Map[String, String]) =
-    udf((stripped: Seq[String], extra: Seq[String],
-        hasPlus: Boolean, hasIn: Boolean, fuzzyNames: Seq[String]) =>
-      finalizeShape(stripped, extra, hasPlus, hasIn, fuzzyNames, syn))
-      .asNondeterministic() // same barrier as shapeUdf
-
-  /** [[Scoring.candidateRank]] as a row-level expression: null when the
-    * candidate is filtered (invalid), else a (mp, ap, fp, ds) struct.
-    * route/source never enter the rank (`scoring.py:203-387`), so they
-    * are not passed.
-    */
-  private def rankUdf(syn: Map[String, String]) =
-    udf((genericName: String, atcCode: String,
-      form: String, refText: String, inputForms: Seq[String],
-      genericsNorm: Seq[String], flags: Int, stripped: Seq[String],
-      details: Map[String, String]) =>
-    Scoring.candidateRank(
-      Scoring.Candidate(genericName, if (atcCode == null) "" else atcCode,
-        if (form == null) "" else form, "", "",
-        if (refText == null) "" else refText),
-      inputForms.toSet, genericsNorm.toSet,
-      (flags & 1) != 0, (flags & 2) != 0, (flags & 4) != 0,
-      stripped.toList, details,
-      applySyn = g => SaltLib.applySynonym(g, syn)))
-      .asNondeterministic() // same barrier
-
-  /** G2 ATC explode (`tagger.py:839-856`): a pipe-joined ATC payload
-    * becomes one candidate per code in preference order (singles before
-    * combinations, D4 `sort_atc_codes`).
-    */
-  private val sortedAtcUdf = udf((atc: String) =>
-    if (atc != null && atc.contains("|"))
-      Scoring.sortAtcCodes(atc.split("\\|").toSeq)
-    else Seq(atc))
-
-  /** Candidate gathering + fuzzy feedback + windowed selection over
-    * explicit probe and shape frames — the engine core of C1, also driven
-    * directly by the q26 oracle demo with SQL-defined probes/shapes.
+  /** Candidate gathering + fuzzy feedback + selection over explicit probe
+    * and shape frames — the engine core of C1, also driven directly by
+    * the q26/q27 oracle demos with SQL-defined probes/shapes.
     *
-    * @param probes  (id, probe_pos, probe)
+    * Lifecycle: the catalog is collected once into its broadcast index;
+    * the returned frame is lazy. The probes are grouped per id once
+    * (`collect_list`) and joined to `shapes` on id; one `mapPartitions`
+    * then looks each probe up in the index (memoized per partition) and
+    * runs [[Selection.select]] per id, the selection [[tagTexts]] runs.
+    *
+    * @param probes  (id, probe_pos, probe [, j12_ok] [, exact_probe]);
+    *                `j12_ok` false keeps a probe off the J12 mixture-NAME
+    *                rows, `exact_probe` as in [[LookupWaterfall.allMatches]]
     * @param catalog (key, generic_name, atc_code, drugbank_id, form,
     *                route, source, reference_text) — broadcastable. An
     *                optional boolean `fallback_only` column marks rows
     *                (J12 mixture-name entries) that participate only for
     *                ids with NO regular candidate, the reference's
     *                "unique_matches empty" gate (`tagger.py:782-804`).
+    *                A null `source` is a regular row, a null
+    *                `fallback_only` is false.
     * @param shapes  (id, input_forms, extra_norm, has_plus, has_in,
     *                stripped, details) — one row per id ([[ShapeRow]]
     *                prefix; extra output columns are allowed and ignored)
     * @return one row per id that had ANY candidate: id, generic_name,
     *         atc_code, drugbank_id, reference_text, source, key,
-    *         match_reason in {matched, no_match}; ids with zero
-    *         candidates are absent (callers left-join and coalesce
+    *         match_reason in {matched, no_match}, mixture_branch; ids with
+    *         zero candidates are absent (callers left-join and coalesce
     *         no_candidates)
     */
   def tagCandidates(probes: DataFrame, catalog: DataFrame,
       shapes: DataFrame,
       cfg: LookupWaterfall.Config = LookupWaterfall.Config(),
       synonyms: Map[String, String] = Constants.taggerSynonyms): DataFrame = {
-    val cat = if (catalog.columns.contains("fallback_only")) catalog
-      else catalog.withColumn("fallback_only", lit(false))
-    val probes1 = if (probes.columns.contains("j12_ok")) probes
-      else probes.withColumn("j12_ok", lit(true))
-    val hitsAll = LookupWaterfall.allMatches(probes1, cat, cfg)
-    // J12 mixture-NAME rows (source "mixtures" + fallback_only) may only
-    // be hit by a synonym-of-stripped probe (`tagger.py:784-788`); combo
-    // key variants and raw tokens never consult the mixture-name table
-    // coalesce: a NULL source must KEEP the row (three-valued logic would
-    // otherwise silently drop fallback hits from caller-supplied catalogs
-    // with null sources)
-    val hits0 = hitsAll.filter(coalesce(
-      !(col("fallback_only") && col("source") === "mixtures" && !col("j12_ok")),
-      lit(true)))
-
-    // Component-key mixture rows NEVER enter the scored candidate pool:
-    // the reference's `_lookup_mixture` result bypasses selection
-    // entirely (`tagger.py:806-824`, `:993-1017`). Keep the per-id first
-    // hit aside for the two mixture fallback branches below.
-    val componentBest = hitsAll
-      .filter(col("source") === "drugbank_mixture")
-      .withColumn("rn", row_number().over(Window.partitionBy(col("id"))
-        .orderBy(col("probe_pos"), col("key"), col("generic_name"))))
-      .filter(col("rn") === 1)
-      .select(col("id"), col("generic_name").as("mx_generic"),
-        col("drugbank_id").as("mx_db"),
-        col("reference_text").as("mx_ref"), col("key").as("mx_key"))
-
-    // J12 gate: fallback-only NAME rows count only for ids with no
-    // regular candidate (anti-join on the primary id set — both sides
-    // tiny projections of the checkpointed hits)
-    val regular = hits0.filter(col("source") =!= "drugbank_mixture")
-    val primaryIds = regular.filter(!col("fallback_only")).select("id").distinct()
-    val hits = regular.filter(!col("fallback_only"))
-      .unionByName(regular.filter(col("fallback_only"))
-        .join(primaryIds, Seq("id"), "left_anti"))
-
-    // fuzzy-correction feedback inputs: leg-3 candidate names per id, in
-    // deterministic candidate order, first occurrence kept
-    val fuzzyNames = hits0.filter(col("leg") === 3 && !col("fallback_only"))
-      .groupBy("id")
-      .agg(array_distinct(transform(
-        array_sort(collect_list(struct(col("probe_pos"), col("key"),
-          col("generic_name")))),
-        s => s.getField("generic_name"))).as("fuzzy_names"))
-
-    val finShapes = shapes
-      .join(fuzzyNames, Seq("id"), "left")
-      .withColumn("fin", finalizeUdf(synonyms)(col("stripped"), col("extra_norm"),
-        col("has_plus"), col("has_in"),
-        coalesce(col("fuzzy_names"), typedLit(Seq.empty[String]))))
-      .select(col("id"), col("input_forms"), col("stripped"), col("details"),
-        col("fin.generics_norm").as("generics_norm"),
-        col("fin.shape_flags").as("shape_flags"))
-
-    // pinned-count spread: the rank-UDF stage below is CPU-bound on a
-    // byte-small frame — AQE would coalesce its exchange to ~1 partition
-    // (see graft.core.CpuSpread). The pin also fixes the join and window
-    // partitioning so neither adds an exchange.
-    val exploded = graft.core.CpuSpread.byKey(hits, col("id")).select(
-      col("id"), col("leg"), col("probe_pos"), col("key"),
-      col("generic_name"), col("drugbank_id"), col("form"), col("route"),
-      col("source"), col("reference_text"),
-      // the reference's candidate loop stringifies the ATC payload
-      // (`tagger.py:840` str(gm.get("atc_code", "")).split("|")), so a
-      // NULL atc becomes the literal string "None" on every candidate
-      // built from unique_matches; only the component-mixture path (which
-      // bypasses the loop) keeps a real null
-      posexplode(sortedAtcUdf(
-        when(col("source") === "drugbank_mixture", col("atc_code"))
-          .otherwise(coalesce(col("atc_code"), lit("None")))))
-        .as(Seq("atc_idx", "atc_code")))
-
-    // Join the compact per-id shape (no raw text) onto candidate rows:
-    // both sides hash-partition on id, which is exactly the partitioning
-    // the selection window needs — one exchange, reused.
-    val ranked = exploded.join(finShapes, Seq("id"))
-      .withColumn("rank", rankUdf(synonyms)(
-        col("generic_name"), col("atc_code"), col("form"),
-        col("reference_text"), col("input_forms"), col("generics_norm"),
-        col("shape_flags"), col("stripped"), col("details")))
-      .filter(col("rank").isNotNull)
-
-    // Reference rank tuple first (match type, ATC preference, form
-    // equivalence, details score, -len(generic), atc), then a full-tuple
-    // tie-break imposing a TOTAL order — the reference's stable sort keeps
-    // shuffle-dependent input order on ties; we pin it so selected
-    // drugbank_id/reference_text are bit-for-bit deterministic.
-    val w = Window.partitionBy(col("id")).orderBy(
-      col("rank.mp"), col("rank.ap"), col("rank.fp"), col("rank.ds"),
-      length(col("generic_name")).desc, col("atc_code"),
-      col("leg"), col("probe_pos"), col("key"), col("atc_idx"),
-      col("generic_name"), col("source"), col("form"), col("route"),
-      col("reference_text"), col("drugbank_id"))
-    val best = ranked.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("id"), col("generic_name"), col("atc_code"),
-        col("drugbank_id"), col("reference_text"), col("source"), col("key"))
-
-    // Catalogs without a fallback_only column cannot carry mixture rows
-    // (only buildTaggerCatalog emits them, always with the flag), so the
-    // mixture branches below — a window, a flags join and an anti-join
-    // union over provably-empty frames — are skipped outright: each
-    // empty frame still schedules full shuffle stages (measurable on the
-    // q26/q27 bench demos).
-    if (!catalog.columns.contains("fallback_only"))
-      return hits.select("id").distinct()
-        .join(best, Seq("id"), "left")
-        .withColumn("match_reason",
-          when(col("generic_name").isNotNull, lit("matched"))
-            .otherwise(lit("no_match")))
-        .withColumn("mixture_branch", lit(null: String))
-
-    // Mixture fallback branches, both bypassing selection with score-100
-    // semantics (the caller maps source drugbank_mixture to score 100):
-    //  A (`tagger.py:806-824`): no candidate at all -> component row; the
-    //    result carries NO dose/form/route and extract-level details.
-    //  B (`tagger.py:993-1017`): candidates existed but selection failed
-    //    AND the input is a combination -> component row; dose/form/route
-    //    and recomputed details are kept like a normal match.
-    val isComb = (col("shape_flags").bitwiseAND(lit(2)) =!= 0)
-    val flags = finShapes.select(col("id"), col("shape_flags"))
-    val withCandidates = hits.select("id").distinct()
-      .join(best, Seq("id"), "left")
-      .join(componentBest, Seq("id"), "left")
-      .join(flags, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("generic_name"),
-          when(col("mx_key").isNotNull && isComb, col("mx_generic")))
-          .as("generic_name"),
-        col("atc_code"),
-        coalesce(col("drugbank_id"),
-          when(col("mx_key").isNotNull && isComb, col("mx_db")))
-          .as("drugbank_id"),
-        coalesce(col("reference_text"),
-          when(col("mx_key").isNotNull && isComb, col("mx_ref")))
-          .as("reference_text"),
-        coalesce(col("source"),
-          when(col("mx_key").isNotNull && isComb, lit("drugbank_mixture")))
-          .as("source"),
-        coalesce(col("key"),
-          when(col("mx_key").isNotNull && isComb, col("mx_key"))).as("key"),
-        when(col("generic_name").isNotNull, lit("matched"))
-          .when(col("mx_key").isNotNull && isComb, lit("matched"))
-          .otherwise(lit("no_match")).as("match_reason"),
-        when(col("generic_name").isNull && col("mx_key").isNotNull && isComb,
-          lit("B")).as("mixture_branch"))
-    val onlyComponent = componentBest
-      .join(hits.select("id").distinct(), Seq("id"), "left_anti")
-      .select(col("id"), col("mx_generic").as("generic_name"),
-        lit(null: String).as("atc_code"), col("mx_db").as("drugbank_id"),
-        col("mx_ref").as("reference_text"),
-        lit("drugbank_mixture").as("source"), col("mx_key").as("key"),
-        lit("matched").as("match_reason"), lit("A").as("mixture_branch"))
-    withCandidates.unionByName(onlyComponent)
+    val withMixtures = catalog.columns.contains("fallback_only")
+    val idx = LookupWaterfall.index(catalog, cfg)
+    val index = probes.sparkSession.sparkContext.broadcast(idx)
+    val read = new Selection.Reader(idx.schema)
+    def opt(c: String, present: Column, absent: Column) =
+      if (probes.columns.contains(c)) present else absent
+    val perId = probes.groupBy("id").agg(collect_list(struct(
+        col("probe_pos").cast("long"), col("probe"),
+        opt("j12_ok", col("j12_ok"), lit(true)),
+        // exact_probe true or null: an equality lookup only
+        opt("exact_probe", coalesce(!col("exact_probe"), lit(false)), lit(true))))
+        .as("probes"))
+      .join(shapes.select(col("id"), struct(col("input_forms"),
+        col("extra_norm"), col("has_plus"), col("has_in"), col("stripped"),
+        col("details")).as("shape")), Seq("id"), "left")
+    val schema = StructType(probes.schema("id") +:
+      Seq("generic_name", "atc_code", "drugbank_id", "reference_text", "source",
+        "key", "match_reason", "mixture_branch").map(StructField(_, StringType)))
+    perId.mapPartitions { rows =>
+      val lookup = index.value.memoized()
+      rows.flatMap { r =>
+        val hits = r.getSeq[Row](1).flatMap { p =>
+          if (p.isNullAt(1)) Nil
+          else lookup(p.getString(1), p.getBoolean(3)).toSeq.map(v => read(
+            p.getAs[java.lang.Long](0), p.getAs[java.lang.Boolean](2), v))
+        }
+        val shape = Option(r.getStruct(2)).map(s => Selection.Shape(
+          s.getSeq[String](0), s.getSeq[String](1), s.getBoolean(2),
+          s.getBoolean(3), s.getSeq[String](4), s.getMap[String, String](5).toMap))
+        Selection.select(hits, shape, withMixtures, synonyms).map(x =>
+          Row(r.get(0), x.genericName, x.atcCode, x.drugbankId, x.referenceText,
+            x.source, x.key, x.matchReason, x.mixtureBranch))
+      }
+    }(Encoders.row(schema))
   }
 
-  private val regionalUdf = udf((g: String) =>
-    if (g == null) null
-    else Constants.regionalCanonical.getOrElse(g.toUpperCase, g.toUpperCase))
+  /** The catalog's multiword generic names (`tagger.py:272-291`): every
+    * name with a space, except on J12 mixture-name and fallback-only rows.
+    */
+  private def multiwordNames(idx: LookupWaterfall.CatalogIndex): Set[String] = {
+    val genericAt = idx.schema.fieldIndex("generic_name")
+    val sourceAt = Selection.fieldAt(idx.schema, "source")
+    val fallbackAt = Selection.fieldAt(idx.schema, "fallback_only")
+    idx.values.iterator
+      .filter(v => !sourceAt.exists(v(_) == "mixtures") && !fallbackAt.exists(v(_) == true))
+      .map(v => v(genericAt).asInstanceOf[String])
+      .filter(g => g != null && g.contains(" ")).toSet
+  }
 
-  private def emptyToNull(c: Column): Column = when(c =!= "", c)
+  /** The columns [[tagTexts]] adds to (id, text). */
+  private val taggedSchema = StructType(
+    Seq("atc_code", "drugbank_id", "generic_name", "reference_text",
+      "dose", "form", "route", "type_details", "release_details",
+      "form_details").map(StructField(_, StringType)) ++
+    Seq(StructField("match_score", IntegerType),
+      StructField("match_reason", StringType, nullable = false)) ++
+    Seq("sources", "salt_details", "brand_details",
+      "indication_details", "alias_details", "diluent_details",
+      "iv_diluent_type", "iv_diluent_amount").map(StructField(_, StringType)) ++
+    Seq(StructField("dose_values", ArrayType(DoubleType, containsNull = false)),
+      StructField("dose_units", ArrayType(StringType)),
+      StructField("dose_types", ArrayType(StringType))) ++
+    Seq("total_volume_ml", "drug_amount_mg", "diluent_amount_mg",
+      "concentration_mg_per_ml").map(StructField(_, DoubleType)))
+
+  /** A null text's columns: no_candidates, every other column null. */
+  private val untagged: Seq[Any] =
+    taggedSchema.fieldNames.toSeq.map(c => if (c == "match_reason") "no_candidates" else null)
+
+  /** One text's [[taggedSchema]] columns (`_build_result_dict`,
+    * `tagger.py:69-118`, `:953-1028`); `sel` None is no_candidates.
+    */
+  private def taggedColumns(s: ShapeRow, sel: Option[Selection.Selected]): Seq[Any] = {
+    val reason = sel.fold("no_candidates")(_.matchReason)
+    val matched = reason == "matched"
+    val best = sel.map(_.genericName).orNull
+    val source = sel.map(_.source).orNull
+    val ref = sel.map(_.referenceText).orNull
+    // component-key mixture hits take the reference's `_lookup_mixture`
+    // result path (`tagger.py:806-824`): score 100, display name and RAW
+    // reference_text from the mixture row, no regional/vaccine override
+    val isComponent = source == "drugbank_mixture"
+    // no_candidates results (`tagger.py:873-880`, `:925-935`) and mixture
+    // branch A (no candidates at all) pass NO dose/form/route and fall
+    // back to the extract-level details; matched and no_match results
+    // (branch B included) carry the categorized tokens + token-text
+    // recomputations
+    val tokens = sel.exists(_.mixtureBranch != "A")
+    val vaccineOverride = matched && s.is_vaccine && s.vaccine_name != null && !isComponent
+    def emptyToNull(v: String) = if (v == "") null else v
+    def upper(v: String) = if (v == null) null else v.toUpperCase
+    Seq(sel.map(_.atcCode).orNull,
+      sel.map(_.drugbankId).orNull,
+      // matched: regional canonical (vaccines override with the canonical
+      // vaccine name); no_candidates: pipe-joined stripped generics;
+      // no_match: null (`tagger.py:955-1028`)
+      if (isComponent) best
+      else if (vaccineOverride) s.vaccine_name
+      else if (matched) Constants.regionalCanonical.getOrElse(upper(best), upper(best))
+      else if (sel.isEmpty && s.stripped.nonEmpty) s.stripped.map(_.toUpperCase).mkString("|")
+      else null,
+      if (isComponent) ref
+      else if (vaccineOverride) s.vaccine_name
+      else if (matched) upper(Option(emptyToNull(ref)).orElse(Option(best)).getOrElse(""))
+      else null,
+      if (tokens) emptyToNull(s.input_doses.mkString("|")) else null,
+      if (tokens) s.input_forms.headOption.orNull else null,
+      if (tokens) emptyToNull(s.input_routes.mkString("|")) else null,
+      if (tokens) s.out_type_details else s.details.get("type_details").orNull,
+      if (tokens) s.out_release_details else s.raw_release_details,
+      if (tokens) s.out_form_details else s.raw_form_details,
+      if (matched && isComponent) 100 else if (matched) 1 else 0,
+      reason,
+      source,
+      s.salt_details, s.brand_details, s.indication_details, s.alias_details,
+      s.diluent_details, s.iv_diluent_type, s.iv_diluent_amount,
+      s.dose_values, s.dose_units, s.dose_types) ++
+      Seq(s.total_volume_ml, s.drug_amount_mg, s.diluent_amount_mg,
+        s.concentration_mg_per_ml).map(_.map(Double.box).orNull)
+  }
 
   /** @param texts   (id: Long, text: String)
     * @param catalog (key, generic_name, atc_code, drugbank_id, form,
@@ -599,7 +521,8 @@ object ScoredTagger {
     *         details, IV diluent type/amount, dose value/unit/type
     *         arrays, volumes and computed mg amounts). `row_idx` is
     *         deliberately absent — a positional index has no meaning in a
-    *         distributed frame; `id` is the stable key.
+    *         distributed frame; `id` is the stable key. A null text is
+    *         no_candidates.
     */
   def tagTexts(spark: SparkSession, texts: DataFrame, catalog: DataFrame,
       // the tagger's legs default to the REFERENCE's batch lookup
@@ -610,131 +533,58 @@ object ScoredTagger {
       // None = derive the multiword dictionary from the catalog like the
       // reference (`tagger.py:272-291` builds it from every loaded
       // generic name with a space); Some(set) pins/overrides it. The
-      // derivation is a driver-side collect of a DIMENSION table — the
-      // catalog is broadcastable by contract, and the reference holds the
-      // same list in tagger memory.
+      // derivation reads the rows the catalog index already collected on
+      // the driver — the catalog is broadcastable by contract, and the
+      // reference holds the same list in tagger memory.
       multiwordExtra: Option[Set[String]] = None,
       // table-driven synonyms merged OVER the static tagger dict
       // (`tagger.py:217-227`, e.g. [[graft.refbuild.UnifiedReference
       // .buildSynonymMap]] of unified_synonyms)
       synonyms: Map[String, String] = Map.empty): DataFrame = {
     val syn = Constants.taggerSynonyms ++ synonyms
-    val mw = MwDict.of(multiwordExtra.getOrElse {
-      val gen0 =
-        if (catalog.columns.contains("source"))
-          catalog.filter(col("source") =!= "mixtures")
-        else catalog
-      val gen =
-        if (gen0.columns.contains("fallback_only"))
-          gen0.filter(!col("fallback_only"))
-        else gen0
-      gen.select("generic_name")
-        .filter(col("generic_name").contains(" ")).distinct()
-        .collect().map(_.getString(0)).toSet
-    })
-    // D1 dedup-before-tag: the regex-heavy shape/probe UDF and the whole
-    // candidate/selection path run once per DISTINCT text; results
-    // re-join by text (min(id) keeps the representative deterministic).
-    // The pinned-count spread keeps the UDF stage at full parallelism —
-    // the groupBy's own exchange is AQE-coalescible down to single
-    // partitions on byte-small text frames (core.CpuSpread).
-    val uniq = graft.core.CpuSpread.byKey(
-      texts.groupBy("text").agg(min(col("id")).as("id")), col("id"))
-    // ONE extraction pass per unique text produces both the probe
-    // universe and the shape; the local checkpoint pins that single
-    // evaluation for its two consumers: the waterfall's one pass over the
-    // probes and the shape join below. It frees itself via the
-    // ContextCleaner once the returned frame is dropped.
-    val shapes = uniq
-      .select(col("id"), shapeUdf(brandMap, mw, syn)(col("text")).as("shape"))
-      .select(col("id"), col("shape.*"))
-      .localCheckpoint(true)
-    val probes = shapes
-      .select(col("id"), col("j12_probes"), col("mx_probes"),
-        posexplode(col("probes")).as(Seq("probe_pos", "probe")))
-      .select(col("id"), col("probe_pos"), col("probe"),
-        array_contains(col("j12_probes"), col("probe")).as("j12_ok"),
-        // component keys are a separate-table equality lookup in the
-        // reference (`tagger.py:327-360`) — restrict them to the exact
-        // leg so they can never prefix/fuzzy-hit the generics universe
-        array_contains(col("mx_probes"), col("probe")).as("exact_probe"))
-    val selected = tagCandidates(probes, catalog,
-      shapes.drop("probes", "j12_probes", "mx_probes"), cfg, syn)
-
-    val matched = col("match_reason") === "matched"
-    // component-key mixture hits take the reference's `_lookup_mixture`
-    // result path (`tagger.py:806-824`): score 100, display name and RAW
-    // reference_text from the mixture row, NO dose/form/route, details
-    // from extract_drug_details only, no regional/vaccine override
-    val isComponentMixture =
-      coalesce(col("best_source") === "drugbank_mixture", lit(false))
-    // branch A (`tagger.py:806-824`, no candidates at all) drops
-    // dose/form/route and uses extract-level details; branch B
-    // (`tagger.py:993-1017`, selection failed on a combination) keeps
-    // them like a normal match
-    val isBranchA = coalesce(col("mixture_branch") === "A", lit(false))
-    val noCandidates = col("match_reason") === "no_candidates"
-    val vaccineOverride = matched && col("is_vaccine") &&
-      col("vaccine_name").isNotNull && !isComponentMixture
-
-    val perText = uniq
-      .join(shapes, Seq("id"), "left")
-      .join(selected.withColumnRenamed("generic_name", "best_generic")
-          .withColumnRenamed("source", "best_source"),
-        Seq("id"), "left")
-      .withColumn("match_reason",
-        coalesce(col("match_reason"), lit("no_candidates")))
-      .select(
-        col("text"),
-        col("atc_code"),
-        col("drugbank_id"),
-        // matched: regional canonical (vaccines override with the
-        // canonical vaccine name); no_candidates: pipe-joined stripped
-        // generics; no_match: null (`tagger.py:955-1028`)
-        when(isComponentMixture, col("best_generic"))
-          .when(vaccineOverride, col("vaccine_name"))
-          .when(matched, regionalUdf(col("best_generic")))
-          .when(col("match_reason") === "no_candidates" && size(col("stripped")) > 0,
-            array_join(transform(col("stripped"), s => upper(s)), "|"))
-          .as("generic_name"),
-        when(isComponentMixture, col("reference_text"))
-          .when(vaccineOverride, col("vaccine_name"))
-          .when(matched, upper(coalesce(
-            emptyToNull(col("reference_text")), col("best_generic"), lit(""))))
-          .as("reference_text"),
-        // no_candidates results (`tagger.py:873-880`, `:925-935`) and the
-        // component-mixture branch pass NO dose/form/route and fall back
-        // to the extract-level details; matched and no_match results
-        // carry the categorized tokens + token-text recomputations
-        when(!isBranchA && !noCandidates,
-          emptyToNull(array_join(col("input_doses"), "|"))).as("dose"),
-        when(!isBranchA && !noCandidates,
-          try_element_at(col("input_forms"), lit(1))).as("form"),
-        when(!isBranchA && !noCandidates,
-          emptyToNull(array_join(col("input_routes"), "|"))).as("route"),
-        when(isBranchA || noCandidates,
-          try_element_at(col("details"), lit("type_details")))
-          .otherwise(col("out_type_details")).as("type_details"),
-        when(isBranchA || noCandidates, col("raw_release_details"))
-          .otherwise(col("out_release_details")).as("release_details"),
-        when(isBranchA || noCandidates, col("raw_form_details"))
-          .otherwise(col("out_form_details")).as("form_details"),
-        when(matched && isComponentMixture, 100)
-          .when(matched, 1).otherwise(0).as("match_score"),
-        col("match_reason"),
-        col("best_source").as("sources"),
-        col("salt_details"), col("brand_details"),
-        col("indication_details"), col("alias_details"),
-        col("diluent_details"), col("iv_diluent_type"),
-        col("iv_diluent_amount"),
-        col("dose_values"), col("dose_units"), col("dose_types"),
-        col("total_volume_ml"), col("drug_amount_mg"),
-        col("diluent_amount_mg"), col("concentration_mg_per_ml"))
-
-    texts.join(perText, Seq("text"), "left")
-      .withColumn("match_reason",
-        coalesce(col("match_reason"), lit("no_candidates")))
-      .select(Seq(col("id"), col("text")) ++
-        perText.columns.filter(_ != "text").map(col): _*)
+    val withMixtures = catalog.columns.contains("fallback_only")
+    // the catalog's one collect: the probe index, and the multiword names
+    val idx = LookupWaterfall.index(catalog, cfg)
+    val mw = MwDict.of(multiwordExtra.getOrElse(multiwordNames(idx)))
+    val index = spark.sparkContext.broadcast(idx)
+    val read = new Selection.Reader(idx.schema)
+    // Lifecycle: one exchange, one narrow pass. The spread hash-partitions
+    // the rows by text with a pinned count, so every copy of a text lands
+    // in one partition and the pass keeps full parallelism (AQE would
+    // coalesce a byte-small text frame down to single partitions,
+    // core.CpuSpread); sorted within the partition, copies are adjacent.
+    // The pass tags each distinct text ONCE (D1 dedup-before-tag, the
+    // reference's `drop_duplicates`, `tagger.py:436-441`) — the shape and
+    // probe universe ([[shapeRowOf]]), each probe looked up in the
+    // broadcast index (memoized per partition; component keys are
+    // equality lookups only, `tagger.py:327-360`), the selection, the
+    // output columns — and emits them for every copy. Nothing is pinned;
+    // the broadcast lives until the ContextCleaner collects it.
+    val schema = StructType(Seq(texts.schema("id"), texts.schema("text")) ++ taggedSchema)
+    graft.core.CpuSpread.byKey(texts.select("id", "text"), col("text"))
+      .sortWithinPartitions("text")
+      .mapPartitions { rows =>
+        val lookup = index.value.memoized()
+        var last: String = null
+        var tagged = untagged
+        rows.map { r =>
+          if (r.isNullAt(1)) Row.fromSeq(Seq(r.get(0), null) ++ untagged)
+          else {
+            val text = r.getString(1)
+            if (text != last) {
+              val s = shapeRowOf(text, brandMap, mw, syn)
+              val hits = s.probes.zipWithIndex.flatMap { case (p, i) =>
+                lookup(p, !s.mx_probes.contains(p)).toSeq.map(v =>
+                  read(i.toLong, s.j12_probes.contains(p), v))
+              }
+              last = text
+              tagged = taggedColumns(s, Selection.select(hits, Some(Selection.Shape(
+                s.input_forms, s.extra_norm, s.has_plus, s.has_in, s.stripped,
+                s.details)), withMixtures, syn))
+            }
+            Row.fromSeq(Seq(r.get(0), text) ++ tagged)
+          }
+        }
+      }(Encoders.row(schema))
   }
 }

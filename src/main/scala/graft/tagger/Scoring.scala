@@ -125,9 +125,9 @@ object Scoring {
     * skip, or combination-input-requires-combination-candidate); otherwise
     * `Some(Rank(match_priority, atc_priority, form_priority,
     * details_score))`. The reference's final rank terms (-len(generic),
-    * atc_code) are plain column expressions left to callers, so the whole
-    * selection is expressible as a row_number window (SURVEY §2.10 D3
-    * preferred form) as well as the list-local [[selectBestCandidate]].
+    * atc_code) are left to callers: the list-local [[selectBestCandidate]]
+    * and the tagger's per-id [[Selection]], which completes them to a
+    * total order.
     */
   def candidateRank(
       cand: Candidate,
@@ -199,7 +199,7 @@ object Scoring {
     * equivalence, details score, name length, ATC) — D3. Sort is stable,
     * so ties keep candidate input order, as in the reference. Delegates
     * the per-candidate work to [[candidateRank]], the same function the
-    * windowed [[ScoredTagger]] selection evaluates per candidate row.
+    * tagger's per-id [[Selection]] evaluates per candidate.
     */
   def selectBestCandidate(
       candidates: List[Candidate],

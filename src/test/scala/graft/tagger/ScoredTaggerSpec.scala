@@ -141,6 +141,43 @@ class ScoredTaggerSpec extends SparkSpec {
     assert(out(2L)._3 == "who")
   }
 
+  /** One amoxicillin row with the given source and fallback_only. */
+  private def amoxicillin(source: Option[String],
+      fallbackOnly: Option[Option[Boolean]]): DataFrame = {
+    import spark.implicits._
+    val cat = Seq(("amoxicillin", "AMOXICILLIN", "J01CA04", "DB01060", "CAPSULE",
+        "ORAL", source, "AMOXICILLIN CAPSULE"))
+      .toDF("key", "generic_name", "atc_code", "drugbank_id", "form",
+        "route", "source", "reference_text")
+    fallbackOnly.fold(cat)(f => cat.withColumn("fallback_only", typedLit(f)))
+  }
+
+  private def reasonOf(cat: DataFrame): (String, String) = {
+    import spark.implicits._
+    val r = ScoredTagger.tagTexts(spark,
+      Seq((1L, "AMOXICILLIN 500MG CAPSULE")).toDF("id", "text"), cat).collect().head
+    (r.getAs[String]("match_reason"), r.getAs[String]("sources"))
+  }
+
+  test("a catalog row with a null source is a regular candidate") {
+    assert(reasonOf(amoxicillin(Some("drugbank"), None)) == (("matched", "drugbank")))
+    assert(reasonOf(amoxicillin(None, None)) == (("matched", null)))
+    assert(reasonOf(amoxicillin(None, Some(Some(false)))) == (("matched", null)))
+  }
+
+  test("a null fallback_only is false") {
+    assert(reasonOf(amoxicillin(Some("drugbank"), Some(None))) == (("matched", "drugbank")))
+  }
+
+  test("a null text is no_candidates") {
+    import spark.implicits._
+    val out = ScoredTagger.tagTexts(spark,
+        Seq((1L, Option.empty[String]), (2L, Some("PARACETAMOL 500MG TABLET")))
+          .toDF("id", "text"), catalog)
+      .collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("match_reason")).toMap
+    assert(out == Map(1L -> "no_candidates", 2L -> "matched"))
+  }
+
   test("output carries the reference Part-2/3 schema") {
     import spark.implicits._
     val df = ScoredTagger.tagTexts(spark,
