@@ -5,7 +5,7 @@ import java.nio.file.{Path, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Pin, Tables}
 
 /** Persisted, BUCKETED LSH band index — the structure that makes
   * incremental near-dup detection O(batch) instead of O(corpus).
@@ -156,9 +156,11 @@ object BandIndex {
       f
     }
     val before = spark.table(name).count()
-    val rows = spark.table(name).distinct().localCheckpoint(true)
-    IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-      writeIndexRows(spark, rows, tn, tp)
+    Pin.scope {
+      val rows = Pin(spark.table(name).distinct(), "BandIndex.compact")
+      IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
+        writeIndexRows(spark, rows, tn, tp)
+      }
     }
     register(spark, name, path)
     (before, spark.table(name).count())
@@ -201,7 +203,7 @@ object BandIndex {
 
   /** [[append]] over ALREADY-COMPUTED band rows (doc_id, band_idx,
     * band_key) — for callers that just probed the same batch and hold
-    * the probe's pinned band frame ([[probeIndexKeepBands]]): the
+    * the probe's pinned band frame ([[probeIndex]]): the
     * shingle+minhash of the batch is the probe's dominant per-row cost
     * and must not be paid a second time by the append.
     */
@@ -259,16 +261,8 @@ object BandIndex {
     * still counted, by the batchDups leg, exactly once. Duplicate band
     * rows from a double append are harmless by construction — both legs
     * count DISTINCT partner ids.
-    */
-  def probeIndex(spark: SparkSession, name: String, batchDocs: DataFrame,
-      excludeBatchFromHistory: Boolean = false): DataFrame = {
-    val (dec, bands) = probeIndexKeepBands(spark, name, batchDocs,
-      excludeBatchFromHistory)
-    bands.unpersist()
-    dec
-  }
-
-  /** [[probeIndex]] that ALSO returns the pinned batch-band frame, for
+    *
+    * Returns (decisions, batch bands), both pinned. The bands are for
     * the probe→admit→append loops that append the same batch's bands
     * right after ([[appendBands]]). Two structural fixes over the lazy
     * formulation in one: (a) the batch banding subtree — shingle
@@ -278,15 +272,13 @@ object BandIndex {
     * caller's append); the pin bounds it to once. (b) the decision
     * frame is eagerly pinned HERE, before any caller's append can
     * mutate the table it reads (q87's ordering rule, now enforced by
-    * construction instead of by every call site). The CALLER owns the
-    * returned band pin and must unpersist it after the append.
+    * construction instead of by every call site).
     */
-  private[graft] def probeIndexKeepBands(spark: SparkSession, name: String,
-      batchDocs: DataFrame, excludeBatchFromHistory: Boolean = false)
-      : (DataFrame, DataFrame) = {
-    val newb = bandsOfDocs(batchDocs).localCheckpoint(true)
-    val dec = probeIndexPlan(spark, name, newb, batchDocs,
-      excludeBatchFromHistory).localCheckpoint(true)
+  def probeIndex(spark: SparkSession, name: String, batchDocs: DataFrame,
+      excludeBatchFromHistory: Boolean = false): (DataFrame, DataFrame) = {
+    val newb = Pin(bandsOfDocs(batchDocs), "BandIndex.batchBands")
+    val dec = Pin(probeIndexPlan(spark, name, newb, batchDocs,
+      excludeBatchFromHistory), "BandIndex.decisions")
     (dec, newb)
   }
 
@@ -358,7 +350,7 @@ object BandIndex {
     val batch = docsWithBucket(spark, dir)
       .filter(col("bucket") >= BatchThreshold)
       .select("doc_id", "text")
-    probeIndex(spark, name, batch)
+    probeIndex(spark, name, batch)._1
   }
 
 }

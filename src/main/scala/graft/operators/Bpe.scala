@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.core.{QueryDef, Tables, Ws}
+import graft.core.{Pin, QueryDef, Tables, Ws}
 
 /** BPE tokenizer training (q109) and application (q110) — byte-pair
   * encoding (Sennrich, Haddow & Birch, "Neural Machine Translation of
@@ -77,45 +77,47 @@ object Bpe {
     */
   private def learn(s: SparkSession, dir: String, applyLast: Boolean,
       merges: Int = Merges): (Seq[Row], DataFrame) = {
-    var v = vocab(s, dir)
-      .withColumn("w", rtrim(regexp_replace(col("word"), "(?s)(.)", "$1  ")))
-      .select("word", "w", "cnt")
-      .localCheckpoint(true)
     val steps = Seq.newBuilder[Row]
-    var step = 1
-    var exhausted = false
-    while (step <= merges && !exhausted) {
-      // adjacent symbol pairs, weighted by word count; zip_with pads the
-      // shifted side with null — the trailing (last, null) pair is
-      // filtered, and lambdas only reference their own arguments
-      val tops = v
-        .withColumn("s", split(col("w"), "  "))
-        .withColumn("pr", expr(
-          "zip_with(s, slice(s, 2, greatest(size(s) - 1, 0)), " +
-            "(a, b) -> struct(a AS a, b AS b))"))
-        .select(col("cnt"), explode(col("pr")).as("p"))
-        .filter(col("p.b").isNotNull)
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("cnt")).as("n"))
-        .orderBy(col("n").desc, col("a"), col("b"))
-        .limit(1)
-        .collect()
-      if (tops.isEmpty) exhausted = true
-      else {
-        val top = tops(0)
-        val (a, b, n) = (top.getString(0), top.getString(1), top.getLong(2))
-        steps += Row(step.toLong, a, b, a + b, n)
-        if (step < merges || applyLast) {
-          v = v
-            .withColumn("w", trim(replace(
-              concat(lit(" "), col("w"), lit(" ")),
-              lit(s" $a  $b "), lit(s" ${a + b} "))))
-            .localCheckpoint(true)
+    // the scope releases every merge round's vocabulary but the last
+    val last = Pin.scope {
+      var v = Pin(vocab(s, dir)
+        .withColumn("w", rtrim(regexp_replace(col("word"), "(?s)(.)", "$1  ")))
+        .select("word", "w", "cnt"), "Bpe.vocab")
+      var step = 1
+      var exhausted = false
+      while (step <= merges && !exhausted) {
+        // adjacent symbol pairs, weighted by word count; zip_with pads the
+        // shifted side with null — the trailing (last, null) pair is
+        // filtered, and lambdas only reference their own arguments
+        val tops = v
+          .withColumn("s", split(col("w"), "  "))
+          .withColumn("pr", expr(
+            "zip_with(s, slice(s, 2, greatest(size(s) - 1, 0)), " +
+              "(a, b) -> struct(a AS a, b AS b))"))
+          .select(col("cnt"), explode(col("pr")).as("p"))
+          .filter(col("p.b").isNotNull)
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum(col("cnt")).as("n"))
+          .orderBy(col("n").desc, col("a"), col("b"))
+          .limit(1)
+          .collect()
+        if (tops.isEmpty) exhausted = true
+        else {
+          val top = tops(0)
+          val (a, b, n) = (top.getString(0), top.getString(1), top.getLong(2))
+          steps += Row(step.toLong, a, b, a + b, n)
+          if (step < merges || applyLast) {
+            v = Pin(v
+              .withColumn("w", trim(replace(
+                concat(lit(" "), col("w"), lit(" ")),
+                lit(s" $a  $b "), lit(s" ${a + b} ")))), "Bpe.vocab")
+          }
+          step += 1
         }
-        step += 1
       }
+      v
     }
-    (steps.result(), v)
+    (steps.result(), last)
   }
 
   /** Merge learning at an arbitrary depth — production vocabularies run

@@ -5,6 +5,8 @@ import java.nio.file.{Path, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Pin
+
 /** Persisted Lloyd cluster assignment — the [[BandIndex]] /
   * [[PostingsIndex]] / [[BloomIndex]] / [[FpIndex]] "build once, probe
   * forever" pattern applied to the clustering layer.
@@ -238,28 +240,27 @@ object ClusterIndex {
       f
     }
     val before = spark.table(name).count()
-    val rows = spark.table(name).distinct().localCheckpoint(true)
-    val sidecar = path.resolve("_CENTROIDS").toString
-    val cents =
-      if (graft.core.Lake.exists(sidecar))
-        Some(spark.read.parquet(sidecar).localCheckpoint(true))
-      else None
-    IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-      rows
-        .repartition(NumBuckets, col("cid"))
-        .write.format("parquet")
-        .bucketBy(NumBuckets, "cid")
-        .sortBy("cid", "vec_id")
-        .option("path", tp.toString)
-        .saveAsTable(tn)
-      cents.foreach(_.coalesce(1).write.mode("overwrite")
-        .parquet(tp.resolve("_CENTROIDS").toString))
+    Pin.scope {
+      val rows = Pin(spark.table(name).distinct(), "ClusterIndex.compact")
+      val sidecar = path.resolve("_CENTROIDS").toString
+      val cents =
+        if (graft.core.Lake.exists(sidecar))
+          Some(Pin(spark.read.parquet(sidecar), "ClusterIndex.compact.centroids"))
+        else None
+      IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
+        rows
+          .repartition(NumBuckets, col("cid"))
+          .write.format("parquet")
+          .bucketBy(NumBuckets, "cid")
+          .sortBy("cid", "vec_id")
+          .option("path", tp.toString)
+          .saveAsTable(tn)
+        cents.foreach(_.coalesce(1).write.mode("overwrite")
+          .parquet(tp.resolve("_CENTROIDS").toString))
+      }
     }
     register(spark, name, path)
-    val after = spark.table(name).count()
-    rows.unpersist()
-    cents.foreach(_.unpersist())
-    (before, after)
+    (before, spark.table(name).count())
   }
 
   /** Post-crash recovery for a SINK-MANAGED assignment index (the

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{Pin, QueryDef, Tables}
 
 /** Deterministic k-means (Lloyd) over the `embeddings` table — the
   * clustering primitive behind cluster-balanced curation (SemDeDup's
@@ -121,10 +121,8 @@ object Clustering {
     // Lloyd seed, each iteration's assign AND update (2 per iteration,
     // all SERIAL jobs, so nothing amortizes them concurrently), plus
     // the final assignment: 6 scan+quantize passes where one suffices.
-    // The pin is released by the ContextCleaner once the caller's
-    // result frame is materialized and dropped (q104) or persisted
-    // (ClusterIndex.ensure).
-    val q = qvecs(s, dir).localCheckpoint(true)
+    // The pin lives until the caller's scope closes.
+    val q = Pin(qvecs(s, dir), "Clustering.qvecs")
     val cents = lloydCentroids(q, K, Iters)
     val asg = assign(q, cents).select("vec_id", "cid")
     val ev = Tables(s, dir, "embeddings")
@@ -300,16 +298,14 @@ object Clustering {
     // full-precision projection) — for the ensure* builds `feats0` is
     // the modality's mapPartitions codec decode of the whole corpus,
     // so the lazy form paid the decode three times. The pin is
-    // feature-sized (vec_id + small int array), released by the
-    // ContextCleaner after the build persists / the caller's result
-    // materializes.
-    val feats = feats0.localCheckpoint(true)
+    // feature-sized (vec_id + small int array) and lives until the
+    // caller's scope closes.
+    val feats = Pin(feats0, "Clustering.sampled.features")
     val q = feats.select(col("vec_id"), col(featCol).as("qv"))
-    val smp = q
+    val smp = Pin(q
       .withColumn("priority", SketchExact.priorityCol(col("vec_id"), lit(1)))
       .orderBy("priority", "vec_id").limit(SampleK)
-      .select("vec_id", "qv")
-      .localCheckpoint(true)
+      .select("vec_id", "qv"), "Clustering.sampled.sample")
     val cents = lloydCentroids(smp, K, Iters)
     val asg = assign(q, cents).select("vec_id", "cid")
     val full = feats
@@ -459,13 +455,13 @@ object Clustering {
     * what to assign against them (q101: the same corpus; q114: the
     * full corpus against sample-learned centroids).
     */
-  def lloydCentroids(vecs: DataFrame, k: Int, iters: Int): DataFrame = {
-    var cents = vecs.orderBy("vec_id").limit(k)
-      .select(col("vec_id").as("cid"), col("qv").as("cv"))
-      .localCheckpoint(true)
+  def lloydCentroids(vecs: DataFrame, k: Int, iters: Int): DataFrame = Pin.scope {
+    // the scope releases every iteration's centroids but the last
+    var cents = Pin(vecs.orderBy("vec_id").limit(k)
+      .select(col("vec_id").as("cid"), col("qv").as("cv")), "Clustering.lloyd.centroids")
     for (_ <- 1 to iters) {
       val asg = assign(vecs, cents)
-      cents = update(vecs, asg, cents).localCheckpoint(true)
+      cents = Pin(update(vecs, asg, cents), "Clustering.lloyd.centroids")
     }
     cents
   }
@@ -614,15 +610,14 @@ object Clustering {
     * and both batch probes.
     */
   private def modalMaintenanceLoop(s: SparkSession, dir: String,
-      rawFeats: DataFrame, featCol: String, tableBase: String): DataFrame = {
+      rawFeats: DataFrame, featCol: String, tableBase: String): DataFrame = Pin.scope {
     val name = tableBase + "_maint_" + ProcessHandle.current().pid()
     val path = java.nio.file.Paths.get(ClusterIndex.indexRoot, name)
     IndexCommit.purgeAllScratchRoots()
-    val feats = rawFeats
+    val feats = Pin(rawFeats
       .withColumn("bucket",
         conv(substring(md5(col("vec_id").cast("string")), 1, 2), 16, 10)
-          .cast("int"))
-      .localCheckpoint(true)
+          .cast("int")), s"modalMaintenance.$featCol.features")
     def slice(lo: Int, hi: Int) =
       feats.filter(col("bucket") >= lo && col("bucket") < hi)
         .select("vec_id", featCol)
@@ -642,29 +637,26 @@ object Clustering {
         transform(col(featCol), x => x.cast("long")).as("qv")),
       K, Iters)
     ClusterIndex.buildIndexFrame(s, assignB(hist, cents), name, path)
-    val b1 = assignB(slice(200, 230), cents).localCheckpoint(true)
-    val p1 = ClusterIndex.probeVerdicts(s, name, b1,
+    val b1 = Pin(assignB(slice(200, 230), cents),
+      s"modalMaintenance.$featCol.batch1")
+    val p1 = Pin(ClusterIndex.probeVerdicts(s, name, b1,
         excludeBatchFromHistory = true)
-      .withColumn("batch_no", lit(1))
-      .localCheckpoint(true)
+      .withColumn("batch_no", lit(1)), s"modalMaintenance.$featCol.verdicts1")
     ClusterIndex.append(s, name,
       b1.join(p1.filter(col("kept")).select("vec_id"), "vec_id"))
-    b1.unpersist()
     // batch 2's assignment is pinned like batch 1's: probeVerdicts
     // consumes its batch frame in five branches — lazy, each branch
     // re-ran the pinned-feature read + broadcast-centroid assignment
-    val b2 = assignB(slice(230, 256), cents).localCheckpoint(true)
+    val b2 = Pin(assignB(slice(230, 256), cents),
+      s"modalMaintenance.$featCol.batch2")
     val p2 = ClusterIndex.probeVerdicts(s, name, b2,
         excludeBatchFromHistory = true)
       .withColumn("batch_no", lit(2))
-    // pin the small verdict result eagerly, then release the
-    // corpus-sized decoded-feature frame (the q118 discipline)
-    val out = p1.unionByName(p2)
+    // pin the small verdict result eagerly; the scope then releases
+    // the corpus-sized decoded-feature frame (the q118 discipline)
+    Pin(p1.unionByName(p2)
       .select("batch_no", "vec_id", "cid", "dup_of", "kept")
-      .orderBy("batch_no", "vec_id")
-      .localCheckpoint(true)
-    feats.unpersist(); p1.unpersist(); b2.unpersist()
-    out
+      .orderBy("batch_no", "vec_id"), s"modalMaintenance.$featCol.verdicts")
   }
 
   /** [[modalMaintenanceLoop]]'s oracle text: the modality's feature
@@ -821,7 +813,7 @@ object Clustering {
       // qvecs pinned once (the assignmentArtifacts rule): the Lloyd
       // chain's 5 serial consumers + the final assign otherwise each
       // re-run the scan+quantize subtree
-      (s, dir) => lloyd(qvecs(s, dir).localCheckpoint(true), K, Iters)
+      (s, dir) => lloyd(Pin(qvecs(s, dir), "q101:qvecs"), K, Iters)
         .orderBy("vec_id"),
       Some(LloydCtes +
         "\nSELECT vec_id, cid, dist2 FROM af ORDER BY vec_id")),
@@ -841,7 +833,7 @@ object Clustering {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         // qvecs pinned once (the assignmentArtifacts rule)
-        val asg = lloyd(qvecs(s, dir).localCheckpoint(true), K, Iters)
+        val asg = lloyd(Pin(qvecs(s, dir), "q102:qvecs"), K, Iters)
           .select(col("vec_id"), col("cid"))
           .withColumn("priority",
             SketchExact.priorityCol(col("vec_id"), lit(1)))
@@ -885,7 +877,7 @@ object Clustering {
       // persisted form reads a bucketed table 3x instead, exchange-
       // free by layout; the in-query form earns the same by pinning)
       (s, dir) => semdedupFrom(
-        assignmentWithVectors(s, dir).localCheckpoint(true)),
+        Pin(assignmentWithVectors(s, dir), "q104:assignment")),
       Some(SemDedupOracle)),
 
     /* SemDeDup's PRODUCTION form: the same within-cell prune, but the
@@ -934,13 +926,12 @@ object Clustering {
       "q114_sample_kmeans",
       (s, dir) => {
         val q = qvecs(s, dir)
-        val smp = q
+        // bounded state (SampleK rows), consumed by the seed select
+        // and every iteration's assign+update
+        val smp = Pin(q
           .withColumn("priority", SketchExact.priorityCol(col("vec_id"), lit(1)))
           .orderBy("priority", "vec_id").limit(SampleK)
-          .select("vec_id", "qv")
-          // bounded state (SampleK rows), consumed by the seed select
-          // and every iteration's assign+update
-          .localCheckpoint(true)
+          .select("vec_id", "qv"), "q114:sample")
         assign(q, lloydCentroids(smp, K, Iters)).orderBy("vec_id")
       },
       Some(ECte + ",\n" + sampleCtes + ",\n" +
@@ -970,7 +961,7 @@ object Clustering {
      */
     QueryDef(
       "q116_cluster_maintenance",
-      (s, dir) => {
+      (s, dir) => Pin.scope {
         // pid-suffixed scratch under the shared index root (q112's
         // discipline): concurrent processes must not interleave
         // delete/saveAsTable on one scratch path
@@ -992,44 +983,38 @@ object Clustering {
         // quantized history is pinned once — the Lloyd chain's 5
         // serial consumers otherwise each re-ran the scan + md5-bucket
         // + quantize subtree (the assignmentArtifacts rule)
-        val histQ = hist.select(col("vec_id"),
+        val histQ = Pin(hist.select(col("vec_id"),
             transform(col("embedding"),
               x => round(x.cast("double") * lit(1000000.0)).cast("long"))
-              .as("qv"))
-          .localCheckpoint(true)
+              .as("qv")), "q116:history")
         val cents = lloydCentroids(histQ, K, Iters)
         ClusterIndex.buildIndexFrame(s,
           ClusterIndex.assignBatch(hist, cents), name, path)
-        val b1 = ClusterIndex.assignBatch(slice(200, 230), cents)
-          .localCheckpoint(true)
+        val b1 = Pin(ClusterIndex.assignBatch(slice(200, 230), cents),
+          "q116:batch1")
         // eagerly pinned BEFORE the append mutates the table (the q112
         // probe discipline); exclusion on, mirroring the sink's replay
         // posture — a no-op on this clean run, spec-proven load-bearing
-        val p1 = ClusterIndex.probeVerdicts(s, name, b1,
+        val p1 = Pin(ClusterIndex.probeVerdicts(s, name, b1,
             excludeBatchFromHistory = true)
-          .withColumn("batch_no", lit(1))
-          .localCheckpoint(true)
+          .withColumn("batch_no", lit(1)), "q116:verdicts1")
         ClusterIndex.append(s, name,
           b1.join(p1.filter(col("kept")).select("vec_id"), "vec_id"))
-        b1.unpersist()
         // batch 2's assignment is pinned like batch 1's: probeVerdicts
         // consumes its batch frame in FIVE branches (hist-pair join,
         // replay-exclusion broadcast, both sides of the within-batch
         // self-join, final join-back) — lazy, each branch re-ran the
         // scan + broadcast-centroid assignment
-        val b2 = ClusterIndex.assignBatch(slice(230, 256), cents)
-          .localCheckpoint(true)
+        val b2 = Pin(ClusterIndex.assignBatch(slice(230, 256), cents),
+          "q116:batch2")
         val p2 = ClusterIndex.probeVerdicts(s, name, b2,
             excludeBatchFromHistory = true)
           .withColumn("batch_no", lit(2))
-        // pin the small verdict result eagerly, then release the
-        // batch-sized pins (the q118 discipline)
-        val out = p1.unionByName(p2)
+        // pin the small verdict result eagerly; the scope then releases
+        // the batch-sized pins (the q118 discipline)
+        Pin(p1.unionByName(p2)
           .select("batch_no", "vec_id", "cid", "dup_of", "kept")
-          .orderBy("batch_no", "vec_id")
-          .localCheckpoint(true)
-        Seq(histQ, b2, p1).foreach(_.unpersist())
-        out
+          .orderBy("batch_no", "vec_id"), "q116:verdicts")
       },
       Some(ECte + ",\n" +
         """bk AS (SELECT vec_id,
@@ -1303,12 +1288,12 @@ object Clustering {
      */
     QueryDef(
       "q136_quarantined_semdedup",
-      (s, dir) => {
+      (s, dir) => Pin.scope {
         import s.implicits._
         val safe = graft.functions.MediaCodecs.quarantining(
           (b: Array[Byte]) =>
             graft.functions.MediaCodecs.PpmCodec.decodeHistogram(b))
-        val dec = Multimodal.mintWide(s, Tables(s, dir, "documents"),
+        val dec = Pin(Multimodal.mintWide(s, Tables(s, dir, "documents"),
             corrupt = true)
           .flatMap { r =>
             r.image.map { b =>
@@ -1316,26 +1301,21 @@ object Clustering {
               (r.doc_id, x.toOption, x.left.toOption)
             }
           }
-          .toDF("vec_id", "hist", "reason")
-          .localCheckpoint(true)
+          .toDF("vec_id", "hist", "reason"), "q136:decode")
         val healthy = dec.filter(col("reason").isNull)
           .select("vec_id", "hist")
         // the assignment frame is pinned for semdedupFrom's three
         // consumers (the q104 rule)
-        val full = sampledArtifacts(healthy, "hist")._2
-          .localCheckpoint(true)
+        val full = Pin(sampledArtifacts(healthy, "hist")._2, "q136:assignment")
         val verd = semdedupFrom(full)
           .select(col("vec_id"), col("cid"), col("dup_of"), col("kept"))
-        val out = dec
+        Pin(dec
           .select(col("vec_id"), col("reason").isNotNull.as("quarantined"),
             col("reason"))
           .join(verd, Seq("vec_id"), "left")
           .select(col("vec_id"), col("quarantined"), col("reason"),
             col("cid"), col("dup_of"), col("kept"))
-          .orderBy("vec_id")
-          .localCheckpoint(true)
-        dec.unpersist(); full.unpersist()
-        out
+          .orderBy("vec_id"), "q136:verdicts")
       },
       Some("WITH " + Multimodal.ImageFeatureCtes + ",\n" +
         "e AS (SELECT doc_id AS vec_id, v AS qv FROM f\n" +

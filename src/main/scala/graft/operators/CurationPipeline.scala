@@ -5,7 +5,7 @@ import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Lake, QueryDef, Tables}
+import graft.core.{Lake, Pin, QueryDef, Tables}
 
 /** q115 — the composed end-to-end LLM-training-data curation pipeline:
   * every cleaning stage the engine provides, chained over ONE corpus in
@@ -65,9 +65,10 @@ object CurationPipeline {
     * pinned — the same exponential the oracle needed MATERIALIZED
     * stage CTEs for). Two modes:
     *
-    *  - DEFAULT: `localCheckpoint` — the in-engine barrier at harness
-    *    scale (no files, no restartability; a crashed run restarts
-    *    from zero).
+    *  - DEFAULT: a [[Pin]] named `<query>:<stage>` — the in-engine
+    *    barrier at harness scale (no files, no restartability; a
+    *    crashed run restarts from zero). The per-stage name keeps the
+    *    call-site attribution per stage.
     *  - LAKE MODE ([[stageDir]] set): each stage frame is written as a
     *    GENERATION SNAPSHOT — parquet data via temp-sibling build +
     *    rename, then a `_GRAFT_DONE` marker carrying the corpus
@@ -86,13 +87,7 @@ object CurationPipeline {
   private def pin(s: SparkSession, fp: String, qtag: String, stage: String)(
       df: => DataFrame): DataFrame =
     stageDir match {
-      case None =>
-        // per-stage call-site tag: all six pins otherwise share one
-        // localCheckpoint line and the call-site attribution collapses
-        // into a single bucket (the round-13 profiling blind spot)
-        val sc = s.sparkContext
-        sc.setCallSite(s"$qtag:$stage localCheckpoint")
-        try df.localCheckpoint(true) finally sc.clearCallSite()
+      case None => Pin(df, s"$qtag:$stage")
       case Some(root) =>
         val p = s"$root/$stage"
         val dataDir = s"$p/data"
@@ -129,7 +124,7 @@ object CurationPipeline {
     }
 
   /** Lake-mode root for q115's stage snapshots; unset = in-engine
-    * `localCheckpoint` barriers. The system property is the test seam,
+    * [[Pin]] barriers. The system property is the test seam,
     * the env var the deployment surface ([[IndexCommit.numBuckets]]'s
     * pattern).
     */
@@ -345,7 +340,7 @@ object CurationPipeline {
         (b: Array[Byte]) => MediaCodecs.WavCodec.decodeEnvelope(b))
       val safeVid = MediaCodecs.quarantining(
         (b: Array[Byte]) => MediaCodecs.VideoCodec.decodeSampledSums(b))
-      Multimodal.mintWide(s,
+      Pin(Multimodal.mintWide(s,
           Tables(s, dir, "documents")
             .filter(col("doc_id") % 3 === 0 || col("doc_id") % 4 === 1 ||
               col("doc_id") % 5 === 2)
@@ -363,20 +358,18 @@ object CurationPipeline {
           }
         }
         .toDF("doc_id", "hist", "img_reason", "env", "aud_reason",
-          "vfeat", "vid_reason")
-        .localCheckpoint(true)
+          "vfeat", "vid_reason"), s"$qtag:decode")
     }
     // healthy-learned within-cell verdicts for one modality of the
     // poisoned corpus: quarantined attachments are absent from the
     // learning sample, the Lloyd iterations, AND the pair join
     def healthyVerdicts(featCol: String): DataFrame = {
       // the assignment frame is pinned for semdedupFrom's three
-      // consumers (the q104/q136 rule) — released by the ContextCleaner
-      // once the owning stage's pin materializes
-      val full = Clustering.sampledArtifacts(
+      // consumers (the q104/q136 rule)
+      val full = Pin(Clustering.sampledArtifacts(
         poisonDec.get.filter(col(featCol).isNotNull)
           .select(col("doc_id").as("vec_id"), col(featCol)),
-        featCol)._2.localCheckpoint(true)
+        featCol)._2, s"$qtag:$featCol.assignment")
       Clustering.semdedupFrom(full)
         .select(col("vec_id").as("doc_id"), col("kept"))
     }
@@ -450,7 +443,7 @@ object CurationPipeline {
           .select(col("doc_id"), col("kept").as("vid_kept"))
       val joined = base2.join(vidVerdicts, Seq("doc_id"), "left")
         .filter(col("vid_kept").isNull || col("vid_kept"))
-      val st = pinStage("s2v")(
+      pinStage("s2v")(
         if (!poisoned)
           joined.withColumn("has_video", col("vid_kept").isNotNull)
             .drop("vid_kept")
@@ -458,10 +451,6 @@ object CurationPipeline {
           joined.join(reasonsOf("vid_reason"), Seq("doc_id"), "left")
             .withColumn("has_video", col("doc_id") % 5 === 2)
             .drop("vid_kept"))
-      // the last modal stage is pinned — release the decode frame (the
-      // reason columns now live inside the stage frames)
-      poisonDec.foreach(_.unpersist())
-      st
     }
 
     // s3: char-span dedup apply (q108) from the PERSISTED FpIndex,
@@ -479,7 +468,7 @@ object CurationPipeline {
       // measurement; the verdictBatch splice pin is the same rule one
       // layer up). Built inside the pinStage thunk so a lake-mode
       // resume never pays it.
-      val spans = Winnow.foreignSpansOf(fp).localCheckpoint(true)
+      val spans = Pin(Winnow.foreignSpansOf(fp), s"$qtag:${pfx}s3")
       base3.drop("text")
         .join(Winnow.spliceClean(alld, spans), "doc_id")
         .withColumnRenamed("clean_text", "text")
@@ -510,7 +499,7 @@ object CurationPipeline {
 
     // s5: LM-quality filter (q111), LM trained on THIS stage's corpus
     val s5 = pinStage("s5")(s4.join(
-      TextAnalysis.lmFilterKeptOf(s4.select("doc_id", "text"))
+      TextAnalysis.lmFilterKeptOf(s4.select("doc_id", "text"), s"$qtag:${pfx}s5")
         .select("doc_id", "avg_mn"),
       "doc_id"))
 
@@ -848,33 +837,26 @@ object CurationPipeline {
     FpIndex.buildIndex(s, hist, name, path)
     // the frozen generation artifacts: bigram LM + exact 20th-percentile
     // cutoff, trained on history ONCE (the sink's artifactsOf verbatim)
-    val art = CurationSink.artifactsOf(hist)
-    val (v1, pin1, bfp1) = CurationSink.verdictBatchPinned(s, slice(200, 230),
-      name, dir, art)
-    // eagerly pinned BEFORE the append mutates the scratch table
-    val p1 = v1.withColumn("batch_no", lit(1)).localCheckpoint(true)
-    pin1.unpersist()
-    // the probe already winnowed batch 1 — append its pinned rows
-    FpIndex.appendRows(s, name, bfp1)
-    bfp1.unpersist()
-    val (v2, pin2, bfp2) = CurationSink.verdictBatchPinned(s, slice(230, 250),
-      name, dir, art)
-    bfp2.unpersist() // phase 2 appends nothing
-    val p2 = v2.withColumn("batch_no", lit(2))
-    // pin the SMALL verdict result eagerly, then release the
+    // pin the SMALL verdict result eagerly; the scope then releases the
     // model-sized artifact frames (bigram count table ∝ corpus vocab)
-    // and the phase pins — a lazy return would hold them in the block
-    // manager until the consumer materializes (the FpIndex.compact
-    // unpersist discipline); the sink itself keeps its artifacts pinned
+    // and the phase pins — the sink itself keeps its artifacts pinned
     // for its LIFETIME by design, but a query run must not
-    val out = p1.unionByName(p2)
-      .select("batch_no", "doc_id", "n_spans", "n_chars_removed", "n_sh",
-        "n_hit", "n_bigrams", "lm_micro_nats", "avg_mn", "contaminated",
-        "kept", "clean_text")
-      .orderBy("batch_no", "doc_id")
-      .localCheckpoint(true)
-    Seq(art.lm.c12, art.lm.c1, art.lm.vocab, p1, pin2).foreach(_.unpersist())
-    out
+    Pin.scope {
+      val art = CurationSink.artifactsOf(hist)
+      val (v1, bfp1) = CurationSink.verdictBatch(s, slice(200, 230),
+        name, dir, art)
+      // eagerly pinned BEFORE the append mutates the scratch table
+      val p1 = Pin(v1.withColumn("batch_no", lit(1)), "q118:phase1")
+      // the probe already winnowed batch 1 — append its pinned rows
+      FpIndex.appendRows(s, name, bfp1)
+      val (v2, _) = CurationSink.verdictBatch(s, slice(230, 250),
+        name, dir, art)
+      Pin(p1.unionByName(v2.withColumn("batch_no", lit(2)))
+        .select("batch_no", "doc_id", "n_spans", "n_chars_removed", "n_sh",
+          "n_hit", "n_bigrams", "lm_micro_nats", "avg_mn", "contaminated",
+          "kept", "clean_text")
+        .orderBy("batch_no", "doc_id"), "q118:verdicts")
+    }
   }
 
   /** One oracle phase: probe-hit islands → spans → splice → shingle

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables, Ws}
+import graft.core.{Pin, QueryDef, Tables, Ws}
 
 /** Near-duplicate detection over `documents`: n-gram Jaccard via an
   * inverted-index (shared-shingle) join, MinHash+LSH banding, and SimHash.
@@ -195,12 +195,10 @@ object Dedup {
     // the band frame is pinned: both sides of the self-join consume it,
     // and lazy, the shingle explode + 8-seed minhash aggregate ran
     // twice per pair-generation call (the capstone runs this twice per
-    // chain — four band computations per capstone run). The pin is
-    // released by the ContextCleaner once the caller's result
-    // materializes (each caller's CC sym pin / stage pin is the next
-    // barrier downstream).
-    val bands = bandsOf(shingleIndexOf(d).select("doc_id", "sh"))
-      .localCheckpoint(true)
+    // chain — four band computations per capstone run). The pin lives
+    // until the caller's scope closes.
+    val bands = Pin(bandsOf(shingleIndexOf(d).select("doc_id", "sh")),
+      "Dedup.minhashBands")
     // renamed-projection self-join, not as("a")/as("b") aliases: aliased
     // conditions can silently mis-bind when the frame is reused across
     // subtrees of a larger plan (observed in BandIndex.probeIndex's
@@ -241,10 +239,12 @@ object Dedup {
     if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
       println(f"[cc:$kind] round $round%2d  edges=$edges%-9d  elapsed=${(System.nanoTime() - t0) / 1e9}%7.2f s")
 
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    val sym = edges.select(col("d1").as("src"), col("d2").as("dst"))
-      .unionByName(edges.select(col("d2").as("src"), col("d1").as("dst")))
-      .localCheckpoint(true) // consumed once per iteration — pin the scan
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = Pin.scope {
+    // the scope releases the edge pin and every round's labels but the
+    // last, which it returns
+    val sym = Pin(edges.select(col("d1").as("src"), col("d2").as("dst"))
+      .unionByName(edges.select(col("d2").as("src"), col("d1").as("dst"))),
+      "Dedup.cc.edges") // consumed once per iteration — pin the scan
     // FUSED FIRST ROUND: initializing every vertex to the minimum of its
     // closed neighborhood IS the identity-init loop's first propagation
     // (round 1 over identity labels computes min(self, neighbor ids) —
@@ -254,10 +254,9 @@ object Dedup {
     // call, with byte-identical labels at every subsequent round. The
     // chain runs CC twice per capstone, so this saves two rounds per
     // capstone run.
-    var labels = sym
+    var labels = Pin(sym
       .select(col("src").as("id"), least(col("src"), col("dst")).as("label"))
-      .groupBy("id").agg(min(col("label")).as("label"))
-      .localCheckpoint(true)
+      .groupBy("id").agg(min(col("label")).as("label")), "Dedup.cc.labels")
     // one shuffle per round: neighbor labels + self labels union into a
     // single min-aggregation (no second join to merge back). Convergence
     // check rides the checkpointed result as a tiny aggregate: labels
@@ -277,8 +276,8 @@ object Dedup {
       val msgs = sym.join(labels, sym("dst") === labels("id"))
         .select(col("src").as("id"), col("label"))
         .unionByName(labels)
-      val next = msgs.groupBy("id").agg(min(col("label")).as("label"))
-        .localCheckpoint(true)
+      val next = Pin(msgs.groupBy("id").agg(min(col("label")).as("label")),
+        "Dedup.cc.labels")
       val s = labelSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
@@ -318,16 +317,14 @@ object Dedup {
     * appears in `edges` with its component's minimum vertex id.
     */
   def connectedComponentsStar(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val vertices = edges.select(col("d1").as("id"))
+    val vertices = Pin(edges.select(col("d1").as("id"))
       .unionByName(edges.select(col("d2").as("id")))
-      .distinct()
-      .localCheckpoint(true)
-    var e = edges
+      .distinct(), "Dedup.ccStar.vertices")
+    var e = Pin(edges
       .select(least(col("d1"), col("d2")).as("a"),
         greatest(col("d1"), col("d2")).as("b"))
       .where(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), "Dedup.ccStar.edges")
     def checksum(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)),
         sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)"))).head()
@@ -357,13 +354,12 @@ object Dedup {
         .unionByName(ls.select(col("b").as("u"), col("a").as("v")))
       val neg = sym2.where(col("v") < col("u"))
       val negMin = neg.groupBy("u").agg(min(col("v")).as("m"))
-      val ss = neg.join(negMin, "u")
+      val ss = Pin(neg.join(negMin, "u")
         .select(col("v").as("x"), col("m"))
         .unionByName(negMin.select(col("u").as("x"), col("m")))
         .where(col("x") =!= col("m"))
         .select(col("m").as("a"), col("x").as("b")) // m < x by construction
-        .distinct()
-        .localCheckpoint(true)
+        .distinct(), "Dedup.ccStar.edges")
       val cur = checksum(ss)
       // the checksum is the cheap per-round trigger; before actually
       // terminating, confirm with an EXACT set-equality check (equal count
@@ -829,17 +825,16 @@ object Dedup {
     QueryDef(
       "q76_source_overlap",
       (s, dir) => {
-        val srcSh = graft.core.CpuSpread.byKey(
+        // pinned: THREE consumers (the per-source totals and both
+        // sides of the overlap self-join) — lazy, the shingle
+        // explode + distinct shuffle ran once per consumer
+        val srcSh = Pin(graft.core.CpuSpread.byKey(
           docs(s, dir)
             .select(col("source"), col("doc_id"),
               split(trim(col("text")), Ws.Plus).as("t")),
           col("doc_id"))
           .select(col("source"), explode(shinglesOf(col("t"))).as("sh"))
-          .distinct()
-          // pinned: THREE consumers (the per-source totals and both
-          // sides of the overlap self-join) — lazy, the shingle
-          // explode + distinct shuffle ran once per consumer
-          .localCheckpoint(true)
+          .distinct(), "q76:sourceShingles")
         val tot = srcSh.groupBy("source").agg(count(lit(1)).as("n"))
         // renamed-projection self-join (see minhashPairs' comment)
         val bSide = srcSh.select(col("source").as("source_b"),
@@ -1057,7 +1052,7 @@ object Dedup {
         // instead of a split+zip_with aggregate over 64-element string
         // arrays — char-wise difference count of binary strings ==
         // popcount of xor of their integer values, bit for bit.
-        val chunks = capHotKeys(
+        val chunks = Pin(capHotKeys(
           sig.select(col("doc_id"), col("s"),
             explode(sequence(lit(0), lit(3))).as("c"))
             .withColumn("chunk", expr("substring(s, c * 16 + 1, 16)")),
@@ -1066,8 +1061,7 @@ object Dedup {
             .cast("long"))
           .withColumn("h2", conv(substring(col("s"), 33, 32), 2, 10)
             .cast("long"))
-          .drop("s")
-          .localCheckpoint(true)
+          .drop("s"), "q80:chunks")
         // renamed-projection self-join (see minhashPairs' comment);
         // hamming is a function of the pair, so the cheap bit_count
         // verify runs BEFORE the distinct — far survivors never enter
@@ -1147,14 +1141,12 @@ object Dedup {
         BandIndex.buildIndex(s, slice(0, 200), name, path)
         // keep the probe's pinned batch bands and append THEM — the
         // append otherwise re-shingles and re-minhashes the batch the
-        // probe just banded (probeIndexKeepBands pins its decision
-        // frame eagerly, so the append still cannot perturb phase 1)
-        val (p1v, bands1) = BandIndex.probeIndexKeepBands(s, name,
-          slice(200, 230))
+        // probe just banded (probeIndex pins its decision frame
+        // eagerly, so the append still cannot perturb phase 1)
+        val (p1v, bands1) = BandIndex.probeIndex(s, name, slice(200, 230))
         val p1 = p1v.withColumn("batch_no", lit(1))
         BandIndex.appendBands(s, name, bands1)
-        bands1.unpersist()
-        val p2 = BandIndex.probeIndex(s, name, slice(230, 256))
+        val p2 = BandIndex.probeIndex(s, name, slice(230, 256))._1
           .withColumn("batch_no", lit(2))
         p1.unionByName(p2).orderBy("batch_no", "doc_id")
       },

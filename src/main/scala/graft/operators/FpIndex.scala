@@ -5,6 +5,8 @@ import java.nio.file.{Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pin
+
 /** Persisted, BUCKETED winnow-fingerprint index — the structure that
   * makes char-level exact-substring dedup O(batch) per ingest instead
   * of O(corpus) per run.
@@ -161,20 +163,20 @@ object FpIndex {
       f
     }
     val before = spark.table(name).count()
-    val rows = spark.table(name).distinct().localCheckpoint(true)
-    IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-      rows
-        .repartition(NumBuckets, col("h"))
-        .write.format("parquet")
-        .bucketBy(NumBuckets, "h")
-        .sortBy("h")
-        .option("path", tp.toString)
-        .saveAsTable(tn)
+    Pin.scope {
+      val rows = Pin(spark.table(name).distinct(), "FpIndex.compact")
+      IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
+        rows
+          .repartition(NumBuckets, col("h"))
+          .write.format("parquet")
+          .bucketBy(NumBuckets, "h")
+          .sortBy("h")
+          .option("path", tp.toString)
+          .saveAsTable(tn)
+      }
     }
     register(spark, name, path)
-    val after = spark.table(name).count()
-    rows.unpersist()
-    (before, after)
+    (before, spark.table(name).count())
   }
 
   /** Register an existing on-disk index into this session's catalog —
@@ -226,7 +228,7 @@ object FpIndex {
 
   /** [[append]] over ALREADY-WINNOWED fingerprint rows (doc_id, pos, h)
     * — the entry for callers that just probed the same batch and hold
-    * the probe's pinned fingerprint frame ([[probeSpansKeepFp]]):
+    * the probe's pinned fingerprint frame ([[probeSpans]]):
     * re-running the per-char winnow for the append would double the
     * batch's decode cost for no new information.
     */
@@ -316,35 +318,21 @@ object FpIndex {
     * batch-id set) makes the probe idempotent under replay-after-
     * append; within-batch spans still come from the batchHits leg,
     * exactly once.
-    */
-  def probeSpans(spark: SparkSession, name: String, batchDocs: DataFrame,
-      excludeBatchFromHistory: Boolean = false): DataFrame = {
-    val (spans, bfp) = probeSpansKeepFp(spark, name, batchDocs,
-      excludeBatchFromHistory)
-    bfp.unpersist()
-    spans
-  }
-
-  /** [[probeSpans]] that ALSO returns the pinned batch-fingerprint
-    * frame, for the probe→admit→append loops that write the very same
+    *
+    * Returns (spans, batch fingerprints), both pinned. The fingerprint
+    * rows are for the probe→admit→append loops that write the very same
     * batch's fingerprints right after the probe ([[appendRows]]) — the
     * winnow is the batch's per-char decode cost and must be paid once,
-    * not once per probe plus once per append. The CALLER owns the
-    * returned pin and must unpersist it after the append (the
-    * [[graft.streaming.MultimodalCurationSink]] pinned-handle rule).
+    * not once per probe plus once per append.
     */
-  private[graft] def probeSpansKeepFp(spark: SparkSession, name: String,
-      batchDocs: DataFrame, excludeBatchFromHistory: Boolean = false)
-      : (DataFrame, DataFrame) = {
-    val bfp = fingerprintRows(batchDocs).localCheckpoint(true)
-    // pin the SMALL spans result (duplicated ranges only) — a streaming
-    // sink probing every micro-batch must not accrue batch-sized
-    // block-manager state per batch (the PostingsIndex.append unpersist
-    // discipline). Eager evaluation here also severs the result's
-    // dependency on the index table, so the caller's subsequent append
-    // cannot perturb it.
-    val spans = probeSpansPlan(spark, name, bfp, batchDocs,
-      excludeBatchFromHistory).localCheckpoint(true)
+  def probeSpans(spark: SparkSession, name: String, batchDocs: DataFrame,
+      excludeBatchFromHistory: Boolean = false): (DataFrame, DataFrame) = {
+    val bfp = Pin(fingerprintRows(batchDocs), "FpIndex.batchFingerprints")
+    // pin the SMALL spans result (duplicated ranges only): eager
+    // evaluation severs the result's dependency on the index table, so
+    // the caller's subsequent append cannot perturb it
+    val spans = Pin(probeSpansPlan(spark, name, bfp, batchDocs,
+      excludeBatchFromHistory), "FpIndex.spans")
     (spans, bfp)
   }
 

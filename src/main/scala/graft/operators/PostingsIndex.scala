@@ -5,7 +5,7 @@ import java.nio.file.{Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Lake, Tables}
+import graft.core.{Lake, Pin, Tables}
 
 /** Persisted, BUCKETED inverted index for BM25 — the [[BandIndex]]
   * pattern applied to lexical retrieval.
@@ -128,17 +128,18 @@ object PostingsIndex {
       path: Path): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
     IndexCommit.deleteTree(path)
-    val p = postingsOfDocs(docs).localCheckpoint(true)
-    p.repartition(NumBuckets, col("term"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "term")
-      .sortBy("term")
-      .option("path", path.toString)
-      .saveAsTable(name)
-    val (n, sumDl) = statsOfDocs(docs, p)
-    writeSidecar(spark, path, 0L,
-      p.groupBy("term").agg(count(lit(1)).as("df")), n, sumDl)
-    p.unpersist()
+    Pin.scope {
+      val p = Pin(postingsOfDocs(docs), "PostingsIndex.build")
+      p.repartition(NumBuckets, col("term"))
+        .write.format("parquet")
+        .bucketBy(NumBuckets, "term")
+        .sortBy("term")
+        .option("path", path.toString)
+        .saveAsTable(name)
+      val (n, sumDl) = statsOfDocs(docs, p)
+      writeSidecar(spark, path, 0L,
+        p.groupBy("term").agg(count(lit(1)).as("df")), n, sumDl)
+    }
   }
 
   /** Build from the corpus under `dir` (q91's entry). */
@@ -178,18 +179,17 @@ object PostingsIndex {
       newDocs: DataFrame, toVersion: Option[Long] = None): Unit = {
     val v = toVersion.getOrElse(sidecarVersion(path) + 1)
     val base = v - 1
-    val p = postingsOfDocs(newDocs).localCheckpoint(true)
-    writePostingsAppend(p, name)
-    val merged = spark.read
-      .parquet(sidecarDir(path, base).resolve("dfreq").toString)
-      .unionByName(p.groupBy("term").agg(count(lit(1)).as("df")))
-      .groupBy("term").agg(sum(col("df")).as("df"))
-      .localCheckpoint(true)
-    val (bn, bDl) = statsOfDocs(newDocs, p)
-    val (n0, dl0) = readMeta(path, base)
-    writeSidecar(spark, path, v, merged, n0 + bn, dl0 + bDl)
-    merged.unpersist()
-    p.unpersist()
+    Pin.scope {
+      val p = Pin(postingsOfDocs(newDocs), "PostingsIndex.append")
+      writePostingsAppend(p, name)
+      val merged = Pin(spark.read
+        .parquet(sidecarDir(path, base).resolve("dfreq").toString)
+        .unionByName(p.groupBy("term").agg(count(lit(1)).as("df")))
+        .groupBy("term").agg(sum(col("df")).as("df")), "PostingsIndex.dfreq")
+      val (bn, bDl) = statsOfDocs(newDocs, p)
+      val (n0, dl0) = readMeta(path, base)
+      writeSidecar(spark, path, v, merged, n0 + bn, dl0 + bDl)
+    }
   }
 
   /** Fold away whole-duplicate postings rows (the at-least-once
@@ -216,22 +216,22 @@ object PostingsIndex {
       f
     }
     val before = spark.table(name).count()
-    val rows = spark.table(name).distinct().localCheckpoint(true)
-    IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-      rows
-        .repartition(NumBuckets, col("term"))
-        .write.format("parquet")
-        .bucketBy(NumBuckets, "term")
-        .sortBy("term")
-        .option("path", tp.toString)
-        .saveAsTable(tn)
-      Lake.copyTree(path.resolve("_sidecar").toString,
-        tp.resolve("_sidecar").toString)
+    Pin.scope {
+      val rows = Pin(spark.table(name).distinct(), "PostingsIndex.compact")
+      IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
+        rows
+          .repartition(NumBuckets, col("term"))
+          .write.format("parquet")
+          .bucketBy(NumBuckets, "term")
+          .sortBy("term")
+          .option("path", tp.toString)
+          .saveAsTable(tn)
+        Lake.copyTree(path.resolve("_sidecar").toString,
+          tp.resolve("_sidecar").toString)
+      }
     }
     register(spark, name, path)
-    val after = spark.table(name).count()
-    rows.unpersist()
-    (before, after)
+    (before, spark.table(name).count())
   }
 
   /** Post-crash recovery for a SINK-MANAGED postings index (the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{Pin, QueryDef, Tables}
 
 /** Retrieval operators over the `documents` + `embeddings` tables: BM25
   * lexical top-k (q88) and hybrid lexical+semantic fusion via reciprocal
@@ -262,9 +262,8 @@ object Retrieval {
             .select("doc_id", "text")
         PostingsIndex.buildIndexDocs(s, slice(0, 230), name, path)
         def probe(phase: Int) =
-          top5(PostingsIndex.probeScoresFor(s, name, path, QueryTerms))
-            .withColumn("phase", lit(phase))
-            .localCheckpoint(true)
+          Pin(top5(PostingsIndex.probeScoresFor(s, name, path, QueryTerms))
+            .withColumn("phase", lit(phase)), s"q92:probe$phase")
         val p1 = probe(1)
         PostingsIndex.append(s, name, path, slice(230, 243))
         val p2 = probe(2)
@@ -336,9 +335,8 @@ object Retrieval {
             .select("doc_id", "text")
         PostingsIndex.buildIndexDocs(s, slice(0, 230), name, path)
         def probe(phase: Int) =
-          top5(PostingsIndex.probeScoresFor(s, name, path, QueryTerms))
-            .withColumn("phase", lit(phase))
-            .localCheckpoint(true)
+          Pin(top5(PostingsIndex.probeScoresFor(s, name, path, QueryTerms))
+            .withColumn("phase", lit(phase)), s"q140:probe$phase")
         val p1 = probe(1)
         val c0 = s.table(name).count()
         // the crash window made real: postings landed, sidecar didn't
@@ -502,53 +500,56 @@ object Retrieval {
         val dotQ = aggregate(zip_with(col("qv"), col("nv"), (x, y) => x * y),
           lit(0.0), (acc, x) => acc + x)
         val wC = Window.partitionBy("q_id").orderBy(col("rel_micro").desc, col("doc_id"))
-        val cand = broadcast(q).crossJoin(n)
-          .filter(col("q_id") =!= col("doc_id"))
-          .withColumn("rel_micro",
-            round((dotQ / (col("qn") * col("nn"))) * lit(1e6)).cast("long"))
-          .withColumn("rk", row_number().over(wC))
-          .filter(col("rk") <= 12)
-          .select("q_id", "doc_id", "nv", "nn", "rel_micro")
-          .localCheckpoint(true)
-        val aSide = cand.select(col("q_id"), col("doc_id").as("d1"),
-          col("nv").as("v1"), col("nn").as("n1"))
-        val bSide = cand.select(col("q_id").as("bq"), col("doc_id").as("d2"),
-          col("nv").as("v2"), col("nn").as("n2"))
-        val dotP = aggregate(zip_with(col("v1"), col("v2"), (x, y) => x * y),
-          lit(0.0), (acc, x) => acc + x)
-        val sim = aSide.join(bSide,
-            col("q_id") === col("bq") && col("d1") =!= col("d2"))
-          .withColumn("sim_micro",
-            round((dotP / (col("n1") * col("n2"))) * lit(1e6)).cast("long"))
-          .select("q_id", "d1", "d2", "sim_micro")
-          .localCheckpoint(true)
-        var selected = cand
-          .withColumn("rk", row_number().over(wC))
-          .filter(col("rk") === 1)
-          .select(col("q_id"), col("doc_id"), col("rel_micro"),
-            (lit(7) * col("rel_micro")).as("mmr_micro"), lit(1).as("pick"))
-          .localCheckpoint(true)
-        for (i <- 2 to 5) {
-          val maxSim = sim
-            .join(selected.select(col("q_id"), col("doc_id").as("d2")),
-              Seq("q_id", "d2"))
-            .groupBy(col("q_id"), col("d1").as("doc_id"))
-            .agg(max(col("sim_micro")).as("maxsim"))
-          val wP = Window.partitionBy("q_id")
-            .orderBy(col("mmr_micro").desc, col("doc_id"))
-          val next = cand
-            .join(selected.select("q_id", "doc_id"), Seq("q_id", "doc_id"),
-              "left_anti")
-            .join(maxSim, Seq("q_id", "doc_id"))
-            .withColumn("mmr_micro",
-              lit(7) * col("rel_micro") - lit(3) * col("maxsim"))
-            .withColumn("rk", row_number().over(wP))
+        // the scope releases the candidate, similarity and earlier
+        // selection pins once the last selection is pinned
+        val picked = Pin.scope {
+          val cand = Pin(broadcast(q).crossJoin(n)
+            .filter(col("q_id") =!= col("doc_id"))
+            .withColumn("rel_micro",
+              round((dotQ / (col("qn") * col("nn"))) * lit(1e6)).cast("long"))
+            .withColumn("rk", row_number().over(wC))
+            .filter(col("rk") <= 12)
+            .select("q_id", "doc_id", "nv", "nn", "rel_micro"), "q93:candidates")
+          val aSide = cand.select(col("q_id"), col("doc_id").as("d1"),
+            col("nv").as("v1"), col("nn").as("n1"))
+          val bSide = cand.select(col("q_id").as("bq"), col("doc_id").as("d2"),
+            col("nv").as("v2"), col("nn").as("n2"))
+          val dotP = aggregate(zip_with(col("v1"), col("v2"), (x, y) => x * y),
+            lit(0.0), (acc, x) => acc + x)
+          val sim = Pin(aSide.join(bSide,
+              col("q_id") === col("bq") && col("d1") =!= col("d2"))
+            .withColumn("sim_micro",
+              round((dotP / (col("n1") * col("n2"))) * lit(1e6)).cast("long"))
+            .select("q_id", "d1", "d2", "sim_micro"), "q93:similarity")
+          var selected = Pin(cand
+            .withColumn("rk", row_number().over(wC))
             .filter(col("rk") === 1)
             .select(col("q_id"), col("doc_id"), col("rel_micro"),
-              col("mmr_micro"), lit(i).as("pick"))
-          selected = selected.unionByName(next).localCheckpoint(true)
+              (lit(7) * col("rel_micro")).as("mmr_micro"), lit(1).as("pick")),
+            "q93:selected")
+          for (i <- 2 to 5) {
+            val maxSim = sim
+              .join(selected.select(col("q_id"), col("doc_id").as("d2")),
+                Seq("q_id", "d2"))
+              .groupBy(col("q_id"), col("d1").as("doc_id"))
+              .agg(max(col("sim_micro")).as("maxsim"))
+            val wP = Window.partitionBy("q_id")
+              .orderBy(col("mmr_micro").desc, col("doc_id"))
+            val next = cand
+              .join(selected.select("q_id", "doc_id"), Seq("q_id", "doc_id"),
+                "left_anti")
+              .join(maxSim, Seq("q_id", "doc_id"))
+              .withColumn("mmr_micro",
+                lit(7) * col("rel_micro") - lit(3) * col("maxsim"))
+              .withColumn("rk", row_number().over(wP))
+              .filter(col("rk") === 1)
+              .select(col("q_id"), col("doc_id"), col("rel_micro"),
+                col("mmr_micro"), lit(i).as("pick"))
+            selected = Pin(selected.unionByName(next), "q93:selected")
+          }
+          selected
         }
-        selected.orderBy("q_id", "pick")
+        picked.orderBy("q_id", "pick")
       },
       {
         def step(i: Int): String =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{Pin, QueryDef, Tables}
 
 /** Similarity search over the `embeddings` table (Array[Float], 64-dim).
   *
@@ -371,18 +371,17 @@ object Similarity {
         val e = emb(s, dir)
         val cents = e.filter(col("vec_id") >= 100 && col("vec_id") < 116)
           .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-        val assigned = e.crossJoin(broadcast(cents))
+        // pinned: THREE consumers (both sides of the within-cell
+        // self-join + the final join-back) — lazy, the broadcast
+        // centroid assignment (crossJoin + max_by aggregate) ran
+        // once per consumer (the q104 rule)
+        val assigned = Pin(e.crossJoin(broadcast(cents))
           .withColumn("csim", dot(col("v"), col("cv")) / (col("nrm") * col("cn")))
           .groupBy(col("vec_id"))
           .agg(max_by(struct(col("c_id"), col("v"), col("nrm")),
             struct(col("csim"), (-col("c_id")).as("nc"))).as("b"))
           .select(col("vec_id"), col("b.c_id").as("c_id"),
-            col("b.v").as("v"), col("b.nrm").as("nrm"))
-          // pinned: THREE consumers (both sides of the within-cell
-          // self-join + the final join-back) — lazy, the broadcast
-          // centroid assignment (crossJoin + max_by aggregate) ran
-          // once per consumer (the q104 rule)
-          .localCheckpoint(true)
+            col("b.v").as("v"), col("b.nrm").as("nrm")), "q89:assignment")
         val a = assigned.select(col("vec_id").as("d1"), col("v").as("v1"),
           col("nrm").as("n1"), col("c_id").as("c1"))
         val b = assigned.select(col("vec_id").as("d2"), col("v").as("v2"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables, Ws}
+import graft.core.{Pin, QueryDef, Tables, Ws}
 
 /** Sketch-accelerated EXACT operators: a probabilistic structure prunes
   * the expensive path, and a cheap exact confirm pass restores bit-exact
@@ -59,7 +59,7 @@ object SketchExact {
     // re-deriving the distinct aggregation per consumer (the q107
     // two-consumer discipline). Bounded state: the benchmark is the
     // held-out eval suite, small by definition.
-    val bench = bench0.localCheckpoint(true)
+    val bench = Pin(bench0, "SketchExact.benchShingles")
     // Counting it for the filter's sizing is one tiny job; the sketch
     // itself is built by a distributed aggregate and only the ~KB..MB
     // filter bits ever reach the driver — fact data never does.

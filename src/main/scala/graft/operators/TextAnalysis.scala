@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables, Ws}
+import graft.core.{Pin, QueryDef, Tables, Ws}
 
 /** Text-analysis operators over the `documents` table: token counting,
   * language-ID (stopword-vote heuristic), quality scoring, and document
@@ -155,18 +155,14 @@ object TextAnalysis {
     *  - vocab reads the pinned tokens.
     * One corpus-sized pin (the token arrays) is the cost — the same
     * state class the pipeline's stage barriers already pin; the pins
-    * are released by the ContextCleaner once the caller's result frame
-    * is materialized and dropped (batch queries), or unpersisted
-    * explicitly by owners that hold artifacts long-term
-    * ([[graft.streaming.CurationSink.artifactsOf]]).
+    * live until the caller's scope closes.
     * Returns (pinned token frame, model).
     */
   private[graft] def lmModelWords(d: DataFrame): (DataFrame, LmModel) = {
-    val w = lmWords(graft.core.CpuSpread.byKey(d, col("doc_id")))
-      .localCheckpoint(true)
-    val c12 = lmBigramsFromWords(w).groupBy("w1", "w2")
-      .agg(count(lit(1)).as("c12"))
-      .localCheckpoint(true)
+    val w = Pin(lmWords(graft.core.CpuSpread.byKey(d, col("doc_id"))),
+      "TextAnalysis.lm.words")
+    val c12 = Pin(lmBigramsFromWords(w).groupBy("w1", "w2")
+      .agg(count(lit(1)).as("c12")), "TextAnalysis.lm.c12")
     val c1 = c12.groupBy("w1").agg(sum(col("c12")).as("c1"))
     val vocab = w.select(explode(col("ws")).as("w"))
       .agg(countDistinct(col("w")).as("v"))
@@ -213,17 +209,17 @@ object TextAnalysis {
     * scored survivors (doc_id, n_bigrams, lm_micro_nats, avg_mn) at or
     * above the exact 20th-percentile micro-nat cutoff; unscorable docs
     * (no bigrams) drop. The Spark twin of [[LmFilterCtes]], shared by
-    * q111 and q115.
+    * q111 and q115; `pinName` names the scored pin after the stage
+    * that owns it.
     */
-  private[operators] def lmFilterKeptOf(d: DataFrame): DataFrame = {
+  private[operators] def lmFilterKeptOf(d: DataFrame, pinName: String): DataFrame = {
     // pinned: the scored frame (3 longs per doc) feeds BOTH the exact
     // percentile cutoff and the filter — lazy, the whole scoring
     // pipeline (bigram explode + model joins + per-doc aggregate) ran
     // twice, once per consumer
-    val scored = bigramLmPerDocOf(d)
+    val scored = Pin(bigramLmPerDocOf(d)
       .filter(col("n_bigrams") > 0)
-      .withColumn("avg_mn", expr("lm_micro_nats div n_bigrams"))
-      .localCheckpoint(true)
+      .withColumn("avg_mn", expr("lm_micro_nats div n_bigrams")), pinName)
     val cut = scored.agg(
       expr("percentile_disc(0.2) WITHIN GROUP (ORDER BY avg_mn)").as("cut"))
     scored.crossJoin(broadcast(cut))
@@ -905,7 +901,7 @@ object TextAnalysis {
      */
     QueryDef(
       "q111_lm_filter_apply",
-      (s, dir) => lmFilterKeptOf(docs(s, dir)).orderBy("doc_id"),
+      (s, dir) => lmFilterKeptOf(docs(s, dir), "q111:scored").orderBy("doc_id"),
       Some(BigramLmCte + LmFilterCtes +
         """
           |SELECT s.doc_id, s.n_bigrams, s.lm_micro_nats, s.avg_mn

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{Pin, QueryDef, Tables}
 
 /** Winnowing fingerprints and cross-document duplicate-span detection —
   * the char-level exact-substring layer of the dedup family, between
@@ -502,7 +502,7 @@ object Winnow {
         // detect evaluations → 1)
         val fp = s.table(FpIndex.ensure(s, dir))
         spliceClean(trimmed(s, dir),
-          foreignSpansOf(fp).localCheckpoint(true)).orderBy("doc_id")
+          Pin(foreignSpansOf(fp), "q108:spans")).orderBy("doc_id")
       },
       Some(SelCte + alldCteOver("documents") + SpanApplyCtes +
         """
@@ -552,15 +552,14 @@ object Winnow {
           base.filter(col("bucket") >= lo && col("bucket") < hi)
             .select("doc_id", "text")
         FpIndex.buildIndex(s, slice(0, 200), name, path)
-        // probeSpansKeepFp returns an eagerly-pinned result severed
-        // from the index table (the append cannot perturb phase 1) PLUS
-        // the batch's pinned winnow rows — appended directly instead of
+        // probeSpans returns an eagerly-pinned result severed from the
+        // index table (the append cannot perturb phase 1) PLUS the
+        // batch's pinned winnow rows — appended directly instead of
         // re-winnowing the batch
-        val (p1v, bfp1) = FpIndex.probeSpansKeepFp(s, name, slice(200, 230))
+        val (p1v, bfp1) = FpIndex.probeSpans(s, name, slice(200, 230))
         val p1 = p1v.withColumn("batch_no", lit(1))
         FpIndex.appendRows(s, name, bfp1)
-        bfp1.unpersist()
-        val p2 = FpIndex.probeSpans(s, name, slice(230, 256))
+        val p2 = FpIndex.probeSpans(s, name, slice(230, 256))._1
           .withColumn("batch_no", lit(2))
         p1.unionByName(p2)
           .select("batch_no", "doc_id", "span_start", "span_end", "n_hits")
@@ -613,7 +612,7 @@ object Winnow {
           base.filter(col("bucket") >= lo && col("bucket") < hi)
             .select("doc_id", "text")
         FpIndex.buildIndex(s, slice(0, 200), name, path)
-        val (p1v, bfp1) = FpIndex.probeSpansKeepFp(s, name, slice(200, 230))
+        val (p1v, bfp1) = FpIndex.probeSpans(s, name, slice(200, 230))
         val p1 = p1v.withColumn("batch_no", lit(1))
         FpIndex.appendRows(s, name, bfp1)
         // the crash-replayed append: the same admitted batch lands a
@@ -623,9 +622,8 @@ object Winnow {
         // construction, which is exactly the duplicate the compaction
         // below must fold)
         FpIndex.appendRows(s, name, bfp1)
-        bfp1.unpersist()
         val (before, after) = FpIndex.compact(s, name, path)
-        val p2 = FpIndex.probeSpans(s, name, slice(230, 256))
+        val p2 = FpIndex.probeSpans(s, name, slice(230, 256))._1
           .withColumn("batch_no", lit(2))
         val stats = s.range(1).select(
           lit(0).as("batch_no"), lit(-1L).as("doc_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.bridge.Part4Bridge
+import graft.core.Pin
 import graft.tagger.{FdaFoodFallback, LookupWaterfall, ScoredTagger}
 
 /** The drugs pipeline (C4 registration of the C1 flow, `registry.py:40`,
@@ -65,10 +66,9 @@ final class DrugsTaggingPipeline(
     // double-materialization the registry-level persist can't see
     // because it lives inside matchRecords. An eager local checkpoint
     // runs the pass ONCE and truncates the lineage, so every downstream
-    // consumer reads stored blocks; the blocks are reclaimed by the
-    // ContextCleaner when the frame is collected.
+    // consumer reads stored blocks until the caller's scope closes.
     val tagged0 =
-      if (fdaFood.isDefined || annex.isDefined) taggedRaw.localCheckpoint(true)
+      if (fdaFood.isDefined || annex.isDefined) Pin(taggedRaw, "DrugsPipeline.tagged")
       else taggedRaw
     // FDA food fallback over the unmatched residue (no_candidates /
     // no_match rows only — matched rows never probe, mirroring the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.Pin
 import graft.operators.ClusterIndex
 
 /** Continuous-ingest SemDeDup — the streaming serving surface at the
@@ -92,21 +93,19 @@ object ClusterIndexSink {
       centroids: DataFrame, outDir: String,
       epoch: Option[String] = None): Boolean = {
     if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else {
+    else Pin.scope {
       val spark = batch.sparkSession
       graft.core.Lake.mkdirs(outDir)
-      val b = ClusterIndex.assignBatch(batch, centroids).localCheckpoint(true)
+      val b = Pin(ClusterIndex.assignBatch(batch, centroids),
+        "ClusterIndexSink.assign")
       // exclusion on: a crashed previous attempt may have appended this
       // batch's own rows (the WinnowIndexSink replay seam, by vec_id)
-      val out = probeVerdicts(spark, indexName, b,
+      val out = Pin(probeVerdicts(spark, indexName, b,
           excludeBatchFromHistory = true)
-        .withColumn("batch_id", lit(batchId))
-        .localCheckpoint(true)
+        .withColumn("batch_id", lit(batchId)), "ClusterIndexSink.verdicts")
       ClusterIndex.append(spark, indexName,
         b.join(out.filter(col("kept")).select("vec_id"), "vec_id"))
       out.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
-      b.unpersist()
-      out.unpersist()
       VersionedPointer.commit(outDir, batchId, epoch)
       true
     }

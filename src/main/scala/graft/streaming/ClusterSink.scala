@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.core.Pin
 import graft.operators.Clustering
 
 /** Continuously-maintained k-means centroids — the streaming twin of
@@ -58,11 +59,11 @@ object ClusterSink {
   def applyBatch(batch: DataFrame, batchId: Long, dir: String,
       epoch: Option[String] = None): Boolean = {
     if (VersionedPointer.alreadyServed(dir, batchId, epoch)) false
-    else {
+    else Pin.scope {
       val spark = batch.sparkSession
       graft.core.Lake.mkdirs(dir)
-      val vecs = batch.select(vecSchema.fieldNames.map(col): _*)
-        .localCheckpoint(true)
+      val vecs = Pin(batch.select(vecSchema.fieldNames.map(col): _*),
+        "ClusterSink.vecs")
       val prior = state(spark, dir).getOrElse {
         // seed from this batch's K smallest ids: S=0, n=0, cv=the vector
         vecs.orderBy("vec_id").limit(K)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.Pin
 import graft.operators.{BloomIndex, Dedup, FpIndex, TextAnalysis, Winnow}
 
 /** The curation capstone as a CONTINUOUS pipeline — q115's per-document
@@ -67,12 +68,10 @@ object CurationSink {
     // vocab, and the cutoff's scoring pass all read that pin instead of
     // re-tokenizing the history corpus per branch (pre-round-16: four
     // regex passes). c12 arrives pinned from lmModelWords; c1/vocab are
-    // pinned here because the sink holds them for its lifetime. The
-    // token pin is released as soon as the cutoff is collected.
+    // pinned here because the sink holds them for its lifetime.
     val (w, m0) = TextAnalysis.lmModelWords(history)
-    val lm = TextAnalysis.LmModel(
-      m0.c12, m0.c1.localCheckpoint(true),
-      m0.vocab.localCheckpoint(true))
+    val lm = TextAnalysis.LmModel(m0.c12,
+      Pin(m0.c1, "CurationSink.lm.c1"), Pin(m0.vocab, "CurationSink.lm.vocab"))
     val cut = TextAnalysis.lmScoreWordsAgainst(w, lm)
       .filter(col("n_bigrams") > 0)
       .withColumn("avg_mn", expr("lm_micro_nats div n_bigrams"))
@@ -80,7 +79,6 @@ object CurationSink {
         "CAST(percentile_disc(0.2) WITHIN GROUP (ORDER BY avg_mn) AS BIGINT)")
         .as("cut"))
       .collect()(0).getLong(0)
-    w.unpersist()
     Artifacts(lm, cut)
   }
 
@@ -115,50 +113,33 @@ object CurationSink {
     }
 
   /** The three per-doc stage verdicts for ONE batch of (doc_id, text)
-    * — splice, decontam, frozen-LM gate — as a lazy frame (no side
-    * effects beyond the probe's own pinning). This is the sink's
+    * — splice, decontam, frozen-LM gate — as a lazy frame, plus the
+    * batch's pinned winnowed FINGERPRINT rows. This is the sink's
     * ENTIRE verdict computation, called by [[applyBatch]] per
     * micro-batch and by the oracle-gated maintenance loop
     * (q118_curation_maintenance) per phase — one function, so the
     * stream and its batch certification cannot diverge.
-    */
-  def verdictBatch(spark: SparkSession, docs: DataFrame,
-      fpIndexName: String, benchDir: String, art: Artifacts): DataFrame = {
-    val (out, _, bfp) = verdictBatchPinned(spark, docs, fpIndexName,
-      benchDir, art)
-    bfp.unpersist() // out does not depend on it (spans are pinned)
-    out
-  }
-
-  /** [[verdictBatch]] plus the two batch-sized pins it rides on: the
-    * SPLICE pin and the batch's winnowed FINGERPRINT rows.
     *
-    * The spliced frame is consumed by THREE downstream branches (the
-    * decontam shingles, the LM scoring, and the final evidence join);
-    * left lazy, Catalyst evaluated the whole splice subtree — windows,
-    * span joins, text reassembly — once per branch (the round-16
-    * measurement: q118's two verdict materializations were 56% of its
-    * executor time, ~2/3 of that re-splicing). The pin bounds that to
-    * one evaluation.
+    * The spliced frame is pinned: it is consumed by THREE downstream
+    * branches (the decontam shingles, the LM scoring, and the final
+    * evidence join); left lazy, Catalyst evaluated the whole splice
+    * subtree — windows, span joins, text reassembly — once per branch
+    * (the round-16 measurement: q118's two verdict materializations
+    * were 56% of its executor time, ~2/3 of that re-splicing).
     *
     * The fingerprint rows are returned so the probe→verdict→APPEND
     * callers ([[applyBatch]], [[graft.streaming.MultimodalCurationSink]],
     * q118) can [[FpIndex.appendRows]] them instead of re-winnowing the
-    * batch a second time.
-    *
-    * Callers that run per micro-batch MUST unpersist both returned
-    * pins once their verdict frame is eagerly materialized and the
-    * append has run (unpersisting a projection of a pin is a no-op —
-    * the [[graft.streaming.MultimodalCurationSink]] leg rule), so a
-    * long-running stream accrues no block-manager state per batch.
+    * batch a second time. Both pins live until the caller's
+    * [[graft.core.Pin.scope]] closes.
     */
-  private[graft] def verdictBatchPinned(spark: SparkSession, docs: DataFrame,
+  def verdictBatch(spark: SparkSession, docs: DataFrame,
       fpIndexName: String, benchDir: String, art: Artifacts)
-      : (DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) = {
     // s3: char-span splice vs history + earlier batch docs (the
-    // WinnowIndexSink stage verbatim — probeSpansKeepFp pins its small
+    // WinnowIndexSink stage verbatim — probeSpans pins its small
     // result, so a subsequent append cannot perturb anything here)
-    val (spans0, bfp) = FpIndex.probeSpansKeepFp(spark, fpIndexName, docs,
+    val (spans0, bfp) = FpIndex.probeSpans(spark, fpIndexName, docs,
       excludeBatchFromHistory = true)
     val spans = spans0
       .select(col("doc_id"), col("span_start").as("s"),
@@ -166,7 +147,7 @@ object CurationSink {
     val alld = docs
       .select(col("doc_id"), trim(col("text")).as("tx"))
       .withColumn("n", length(col("tx")))
-    val cleaned = Winnow.spliceClean(alld, spans).localCheckpoint(true)
+    val cleaned = Pin(Winnow.spliceClean(alld, spans), "CurationSink.splice")
     val cleanDocs = cleaned.select(col("doc_id"),
       col("clean_text").as("text"))
     // s4: decontam verdict on the SPLICED text (q115's stage order)
@@ -199,7 +180,7 @@ object CurationSink {
         col("n_sh"), col("n_hit"), col("n_bigrams"),
         col("lm_micro_nats"), col("avg_mn"),
         col("contaminated"), col("kept"), col("clean_text"))
-    (out, cleaned, bfp)
+    (out, bfp)
   }
 
   /** Apply one micro-batch of (doc_id, text); false iff already applied. */
@@ -207,24 +188,20 @@ object CurationSink {
       benchDir: String, art: Artifacts, outDir: String,
       epoch: Option[String] = None): Boolean = {
     if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else {
+    else Pin.scope {
       val spark = batch.sparkSession
       graft.core.Lake.mkdirs(outDir)
       val docs = batch.select("doc_id", "text")
-      val (v, splicePin, bfp) = verdictBatchPinned(spark, docs, fpIndexName,
-        benchDir, art)
-      val out = v.withColumn("batch_id", lit(batchId))
-        .localCheckpoint(true)
-      splicePin.unpersist()
+      val (v, bfp) = verdictBatch(spark, docs, fpIndexName, benchDir, art)
+      val out = Pin(v.withColumn("batch_id", lit(batchId)),
+        "CurationSink.verdicts")
       // presence ownership is corpus-wide (the q108 contract): ALL batch
       // docs' fingerprints enter history, whatever their verdicts —
       // identical to WinnowIndexSink, so the two sinks cannot diverge
       // on what "history" means. The probe's pinned winnow rows are
       // appended directly (no second winnow of the batch).
       FpIndex.appendRows(spark, fpIndexName, bfp)
-      bfp.unpersist()
       out.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
-      out.unpersist()
       VersionedPointer.commit(outDir, batchId, epoch)
       true
     }

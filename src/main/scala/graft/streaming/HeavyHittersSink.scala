@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.core.Pin
 import graft.operators.SketchExact
 
 /** Continuously-maintained frequent-bigram candidates — the streaming
@@ -102,14 +103,14 @@ object HeavyHittersSink {
   def applyBatch(batch: DataFrame, batchId: Long, dir: String,
       epoch: Option[String] = None): Boolean = {
     if (VersionedPointer.alreadyServed(dir, batchId, epoch)) false
-    else {
+    else Pin.scope {
       val spark = batch.sparkSession
       graft.core.Lake.mkdirs(dir)
       val (prior, priorTotal) = state(spark, dir)
       val bgs = SketchExact.bigramsOf(
         batch.select(docSchema.fieldNames.map(col): _*))
-      val batchCounts = bgs.groupBy("bg").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true)
+      val batchCounts = Pin(bgs.groupBy("bg").agg(count(lit(1)).as("cnt")),
+        "HeavyHittersSink.counts")
       val batchN = batchCounts.agg(coalesce(sum("cnt"), lit(0L)))
         .head().getLong(0)
       val merged = prior.unionByName(batchCounts)

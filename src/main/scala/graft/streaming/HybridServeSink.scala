@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.core.Pin
 import graft.operators.{Clustering, ClusterIndex, PostingsIndex, Retrieval}
 
 /** Hybrid (lexical + semantic) query serving — surface 21, the fusion
@@ -89,11 +90,11 @@ object HybridServeSink {
   def applyBatch(batch: DataFrame, batchId: Long, corpusDir: String,
       outDir: String, epoch: Option[String] = None): Boolean = {
     if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else {
+    else Pin.scope {
       val spark = batch.sparkSession
       graft.core.Lake.mkdirs(outDir)
-      val b = batch.select(querySchema.fieldNames.map(col): _*)
-        .localCheckpoint(true)
+      val b = Pin(batch.select(querySchema.fieldNames.map(col): _*),
+        "HybridServeSink.queries")
       // bounded driver-side collect: the term set is the postings
       // bucket-pruning literal (batch-sized by construction)
       val queryTerms = b
@@ -109,7 +110,6 @@ object HybridServeSink {
       // coalesce(1): batch-sized (≤ 10 rows per query), a decision log
       fused.coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/v=$batchId")
-      b.unpersist()
       VersionedPointer.commit(outDir, batchId, epoch)
       true
     }

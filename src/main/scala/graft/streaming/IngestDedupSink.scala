@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.Pin
 import graft.operators.BandIndex
 
 /** Continuous-ingest near-dup dedup — the streaming twin of q87's
@@ -73,22 +74,20 @@ object IngestDedupSink {
       outDir: String,
       epoch: Option[String] = None): Boolean = {
     if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else {
+    else Pin.scope {
       val spark = batch.sparkSession
       graft.core.Lake.mkdirs(outDir)
       val docs = batch.select("doc_id", "text")
       // keep the probe's pinned batch bands and append THEM instead of
-      // re-banding the batch (probeIndexKeepBands pins the decision
-      // frame eagerly before the append — q87's ordering seam — and
-      // the band pin is released before the commit so the stream
-      // accrues no block-manager state per batch)
-      val (dec0, bands) = BandIndex.probeIndexKeepBands(spark, indexName,
+      // re-banding the batch (probeIndex pins the decision frame eagerly
+      // before the append — q87's ordering seam — and the batch's scope
+      // releases both pins, so the stream accrues no block-manager state
+      // per batch)
+      val (dec0, bands) = BandIndex.probeIndex(spark, indexName,
         docs, excludeBatchFromHistory = true)
-      val dec = dec0.withColumn("batch_id", lit(batchId))
       BandIndex.appendBands(spark, indexName, bands)
-      bands.unpersist()
-      dec.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
-      dec0.unpersist()
+      dec0.withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").parquet(s"$outDir/v=$batchId")
       VersionedPointer.commit(outDir, batchId, epoch)
       true
     }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.core.Pin
 import graft.operators.ClusterIndex
 
 /** The ONE per-micro-batch ingest-dedup body behind the image
@@ -107,30 +108,26 @@ private[streaming] object ModalDedupIngest {
       featurize: DataFrame => DataFrame,
       assignB: (DataFrame, DataFrame) => DataFrame): Boolean = {
     if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else {
+    else Pin.scope {
       val spark = batch.sparkSession
       graft.core.Lake.mkdirs(outDir)
       // ONE decode pass, pinned: consumed by the quarantine log and
       // the healthy assignment leg
-      val f = featurize(batch).localCheckpoint(true)
+      val f = Pin(featurize(batch), "ModalDedupIngest.decode")
       val quar = f.filter(col("reason").isNotNull)
         .select(col("vec_id"), col("reason"))
         .withColumn("batch_id", lit(batchId))
-      val b = assignB(f.filter(col("reason").isNull).drop("reason"),
-        centroids).localCheckpoint(true)
+      val b = Pin(assignB(f.filter(col("reason").isNull).drop("reason"),
+        centroids), "ModalDedupIngest.assign")
       // exclusion on: a crashed previous attempt may have appended this
       // batch's own rows (the ClusterIndexSink replay seam, by vec_id)
-      val out = ClusterIndex.probeVerdicts(spark, indexName, b,
+      val out = Pin(ClusterIndex.probeVerdicts(spark, indexName, b,
           excludeBatchFromHistory = true)
-        .withColumn("batch_id", lit(batchId))
-        .localCheckpoint(true)
+        .withColumn("batch_id", lit(batchId)), "ModalDedupIngest.verdicts")
       ClusterIndex.append(spark, indexName,
         b.join(out.filter(col("kept")).select("vec_id"), "vec_id"))
       out.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
       quar.write.mode("overwrite").parquet(s"$outDir/quarantine/v=$batchId")
-      f.unpersist()
-      b.unpersist()
-      out.unpersist()
       VersionedPointer.commit(outDir, batchId, epoch)
       true
     }

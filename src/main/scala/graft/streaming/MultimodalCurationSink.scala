@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.core.Pin
 import graft.functions.MediaCodecs
 import graft.operators.{ClusterIndex, FpIndex, Multimodal}
 
@@ -175,54 +176,45 @@ object MultimodalCurationSink {
       img: ModalIndex, aud: ModalIndex, vid: ModalIndex,
       outDir: String, epoch: Option[String] = None): Boolean = {
     if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else {
+    else Pin.scope {
       val spark = batch.sparkSession
       graft.core.Lake.mkdirs(outDir)
       val docs = batch.select("doc_id", "text")
       // ONE decode pass, pinned: consumed by three modal legs + the
       // quarantine log + the evidence join
-      val dec = decodeBatch(spark, batch).localCheckpoint(true)
+      val dec = Pin(decodeBatch(spark, batch), "MultimodalCurationSink.decode")
       val quar = dec.select(col("doc_id"), explode(map_filter(
           map(lit("image"), col("img_reason"),
             lit("audio"), col("aud_reason"),
             lit("video"), col("vid_reason")),
           (_, v) => v.isNotNull)).as(Seq("modality", "reason")))
         .withColumn("batch_id", lit(batchId))
-      // text stack: the q118-certified function verbatim (the pinned
-      // form — the splice pin is released below once `out` is eager,
-      // and the probe's winnow rows feed the fingerprint append)
-      val (text, splicePin, bfp) = CurationSink.verdictBatchPinned(spark,
+      // text stack: the q118-certified function verbatim (the probe's
+      // winnow rows feed the fingerprint append)
+      val (text, bfp) = CurationSink.verdictBatch(spark,
         docs, fpIndexName, benchDir, art)
       // one modal prune per HEALTHY attachment — probe against the
       // persisted index, then append the admitted representatives
-      // returns BOTH the pinned probe frame and its verdict projection:
-      // the projection is lazy over the pin, so the caller must hold
-      // the pinned handle itself to unpersist once the final verdict
-      // frame is eagerly materialized — unpersisting a projection is a
-      // no-op and would leak three checkpoint-block sets per
-      // micro-batch for the stream's lifetime
       def leg(featCol: String, mi: ModalIndex, pfx: String,
-          assignB: (DataFrame, DataFrame) => DataFrame)
-          : (DataFrame, DataFrame) = {
-        val b = assignB(dec.filter(col(featCol).isNotNull)
+          assignB: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+        val b = Pin(assignB(dec.filter(col(featCol).isNotNull)
             .select(col("doc_id").as("vec_id"), col(featCol)),
-          mi.centroids).localCheckpoint(true)
-        val v = ClusterIndex.probeVerdicts(spark, mi.name, b,
-            excludeBatchFromHistory = true)
-          .localCheckpoint(true)
+          mi.centroids), s"MultimodalCurationSink.$pfx.assign")
+        val v = Pin(ClusterIndex.probeVerdicts(spark, mi.name, b,
+            excludeBatchFromHistory = true),
+          s"MultimodalCurationSink.$pfx.verdicts")
         ClusterIndex.append(spark, mi.name,
           b.join(v.filter(col("kept")).select("vec_id"), "vec_id"))
-        b.unpersist()
-        (v, v.select(col("vec_id").as("doc_id"),
+        v.select(col("vec_id").as("doc_id"),
           col("kept").as(s"${pfx}_kept"),
-          col("dup_of").as(s"${pfx}_dup_of")))
+          col("dup_of").as(s"${pfx}_dup_of"))
       }
-      val (imgP, imgV) = leg("hist", img, "img", ClusterIndex.assignImageBatch)
-      val (audP, audV) = leg("env", aud, "aud", ClusterIndex.assignAudioBatch)
-      val (vidP, vidV) = leg("vfeat", vid, "vid", ClusterIndex.assignVideoBatch)
+      val imgV = leg("hist", img, "img", ClusterIndex.assignImageBatch)
+      val audV = leg("env", aud, "aud", ClusterIndex.assignAudioBatch)
+      val vidV = leg("vfeat", vid, "vid", ClusterIndex.assignVideoBatch)
       val healthyKept = (c: org.apache.spark.sql.Column) =>
         coalesce(c, lit(true)) // absent/quarantined: diverted, not a veto
-      val out = text
+      val out = Pin(text
         .withColumnRenamed("kept", "text_kept")
         .join(dec.select("doc_id", "has_image", "has_audio", "has_video",
           "img_reason", "aud_reason", "vid_reason"), Seq("doc_id"))
@@ -243,19 +235,14 @@ object MultimodalCurationSink {
           col("has_video"), col("img_kept"), col("aud_kept"),
           col("vid_kept"), col("img_dup_of"), col("aud_dup_of"),
           col("vid_dup_of"), col("n_quarantined"), col("kept"),
-          col("clean_text"), lit(batchId).as("batch_id"))
-        .localCheckpoint(true)
+          col("clean_text"), lit(batchId).as("batch_id")),
+        "MultimodalCurationSink.verdicts")
       // presence ownership is corpus-wide (CurationSink's rule): ALL
       // batch docs' text fingerprints enter history, whatever their
       // verdicts — the probe's pinned winnow rows appended directly
       FpIndex.appendRows(spark, fpIndexName, bfp)
       out.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
       quar.write.mode("overwrite").parquet(s"$outDir/quarantine/v=$batchId")
-      // `out` is eagerly pinned above, so the legs' checkpoint blocks
-      // (the PINNED handles, not their projections), the text stack's
-      // splice pin, and the fingerprint pin can be released
-      Seq(imgP, audP, vidP, splicePin, bfp).foreach(_.unpersist())
-      dec.unpersist(); out.unpersist()
       VersionedPointer.commit(outDir, batchId, epoch)
       true
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.Pin
 import graft.operators.{FpIndex, Winnow}
 
 /** Continuous-ingest char-level exact-substring dedup — the streaming
@@ -68,13 +69,13 @@ object WinnowIndexSink {
       outDir: String,
       epoch: Option[String] = None): Boolean = {
     if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else {
+    else Pin.scope {
       val spark = batch.sparkSession
       graft.core.Lake.mkdirs(outDir)
       val docs = batch.select("doc_id", "text")
       // keep the probe's pinned winnow rows and append THEM — the
       // append otherwise re-winnows the batch the probe just paid for
-      val (spans0, bfp) = FpIndex.probeSpansKeepFp(spark, indexName, docs,
+      val (spans0, bfp) = FpIndex.probeSpans(spark, indexName, docs,
         excludeBatchFromHistory = true)
       val spans = spans0
         .select(col("doc_id"), col("span_start").as("s"),
@@ -82,15 +83,13 @@ object WinnowIndexSink {
       val alld = docs
         .select(col("doc_id"), trim(col("text")).as("tx"))
         .withColumn("n", length(col("tx")))
-      // probeSpansKeepFp eagerly pins its (small) span result, so the
-      // splice below reads only the stable batch source + the pinned
-      // spans — the append cannot perturb it; the fingerprint pin is
-      // released right after the append, so no batch-sized state
-      // outlives this call
+      // probeSpans eagerly pins its (small) span result, so the splice
+      // below reads only the stable batch source + the pinned spans —
+      // the append cannot perturb it; both pins are released when the
+      // scope closes, so no batch-sized state outlives this call
       val out = Winnow.spliceClean(alld, spans)
         .withColumn("batch_id", lit(batchId))
       FpIndex.appendRows(spark, indexName, bfp)
-      bfp.unpersist()
       out.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
       VersionedPointer.commit(outDir, batchId, epoch)
       true

@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.core.Pin
 import graft.functions.FuzzyLib
 
 /** The reference's core lookup pattern (SURVEY §2.9 C1): a prioritized
@@ -120,19 +121,18 @@ object LookupWaterfall {
     *     lookup only (pipe-joined mixture component keys,
     *     `tagger.py:327-360`) and never reaches the prefix or fuzzy legs.
     *
-    * Lifecycle: one job collects the catalog, one eager local checkpoint
+    * Lifecycle: one job collects the catalog, one [[graft.core.Pin]]
     * materializes the hits; the probe frame is read once. The broadcast
-    * index is destroyed once the checkpoint holds the result, and the
-    * checkpoint frees itself via the ContextCleaner when the returned
-    * frame is dropped. (On a multi-executor cluster a lost executor
-    * invalidates local checkpoints; there, prefer a reliable
-    * `spark.sparkContext.setCheckpointDir` + `.checkpoint()` — the
-    * candidate frame is small, one row per (id, candidate).)
+    * index is destroyed once the pin holds the result, and the pin is
+    * released with the caller's scope. (On a multi-executor cluster a
+    * lost executor invalidates local checkpoints; there, prefer a
+    * reliable checkpoint directory — the candidate frame is small, one
+    * row per (id, candidate).)
     */
   def allMatches(probes: DataFrame, catalog: DataFrame,
       cfg: Config = Config()): DataFrame = {
     val (all, index) = indexed(probes, catalog, cfg)
-    try all.localCheckpoint(eager = true) finally index.destroy()
+    try Pin(all, "LookupWaterfall.hits") finally index.destroy()
   }
 
   /** The hits of [[allMatches]] as a lazy frame, without the checkpoint:

@@ -139,6 +139,8 @@ object Scoring {
       strippedGenerics: List[String],
       inputDetails: Map[String, String] = Map.empty,
       applySyn: String => String = g => SaltLib.applySynonym(g)): Option[Rank] = {
+    // a catalog row without a generic name matches nothing
+    if (cand.genericName == null) return None
     val candGeneric = cand.genericName.toUpperCase
     val (matches, reason) =
       genericsMatch(inputGenericsNormalized, candGeneric, applySyn)

@@ -15,6 +15,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 
 import graft.SparkEntry
+import graft.core.Pin
 
 /** The one measurement core behind graft's harnesses (Bench, Verify,
   * ScaleBench, BuildIndexes, PlanDump): one session factory, one
@@ -89,34 +90,29 @@ object Measure {
     def max: Double = if (failed) -1.0 else secs.last
   }
 
-  /** Clears the session cache, then runs `body` twice untimed. A single
-    * leftover cache entry stops the ContextCleaner from reclaiming every
-    * later localCheckpoint, so one query's blocks would bleed into the
-    * next one's numbers. Two warm-ups because the UDF-heavy tagger
-    * stages spend their first and often second run inside C2 JIT
-    * compilation (5-9 s on run 2 against 1.2-2 s steady). A failing
-    * warm-up is left for the timed runs to report. `prepare` runs,
-    * untimed, before every run.
+  /** Runs `body` twice untimed, each run in its own [[Pin.scope]]. Two
+    * warm-ups because the UDF-heavy tagger stages spend their first and
+    * often second run inside C2 JIT compilation (5-9 s on run 2 against
+    * 1.2-2 s steady). A failing warm-up is left for the timed runs to
+    * report. `prepare` runs, untimed, before every run.
     */
-  def warmUp(spark: SparkSession, prepare: () => Unit = () => ())(
-      body: => Unit): Unit = {
-    spark.catalog.clearCache()
+  def warmUp(prepare: () => Unit = () => ())(body: => Unit): Unit =
     (1 to 2).foreach { _ =>
       prepare()
-      try body catch { case _: Throwable => }
-      // lets the ContextCleaner release the run's checkpoint blocks
-      System.gc()
+      try Pin.scope(body) catch { case _: Throwable => }
     }
-  }
 
-  /** `runs` timed runs of `body`, each after `prepare` and a GC point. */
+  /** `runs` timed runs of `body`, each after `prepare` and a GC point,
+    * each in its own [[Pin.scope]]: the persistent-RDD count after a run
+    * is what the run left behind.
+    */
   def timeRuns(spark: SparkSession, runs: Int = 3, prepare: () => Unit = () => ())(
       body: => Unit): Timing = Timing((1 to runs).map { _ =>
     prepare()
     System.gc()
     val gc0 = gcMillis()
     val t0 = System.nanoTime()
-    val ok = try { body; true } catch { case _: Throwable => false }
+    val ok = try { Pin.scope(body); true } catch { case _: Throwable => false }
     val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
     Run(sec, gcMillis() - gc0, spark.sparkContext.getPersistentRDDs.size)
   })
@@ -128,7 +124,7 @@ object Measure {
     */
   def timed(spark: SparkSession, prepare: () => Unit = () => ())(
       body: => Unit): Timing = {
-    warmUp(spark, prepare)(body)
+    warmUp(prepare)(body)
     timeRuns(spark, prepare = prepare)(body)
   }
 
@@ -173,8 +169,8 @@ object Measure {
   /** Executor time per call site, with AQE on. A job's site is the
     * description of the SQL execution it carries (the
     * `spark.sql.execution.id` job property): the short call site of the
-    * action that started it, or the tag a pipeline set with
-    * `setCallSite` (q115's pins). AQE submits query stages from its own
+    * action that started it, or a pin's `"<name> localCheckpoint"`
+    * ([[Pin]]). AQE submits query stages from its own
     * threads, whose stage names say only CompletableFuture, but every
     * such job still carries its execution id. A job outside any SQL
     * execution takes its result stage's name; tasks of a stage no job
@@ -248,7 +244,7 @@ object Measure {
     sc.addSparkListener(listener)
     val all = selected.flatMap { name =>
       val fn = SparkEntry.queries(name)
-      warmUp(spark)(materialize(fn(spark, sfDir)))
+      warmUp()(materialize(fn(spark, sfDir)))
       listener.reset(sc)
       val t = timeRuns(spark, runs)(materialize(fn(spark, sfDir)))
       t.runs.zipWithIndex.foreach { case (r, i) =>

@@ -82,14 +82,14 @@ class BandIndexSpec extends SparkSpec {
     try {
       // history = bucket<200; ingest batch1 = [200,230); batch2 = [230,256)
       BandIndex.buildIndex(spark, docsSlice(0, 200), name, path.resolve("idx"))
-      val p1 = rows(BandIndex.probeIndex(spark, name, docsSlice(200, 230)))
+      val p1 = rows(BandIndex.probeIndex(spark, name, docsSlice(200, 230))._1)
       assert(p1 == rows(monolithic(spark,
         col("bucket") < 200,
         col("bucket") >= 200 && col("bucket") < 230)))
       // admit the whole batch into history, then probe the next batch:
       // history is now exactly bucket<230, i.e. q78's own split
       BandIndex.append(spark, name, docsSlice(200, 230))
-      val p2 = rows(BandIndex.probeIndex(spark, name, docsSlice(230, 256)))
+      val p2 = rows(BandIndex.probeIndex(spark, name, docsSlice(230, 256))._1)
       assert(p2 == rows(monolithic(spark,
         col("bucket") < 230, col("bucket") >= 230)))
     } finally {
@@ -151,7 +151,7 @@ class BandIndexSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
       BandIndex.register(spark, name, path)
       BandIndex.append(spark, name, docsSlice(200, 230)) // must not throw
-      val p2 = rows(BandIndex.probeIndex(spark, name, docsSlice(230, 256)))
+      val p2 = rows(BandIndex.probeIndex(spark, name, docsSlice(230, 256))._1)
       assert(p2 == rows(monolithic(spark,
         col("bucket") < 230, col("bucket") >= 230)),
         "post-re-register append must behave exactly like a same-session one")
@@ -167,12 +167,12 @@ class BandIndexSpec extends SparkSpec {
       // a crash-replayed append: the same batch lands twice
       BandIndex.append(spark, name, docsSlice(200, 230))
       BandIndex.append(spark, name, docsSlice(200, 230))
-      val probe = rows(BandIndex.probeIndex(spark, name, docsSlice(230, 256)))
+      val probe = rows(BandIndex.probeIndex(spark, name, docsSlice(230, 256))._1)
       val (before, after) = BandIndex.compact(spark, name, path)
       assert(after < before, s"duplicates should fold: $before -> $after")
       assert(after == spark.table(name).distinct().count())
       // identical decisions, and the rewritten table still reads bucketed
-      assert(rows(BandIndex.probeIndex(spark, name, docsSlice(230, 256))) == probe)
+      assert(rows(BandIndex.probeIndex(spark, name, docsSlice(230, 256))._1) == probe)
       val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -72,12 +72,12 @@ class FpIndexSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft-fpidx-chain")
     try {
       FpIndex.buildIndex(spark, docsSlice(0, 200), name, path.resolve("idx"))
-      val p1 = rows(FpIndex.probeSpans(spark, name, docsSlice(200, 230)))
+      val p1 = rows(FpIndex.probeSpans(spark, name, docsSlice(200, 230))._1)
       assert(p1 == rows(monolithic(
         col("bucket") < 200,
         col("bucket") >= 200 && col("bucket") < 230)))
       FpIndex.append(spark, name, docsSlice(200, 230))
-      val p2 = rows(FpIndex.probeSpans(spark, name, docsSlice(230, 256)))
+      val p2 = rows(FpIndex.probeSpans(spark, name, docsSlice(230, 256))._1)
       assert(p2 == rows(monolithic(
         col("bucket") < 230, col("bucket") >= 230)))
       assert((p1 ++ p2).nonEmpty, "chain must find at least one dup span")
@@ -92,15 +92,15 @@ class FpIndexSpec extends SparkSpec {
     try {
       FpIndex.buildIndex(spark, docsSlice(0, 200), name, path.resolve("idx"))
       val batch = docsSlice(200, 230)
-      val clean = rows(FpIndex.probeSpans(spark, name, batch))
+      val clean = rows(FpIndex.probeSpans(spark, name, batch)._1)
       // crash window: the batch's fingerprints landed but the decision
       // log did not — the replayed naive probe sees the batch's own
       // docs as history and reports spam spans
       FpIndex.append(spark, name, batch)
-      val naive = rows(FpIndex.probeSpans(spark, name, batch))
+      val naive = rows(FpIndex.probeSpans(spark, name, batch)._1)
       assert(naive != clean, "the replay seam must be REAL on this corpus")
       val healed = rows(FpIndex.probeSpans(spark, name, batch,
-        excludeBatchFromHistory = true))
+        excludeBatchFromHistory = true)._1)
       assert(healed == clean, "exclusion must make the probe idempotent")
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS `graft_fpidx_replay_test`")
@@ -116,12 +116,12 @@ class FpIndexSpec extends SparkSpec {
       // a crash-replayed append: the same batch lands twice
       FpIndex.append(spark, name, docsSlice(200, 230))
       FpIndex.append(spark, name, docsSlice(200, 230))
-      val probe = rows(FpIndex.probeSpans(spark, name, docsSlice(230, 256)))
+      val probe = rows(FpIndex.probeSpans(spark, name, docsSlice(230, 256))._1)
       val (before, after) = FpIndex.compact(spark, name, path)
       assert(after < before, s"duplicates should fold: $before -> $after")
       assert(after == spark.table(name).distinct().count())
       // identical spans, and the rewritten table still reads bucketed
-      assert(rows(FpIndex.probeSpans(spark, name, docsSlice(230, 256))) == probe)
+      assert(rows(FpIndex.probeSpans(spark, name, docsSlice(230, 256))._1) == probe)
       val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
       val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -194,13 +194,13 @@ class FpIndexSpec extends SparkSpec {
       .resolve("idx")
     try {
       FpIndex.buildIndex(spark, docsSlice(0, 200), name, path)
-      val before = rows(FpIndex.probeSpans(spark, name, docsSlice(200, 230)))
+      val before = rows(FpIndex.probeSpans(spark, name, docsSlice(200, 230))._1)
       // simulate a JVM restart: catalog entry gone, files remain, then
       // re-register through the REAL register() DDL
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
       FpIndex.register(spark, name, path)
       FpIndex.append(spark, name, docsSlice(200, 230)) // must not throw
-      val after = rows(FpIndex.probeSpans(spark, name, docsSlice(230, 256)))
+      val after = rows(FpIndex.probeSpans(spark, name, docsSlice(230, 256))._1)
       assert(before.nonEmpty || after.nonEmpty,
         "corpus slices must exercise the probe")
     } finally spark.sql(s"DROP TABLE IF EXISTS `$name`")

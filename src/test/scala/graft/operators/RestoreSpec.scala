@@ -122,7 +122,7 @@ class RestoreSpec extends SparkSpec {
         "a never-compacted sink index has no marker")
       assert(IndexCommit.appendedShare(tornPath).isEmpty,
         "no manifest baseline yet — the owner compacts once on its own")
-      def probeRows() = FpIndex.probeSpans(spark, name, arrivals(1000000L))
+      def probeRows() = FpIndex.probeSpans(spark, name, arrivals(1000000L))._1
         .collect().map(_.toString).sorted.toSeq
       val want = probeRows()
       assert(want.nonEmpty, "duplicated arrivals must hit history spans")
@@ -226,7 +226,7 @@ class RestoreSpec extends SparkSpec {
     try {
       BandIndex.initIndex(spark, name, tornPath)
       BandIndex.append(spark, name, hist)
-      def probeRows() = BandIndex.probeIndex(spark, name, arrivals)
+      def probeRows() = BandIndex.probeIndex(spark, name, arrivals)._1
         .collect().map(_.toString).sorted.toSeq
       val want = probeRows()
       assert(want.nonEmpty, "exact-duplicate arrivals must hit history")

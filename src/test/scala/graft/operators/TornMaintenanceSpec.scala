@@ -49,7 +49,7 @@ class TornMaintenanceSpec extends SparkSpec {
         "a clean publish on the torn store must read as valid")
 
       val batch1 = arrivals(1000000L).localCheckpoint(true)
-      val p1 = FpIndex.probeSpans(spark, name, batch1).collect()
+      val p1 = FpIndex.probeSpans(spark, name, batch1)._1.collect()
       assert(p1.nonEmpty, "duplicated arrivals must hit history spans")
 
       // the maintenance append — and the manifest must TOLERATE it:
@@ -60,7 +60,7 @@ class TornMaintenanceSpec extends SparkSpec {
 
       // the appended generation answers probes: a second batch dups
       // BOTH the original history and the appended batch
-      val p2 = FpIndex.probeSpans(spark, name, arrivals(2000000L)).collect()
+      val p2 = FpIndex.probeSpans(spark, name, arrivals(2000000L))._1.collect()
       assert(p2.nonEmpty)
 
       // gen-2 rebuild dies mid-deleteTree, after every DATA file is
@@ -90,7 +90,7 @@ class TornMaintenanceSpec extends SparkSpec {
       }
       FpIndex.register(spark, name, tornPath)
       assert(IndexCommit.fpValid(tornPath, fp2))
-      val p3 = FpIndex.probeSpans(spark, name, arrivals(3000000L)).collect()
+      val p3 = FpIndex.probeSpans(spark, name, arrivals(3000000L))._1.collect()
       assert(p3.nonEmpty, "the rebuilt index must answer probes")
       hist.unpersist(); batch1.unpersist()
     } finally {

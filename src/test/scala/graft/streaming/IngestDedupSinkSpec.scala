@@ -73,7 +73,7 @@ class IngestDedupSinkSpec extends SparkSpec {
       Seq((6L, b2), (7L, u2)))
     val twinDec = batches.map { rows =>
       val df = rows.toDF("doc_id", "text")
-      val d = decMap(BandIndex.probeIndex(spark, twin, df))
+      val d = decMap(BandIndex.probeIndex(spark, twin, df)._1)
       BandIndex.append(spark, twin, df)
       d
     }.reduce(_ ++ _)
@@ -90,15 +90,15 @@ class IngestDedupSinkSpec extends SparkSpec {
     // what a clean application WOULD decide (computed replay-safe on a
     // pre-append index: exclusion is a no-op there, asserted below)
     val clean = decMap(BandIndex.probeIndex(spark, name, batch1,
-      excludeBatchFromHistory = true))
-    assert(clean == decMap(BandIndex.probeIndex(spark, name, batch1)),
+      excludeBatchFromHistory = true)._1)
+    assert(clean == decMap(BandIndex.probeIndex(spark, name, batch1)._1),
       "exclusion must be a no-op before any append of this batch")
 
     // crash window: bands appended, decision log NOT committed
     BandIndex.append(spark, name, batch1)
     // without exclusion the replayed probe would now see batch docs as
     // their own history (e.g. doc 4 finds doc 5's bands and vice versa)
-    val poisoned = decMap(BandIndex.probeIndex(spark, name, batch1))
+    val poisoned = decMap(BandIndex.probeIndex(spark, name, batch1)._1)
     assert(poisoned != clean, "seam must be real: naive replay diverges")
 
     // the sink's replay: pointer still at 0, so it re-applies — and must
@@ -120,7 +120,7 @@ class IngestDedupSinkSpec extends SparkSpec {
     assert(d6._1 >= 1L && d6._3 == false)
     val partners = BandIndex.probeIndex(spark, name,
       Seq((6L, b1 + " extra")).toDF("doc_id", "text"),
-      excludeBatchFromHistory = true)
+      excludeBatchFromHistory = true)._1
       .select("n_hist_dups").head().getLong(0)
     assert(partners == d6._1, "distinct-count probes must dedup double-appended bands")
 

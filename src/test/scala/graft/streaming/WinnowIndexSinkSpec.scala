@@ -49,7 +49,7 @@ class WinnowIndexSinkSpec extends SparkSpec {
   /** One step of the batch twin: probe, splice, append — q112's loop. */
   private def twinStep(name: String, rows: Seq[(Long, String)]): Map[Long, (Long, Long, String)] = {
     val df = rows.toDF("doc_id", "text")
-    val spans = FpIndex.probeSpans(spark, name, df)
+    val spans = FpIndex.probeSpans(spark, name, df)._1
       .select(col("doc_id"), col("span_start").as("s"), col("span_end").as("e"))
     val alld = df.select(col("doc_id"), trim(col("text")).as("tx"))
       .withColumn("n", length(col("tx")))
@@ -103,7 +103,7 @@ class WinnowIndexSinkSpec extends SparkSpec {
 
     val batch1 = Seq((3L, d2), (4L, e1), (5L, e2)).toDF("doc_id", "text")
     def spansOf(exclude: Boolean): Set[(Long, Long, Long, Long)] =
-      FpIndex.probeSpans(spark, name, batch1, exclude).collect()
+      FpIndex.probeSpans(spark, name, batch1, exclude)._1.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet
     // what a clean application WOULD decide (exclusion is a no-op on a

@@ -165,6 +165,19 @@ class ScoredTaggerSpec extends SparkSpec {
     assert(reasonOf(amoxicillin(None, Some(Some(false)))) == (("matched", null)))
   }
 
+  test("a catalog row with a null generic_name matches nothing") {
+    import spark.implicits._
+    val cat = Seq(("amoxicillin", Option.empty[String], "J01CA04", "DB01060",
+        "CAPSULE", "ORAL", "drugbank", "AMOXICILLIN CAPSULE"))
+      .toDF("key", "generic_name", "atc_code", "drugbank_id", "form",
+        "route", "source", "reference_text")
+    val r = ScoredTagger.tagTexts(spark,
+      Seq((1L, "AMOXICILLIN 500MG CAPSULE")).toDF("id", "text"), cat).collect()
+    assert(r.length == 1)
+    assert(r.head.getAs[String]("match_reason") == "no_match")
+    assert(r.head.getAs[String]("generic_name") == null)
+  }
+
   test("a null fallback_only is false") {
     assert(reasonOf(amoxicillin(Some("drugbank"), Some(None))) == (("matched", "drugbank")))
   }
@@ -202,37 +215,20 @@ class ScoredTaggerSpec extends SparkSpec {
   }
 
   test("sequential tagTexts calls do not accumulate persistent RDDs") {
-    // Each call pins 2 local checkpoints; the probe persist unpersists
-    // deterministically and the checkpoints free via the ContextCleaner
-    // once unreachable. The property that matters at scale is NO
-    // PER-CALL ACCUMULATION: a long-lived service calling tagTexts
-    // repeatedly must plateau, not grow by ~2 RDDs per call. Asserting
-    // "eventually exactly zero" proved environment-dependent in a shared-session
-    // suite (the JVM occasionally pins the most recent call's RDDs well
-    // past repeated GCs regardless of cache hygiene), so the test runs
-    // SIX calls and asserts the persistent count stays flat between the
-    // early and late calls — a leak of 2/call would show a +8 drift.
-    spark.catalog.clearCache() // leftover cache entries block the cleaner
-    def count(): Int = spark.sparkContext.getPersistentRDDs.size
-    def settled(deadlineMs: Long): Int = {
-      var best = count()
-      val deadline = System.nanoTime() + deadlineMs * 1000000L
-      while (best > 0 && System.nanoTime() < deadline) {
-        System.gc()
-        Thread.sleep(200)
-        val now = count()
-        if (now < best) best = now
+    // a long-lived service calls tagTexts repeatedly: each call inside
+    // a scope must leave exactly no persistent RDD behind
+    import spark.implicits._
+    def ids = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    (1 to 6).foreach { i =>
+      val before = ids
+      val n = graft.core.Pin.scope {
+        ScoredTagger.tagTexts(spark,
+          Seq((i.toLong, s"PARACETAMOL ${i}00MG TABLET")).toDF("id", "text"),
+          catalog).count()
       }
-      best
+      assert(n == 1)
+      assert(ids -- before == Set.empty, s"call $i left persistent RDDs")
     }
-    val counts = (1 to 6).map { i =>
-      tag(Seq((i.toLong, s"PARACETAMOL ${i}00MG TABLET")))
-      settled(8000)
-    }
-    assert(counts.last <= counts(1) + 2,
-      s"persistent RDDs grew across calls: $counts")
-    assert(counts.last <= 8,
-      s"persistent RDD count did not plateau: $counts")
   }
 
   test("shape classification flags") {

@@ -91,17 +91,41 @@ class MeasureSpec extends SparkSpec {
     } finally sc.removeSparkListener(sites)
   }
 
-  test("src/main has one session builder and one materialize") {
+  private lazy val mainFiles = {
     val files = Files.walk(new File("src/main/scala").toPath).iterator.asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.nonEmpty)
-    def hits(needle: String) = files.flatMap { p =>
-      Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (l, i) if l.contains(needle) => s"$p:${i + 1}"
-      }
+    files
+  }
+
+  /** `file:line` of every src/main line whose code (comments left out)
+    * contains `needle`.
+    */
+  private def hits(needle: String) = mainFiles.flatMap { p =>
+    Files.readAllLines(p).asScala.zipWithIndex.collect {
+      case (l, i) if codeOf(l).contains(needle) => s"$p:${i + 1}"
     }
+  }
+
+  private def codeOf(line: String): String = {
+    val t = line.trim
+    if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
+    else line.split(" // ", 2)(0)
+  }
+
+  test("src/main has one session builder and one materialize") {
     val builders = hits("SparkSession.builder")
     assert(builders.size == 1 && builders.head.contains("tools/Measure.scala"), builders)
     assert(hits("def materialize").size == 1, hits("def materialize"))
+  }
+
+  test("src/main pins and releases only through graft.core.Pin") {
+    val calls = Seq("localCheckpoint(", ".checkpoint(", "unpersist(")
+      .flatMap(hits).filterNot(_.contains("graft/core/Pin.scala:"))
+    // the registry's plan-keyed persist of its phase frames is a cache
+    // entry, not a pin
+    val (registry, rest) = calls.partition(_.contains("pipelines/Pipeline.scala:"))
+    assert(rest.isEmpty, rest)
+    assert(registry.size == 1, registry)
   }
 }
