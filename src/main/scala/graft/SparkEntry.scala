@@ -20,15 +20,14 @@ import graft.operators.{Analytic, Bpe, Bridge, Clustering, Curation, CurationPip
   *            BPE-ish regex token counting (+fertility)
   *   q35–q39  near-dup: n-gram Jaccard, MinHash+LSH, SimHash, and
   *            connected-components cluster assignment over the LSH
-  *            pair graph (iterative min-label propagation); q56
+  *            pair graph (large-star/small-star, O(log² n) rounds); q56
   *            applies the clusters — the deduplicated corpus keeping
   *            one representative per cluster plus unpaired docs
-  *   q48–q49  scale-path twins under the SAME oracles: large-star/
-  *            small-star connected components (≡ q39) and one-pass
-  *            broadcast-dict language-ID (≡ q31)
+  *   q48–q49  second names for q39 (clusters) and q31 (language-ID):
+  *            same body, same oracle
   *   q53–q57  corpus hygiene & mixing: benchmark decontamination
-  *            (trigram containment vs a broadcast benchmark shingle
-  *            set), deterministic stratified language resampling,
+  *            (trigram containment vs a bloom-prefiltered benchmark
+  *            shingle set), deterministic stratified language resampling,
   *            token-window document chunking (size 8, stride 6),
   *            dedup application (q56, under Dedup), and
   *            source-weighted upsampling for training-mix epochs
@@ -50,9 +49,9 @@ import graft.operators.{Analytic, Bpe, Bridge, Clustering, Curation, CurationPip
   *   q64–q67  analytic functions: trailing RANGE-frame window, discrete
   *            quantiles (percentile_disc), explicit-values pivot, rollup
   *            grouping sets + grouping_id
-  *   q68–q69  scale-path + corpus ops: salted two-phase top-k (skew twin
-  *            under q09's oracle verbatim) and vocabulary induction +
-  *            OOV coverage (TakeOrderedAndProject top-V, broadcast probe)
+  *   q68–q69  a second name for q09's top-k per group, and
+  *            vocabulary induction + OOV coverage
+  *            (TakeOrderedAndProject top-V, broadcast probe)
   *   q70      approximate sketches beside exact twins (HLL distinct,
   *            approx_percentile) — rows-only by design, error bounds
   *            spec-pinned
@@ -107,7 +106,7 @@ import graft.operators.{Analytic, Bpe, Bridge, Clustering, Curation, CurationPip
   *            oracle-recomputed monolithically), and MMR diversified
   *            rerank (q93: greedy k-of-candidates, integer-weighted)
   *   q95–q97  sketch-accelerated EXACT operators (SketchExact): bloom-
-  *            prefiltered decontamination (≡ q53 under one oracle),
+  *            prefiltered decontamination (q53's one body),
   *            Misra-Gries + exact-recount heavy hitters, and bottom-k
   *            weighted sampling via integer min-hash priorities — the
   *            sketch prunes, a confirm pass restores bit-exactness
@@ -118,7 +117,7 @@ import graft.operators.{Analytic, Bpe, Bridge, Clustering, Curation, CurationPip
   *            exchange-free confirm join — q91's serving path for
   *            the sketch layer, same oracle as q53/q95)
   *   q100     stratified weighted sampling (k per source): q97's
-  *            priorities under q68's salted two-phase top-k — the
+  *            priorities under a salted two-phase top-k — the
   *            balanced training-mix sampler, naive-window oracle
   *   q101–q104 clustering arc: deterministic k-means cells (2 unrolled
   *            Lloyd iterations, exact int64 arithmetic, oracle CTEs pin

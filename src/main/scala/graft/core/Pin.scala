@@ -22,9 +22,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `ThreadLocal`). With no scope open, `Pin` keeps no reference to what it
   * pinned and the ContextCleaner reclaims it once the frame is garbage.
   *
-  * Release unpersists the checkpointed RDD itself (`Dataset.unpersist`
-  * only drops a cache entry, which a checkpoint does not have), so a
-  * frame read after its scope closed fails instead of recomputing.
+  * Release drops the checkpointed RDD's blocks ([[org.apache.spark.PinRelease]];
+  * `Dataset.unpersist` only drops a cache entry, which a checkpoint does
+  * not have), so a frame read after its scope closed fails instead of
+  * recomputing.
   */
 object Pin {
 
@@ -68,7 +69,7 @@ object Pin {
       out
     } finally {
       open.set(outer)
-      mine.foreach(_.unpersist(blocking = false))
+      mine.foreach(org.apache.spark.PinRelease(_))
     }
   }
 

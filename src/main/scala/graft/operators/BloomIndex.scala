@@ -12,7 +12,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * [[PostingsIndex]] "build once, probe forever" pattern applied to the
   * sketch layer.
   *
-  * q53/q95 rebuild the benchmark's distinct-shingle set (and q95 its
+  * q53/q95 rebuild the benchmark's distinct-shingle set (and its
   * bloom filter) on EVERY run — the q78-shape recompute smell: the
   * benchmark suite is the STATIONARY side of decontamination (it changes
   * when the eval suite changes, not when corpus batches arrive), so at

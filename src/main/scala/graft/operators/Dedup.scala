@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -94,9 +94,8 @@ object Dedup {
       .select(col("doc_id"), shinglesOf(col("t")).as("shs"))
       .select(col("doc_id"), size(col("shs")).as("n_sh"), explode(col("shs")).as("sh"))
 
-  /** Benchmark/corpus sides for the decontamination family (q53
-    * exact-broadcast, q95 bloom-prefiltered — see
-    * [[SketchExact]]): the benchmark is a deterministic md5-bucket
+  /** Benchmark/corpus sides for the decontamination family ([[decontam]]
+    * and [[BloomIndex]]): the benchmark is a deterministic md5-bucket
     * sample (q44's engine-identical lang-salted bucketing, bucket >=
     * 250, ~2.3%) standing in for a held-out eval suite; in production
     * the benchmark side is a separate, small-by-definition table.
@@ -117,7 +116,7 @@ object Dedup {
     (bench, base.filter(col("bucket") < 250))
   }
 
-  /** Shared q53/q95 report tail: per-doc hit counts -> containment. */
+  /** Shared decontamination report tail: per-doc hit counts -> containment. */
   private[operators] def decontamAssemble(
       corpus: DataFrame, hits: DataFrame): DataFrame =
     corpus.select(col("doc_id"), size(col("shs")).as("n_sh"))
@@ -130,10 +129,21 @@ object Dedup {
       .withColumn("contaminated", col("containment") >= 0.2)
       .orderBy("doc_id")
 
-  /** One oracle for q53 AND q95: the bloom prefilter is an evaluation
-    * strategy, not a semantics change (no false negatives; false
-    * positives die in the exact confirm join) — the q78/q91
-    * materialization-not-semantics gate applied to a sketch.
+  /** The q53/q95 report: each corpus doc's benchmark containment. The
+    * bloom prefilter ([[SketchExact.bloomSurvivors]]) drops corpus
+    * shingles that cannot be in the benchmark set; the exact confirm join
+    * counts the rest. shinglesOf is distinct per doc and the set is
+    * distinct, so count(*) after the inner join = |doc ∩ bench|.
+    */
+  private[operators] def decontam(s: SparkSession, dir: String): DataFrame = {
+    val (survivors, bench, corpus) = SketchExact.bloomSurvivors(s, dir)
+    decontamAssemble(corpus, survivors.join(bench, Seq("sh"))
+      .groupBy("doc_id").agg(count(lit(1)).as("n_hit")))
+  }
+
+  /** One oracle for q53, q95 and q99 (the persisted-index probe): how
+    * the benchmark set is stored and probed is an evaluation strategy,
+    * not a semantics change.
     */
   private[operators] val DecontamOracle: String =
     """WITH d AS (SELECT doc_id,
@@ -212,181 +222,90 @@ object Dedup {
       .distinct()
   }
 
-  /** Connected components over an undirected edge list by iterative
-    * min-label propagation: every vertex repeatedly adopts the smallest
-    * label among itself and its neighbors until a fixpoint; the component
-    * id is the component's minimum vertex id.
-    *
-    * Scale design: one shuffle per iteration (the neighbor-min
-    * aggregation), and each iteration's label frame is EAGERLY
-    * locally-checkpointed — without lineage truncation an iterative
-    * DataFrame loop doubles its plan every pass and dies at ~15
-    * iterations regardless of data size. Iteration count is bounded by
-    * the largest component's diameter, which for near-dup clusters is
-    * small by construction (duplicate groups are dense); the maxIter
-    * guard fails loudly rather than returning half-propagated labels.
-    * For adversarial long-chain graphs prefer the large-star/small-star
-    * variant (O(log²) rounds); the simple propagation is the right
-    * trade for dedup graphs and keeps every step oracle-checkable.
+  /** Per-round progress line for the connected-components loop, gated
+    * behind SPARK_GRAFT_CC_LOG (any value): a long-running production CC
+    * job is opaque without round cadence, and the line is what diagnosed
+    * the scale-curve shape (round COUNT vs per-round cost attribution).
     */
-  /** Per-round progress line for the iterative CC loops, gated behind
-    * SPARK_GRAFT_CC_LOG (any value): a long-running production CC job is
-    * opaque without round cadence, and the line is what diagnosed the
-    * scale-curve shape (round COUNT vs per-round cost attribution).
-    */
-  private def roundLog(kind: String, round: Int, edges: Long,
-      t0: Long): Unit =
+  private def roundLog(round: Int, edges: Long, t0: Long): Unit =
     if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
-      println(f"[cc:$kind] round $round%2d  edges=$edges%-9d  elapsed=${(System.nanoTime() - t0) / 1e9}%7.2f s")
+      println(f"[cc:star] round $round%2d  edges=$edges%-9d  elapsed=${(System.nanoTime() - t0) / 1e9}%7.2f s")
 
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = Pin.scope {
-    // the scope releases the edge pin and every round's labels but the
-    // last, which it returns
-    val sym = Pin(edges.select(col("d1").as("src"), col("d2").as("dst"))
-      .unionByName(edges.select(col("d2").as("src"), col("d1").as("dst"))),
-      "Dedup.cc.edges") // consumed once per iteration — pin the scan
-    // FUSED FIRST ROUND: initializing every vertex to the minimum of its
-    // closed neighborhood IS the identity-init loop's first propagation
-    // (round 1 over identity labels computes min(self, neighbor ids) —
-    // exactly this aggregate), so one groupBy replaces BOTH the old
-    // identity-label `distinct` and the first join+aggregate round: one
-    // fewer shuffle round, checkpoint, and convergence probe per CC
-    // call, with byte-identical labels at every subsequent round. The
-    // chain runs CC twice per capstone, so this saves two rounds per
-    // capstone run.
-    var labels = Pin(sym
-      .select(col("src").as("id"), least(col("src"), col("dst")).as("label"))
-      .groupBy("id").agg(min(col("label")).as("label")), "Dedup.cc.labels")
-    // one shuffle per round: neighbor labels + self labels union into a
-    // single min-aggregation (no second join to merge back). Convergence
-    // check rides the checkpointed result as a tiny aggregate: labels
-    // only ever DECREASE, so an unchanged exact sum ⟺ a fixpoint —
-    // decimal(38) keeps the sum exact at any realistic vertex count.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      // sum over an EMPTY label frame is null (no pairs in the corpus →
-      // no vertices); treat as zero so the empty graph converges on the
-      // first round instead of NPE-ing the comparison
-      Option(df.agg(sum(col("label").cast("decimal(38,0)")))
-        .head().getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var it = 0
-    val t0 = System.nanoTime()
-    while (!converged && it < maxIter) {
-      val msgs = sym.join(labels, sym("dst") === labels("id"))
-        .select(col("src").as("id"), col("label"))
-        .unionByName(labels)
-      val next = Pin(msgs.groupBy("id").agg(min(col("label")).as("label")),
-        "Dedup.cc.labels")
-      val s = labelSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels = next
-      it += 1
-      roundLog("prop", it, -1L, t0)
-    }
-    require(converged,
-      s"connectedComponents did not converge in $maxIter iterations")
-    labels
-  }
-
-  /** Alternating large-star/small-star connected components (the
-    * two-phase algorithm of Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14) — the opt-in alternative to
-    * [[connectedComponents]] for ADVERSARIAL graphs: rounds scale with
-    * O(log² n) instead of the component diameter, so a pathological
-    * long-chain component (which would blow past min-label propagation's
-    * maxIter) still converges in a handful of passes.
+  /** Connected components over an undirected edge list (d1, d2): every
+    * vertex that appears in `edges` is labeled with its component's
+    * minimum vertex id, as (id, label). A self-loop's vertex is a vertex.
     *
-    * large-star: every node connects its LARGER neighbors to the minimum
-    * of its closed neighborhood; small-star: every node connects its
-    * smaller neighbors (and itself) to the minimum among them. Both
-    * steps preserve connectivity and strictly shrink star height; at the
-    * fixpoint every edge is (component-min, member). Each round is two
-    * grouped aggregations + joins — the same one-shuffle-per-pass
-    * profile as the simple propagation — with eager localCheckpoints
-    * truncating the iterative lineage. Convergence detection is two-tier:
-    * an exact (count, decimal sum of per-edge xxhash64) checksum is the
-    * cheap per-round trigger (a star-fixpoint edge set reproduces
-    * itself), and when it fires, an exact `except`-based set-equality
-    * check confirms before the loop terminates — so termination is
-    * EXACT, not probabilistic, and the confirmation job runs only once,
-    * at the fixpoint.
+    * The algorithm is the alternating large-star/small-star of Kiveris et
+    * al., "Connected Components in MapReduce and Beyond" (SoCC'14). Over
+    * edges (a, b) with a < b, each round runs
+    *  - large-star: every vertex u links each LARGER neighbor to the
+    *    minimum of u's closed neighborhood;
+    *  - small-star: every vertex u links itself and each SMALLER neighbor
+    *    to the minimum of those.
+    * Both steps keep the components, and the rounds are bounded by
+    * O(log² n) whatever the component diameter, so a long chain costs a
+    * few more rounds and never aborts. The loop ends once the edge set is
+    * a star forest (no vertex has both smaller and larger neighbors, none
+    * has two smaller ones): each star is then one component centered on
+    * its minimum, which is every member's label.
     *
-    * Same contract as [[connectedComponents]]: labels every vertex that
-    * appears in `edges` with its component's minimum vertex id.
+    * Scale design: a round is two grouped aggregations (the large-star
+    * neighborhood by u, the small-star one by b) and one pin that
+    * truncates the loop's lineage. Neighbor sets are `collect_set`s, so
+    * duplicate edges collapse inside the groups without a `distinct`, and
+    * no round emits more rows than its input has distinct edges. The
+    * star-forest test reads the large-star aggregate through an
+    * `Observation`, so it runs no job of its own: it tests the round's
+    * INPUT, and a star forest comes out of a round unchanged, so the loop
+    * stops one round after the forest forms. The round pins live in this
+    * call's scope; only the labels pin is handed up.
     */
-  def connectedComponentsStar(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val vertices = Pin(edges.select(col("d1").as("id"))
-      .unionByName(edges.select(col("d2").as("id")))
-      .distinct(), "Dedup.ccStar.vertices")
-    var e = Pin(edges
-      .select(least(col("d1"), col("d2")).as("a"),
-        greatest(col("d1"), col("d2")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct(), "Dedup.ccStar.edges")
-    def checksum(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)"))).head()
-      (r.getLong(0),
-        Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-    }
-    var prev = checksum(e)
-    var converged = prev._1 == 0L // empty graph: nothing to do
-    var it = 0
+  def connectedComponents(edges: DataFrame): DataFrame = Pin.scope {
+    val input = Pin(edges.select(least(col("d1"), col("d2")).as("a"),
+      greatest(col("d1"), col("d2")).as("b")), "Dedup.cc.edges")
+    var e = input.where(col("a") < col("b"))
+    var star = false
+    var round = 0
     val t0 = System.nanoTime()
-    while (!converged && it < maxIter) {
-      // ---- large-star: for node u with closed-neighborhood min m,
-      //      connect every neighbor v > u to m
+    while (!star) {
+      // large-star: each u's closed-neighborhood minimum, linked to each
+      // larger neighbor; the observed flags test e itself for a star forest
       val sym = e.select(col("a").as("u"), col("b").as("v"))
         .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-      val nbrMin = sym.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val ls = sym.join(nbrMin, "u")
-        .where(col("v") > col("u"))
-        .select(least(col("v"), col("m")).as("a"),
-          greatest(col("v"), col("m")).as("b"))
-        .where(col("a") =!= col("b"))
-        .distinct()
-      // ---- small-star: for node u with smaller-neighbor min m, connect
-      //      every smaller neighbor and u itself to m
-      val sym2 = ls.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(ls.select(col("b").as("u"), col("a").as("v")))
-      val neg = sym2.where(col("v") < col("u"))
-      val negMin = neg.groupBy("u").agg(min(col("v")).as("m"))
-      val ss = Pin(neg.join(negMin, "u")
-        .select(col("v").as("x"), col("m"))
-        .unionByName(negMin.select(col("u").as("x"), col("m")))
-        .where(col("x") =!= col("m"))
-        .select(col("m").as("a"), col("x").as("b")) // m < x by construction
-        .distinct(), "Dedup.ccStar.edges")
-      val cur = checksum(ss)
-      // the checksum is the cheap per-round trigger; before actually
-      // terminating, confirm with an EXACT set-equality check (equal count
-      // from the checksum + one-sided except empty ⟹ equal sets, both are
-      // distinct). It runs once, at the fixpoint, so the loop's cost is
-      // unchanged — but termination no longer rests on xxhash64 being
-      // collision-free on a correctness-critical path: a colliding
-      // not-yet-fixed edge set fails the exact check and the loop continues.
-      converged = cur == prev && ss.except(e).isEmpty
-      prev = cur
-      e = ss
-      it += 1
-      roundLog("star", it, cur._1, t0)
+      val lower = when(col("v") < col("u"), col("v"))
+      val hood = sym.groupBy("u").agg(min(col("v")).as("mn"),
+        min(lower).as("lo"), max(lower).as("hi_lo"),
+        collect_set(when(col("v") > col("u"), col("v"))).as("up"))
+      val check = Observation(s"Dedup.cc.round$round")
+      val notStar = col("lo").isNotNull &&
+        (size(col("up")) > 0 || col("lo") =!= col("hi_lo"))
+      val large = hood
+        .observe(check,
+          coalesce(max(notStar.cast("int")), lit(0)).as("not_star"),
+          coalesce(sum(size(col("up"))), lit(0L)).as("edges"))
+        .select(least(col("u"), col("mn")).as("m"), explode(col("up")).as("b"))
+      // small-star: each b links itself and its smaller neighbors to the
+      // least of them
+      val small = large.groupBy("b").agg(collect_set(col("m")).as("ms"))
+        .select(array_min(col("ms")).as("a"),
+          array_union(col("ms"), array(col("b"))).as("xs"))
+        .select(col("a"), explode(array_remove(col("xs"), col("a"))).as("b"))
+      e = Pin(small, "Dedup.cc.round")
+      // no metrics at all when the planner proved the round's input empty
+      val seen = check.get
+      star = seen.getOrElse("not_star", 0) == 0
+      round += 1
+      roundLog(round, seen.getOrElse("edges", 0L).asInstanceOf[Long], t0)
     }
-    require(converged,
-      s"connectedComponentsStar did not converge in $maxIter rounds")
-    // fixpoint edges are star edges (component-min, member); centers and
-    // any singleton-collapsed vertex label themselves
-    vertices
-      .join(e.select(col("b").as("id"), col("a").as("label")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+    // e is a star forest: a leaf takes its center, a center itself, and a
+    // vertex seen only in a self-loop itself
+    Pin(e.select(col("b").as("id"), col("a").as("label"))
+      .unionByName(e.select(col("a").as("id"), col("a").as("label")))
+      .unionByName(input.where(col("a") === col("b"))
+        .select(col("a").as("id"), col("a").as("label")))
+      .groupBy("id").agg(min(col("label")).as("label")), "Dedup.cc.labels")
   }
 
-  /** Shared DuckDB oracle for q39/q48: min-reachable-id per vertex of the
-    * LSH pair graph via a recursive CTE. Both CC variants must land on
-    * identical components.
-    */
   /** Shared oracle prefix: the capped-band LSH candidate pair graph
     * (pairs + undirected edges), reused by the clusters oracle (with a
     * recursive reach tail) and q59's split-leakage oracle (without).
@@ -426,6 +345,9 @@ object Dedup {
         |  UNION
         |  SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.id)""".stripMargin
 
+  /** The q39/q48 oracle: each vertex of the LSH pair graph with the
+    * minimum id it reaches, by a recursive CTE.
+    */
   private val clustersOracle: String = clustersCte +
     """
       |SELECT id AS doc_id, min(r) AS cluster_id
@@ -528,6 +450,12 @@ object Dedup {
   private[operators] val BucketSql: String =
     "CAST('0x' || substr(md5(coalesce(lang, '') || ':' || CAST(doc_id AS VARCHAR)), 1, 2) AS INT)"
 
+  /** q39/q48: each paired doc with its near-dup cluster id. */
+  private def clusters(s: SparkSession, dir: String): DataFrame =
+    connectedComponents(minhashPairs(s, dir))
+      .select(col("id").as("doc_id"), col("label").as("cluster_id"))
+      .orderBy("doc_id")
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- n-gram Jaccard near-dup pairs via inverted-index join
@@ -591,23 +519,10 @@ object Dedup {
     // (dedup pipelines need one representative per duplicate GROUP, not
     // pairs; the canonical keep-rule "retain min doc_id per component" is
     // exactly the cluster_id this emits)
-    QueryDef(
-      "q39_dedup_clusters",
-      (s, dir) => connectedComponents(minhashPairs(s, dir))
-        .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-        .orderBy("doc_id"),
-      Some(clustersOracle)),
+    QueryDef("q39_dedup_clusters", clusters, Some(clustersOracle)),
 
-    // ---- the same clusters via the large-star/small-star variant, under
-    // the SAME recursive-CTE oracle — proves the adversarial-graph
-    // algorithm computes identical components on the real LSH pair
-    // graph, not just on the spec's synthetic graphs
-    QueryDef(
-      "q48_dedup_clusters_star",
-      (s, dir) => connectedComponentsStar(minhashPairs(s, dir))
-        .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-        .orderBy("doc_id"),
-      Some(clustersOracle)),
+    // ---- q48: q39's clusters under a second name
+    QueryDef("q48_dedup_clusters_star", clusters, Some(clustersOracle)),
 
     // ---- benchmark decontamination: flag corpus docs whose word-trigram
     // set overlaps an eval/benchmark sample (the train-on-test leak check
@@ -617,21 +532,9 @@ object Dedup {
     // benchmark side is a separate, small-by-definition table. The join
     // side is the benchmark's DISTINCT shingle SET — set membership, not
     // per-doc pairs — so each corpus shingle matches at most once and the
-    // broadcast join has zero fanout regardless of how common a trigram
-    // is (no hot-key cap needed). Corpus side: one scan, one groupBy.
-    QueryDef(
-      "q53_decontam",
-      (s, dir) => {
-        val (bench, corpus) = decontamSides(s, dir)
-        // shinglesOf is distinct per doc and bench is a distinct set, so
-        // count(*) after the semi-shaped inner join = |doc ∩ bench|
-        val hits = corpus
-          .select(col("doc_id"), explode(col("shs")).as("sh"))
-          .join(broadcast(bench), Seq("sh"))
-          .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-        decontamAssemble(corpus, hits)
-      },
-      Some(DecontamOracle)),
+    // confirm join has zero fanout regardless of how common a trigram is
+    // (no hot-key cap needed). Corpus side: one scan, one groupBy.
+    QueryDef("q53_decontam", decontam, Some(DecontamOracle)),
 
     // ---- cross-split leakage: eval docs that are LSH near-dups of a
     // TRAIN doc — the split-hygiene check run before training (a random
@@ -687,20 +590,15 @@ object Dedup {
     // materialize the training corpus a run would actually read after
     // q53's verdicts — every corpus doc NOT contaminated (containment
     // < 0.2), carried with its evidence columns so downstream mixing
-    // stages (q57/q84) can re-weight without re-deriving. Same plan
-    // skeleton as q53 (broadcast benchmark set, zero fanout, one
-    // grouped count) plus one join back to the docs table for lang —
+    // stages (q57/q84) can re-weight without re-deriving. q53's plan
+    // (bloom prefilter, zero-fanout confirm join, one grouped count)
+    // plus one join back to the docs table for lang —
     // the apply adds no new shuffle class, which is the point: at
     // 100 TB the decision and the materialization share one scan.
     QueryDef(
       "q105_decontam_apply",
       (s, dir) => {
-        val (bench, corpus) = decontamSides(s, dir)
-        val hits = corpus
-          .select(col("doc_id"), explode(col("shs")).as("sh"))
-          .join(broadcast(bench), Seq("sh"))
-          .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-        decontamAssemble(corpus, hits)
+        decontam(s, dir)
           .filter(!col("contaminated"))
           .join(docs(s, dir).select("doc_id", "lang"), "doc_id")
           .select("doc_id", "lang", "n_sh", "n_hit")

@@ -30,6 +30,31 @@ object Relational {
   /** 2-decimal double -> exact integer cents (order-insensitive to sum). */
   private def cents(c: Column): Column = round(c * 100).cast("long")
 
+  /** q09/q68: the top 3 lineitems per `l_returnflag` by extended price
+    * (ties by order key, then line number), as one window. A hot group
+    * (at 100 TB a single returnflag can be most of the table) does not
+    * serialize on one task: the `rank <= 3` filter over `row_number`
+    * plans a partial `WindowGroupLimit` before the exchange, so each map
+    * partition ships at most 3 rows per group.
+    */
+  private[operators] def topKPerGroup(lineitem: DataFrame): DataFrame = {
+    val w = Window.partitionBy("l_returnflag")
+      .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
+    lineitem
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 3)
+      .select("l_returnflag", "rank", "l_orderkey", "l_linenumber", "l_extendedprice")
+      .orderBy("l_returnflag", "rank")
+  }
+
+  /** The q09/q68 oracle: the same single window per group. */
+  private val TopKOracle: String =
+    """SELECT l_returnflag, rank, l_orderkey, l_linenumber, l_extendedprice FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY l_returnflag
+      |    ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rank
+      |  FROM lineitem) t
+      |WHERE rank <= 3 ORDER BY l_returnflag, rank""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- A1/A2/A3: grouped aggregation with count / distinct / exact sums
@@ -159,22 +184,8 @@ object Relational {
              |WHERE rn = 1 ORDER BY l_orderkey""".stripMargin)),
 
     // ---- D3/D6: per-group top-k candidate ranking (scoring.py:294-387)
-    QueryDef(
-      "q09_topk_per_group",
-      (s, dir) => {
-        val w = Window.partitionBy("l_returnflag")
-          .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
-        t(s, dir, "lineitem")
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 3)
-          .select("l_returnflag", "rank", "l_orderkey", "l_linenumber", "l_extendedprice")
-          .orderBy("l_returnflag", "rank")
-      },
-      Some("""SELECT l_returnflag, rank, l_orderkey, l_linenumber, l_extendedprice FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY l_returnflag
-             |    ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rank
-             |  FROM lineitem) t
-             |WHERE rank <= 3 ORDER BY l_returnflag, rank""".stripMargin)),
+    QueryDef("q09_topk_per_group",
+      (s, dir) => topKPerGroup(t(s, dir, "lineitem")), Some(TopKOracle)),
 
     // ---- U1: UNION ALL by name (run_drugs_all.py:340)
     QueryDef(
@@ -404,47 +415,8 @@ object Relational {
              |        min(n_chars) AS min_chars, max(n_chars) AS max_chars
              |      FROM documents) t""".stripMargin)),
 
-    /* Salted two-phase top-k — the SKEW scale path for q09, under q09's
-     * oracle VERBATIM (the q48/q49 twin pattern: a scale variant is only
-     * trustworthy when the same gate checks both). q09's single window
-     * sends each whole group to one task; a hot group (at 100 TB a single
-     * returnflag can be most of the table) serializes on that task.
-     * Phase 1 salts the group into `Salts` sub-partitions on a
-     * deterministic row hash and takes a LOCAL top-k per (group, salt) —
-     * the hot group now spreads over `Salts` tasks and the global
-     * candidate set shrinks to <= k x Salts rows per group. Phase 2 ranks
-     * the candidates; correctness: the true global top-k rows each sit in
-     * SOME salt's local top-k (a row beaten by k rows in its own salt is
-     * beaten by k rows globally), so phase 2 sees every winner. Both
-     * phases use q09's exact total order, so the result is
-     * row-identical, not just set-identical.
-     */
-    QueryDef(
-      "q68_topk_salted",
-      (s, dir) => {
-        val salts = 8
-        val order = Seq(col("l_extendedprice").desc, col("l_orderkey"),
-          col("l_linenumber"))
-        val local = Window
-          .partitionBy(col("l_returnflag"), col("salt")).orderBy(order: _*)
-        val global = Window.partitionBy(col("l_returnflag")).orderBy(order: _*)
-        t(s, dir, "lineitem")
-          .select("l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice")
-          .withColumn("salt",
-            pmod(xxhash64(col("l_orderkey"), col("l_linenumber")), lit(salts)))
-          .withColumn("lrank", row_number().over(local))
-          .filter(col("lrank") <= 3)
-          .withColumn("rank", row_number().over(global))
-          .filter(col("rank") <= 3)
-          .select("l_returnflag", "rank", "l_orderkey", "l_linenumber",
-            "l_extendedprice")
-          .orderBy("l_returnflag", "rank")
-      },
-      // q09's oracle, verbatim: the salted decomposition must be invisible
-      Some("""SELECT l_returnflag, rank, l_orderkey, l_linenumber, l_extendedprice FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY l_returnflag
-             |    ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rank
-             |  FROM lineitem) t
-             |WHERE rank <= 3 ORDER BY l_returnflag, rank""".stripMargin))
+    // ---- q68: q09's top-k under a second name
+    QueryDef("q68_topk_salted",
+      (s, dir) => topKPerGroup(t(s, dir, "lineitem")), Some(TopKOracle))
   )
 }

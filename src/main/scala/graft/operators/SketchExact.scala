@@ -18,14 +18,14 @@ import graft.core.{Pin, QueryDef, Tables, Ws}
   * only error bounds can be pinned.
   *
   * Three members:
-  *  - q95: bloom-prefiltered benchmark decontamination (≡ q53 under the
-  *    SAME oracle). q53 broadcasts the exact benchmark shingle set; at
-  *    100 TB a large benchmark suite's exact set (30+ bytes/shingle)
-  *    stops fitting in executor memory long before its bloom filter
-  *    (~10 bits/shingle at 1% FPP) does. The bloom goes map-side over
-  *    every corpus shingle; only survivors (true hits + ~1% FP) enter
-  *    the exact confirm join, which therefore shuffles a ~99%-pruned
-  *    left side against the benchmark set instead of broadcasting it.
+  *  - q95 (and q53, one body): bloom-prefiltered benchmark
+  *    decontamination. At 100 TB a large benchmark suite's exact set
+  *    (30+ bytes/shingle) stops fitting in executor memory long before
+  *    its bloom filter (~10 bits/shingle at 1% FPP) does. The bloom goes
+  *    map-side over every corpus shingle; only survivors (true hits +
+  *    ~1% FP) enter the exact confirm join, so whether the planner
+  *    broadcasts the benchmark set (small) or shuffles (large), the probe
+  *    side is a ~99%-pruned sliver.
   *  - q96: exact frequent-bigram mining (relative threshold φ) via
   *    per-partition Misra-Gries candidate summaries + an exact recount
   *    of candidates only. The shuffle carries O(P/φ) candidate keys and
@@ -47,9 +47,10 @@ object SketchExact {
   // ---------------------------------------------------------------- q95
 
   /** Corpus shingles surviving the bloom prefilter, plus the bench set
-    * and the corpus (doc_id, bucket, shs) frame — exposed for the spec,
-    * which asserts the prefilter really prunes (|survivors| << |corpus
-    * shingles|) and never drops a true hit (survivors ⊇ exact-join hits).
+    * and the corpus (doc_id, bucket, shs) frame — the first half of
+    * [[Dedup.decontam]], exposed for the spec, which asserts the
+    * prefilter really prunes (|survivors| << |corpus shingles|) and never
+    * drops a true hit (survivors ⊇ exact-join hits).
     */
   private[graft] def bloomSurvivors(
       s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
@@ -160,25 +161,9 @@ object SketchExact {
 
   val defs: Seq[QueryDef] = Seq(
 
-    /* Bloom-prefiltered decontamination, ≡ q53 bit-for-bit under q53's
-     * oracle. Exactness argument: the bloom has NO false negatives, so
-     * survivors ⊇ every corpus shingle that is in the benchmark set;
-     * false positives (~1%) enter the confirm join and match nothing —
-     * n_hit is therefore identical to the exact-broadcast path for
-     * every doc. The confirm join is deliberately NOT broadcast: the
-     * scale premise is a benchmark set too big to broadcast exactly,
-     * probed by a bloom-pruned (tiny) left side.
-     */
-    QueryDef(
-      "q95_bloom_decontam",
-      (s, dir) => {
-        val (survivors, bench, corpus) = bloomSurvivors(s, dir)
-        val hits = survivors
-          .join(bench, Seq("sh"))
-          .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-        Dedup.decontamAssemble(corpus, hits)
-      },
-      Some(Dedup.DecontamOracle)),
+    // ---- bloom-prefiltered decontamination: q53's report, one body
+    // (Dedup.decontam) under one oracle
+    QueryDef("q95_bloom_decontam", Dedup.decontam, Some(Dedup.DecontamOracle)),
 
     /* Exact heavy hitters (frequent adjacent word-bigrams at relative
      * threshold φ = 0.15%): Misra-Gries candidates per partition →
@@ -252,11 +237,11 @@ object SketchExact {
      * k = 10 docs PER SOURCE, inclusion ∝ weight within each source,
      * using q97's integer min-hash priorities. The scale hazard is the
      * grouping itself: `source` is a bounded dimension, so a single
-     * window over it puts an entire source's rows in ONE task (the hot
-     * group q68 exists for). Composition: local top-k per
+     * window over it puts an entire source's rows in ONE task (a hot
+     * group). Composition: local top-k per
      * (source, salt-of-doc_id) spreads each source over 8 tasks, the
      * global per-source re-rank sees ≤ 8k candidate rows per source —
-     * q68's salted two-phase top-k under q97's sampling scheme, while
+     * a salted two-phase top-k under q97's sampling scheme, while
      * the oracle states the NAIVE single window, so the hash proves the
      * decomposition exact.
      */

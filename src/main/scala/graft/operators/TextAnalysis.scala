@@ -63,15 +63,51 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  // stopword-vote language markers: deliberately tiny dictionaries, one
-  // regex scan per language in q31 (acceptable at 4 langs); q49 is the
-  // broadcast-dictionary ONE-PASS form of the same computation, pinned
-  // hit-for-hit equal by sharing q31's oracle.
+  // stopword-vote language markers: deliberately tiny dictionaries
   private val langs: Seq[(String, String)] = Seq(
     "en" -> "\\b(the|a|of|and|in|to)\\b",
     "es" -> "\\b(el|la|de|los|las|que)\\b",
     "de" -> "\\b(der|die|das|und|ist)\\b",
     "fr" -> "\\b(le|les|des|et|est)\\b")
+
+  /** q31/q49: per-language stopword hit counts and the argmax vote. One
+    * regex count per language, all in one projection over the scan (no
+    * join, no aggregation; the final sort is the only exchange), in the
+    * oracle's own formulation. A null text has null counts and votes
+    * "und".
+    */
+  private def langId(s: SparkSession, dir: String): DataFrame = {
+    val low = lower(col("text"))
+    val withVotes = langs.foldLeft(docs(s, dir))((df, lp) =>
+      df.withColumn(s"${lp._1}_hits", size(regexp_extract_all(low, lit(lp._2), lit(0)))))
+    val Seq(en, es, de, fr) = langs.map(l => col(s"${l._1}_hits"))
+    withVotes
+      .withColumn("lang_guess",
+        when(en >= es && en >= de && en >= fr && en > 0, "en")
+          .when(es >= de && es >= fr && es > 0, "es")
+          .when(de >= fr && de > 0, "de")
+          .when(fr > 0, "fr")
+          .otherwise("und"))
+      .select("doc_id", "en_hits", "es_hits", "de_hits", "fr_hits", "lang_guess", "lang")
+      .orderBy("doc_id")
+  }
+
+  /** The q31/q49 oracle: one regex count per language. */
+  private val LangIdOracle: String =
+    """SELECT doc_id, en_hits, es_hits, de_hits, fr_hits,
+      |  CASE WHEN en_hits >= es_hits AND en_hits >= de_hits AND en_hits >= fr_hits AND en_hits > 0 THEN 'en'
+      |       WHEN es_hits >= de_hits AND es_hits >= fr_hits AND es_hits > 0 THEN 'es'
+      |       WHEN de_hits >= fr_hits AND de_hits > 0 THEN 'de'
+      |       WHEN fr_hits > 0 THEN 'fr'
+      |       ELSE 'und' END AS lang_guess,
+      |  lang
+      |FROM (SELECT doc_id, lang,
+      |    len(regexp_extract_all(lower(text), '\b(the|a|of|and|in|to)\b')) AS en_hits,
+      |    len(regexp_extract_all(lower(text), '\b(el|la|de|los|las|que)\b')) AS es_hits,
+      |    len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist)\b')) AS de_hits,
+      |    len(regexp_extract_all(lower(text), '\b(le|les|des|et|est)\b')) AS fr_hits
+      |  FROM documents) t
+      |ORDER BY doc_id""".stripMargin
 
   /** Per-doc bigram-LM totals (doc_id, n_bigrams, lm_micro_nats) — the
     * add-1-smoothed corpus LM score shared by q73 (scoring) and q111
@@ -385,94 +421,10 @@ object TextAnalysis {
              |ORDER BY doc_id""".stripMargin)),
 
     // ---- language-ID: per-language stopword hit counts + argmax vote
-    QueryDef(
-      "q31_lang_id",
-      (s, dir) => {
-        val low = lower(col("text"))
-        val withVotes = langs.foldLeft(docs(s, dir))((df, lp) =>
-          df.withColumn(s"${lp._1}_hits", size(regexp_extract_all(low, lit(lp._2), lit(0)))))
-        val Seq(en, es, de, fr) = langs.map(l => col(s"${l._1}_hits"))
-        withVotes
-          .withColumn("lang_guess",
-            when(en >= es && en >= de && en >= fr && en > 0, "en")
-              .when(es >= de && es >= fr && es > 0, "es")
-              .when(de >= fr && de > 0, "de")
-              .when(fr > 0, "fr")
-              .otherwise("und"))
-          .select("doc_id", "en_hits", "es_hits", "de_hits", "fr_hits", "lang_guess", "lang")
-          .orderBy("doc_id")
-      },
-      Some("""SELECT doc_id, en_hits, es_hits, de_hits, fr_hits,
-             |  CASE WHEN en_hits >= es_hits AND en_hits >= de_hits AND en_hits >= fr_hits AND en_hits > 0 THEN 'en'
-             |       WHEN es_hits >= de_hits AND es_hits >= fr_hits AND es_hits > 0 THEN 'es'
-             |       WHEN de_hits >= fr_hits AND de_hits > 0 THEN 'de'
-             |       WHEN fr_hits > 0 THEN 'fr'
-             |       ELSE 'und' END AS lang_guess,
-             |  lang
-             |FROM (SELECT doc_id, lang,
-             |    len(regexp_extract_all(lower(text), '\b(the|a|of|and|in|to)\b')) AS en_hits,
-             |    len(regexp_extract_all(lower(text), '\b(el|la|de|los|las|que)\b')) AS es_hits,
-             |    len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist)\b')) AS de_hits,
-             |    len(regexp_extract_all(lower(text), '\b(le|les|des|et|est)\b')) AS fr_hits
-             |  FROM documents) t
-             |ORDER BY doc_id""".stripMargin)),
+    QueryDef("q31_lang_id", langId, Some(LangIdOracle)),
 
-    // ---- language-ID, broadcast-dictionary ONE-PASS form: the scale
-    //      path q31's scaladoc names. q31 runs one full-text regex scan
-    //      per language (fine at 4, linear-in-languages); here tokens
-    //      explode ONCE and join a broadcast (word -> lang) dict, so
-    //      cost is one scan + one aggregation regardless of how many
-    //      languages the dict holds. Tokens split on [^a-z0-9_]+ —
-    //      exactly the complement of regex \w — so a letter-run token
-    //      equals a \b-delimited match and the two formulations are
-    //      provably hit-for-hit identical: the oracle is the SAME SQL
-    //      as q31's regex-count oracle, making the equivalence
-    //      machine-checked rather than asserted.
-    QueryDef(
-      "q49_lang_id_onepass",
-      (s, dir) => {
-        import s.implicits._
-        val dict = langs.flatMap { case (l, re) =>
-          re.stripPrefix("\\b(").stripSuffix(")\\b").split("\\|").map(w => (w, l))
-        }.toDF("tok", "dict_lang")
-        val toksDf = docs(s, dir)
-          .select(col("doc_id"),
-            explode(split(lower(col("text")), "[^a-z0-9_]+")).as("tok"))
-        val counts = toksDf.join(broadcast(dict), "tok")
-          .groupBy("doc_id")
-          .pivot("dict_lang", langs.map(_._1))
-          .count()
-        val hits = docs(s, dir).select("doc_id", "lang")
-          .join(counts, Seq("doc_id"), "left")
-          .select(col("doc_id") +: col("lang") +: langs.map(l =>
-            coalesce(col(l._1), lit(0L)).cast("int").as(s"${l._1}_hits")): _*)
-        val Seq(en, es, de, fr) = langs.map(l => col(s"${l._1}_hits"))
-        hits
-          .withColumn("lang_guess",
-            when(en >= es && en >= de && en >= fr && en > 0, "en")
-              .when(es >= de && es >= fr && es > 0, "es")
-              .when(de >= fr && de > 0, "de")
-              .when(fr > 0, "fr")
-              .otherwise("und"))
-          .select("doc_id", "en_hits", "es_hits", "de_hits", "fr_hits", "lang_guess", "lang")
-          .orderBy("doc_id")
-      },
-      // IDENTICAL oracle to q31: the one-pass join must reproduce the
-      // per-language regex counts exactly
-      Some("""SELECT doc_id, en_hits, es_hits, de_hits, fr_hits,
-             |  CASE WHEN en_hits >= es_hits AND en_hits >= de_hits AND en_hits >= fr_hits AND en_hits > 0 THEN 'en'
-             |       WHEN es_hits >= de_hits AND es_hits >= fr_hits AND es_hits > 0 THEN 'es'
-             |       WHEN de_hits >= fr_hits AND de_hits > 0 THEN 'de'
-             |       WHEN fr_hits > 0 THEN 'fr'
-             |       ELSE 'und' END AS lang_guess,
-             |  lang
-             |FROM (SELECT doc_id, lang,
-             |    len(regexp_extract_all(lower(text), '\b(the|a|of|and|in|to)\b')) AS en_hits,
-             |    len(regexp_extract_all(lower(text), '\b(el|la|de|los|las|que)\b')) AS es_hits,
-             |    len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist)\b')) AS de_hits,
-             |    len(regexp_extract_all(lower(text), '\b(le|les|des|et|est)\b')) AS fr_hits
-             |  FROM documents) t
-             |ORDER BY doc_id""".stripMargin)),
+    // ---- q49: q31's language-ID under a second name
+    QueryDef("q49_lang_id_onepass", langId, Some(LangIdOracle)),
 
     // ---- quality scoring: length / stopword-ratio / mean token length
     QueryDef(

@@ -62,7 +62,7 @@ object ScaleBench {
   // the per-row PPM decode + histogram pass — is curved below as
   // q121_image_features.
   private val sufQueries = Seq("q35_ngram_jaccard", "q36_minhash_lsh",
-    "q37_simhash", "q39_dedup_clusters", "q48_dedup_clusters_star",
+    "q37_simhash", "q39_dedup_clusters",
     // packing: the block-id prefix sum must stay flat-per-row as blocks
     // fill; leakage: N disjoint replicas → N× pairs, N× split probes
     "q58_sequence_pack", "q59_split_leakage",
@@ -88,13 +88,6 @@ object ScaleBench {
     // target slice (sources survive suffixing) ×N together — the
     // open-vocab worst case for the four count-table joins, same as q73
     "q84_dsir_weight",
-    // bloom decontam: suffixed replicas share no shingles, so the
-    // benchmark shingle set (bucket >= 250 of EVERY replica — doc_id
-    // shifts re-deal the md5 buckets but keep the ~2.3% rate) and the
-    // corpus probe side both scale ×N; the curve measures the bloom
-    // build + map-side probe + pruned confirm join all growing together,
-    // the operator's open-vocabulary worst case
-    "q95_bloom_decontam",
     // indexed decontam: the warm-up pays the one-off benchmark index
     // build per factor dir (ensure() is fingerprint-gated, the q91
     // treatment), so the timed runs measure the WARM probe — corpus
@@ -111,7 +104,7 @@ object ScaleBench {
     "q108_span_dedup_apply",
     // the composed capstone: every stage's family curves individually
     // on these replicas (exact dedup ~ q34's shape, near-dup q36/q39,
-    // char spans q106-q108, decontam q95/q99, LM filter q73/q111,
+    // char spans q106-q108, decontam q99, LM filter q73/q111,
     // split q103, mix/pack q57/q58) — this curve proves the
     // COMPOSITION stays sublinear: stage interactions (survivor frames
     // feeding the next stage, two persisted-index probes, the final
@@ -130,9 +123,9 @@ object ScaleBench {
   // range join: probe rows (lineitem) scale ×N against the fixed 25-row
   // interval dimension — the 100-TB shape of a banded join; the exploded
   // bucket index must stay a broadcast at every factor.
-  // salted top-k: the orderkey-shifted replicas add N× rows to the SAME
-  // three returnflag groups — group count fixed, group SIZE scales, which
-  // is precisely the skew the salting exists for.
+  // top-k per group: the orderkey-shifted replicas add N× rows to the
+  // SAME three returnflag groups — group count fixed, group SIZE scales,
+  // the skew the map-side WindowGroupLimit must absorb.
   private val linQueries = Seq("q63_range_join", "q68_topk_salted")
   // vocab induction rides the rotation replicas: the vocabulary is FIXED
   // under word rotation, so the top-V cut and broadcast probe face N×
@@ -221,12 +214,11 @@ object ScaleBench {
   // multiplicity table scales ×N distinct hashes — the grouped-count
   // shuffle is the cost being curved
   private val crtQueries = Seq("q82_retention_curve", "q83_dataset_card")
-  // chain mode: q48 on a corpus whose near-dup graph is ONE long chain
-  // with diameter ∝ N — the adversarial shape the star variant exists
-  // for (propagation would need diameter rounds and fail loudly at
-  // maxIter; its 30-node envelope spec already pins that, so only the
-  // star curve is timed here). Result key carries a _chain suffix.
-  private val chnQueries = Seq("q48_dedup_clusters_star")
+  // chain mode: q39 on a corpus whose near-dup graph is ONE long chain
+  // with diameter ∝ N — the adversarial shape for connected components:
+  // the large-star/small-star rounds must grow with log² N, not with the
+  // diameter. Result key carries a _chain suffix.
+  private val chnQueries = Seq("q39_dedup_clusters")
   private val chainB = 1500 // chain docs at x1; diameter scales with N
   // skew mode: the suffix-replica corpus with a corpus-wide 300-token
   // BOILERPLATE prefix on half of every replica's docs — the Zipf/
@@ -486,7 +478,7 @@ object ScaleBench {
     // outliers at one factor masked the shape), and the curve SHAPE
     // across factors is the whole point of this harness.
     // SPARK_GRAFT_SCALE_ONLY=key1,key2 limits the run to those result
-    // keys (chain mode's key is q48_dedup_clusters_star_chain) — for
+    // keys (chain mode's key is q39_dedup_clusters_chain) — for
     // adding one family's curve without re-timing the whole set
     // (`only` is defined above gen(): it also gates replica generation)
     val results = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()

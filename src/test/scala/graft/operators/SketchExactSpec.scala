@@ -6,8 +6,7 @@ import graft.SparkSpec
 
 /** [[SketchExact]] — the sketch-prunes/exact-confirms contracts that the
   * oracle hash alone cannot localize:
-  *  - q95's bloom prefilter prunes hard but NEVER drops a true hit, and
-  *    the full query is bit-identical to q53's exact-broadcast path;
+  *  - the q53/q95 bloom prefilter prunes hard but NEVER drops a true hit;
   *  - q96's Misra-Gries candidates are a superset of the exact heavy set
   *    under adversarial partitionings (including a single hostile
   *    partition engineered to churn the eviction loop), and the final
@@ -20,13 +19,6 @@ class SketchExactSpec extends SparkSpec {
 
   private def q(name: String) =
     graft.SparkEntry.queries(name)(spark, sf0001)
-
-  test("q95 bloom path is bit-identical to q53's exact-broadcast path") {
-    val exact = q("q53_decontam").collect()
-    val bloom = q("q95_bloom_decontam").collect()
-    assert(exact.length > 0)
-    assert(bloom.toSeq == exact.toSeq)
-  }
 
   test("bloom prefilter prunes the confirm join but keeps every true hit") {
     val (survivors, bench, corpus) = SketchExact.bloomSurvivors(spark, sf0001)
