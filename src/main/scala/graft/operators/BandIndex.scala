@@ -1,9 +1,10 @@
 package graft.operators
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{Pin, Tables}
 
@@ -32,15 +33,10 @@ import graft.core.{Pin, Tables}
   * probe → admit → append. [[BandIndexSpec]] proves two chained batches
   * through that loop match a from-scratch recompute exactly.
   *
-  * Freshness: the index directory carries a `_GRAFT_FP` fingerprint of
-  * the source `documents.parquet` file metadata (name/length/mtime per
-  * file — an O(#files) listing, no data scan); [[ensure]] rebuilds when
-  * the fingerprint drifts (the driver regenerates testdata between
-  * rounds) and re-registers an existing valid index into the session
-  * catalog after a JVM restart (Spark's default in-memory catalog does
-  * not persist table metadata). At 100 TB the fingerprint's role is
-  * played by a table-format snapshot id; the local-FS listing is the
-  * same contract at this harness's scale.
+  * Freshness, restart registration, append, compaction, recovery and
+  * the concurrent-builder contract are the one index lifecycle
+  * ([[IndexLayout]]); the fingerprint is `documents.parquet`'s file
+  * metadata ([[fingerprint]]).
   *
   * Hot-key cap semantics: bands are capped per SIDE ([[Dedup.HotKeyCap]]
   * at index build/append and again on each batch), not on the combined
@@ -50,29 +46,15 @@ import graft.core.{Pin, Tables}
   * split, far above anything the test corpora produce (max observed
   * band frequency at sf0.1 is 25 vs cap 256), so the DuckDB oracle
   * needs no cap arm — same contract as q36.
-  *
-  * Concurrent builders: [[ensure]] is synchronized within a JVM, and
-  * across processes the build lands in a temp sibling published by one
-  * atomic rename ([[IndexCommit]]) — a reader observes the old index,
-  * no index, or the new index, never a half-built one; a racing
-  * builder's loser discards its temp (builds are idempotent).
   */
 object BandIndex {
 
-  /** Deployment-tunable ([[IndexCommit.numBuckets]]); default = the
-    * engine's shuffle-partition count at bench scale, so the batch side
-    * shuffles into exactly the index's layout.
+  /** (hist_id, band_idx, band_key), bucketed and sorted on the probe
+    * join's exact keys.
     */
-  def NumBuckets: Int = IndexCommit.numBuckets
-
-  def indexRoot: String = IndexCommit.indexRoot
-
-  /** One index (table name + directory) per corpus directory. */
-  def tableNameFor(dir: String): String =
-    IndexCommit.tableName("graft_band_index_", dir)
-
-  private def indexPath(dir: String): Path =
-    Paths.get(indexRoot, tableNameFor(dir))
+  val Layout = IndexLayout("graft_band_index_",
+    StructType.fromDDL("hist_id BIGINT, band_idx INT, band_key STRING"),
+    Seq("band_idx", "band_key"), Seq("band_idx", "band_key"))
 
   /** File-metadata fingerprint of `documents.parquet` under `dir` (file
     * or directory of part files): no data scan, invalidates on any
@@ -103,101 +85,16 @@ object BandIndex {
     Dedup.bandsOf(Dedup.shingleIndexOf(d).select("doc_id", "sh"))
 
   /** Build the bucketed index over `histDocs` (doc_id, text) at `path`,
-    * registered as `name`. The pre-write `repartition` on the bucket
-    * columns uses the same hash the bucketed writer assigns files by, so
-    * each task lands ~one bucket file instead of up to [[NumBuckets]]
-    * files per task.
+    * registered as `name`.
     */
   def buildIndex(spark: SparkSession, histDocs: DataFrame, name: String,
       path: Path): Unit =
-    writeIndexRows(spark,
-      bandsOfDocs(histDocs)
-        .select(col("doc_id").as("hist_id"), col("band_idx"), col("band_key")),
-      name, path)
+    Layout.write(spark, histRows(bandsOfDocs(histDocs)), name, path)
 
-  private def writeIndexRows(spark: SparkSession, rows: DataFrame,
-      name: String, path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    IndexCommit.deleteTree(path)
-    rows
-      .repartition(NumBuckets, col("band_idx"), col("band_key"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "band_idx", "band_key")
-      .sortBy("band_idx", "band_key")
-      .option("path", path.toString)
-      .saveAsTable(name)
-  }
+  private def histRows(bands: DataFrame): DataFrame =
+    bands.select(col("doc_id").as("hist_id"), col("band_idx"), col("band_key"))
 
-  /** Fold away duplicate band rows (legitimately accrued by
-    * crash-replayed appends — the index is at-least-once storage with
-    * distinct-count read semantics, so duplicates never change answers;
-    * they only cost scan bytes). The rewrite goes through
-    * [[IndexCommit.commitBuild]]: distinct rows eagerly pinned off the
-    * table's files, written into a temp sibling WITH the preserved
-    * fingerprint sidecar, published by one rename — a crash
-    * mid-compaction leaves the original index intact instead of
-    * destroying it (an IngestDedupSink-managed index has no
-    * fingerprint-gated rebuild path to recover through). OWNER-ONLY,
-    * between batches: an append racing the rewrite would be silently
-    * lost — see [[FpIndex.compact]]'s single-writer contract, which
-    * this compact shares. Compaction changes the layout, not which
-    * corpus the index covers. Returns (rows before, after).
-    */
-  def compact(spark: SparkSession, name: String, path: Path): (Long, Long) = {
-    // sink-managed indexes are marker-less until first compaction —
-    // synthesize the sink-history identity (and ADOPT the live tree so
-    // the retiree it is about to create self-validates) so the rewrite
-    // goes through the marker-bound retire-then-publish tail, never
-    // commitBuild's marker-less delete-in-place branch (see
-    // [[FpIndex.compact]])
-    val fp = IndexCommit.readFp(path).getOrElse {
-      val f = IndexCommit.sinkHistoryFp(name)
-      IndexCommit.adoptUnmarked(path, f)
-      f
-    }
-    val before = spark.table(name).count()
-    Pin.scope {
-      val rows = Pin(spark.table(name).distinct(), "BandIndex.compact")
-      IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-        writeIndexRows(spark, rows, tn, tp)
-      }
-    }
-    register(spark, name, path)
-    (before, spark.table(name).count())
-  }
-
-  /** Post-crash recovery for a SINK-MANAGED band index
-    * ([[graft.streaming.IngestDedupSink]]'s restart path) — restore a
-    * crash-stranded retiree over an unbound destination, then
-    * re-register; loud error when nothing adoptable survives. The
-    * policy body is [[IndexCommit.recoverSink]], SHARED with
-    * [[FpIndex.recover]] — see its doc for the adoptability rule.
-    */
-  def recover(spark: SparkSession, name: String, path: Path): Boolean = {
-    val restored = IndexCommit.recoverSink(path)
-    register(spark, name, path)
-    restored
-  }
-
-  /** Register an existing on-disk index (written by [[buildIndex]], so
-    * the files carry the bucketed writer's bucket-id naming) into this
-    * session's catalog — the post-JVM-restart path.
-    */
-  private[operators] def register(spark: SparkSession, name: String,
-      path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    spark.sql(
-      s"""CREATE TABLE `$name` (hist_id BIGINT, band_idx INT, band_key STRING)
-         |USING PARQUET
-         |CLUSTERED BY (band_idx, band_key) SORTED BY (band_idx, band_key) INTO $NumBuckets BUCKETS
-         |LOCATION '${path.toString}'""".stripMargin)
-  }
-
-  /** Append an admitted batch's bands to the index. `mode("append")
-    * .bucketBy` on the existing table validates the spec matches and
-    * writes bucket-id-named files, so subsequent probes still read the
-    * table bucketed.
-    */
+  /** Append an admitted batch's bands to the index. */
   def append(spark: SparkSession, name: String, admittedDocs: DataFrame): Unit =
     appendBands(spark, name, bandsOfDocs(admittedDocs))
 
@@ -209,38 +106,17 @@ object BandIndex {
     */
   private[graft] def appendBands(spark: SparkSession, name: String,
       bands: DataFrame): Unit =
-    bands
-      .select(col("doc_id").as("hist_id"), col("band_idx"), col("band_key"))
-      .repartition(NumBuckets, col("band_idx"), col("band_key"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "band_idx", "band_key")
-      .sortBy("band_idx", "band_key")
-      .mode("append")
-      .saveAsTable(name)
+    Layout.append(name, histRows(bands))
 
-  /** Ensure the history index for `dir` exists, is fresh, and is in this
-    * session's catalog; returns the table name. Cost: a catalog lookup +
-    * an O(#files) fingerprint when warm; one O(history) build when cold
-    * or stale — paid once per corpus generation, NOT per batch.
+  /** Ensure the history index (bucket < [[BatchThreshold]]) for `dir`
+    * through the one lifecycle ([[IndexLayout.ensure]]); returns the
+    * table name.
     */
   def ensure(spark: SparkSession, dir: String): String = synchronized {
-    val name = tableNameFor(dir)
-    val path = indexPath(dir)
-    val fp = fingerprint(dir)
-    val validOnDisk = IndexCommit.fpValidOrRestored(path, fp)
-    if (spark.catalog.tableExists(name) && validOnDisk) name
-    else if (validOnDisk) { register(spark, name, path); name }
-    else {
-      val hist = docsWithBucket(spark, dir)
+    Layout.ensure(spark, dir, fingerprint(dir)) { (tn, tp) =>
+      buildIndex(spark, docsWithBucket(spark, dir)
         .filter(col("bucket") < BatchThreshold)
-        .select("doc_id", "text")
-      // build into a temp sibling + atomic publish ([[IndexCommit]]) so
-      // a concurrent process never observes a half-built index
-      IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-        buildIndex(spark, hist, tn, tp)
-      }
-      register(spark, name, path)
-      name
+        .select("doc_id", "text"), tn, tp)
     }
   }
 
@@ -322,23 +198,6 @@ object BandIndex {
         col("n_hist_dups") === 0 && col("n_batch_dups") === 0)
       .orderBy("doc_id")
   }
-
-  /** An empty (doc_id, text) frame — [[initIndex]]'s history when an
-    * ingest stream starts from nothing.
-    */
-  def emptyDocs(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-  }
-
-  /** Create an EMPTY bucketed index (schema + bucket spec, no rows) —
-    * the cold-start entry for a continuous ingest stream.
-    */
-  def initIndex(spark: SparkSession, name: String, path: Path): Unit =
-    buildIndex(spark, emptyDocs(spark), name, path)
 
   /** q78's entry: ensure the persisted index for `dir`, then probe the
     * deterministic ~10% ingest slice (bucket ≥ [[BatchThreshold]])

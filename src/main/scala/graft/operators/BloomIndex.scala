@@ -1,15 +1,14 @@
 package graft.operators
 
-import java.nio.file.{Path, Paths}
-
 import graft.core.Lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Persisted decontamination benchmark index: the [[BandIndex]] /
-  * [[PostingsIndex]] "build once, probe forever" pattern applied to the
+/** Persisted decontamination benchmark index: the persisted-index
+  * "build once, probe forever" pattern ([[IndexLayout]]) applied to the
   * sketch layer.
   *
   * q53/q95 rebuild the benchmark's distinct-shingle set (and its
@@ -27,40 +26,24 @@ import org.apache.spark.util.sketch.BloomFilter
   *    prefilter, ~10 bits/shingle), deserialized once per (session,
   *    generation) and broadcast.
   *
-  * Freshness and restart follow BandIndex verbatim: a `_GRAFT_FP`
-  * file-metadata fingerprint of `documents.parquet` gates rebuild (the
-  * sidecar is covered by the same fingerprint — table, bloom, and
-  * fingerprint land together in a temp sibling and publish by one
-  * atomic rename ([[IndexCommit]]), so a half-built index is never
-  * visible at the final path); a valid on-disk index re-registers into
-  * a fresh JVM's in-memory catalog without rebuilding.
+  * Freshness and restart are the one index lifecycle ([[IndexLayout]]),
+  * fingerprinted on `documents.parquet`; the `_BLOOM` sidecar lands in
+  * the same publish as the table, so it is covered by the same
+  * fingerprint.
   */
 object BloomIndex {
 
-  /** Deployment-tunable ([[IndexCommit.numBuckets]]). */
-  def NumBuckets: Int = IndexCommit.numBuckets
-
-  def indexRoot: String = IndexCommit.indexRoot
-
-  def tableNameFor(dir: String): String =
-    IndexCommit.tableName("graft_bench_shingles_", dir)
-
-  private def indexPath(dir: String): Path =
-    Paths.get(indexRoot, tableNameFor(dir))
+  /** The exact distinct shingle set, bucketed on the confirm join's
+    * key; `_BLOOM` holds the filter bits.
+    */
+  val Layout = IndexLayout("graft_bench_shingles_",
+    StructType.fromDDL("sh STRING"), Seq("sh"), Seq("sh"),
+    sidecars = Seq("_BLOOM"))
 
   /** Per-(path, fingerprint) deserialized bloom cache: the sidecar is
     * read once per corpus generation per JVM, not once per query.
     */
   @volatile private var bloomCache = Map.empty[(String, String), BloomFilter]
-
-  private def register(spark: SparkSession, name: String, path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    spark.sql(
-      s"""CREATE TABLE `$name` (sh STRING)
-         |USING PARQUET
-         |CLUSTERED BY (sh) SORTED BY (sh) INTO $NumBuckets BUCKETS
-         |LOCATION '${path.toString}'""".stripMargin)
-  }
 
   /** Ensure the benchmark index for `dir` exists, is fresh, and is in
     * this session's catalog; returns the table name. Warm cost: a
@@ -68,36 +51,17 @@ object BloomIndex {
     * O(benchmark) build — paid once per benchmark generation.
     */
   def ensure(spark: SparkSession, dir: String): String = synchronized {
-    val name = tableNameFor(dir)
-    val path = indexPath(dir)
-    val fp = BandIndex.fingerprint(dir)
-    val validOnDisk = IndexCommit.fpValidOrRestored(path, fp)
-    if (spark.catalog.tableExists(name) && validOnDisk) name
-    else if (validOnDisk) { register(spark, name, path); name }
-    else {
+    Layout.ensure(spark, dir, BandIndex.fingerprint(dir)) { (tn, tp) =>
       val (bench, _) = Dedup.decontamSides(spark, dir)
-      // build into a temp sibling + atomic publish ([[IndexCommit]]) so
-      // a concurrent process never observes a half-built index; table,
-      // _BLOOM sidecar, and fingerprint land together, the rename IS
-      // the commit marker
-      IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-        bench.repartition(NumBuckets, col("sh"))
-          .write.format("parquet")
-          .bucketBy(NumBuckets, "sh")
-          .sortBy("sh")
-          .option("path", tp.toString)
-          .saveAsTable(tn)
-        // bloom over the just-written table (one distributed aggregate);
-        // sized from the table's row count — a metadata-cheap second job
-        val n = spark.table(tn).count()
-        val bf = spark.table(tn).stat
-          .bloomFilter("sh", math.max(n, 1L), 0.01)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        Lake.writeBytes(tp.resolve("_BLOOM").toString, bos.toByteArray)
-      }
-      register(spark, name, path)
-      name
+      Layout.write(spark, bench, tn, tp)
+      // bloom over the just-written table (one distributed aggregate);
+      // sized from the table's row count — a metadata-cheap second job
+      val n = spark.table(tn).count()
+      val bf = spark.table(tn).stat
+        .bloomFilter("sh", math.max(n, 1L), 0.01)
+      val bos = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bos)
+      Lake.writeBytes(tp.resolve("_BLOOM").toString, bos.toByteArray)
     }
   }
 
@@ -108,7 +72,8 @@ object BloomIndex {
     val key = (name, fp)
     bloomCache.getOrElse(key, synchronized {
       bloomCache.getOrElse(key, {
-        val bytes = Lake.readBytes(indexPath(dir).resolve("_BLOOM").toString)
+        val bytes = Lake.readBytes(
+          IndexLayout.pathOf(name).resolve("_BLOOM").toString)
         val bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
         bloomCache = bloomCache + (key -> bf)
         bf

@@ -1,15 +1,12 @@
 package graft.operators
 
-import java.nio.file.{Path, Paths}
-
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.core.Pin
-
-/** Persisted Lloyd cluster assignment — the [[BandIndex]] /
-  * [[PostingsIndex]] / [[BloomIndex]] / [[FpIndex]] "build once, probe
-  * forever" pattern applied to the clustering layer.
+/** Persisted Lloyd cluster assignment — the persisted-index "build
+  * once, probe forever" pattern ([[IndexLayout]]) applied to the
+  * clustering layer.
   *
   * q104 re-learns the k-means cells in-query on every run;
   * profile_q104.json put that Lloyd chain at 66% of the query. In a
@@ -22,274 +19,86 @@ import graft.core.Pin
   * q113's self-join reads BOTH sides from the bucketed scan with no
   * exchange ([[ClusterIndexSpec]] pins the plan).
   *
-  * Freshness and restart follow the house contract verbatim, except
-  * the `_GRAFT_FP` fingerprint covers `embeddings.parquet` (this
-  * index's source), not `documents.parquet`. Fingerprint written last,
-  * so a half-built index reads as stale, never as valid.
+  * One [[Modality]] per feature corpus (embedding, image, audio,
+  * video): its layout (same schema, own table prefix), its
+  * fingerprint, and its Lloyd artifacts. Freshness, restart, append,
+  * compaction and recovery are the one index lifecycle. The frozen
+  * learned cells land as the underscore-prefixed `_CENTROIDS` sidecar
+  * (invisible to the table scan): q117's probe ranks cells against
+  * these without re-running the Lloyd chain, and compaction copies them
+  * byte for byte.
   */
 object ClusterIndex {
 
-  /** Deployment-tunable ([[IndexCommit.numBuckets]]). */
-  def NumBuckets: Int = IndexCommit.numBuckets
+  /** (vec_id, cid, v, nrm) bucketed on `cid`, sorted (cid, vec_id). */
+  val Layout = IndexLayout("graft_cluster_asg_",
+    StructType.fromDDL("vec_id BIGINT, cid BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE"),
+    Seq("cid"), Seq("cid", "vec_id"), sidecars = Seq("_CENTROIDS"))
 
-  def indexRoot: String = IndexCommit.indexRoot
-
-  def tableNameFor(dir: String): String =
-    IndexCommit.tableName("graft_cluster_asg_", dir)
-
-  private def indexPath(dir: String): Path =
-    Paths.get(indexRoot, tableNameFor(dir))
-
-  /** Freshness = `embeddings.parquet` metadata (this index's source,
-    * not `documents.parquet`) + the Lloyd parameters the assignment was
+  /** One feature corpus's assignment index: its layout, its freshness
+    * fingerprint (source metadata + the parameters the assignment was
     * learned under — a param change makes the old index read as stale,
-    * never as valid (the PostingsIndex ":sidecar-v3" discipline).
+    * never as valid), and its generation artifacts (centroids, full
+    * assignment frame).
     */
-  def fingerprint(dir: String): String =
-    IndexCommit.sourceFingerprint(dir, "embeddings.parquet") +
-      ":" + Clustering.paramsTag + ":cent-v2"
+  final case class Modality(layout: IndexLayout, fingerprint: String => String,
+      artifacts: (SparkSession, String) => (DataFrame, DataFrame))
 
-  private def register(spark: SparkSession, name: String, path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    spark.sql(
-      s"""CREATE TABLE `$name`
-         |  (vec_id BIGINT, cid BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE)
-         |USING PARQUET
-         |CLUSTERED BY (cid) SORTED BY (cid, vec_id) INTO $NumBuckets BUCKETS
-         |LOCATION '${path.toString}'""".stripMargin)
-  }
+  /** The embedding corpus (`embeddings.parquet`), in-corpus Lloyd. */
+  val Embedding = Modality(Layout,
+    dir => IndexCommit.sourceFingerprint(dir, "embeddings.parquet") +
+      ":" + Clustering.paramsTag + ":cent-v2",
+    (s, dir) => Clustering.assignmentArtifacts(s, dir))
 
-  /** One ensure body for every modality's assignment index: warm cost
-    * a catalog lookup + an O(#files) fingerprint check; cold cost one
-    * Lloyd run (`artifacts`, by-name so a fresh index never pays it) —
-    * paid once per corpus generation, NOT per query. Builds go through
-    * a temp sibling + atomic publish ([[IndexCommit]]) so a concurrent
-    * process never observes a half-built index; the frozen learned
-    * cells land as the underscore-prefixed `_CENTROIDS` sidecar
-    * (invisible to the table scan — the PostingsIndex df/meta
-    * discipline): q117's probe ranks cells against these without
-    * re-running the Lloyd chain, and the versioned fingerprint tag
-    * stales pre-sidecar indexes.
+  /** The IMAGE corpus (minted from the documents): assignment learned
+    * over REAL decoded PPM features (q114's sample-trained recipe) —
+    * q121's serving table.
     */
-  private def ensureModal(spark: SparkSession, name: String, fp: String,
-      artifacts: => (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)): String =
-    synchronized {
-      val path = Paths.get(indexRoot, name)
-      val validOnDisk = IndexCommit.fpValidOrRestored(path, fp)
-      if (spark.catalog.tableExists(name) && validOnDisk) name
-      else if (validOnDisk) { register(spark, name, path); name }
-      else {
-        IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-          val (cents, full) = artifacts
-          full
-            .repartition(NumBuckets, col("cid"))
-            .write.format("parquet")
-            .bucketBy(NumBuckets, "cid")
-            .sortBy("cid", "vec_id")
-            .option("path", tp.toString)
-            .saveAsTable(tn)
-          cents.coalesce(1).write.mode("overwrite")
-            .parquet(tp.resolve("_CENTROIDS").toString)
-        }
-        register(spark, name, path)
-        name
-      }
+  val Image = Modality(Layout.copy(prefix = "graft_cluster_img_"),
+    dir => IndexCommit.sourceFingerprint(dir, "documents.parquet") +
+      ":" + Clustering.imageParamsTag,
+    (s, dir) => Clustering.imageArtifacts(s, dir))
+
+  /** The AUDIO corpus: decoded WAV envelopes — q126's serving table. */
+  val Audio = Modality(Layout.copy(prefix = "graft_cluster_aud_"),
+    dir => IndexCommit.sourceFingerprint(dir, "documents.parquet") +
+      ":" + Clustering.audioParamsTag,
+    (s, dir) => Clustering.audioArtifacts(s, dir))
+
+  /** The VIDEO corpus: frame-SAMPLED spatiotemporal sums (non-sampled
+    * frames skipped, never parsed) — q129's serving table.
+    */
+  val Video = Modality(Layout.copy(prefix = "graft_cluster_vid_"),
+    dir => IndexCommit.sourceFingerprint(dir, "documents.parquet") +
+      ":" + Clustering.videoParamsTag,
+    (s, dir) => Clustering.videoArtifacts(s, dir))
+
+  /** Ensure modality `m`'s assignment index for `dir` through the one
+    * lifecycle ([[IndexLayout.ensure]]); returns the table name. Cold
+    * cost one Lloyd run, paid once per corpus generation, NOT per query.
+    */
+  def ensure(spark: SparkSession, dir: String,
+      m: Modality = Embedding): String = synchronized {
+    m.layout.ensure(spark, dir, m.fingerprint(dir)) { (tn, tp) =>
+      val (cents, full) = m.artifacts(spark, dir)
+      m.layout.write(spark, full, tn, tp)
+      cents.coalesce(1).write.mode("overwrite")
+        .parquet(tp.resolve("_CENTROIDS").toString)
     }
-
-  /** Ensure the EMBEDDING assignment index for `dir` exists, is
-    * fresh, and is in this session's catalog; returns the table name.
-    */
-  def ensure(spark: SparkSession, dir: String): String =
-    ensureModal(spark, tableNameFor(dir), fingerprint(dir),
-      Clustering.assignmentArtifacts(spark, dir))
-
-  // ---- the IMAGE-feature assignment index (q121) ----
-
-  def tableNameForImage(dir: String): String =
-    IndexCommit.tableName("graft_cluster_img_", dir)
-
-  /** Freshness = `documents.parquet` metadata (the image corpus is
-    * minted from the documents) + the image pipeline's parameters
-    * (histogram binning, sample size, Lloyd) — the [[fingerprint]]
-    * discipline at the multimodal layer.
-    */
-  def fingerprintImage(dir: String): String =
-    IndexCommit.sourceFingerprint(dir, "documents.parquet") +
-      ":" + Clustering.imageParamsTag
-
-  /** [[ensure]] for the IMAGE corpus: the persisted assignment learned
-    * over REAL decoded PPM features ([[Clustering.imageArtifacts]] —
-    * q114's sample-trained recipe), bucketed by cid with the
-    * `_CENTROIDS` sidecar. q121's within-cell prune self-joins this
-    * table exchange-free exactly like q113 does the embedding index
-    * (ClusterIndexSpec pins the plan for both).
-    */
-  def ensureImage(spark: SparkSession, dir: String): String =
-    ensureModal(spark, tableNameForImage(dir), fingerprintImage(dir),
-      Clustering.imageArtifacts(spark, dir))
-
-  // ---- the AUDIO-feature assignment index (q126) ----
-
-  def tableNameForAudio(dir: String): String =
-    IndexCommit.tableName("graft_cluster_aud_", dir)
-
-  /** Freshness = `documents.parquet` metadata (the audio corpus is
-    * minted from the documents) + the envelope pipeline's parameters —
-    * [[fingerprintImage]]'s discipline at the audio layer.
-    */
-  def fingerprintAudio(dir: String): String =
-    IndexCommit.sourceFingerprint(dir, "documents.parquet") +
-      ":" + Clustering.audioParamsTag
-
-  /** [[ensure]] for the AUDIO corpus: the persisted assignment learned
-    * over REAL decoded WAV envelopes ([[Clustering.audioArtifacts]]),
-    * bucketed by cid with the `_CENTROIDS` sidecar — q126's serving
-    * table (AudioDedupSpec pins the exchange-free pair join and the
-    * served-never-rebuilt discipline).
-    */
-  def ensureAudio(spark: SparkSession, dir: String): String =
-    ensureModal(spark, tableNameForAudio(dir), fingerprintAudio(dir),
-      Clustering.audioArtifacts(spark, dir))
-
-  // ---- the VIDEO-feature assignment index (q129) ----
-
-  def tableNameForVideo(dir: String): String =
-    IndexCommit.tableName("graft_cluster_vid_", dir)
-
-  def fingerprintVideo(dir: String): String =
-    IndexCommit.sourceFingerprint(dir, "documents.parquet") +
-      ":" + Clustering.videoParamsTag
-
-  /** [[ensure]] for the VIDEO corpus: the persisted assignment learned
-    * over frame-SAMPLED spatiotemporal sums
-    * ([[Clustering.videoArtifacts]] — non-sampled frames skipped,
-    * never parsed), bucketed by cid with the `_CENTROIDS` sidecar —
-    * q129's serving table (VideoDedupSpec pins the plan and the
-    * stride-decode IO claim).
-    */
-  def ensureVideo(spark: SparkSession, dir: String): String =
-    ensureModal(spark, tableNameForVideo(dir), fingerprintVideo(dir),
-      Clustering.videoArtifacts(spark, dir))
-
-  /** Build a bucketed assignment table from an arbitrary
-    * (vec_id, cid, v, nrm) frame at `path`, registered as `name` — the
-    * sink-managed-index entry ([[graft.streaming.ClusterIndexSink]]),
-    * beside [[ensure]]'s corpus-fingerprinted build.
-    */
-  def buildIndexFrame(spark: SparkSession, frame: org.apache.spark.sql.DataFrame,
-      name: String, path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    IndexCommit.deleteTree(path)
-    frame
-      .repartition(NumBuckets, col("cid"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "cid")
-      .sortBy("cid", "vec_id")
-      .option("path", path.toString)
-      .saveAsTable(name)
-  }
-
-  /** An EMPTY bucketed assignment index — the cold-start entry for a
-    * continuous vector-ingest stream.
-    */
-  def initIndex(spark: SparkSession, name: String, path: Path): Unit = {
-    import org.apache.spark.sql.types._
-    buildIndexFrame(spark,
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("cid", LongType),
-          StructField("v", ArrayType(DoubleType)),
-          StructField("nrm", DoubleType)))),
-      name, path)
-  }
-
-  /** Append admitted rows; the bucketed-append writer validates the
-    * spec (register() declares the matching SORTED BY, the house
-    * restart regression).
-    */
-  def append(spark: SparkSession, name: String,
-      admitted: org.apache.spark.sql.DataFrame): Unit =
-    admitted.select("vec_id", "cid", "v", "nrm")
-      .repartition(NumBuckets, col("cid"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "cid")
-      .sortBy("cid", "vec_id")
-      .mode("append")
-      .saveAsTable(name)
-
-  /** Fold away duplicate assignment rows (accrued by crash-replayed
-    * appends — probes reduce through grouped-min so answers never
-    * change; duplicates only cost scan bytes, which in a long-running
-    * modal sink grow without bound). [[FpIndex.compact]]'s exact
-    * lifecycle applied to the vector estate: first compaction ADOPTS a
-    * marker-less sink index ([[IndexCommit.adoptUnmarked]]), the
-    * rewrite goes through the marker-bound retire-then-publish tail,
-    * and the `_CENTROIDS` sidecar (present on ensure-managed and
-    * history-seeded indexes; frozen cells, never relearned) is carried
-    * into the new tree. OWNER-ONLY, between batches — an append racing
-    * the rewrite is silently lost; see [[FpIndex.compact]]'s
-    * single-writer contract, which this compact shares. Returns
-    * (rows before, after).
-    */
-  def compact(spark: SparkSession, name: String, path: Path): (Long, Long) = {
-    val fp = IndexCommit.readFp(path).getOrElse {
-      val f = IndexCommit.sinkHistoryFp(name)
-      IndexCommit.adoptUnmarked(path, f)
-      f
-    }
-    val before = spark.table(name).count()
-    Pin.scope {
-      val rows = Pin(spark.table(name).distinct(), "ClusterIndex.compact")
-      val sidecar = path.resolve("_CENTROIDS").toString
-      val cents =
-        if (graft.core.Lake.exists(sidecar))
-          Some(Pin(spark.read.parquet(sidecar), "ClusterIndex.compact.centroids"))
-        else None
-      IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-        rows
-          .repartition(NumBuckets, col("cid"))
-          .write.format("parquet")
-          .bucketBy(NumBuckets, "cid")
-          .sortBy("cid", "vec_id")
-          .option("path", tp.toString)
-          .saveAsTable(tn)
-        cents.foreach(_.coalesce(1).write.mode("overwrite")
-          .parquet(tp.resolve("_CENTROIDS").toString))
-      }
-    }
-    register(spark, name, path)
-    (before, spark.table(name).count())
-  }
-
-  /** Post-crash recovery for a SINK-MANAGED assignment index (the
-    * image/audio/video dedup sinks' restart path) — restore a
-    * crash-stranded retiree over an unbound destination, then
-    * re-register; loud error when nothing adoptable survives. The
-    * policy body is [[IndexCommit.recoverSink]], SHARED with
-    * [[FpIndex.recover]]/[[BandIndex.recover]].
-    */
-  def recover(spark: SparkSession, name: String, path: Path): Boolean = {
-    val restored = IndexCommit.recoverSink(path)
-    register(spark, name, path)
-    restored
   }
 
   /** The persisted generation centroids ((cid, cv) integer micro-units)
     * of the ensure()-managed index for `dir` — K rows, broadcastable.
     */
-  def centroids(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    spark.read.parquet(indexPath(dir).resolve("_CENTROIDS").toString)
+  def centroids(spark: SparkSession, dir: String): DataFrame =
+    centroidsOf(spark, Layout.tableNameFor(dir))
 
-  /** The `_CENTROIDS` sidecar of ANY ensure*()-managed index by table
+  /** The `_CENTROIDS` sidecar of ANY ensure()-managed index by table
     * name — every modality's build persists one, so every modality's
     * index can serve ANN probes ([[Clustering.annProbeFrom]]).
     */
-  def centroidsOf(spark: SparkSession,
-      name: String): org.apache.spark.sql.DataFrame =
-    spark.read.parquet(
-      Paths.get(indexRoot, name).resolve("_CENTROIDS").toString)
+  def centroidsOf(spark: SparkSession, name: String): DataFrame =
+    spark.read.parquet(IndexLayout.pathOf(name).resolve("_CENTROIDS").toString)
 
   /** SemDeDup's within-cell duplicate threshold (q104's rule) — shared
     * by the streaming sink and the q116 maintenance loop.
@@ -302,8 +111,8 @@ object ClusterIndex {
     * [[graft.streaming.ClusterIndexSink]] and q116 so the ingest
     * assignment cannot drift between batch and stream.
     */
-  private[graft] def assignBatch(batch: org.apache.spark.sql.DataFrame,
-      centroids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private[graft] def assignBatch(batch: DataFrame,
+      centroids: DataFrame): DataFrame = {
     val qv = batch.select(col("vec_id"),
       transform(col("embedding"),
         x => round(x.cast("double") * lit(1000000.0)).cast("long")).as("qv"))
@@ -323,9 +132,9 @@ object ClusterIndex {
     * maintenance loops and the image/audio ingest sinks so batch and
     * stream cannot drift across ANY modality).
     */
-  private def assignIntBatch(batch: org.apache.spark.sql.DataFrame,
-      centroids: org.apache.spark.sql.DataFrame,
-      featCol: String): org.apache.spark.sql.DataFrame = {
+  private def assignIntBatch(batch: DataFrame,
+      centroids: DataFrame,
+      featCol: String): DataFrame = {
     val qv = batch.select(col("vec_id"),
       transform(col(featCol), x => x.cast("long")).as("qv"))
     val asg = Clustering.assign(qv, centroids).select("vec_id", "cid")
@@ -337,18 +146,18 @@ object ClusterIndex {
   }
 
   /** [[assignIntBatch]] over a (vec_id, hist) IMAGE-feature batch. */
-  private[graft] def assignImageBatch(batch: org.apache.spark.sql.DataFrame,
-      centroids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private[graft] def assignImageBatch(batch: DataFrame,
+      centroids: DataFrame): DataFrame =
     assignIntBatch(batch, centroids, "hist")
 
   /** [[assignIntBatch]] over a (vec_id, env) AUDIO-envelope batch. */
-  private[graft] def assignAudioBatch(batch: org.apache.spark.sql.DataFrame,
-      centroids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private[graft] def assignAudioBatch(batch: DataFrame,
+      centroids: DataFrame): DataFrame =
     assignIntBatch(batch, centroids, "env")
 
   /** [[assignIntBatch]] over a (vec_id, vfeat) VIDEO-feature batch. */
-  private[graft] def assignVideoBatch(batch: org.apache.spark.sql.DataFrame,
-      centroids: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private[graft] def assignVideoBatch(batch: DataFrame,
+      centroids: DataFrame): DataFrame =
     assignIntBatch(batch, centroids, "vfeat")
 
   /** Verdicts (vec_id, cid, dup_of, kept) of an assigned batch frame
@@ -370,8 +179,8 @@ object ClusterIndex {
     * makes the probe idempotent under replay-after-append.
     */
   private[graft] def probeVerdicts(spark: SparkSession,
-      indexName: String, b: org.apache.spark.sql.DataFrame,
-      excludeBatchFromHistory: Boolean): org.apache.spark.sql.DataFrame = {
+      indexName: String, b: DataFrame,
+      excludeBatchFromHistory: Boolean): DataFrame = {
     val hist = spark.table(indexName)
       .select(col("vec_id").as("h_id"), col("cid"),
         col("v").as("hv"), col("nrm").as("hn"))

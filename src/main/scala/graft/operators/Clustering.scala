@@ -133,21 +133,21 @@ object Clustering {
     (cents, asg.join(ev, "vec_id"))
   }
 
-  /** Image-index parameters — [[ClusterIndex.ensureImage]]'s
+  /** Image-index parameters — [[ClusterIndex.Image]]'s
     * fingerprint tag (8-bin × RGB channel histograms, q114's
     * sample-trained Lloyd); a change stales persisted image indexes.
     */
   private[graft] def imageParamsTag: String =
     s"img-hist8x3-smp$SampleK-lloyd-k$K-i$Iters"
 
-  /** Audio-index parameters — [[ClusterIndex.ensureAudio]]'s
+  /** Audio-index parameters — [[ClusterIndex.Audio]]'s
     * fingerprint tag (8-frame |sample| energy envelope, q114's
     * sample-trained Lloyd); a change stales persisted audio indexes.
     */
   private[graft] def audioParamsTag: String =
     s"aud-env8-smp$SampleK-lloyd-k$K-i$Iters"
 
-  /** Video-index parameters — [[ClusterIndex.ensureVideo]]'s
+  /** Video-index parameters — [[ClusterIndex.Video]]'s
     * fingerprint tag (stride-2 frame sampling, per-channel sums,
     * q114's sample-trained Lloyd).
     */
@@ -589,6 +589,12 @@ object Clustering {
        |ORDER BY batch_no, vec_id""".stripMargin
   }
 
+  /** The vector loops' deterministic ingest bucket: first md5 byte of
+    * `vec_id` as an int in [0, 256).
+    */
+  private def VecBucket: Column =
+    conv(substring(md5(col("vec_id").cast("string")), 1, 2), 16, 10).cast("int")
+
   /** The modal maintenance loop q125 (image), q127 (audio) and q130
     * (video) share — q116's proof structure over any exact-integer
     * feature frame (vec_id, `featCol`), certifying the
@@ -611,16 +617,9 @@ object Clustering {
     */
   private def modalMaintenanceLoop(s: SparkSession, dir: String,
       rawFeats: DataFrame, featCol: String, tableBase: String): DataFrame = Pin.scope {
-    val name = tableBase + "_maint_" + ProcessHandle.current().pid()
-    val path = java.nio.file.Paths.get(ClusterIndex.indexRoot, name)
-    IndexCommit.purgeAllScratchRoots()
-    val feats = Pin(rawFeats
-      .withColumn("bucket",
-        conv(substring(md5(col("vec_id").cast("string")), 1, 2), 16, 10)
-          .cast("int")), s"modalMaintenance.$featCol.features")
-    def slice(lo: Int, hi: Int) =
-      feats.filter(col("bucket") >= lo && col("bucket") < hi)
-        .select("vec_id", featCol)
+    val IndexLayout.Scratch(name, path, slice) = IndexLayout.scratch(
+      tableBase, "_maint", rawFeats, VecBucket, Seq("vec_id", featCol),
+      pinAs = Some(s"modalMaintenance.$featCol.features"))
     // exhaustive dispatch: an unknown feature column must fail loudly,
     // never silently train and probe through another modality's path
     def assignB(b: DataFrame, cents: DataFrame): DataFrame = featCol match {
@@ -636,13 +635,13 @@ object Clustering {
       hist.select(col("vec_id"),
         transform(col(featCol), x => x.cast("long")).as("qv")),
       K, Iters)
-    ClusterIndex.buildIndexFrame(s, assignB(hist, cents), name, path)
+    ClusterIndex.Layout.write(s, assignB(hist, cents), name, path)
     val b1 = Pin(assignB(slice(200, 230), cents),
       s"modalMaintenance.$featCol.batch1")
     val p1 = Pin(ClusterIndex.probeVerdicts(s, name, b1,
         excludeBatchFromHistory = true)
       .withColumn("batch_no", lit(1)), s"modalMaintenance.$featCol.verdicts1")
-    ClusterIndex.append(s, name,
+    ClusterIndex.Layout.append(name,
       b1.join(p1.filter(col("kept")).select("vec_id"), "vec_id"))
     // batch 2's assignment is pinned like batch 1's: probeVerdicts
     // consumes its batch frame in five branches — lazy, each branch
@@ -944,11 +943,11 @@ object Clustering {
      * micro-batch: freeze centroids learned on HISTORY (the
      * generation's curated artifact — Lloyd on the history slice),
      * build the bucketed assignment index over history
-     * ([[ClusterIndex.buildIndexFrame]]), probe ingest batch 1 for
+     * ([[IndexLayout.write]]), probe ingest batch 1 for
      * within-cell duplicates (admitted-history leg + within-batch
      * keep-first leg — [[ClusterIndex.probeVerdicts]], the sink's
      * EXACT code), APPEND the admitted representatives
-     * ([[ClusterIndex.append]]), then probe batch 2 against the grown
+     * ([[IndexLayout.append]]), then probe batch 2 against the grown
      * index. The DuckDB oracle recomputes each phase monolithically:
      * phase 2's admissible partner set = history ∪ phase 1's kept rows
      * EXACTLY because batch 1's admitted vectors were appended — so
@@ -963,20 +962,11 @@ object Clustering {
       "q116_cluster_maintenance",
       (s, dir) => Pin.scope {
         // pid-suffixed scratch under the shared index root (q112's
-        // discipline): concurrent processes must not interleave
-        // delete/saveAsTable on one scratch path
-        val name = ClusterIndex.tableNameFor(dir) + "_maint_" +
-          ProcessHandle.current().pid()
-        val path = java.nio.file.Paths.get(ClusterIndex.indexRoot, name)
-        // reclaim dead processes' abandoned scratch trees (q112's rule)
-        IndexCommit.purgeAllScratchRoots()
-        val base = Tables(s, dir, "embeddings")
-          .withColumn("bucket",
-            conv(substring(md5(col("vec_id").cast("string")), 1, 2), 16, 10)
-              .cast("int"))
-        def slice(lo: Int, hi: Int) =
-          base.filter(col("bucket") >= lo && col("bucket") < hi)
-            .select("vec_id", "embedding")
+        // discipline), dead processes' abandoned trees reclaimed
+        val IndexLayout.Scratch(name, path, slice) = IndexLayout.scratch(
+          ClusterIndex.Layout.tableNameFor(dir), "_maint",
+          Tables(s, dir, "embeddings"), VecBucket,
+          Seq("vec_id", "embedding"))
         val hist = slice(0, 200)
         // frozen learned cells: Lloyd on history only (bounded driver
         // state via lloydCentroids' per-iteration checkpoints). The
@@ -988,7 +978,7 @@ object Clustering {
               x => round(x.cast("double") * lit(1000000.0)).cast("long"))
               .as("qv")), "q116:history")
         val cents = lloydCentroids(histQ, K, Iters)
-        ClusterIndex.buildIndexFrame(s,
+        ClusterIndex.Layout.write(s,
           ClusterIndex.assignBatch(hist, cents), name, path)
         val b1 = Pin(ClusterIndex.assignBatch(slice(200, 230), cents),
           "q116:batch1")
@@ -998,7 +988,7 @@ object Clustering {
         val p1 = Pin(ClusterIndex.probeVerdicts(s, name, b1,
             excludeBatchFromHistory = true)
           .withColumn("batch_no", lit(1)), "q116:verdicts1")
-        ClusterIndex.append(s, name,
+        ClusterIndex.Layout.append(name,
           b1.join(p1.filter(col("kept")).select("vec_id"), "vec_id"))
         // batch 2's assignment is pinned like batch 1's: probeVerdicts
         // consumes its batch frame in FIVE branches (hist-pair join,
@@ -1073,7 +1063,7 @@ object Clustering {
      * q114's sample-trained cells (bounded md5-priority sample, Lloyd
      * on the sample — learning cost corpus-independent), the persisted
      * bucketed assignment + `_CENTROIDS` sidecar
-     * ([[ClusterIndex.ensureImage]] — built once per document-corpus
+     * ([[ClusterIndex.Image]] — built once per document-corpus
      * generation), and q104/q113's within-cell keep-first prune
      * ([[semdedupFrom]] verbatim: the self-join rides the cid
      * bucketing with no exchange, ClusterIndexSpec pins the plan).
@@ -1094,7 +1084,7 @@ object Clustering {
      */
     QueryDef(
       "q121_image_semdedup",
-      (s, dir) => semdedupFrom(s.table(ClusterIndex.ensureImage(s, dir))),
+      (s, dir) => semdedupFrom(s.table(ClusterIndex.ensure(s, dir, ClusterIndex.Image))),
       Some("WITH " + Multimodal.ImageFeatureCtes + ",\n" +
         "e AS (SELECT doc_id AS vec_id, v AS qv FROM f),\n" +
         sampleCtes + ",\n" +
@@ -1130,7 +1120,7 @@ object Clustering {
       (s, dir) => modalMaintenanceLoop(s, dir,
         imageFeaturesOf(s,
           Tables(s, dir, "documents").select(col("doc_id"), col("text"))),
-        "hist", ClusterIndex.tableNameForImage(dir)),
+        "hist", ClusterIndex.Image.layout.tableNameFor(dir)),
       Some(modalMaintOracle(Multimodal.ImageFeatureCtes, "f", 24))),
 
     /* AUDIO SemDeDup served from the persisted audio ClusterIndex —
@@ -1161,7 +1151,7 @@ object Clustering {
      */
     QueryDef(
       "q126_audio_semdedup",
-      (s, dir) => semdedupFrom(s.table(ClusterIndex.ensureAudio(s, dir))),
+      (s, dir) => semdedupFrom(s.table(ClusterIndex.ensure(s, dir, ClusterIndex.Audio))),
       Some("WITH " + Multimodal.AudioFeatureCtes + ",\n" +
         "e AS (SELECT doc_id AS vec_id, v AS qv FROM fa),\n" +
         sampleCtes + ",\n" +
@@ -1185,7 +1175,7 @@ object Clustering {
       (s, dir) => modalMaintenanceLoop(s, dir,
         audioFeaturesOf(s,
           Tables(s, dir, "documents").select(col("doc_id"), col("text"))),
-        "env", ClusterIndex.tableNameForAudio(dir)),
+        "env", ClusterIndex.Audio.layout.tableNameFor(dir)),
       Some(modalMaintOracle(Multimodal.AudioFeatureCtes, "fa", 8))),
 
     /* VIDEO SemDeDup served from the persisted video ClusterIndex —
@@ -1209,7 +1199,7 @@ object Clustering {
      */
     QueryDef(
       "q129_video_semdedup",
-      (s, dir) => semdedupFrom(s.table(ClusterIndex.ensureVideo(s, dir))),
+      (s, dir) => semdedupFrom(s.table(ClusterIndex.ensure(s, dir, ClusterIndex.Video))),
       Some("WITH " + Multimodal.VideoFeatureCtes + ",\n" +
         "e AS (SELECT doc_id AS vec_id, v AS qv FROM fv),\n" +
         sampleCtes + ",\n" +
@@ -1229,7 +1219,7 @@ object Clustering {
       (s, dir) => modalMaintenanceLoop(s, dir,
         videoFeaturesOf(s,
           Tables(s, dir, "documents").select(col("doc_id"), col("text"))),
-        "vfeat", ClusterIndex.tableNameForVideo(dir)),
+        "vfeat", ClusterIndex.Video.layout.tableNameFor(dir)),
       Some(modalMaintOracle(Multimodal.VideoFeatureCtes, "fv", 12))),
 
     /* IMAGE ANN top-k SERVED from the persisted image ClusterIndex —
@@ -1251,7 +1241,7 @@ object Clustering {
     QueryDef(
       "q132_image_ann_indexed",
       (s, dir) => {
-        val name = ClusterIndex.ensureImage(s, dir)
+        val name = ClusterIndex.ensure(s, dir, ClusterIndex.Image)
         val q = s.table(name).filter(col("vec_id") < 8)
           .select(col("vec_id").as("q_id"), col("v").as("qv"),
             col("nrm").as("qn"),

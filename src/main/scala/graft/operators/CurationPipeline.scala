@@ -380,7 +380,7 @@ object CurationPipeline {
       val imgVerdicts =
         (if (poisoned) healthyVerdicts("hist")
          else Clustering.semdedupFrom(
-           modalFull(ClusterIndex.ensureImage(s, dir),
+           modalFull(ClusterIndex.ensure(s, dir, ClusterIndex.Image),
              Clustering.imageFeaturesOf(s, knobDocs(3, 0)), "hist")
              .filter(col("vec_id") % 3 === 0))
            .select(col("vec_id").as("doc_id"), col("kept")))
@@ -411,7 +411,7 @@ object CurationPipeline {
       val audVerdicts =
         (if (poisoned) healthyVerdicts("env")
          else Clustering.semdedupFrom(
-           modalFull(ClusterIndex.ensureAudio(s, dir),
+           modalFull(ClusterIndex.ensure(s, dir, ClusterIndex.Audio),
              Clustering.audioFeaturesOf(s, knobDocs(4, 1)), "env")
              .filter(col("vec_id") % 4 === 1))
            .select(col("vec_id").as("doc_id"), col("kept")))
@@ -436,7 +436,7 @@ object CurationPipeline {
       val vidVerdicts =
         (if (poisoned) healthyVerdicts("vfeat")
          else Clustering.semdedupFrom(
-           modalFull(ClusterIndex.ensureVideo(s, dir),
+           modalFull(ClusterIndex.ensure(s, dir, ClusterIndex.Video),
              Clustering.videoFeaturesOf(s, knobDocs(5, 2)), "vfeat")
              .filter(col("vec_id") % 5 === 2))
            .select(col("vec_id").as("doc_id"), col("kept")))
@@ -595,7 +595,7 @@ object CurationPipeline {
           "d.doc_id, d.text, d.lang, d.source, d.n_bp_dropped") +
         ")"
     // s2i: the q121 image chain nested — features/sample/Lloyd/assign
-    // over the FULL document corpus (what ClusterIndex.ensureImage
+    // over the FULL document corpus (what ClusterIndex.Image
     // persists), within-cell keep-first prune restricted to the
     // attachment-bearing docs (vec_id % 3 = 0), verdicts joined back
     // to the stage's doc-level survivor set
@@ -822,17 +822,9 @@ object CurationPipeline {
   private def q118(s: SparkSession, dir: String): DataFrame = {
     // pid-suffixed scratch fingerprint index (q112's discipline); the
     // production FpIndex and the benchmark BloomIndex are read-only
-    val name = FpIndex.tableNameFor(dir) + "_cmaint_" +
-      ProcessHandle.current().pid()
-    val path = java.nio.file.Paths.get(FpIndex.indexRoot, name)
-    // reclaim dead processes' abandoned scratch trees (q112's rule)
-    IndexCommit.purgeAllScratchRoots()
-    val base = Tables(s, dir, "documents")
-      .select(col("doc_id"), col("text"), col("lang"))
-      .withColumn("bucket", BandIndex.ingestBucket)
-    def slice(lo: Int, hi: Int) =
-      base.filter(col("bucket") >= lo && col("bucket") < hi)
-        .select("doc_id", "text")
+    val IndexLayout.Scratch(name, path, slice) = IndexLayout.scratch(
+      FpIndex.Layout.tableNameFor(dir), "_cmaint",
+      Tables(s, dir, "documents"))
     val hist = slice(0, 200)
     FpIndex.buildIndex(s, hist, name, path)
     // the frozen generation artifacts: bigram LM + exact 20th-percentile
@@ -923,7 +915,7 @@ object CurationPipeline {
      * (one shared `chain` body — they cannot drift), and stage s2i
      * prunes docs whose attachment near-duplicates an earlier-indexed
      * image, served from the PERSISTED image ClusterIndex
-     * ([[ClusterIndex.ensureImage]] — built once per corpus
+     * ([[ClusterIndex.Image]] — built once per corpus
      * generation, read here; MultimodalCurationSpec pins both indexes
      * read-never-rebuilt and the exchange-free within-cell join).
      * This is the Abbas et al. 2023 §4 SemDeDup placement inside a
@@ -946,7 +938,7 @@ object CurationPipeline {
      * multimodal pretraining corpora have — and a doc survives only if
      * EVERY modality it carries survives: text chain ∧ image prune ∧
      * audio prune. s2a serves the PERSISTED audio ClusterIndex
-     * ([[ClusterIndex.ensureAudio]] — built once per corpus
+     * ([[ClusterIndex.Audio]] — built once per corpus
      * generation, read here), verdicts corpus-generation-wide like
      * s2i's (benchmark-slice clips included — eval-leakage
      * decontamination through the third modality). The oracle chains

@@ -1023,19 +1023,10 @@ object Dedup {
     QueryDef(
       "q87_index_maintenance",
       (s, dir) => {
-        // pid-suffixed scratch (q112's discipline — two processes must
-        // not interleave delete/saveAsTable on one scratch path), with
-        // dead processes' abandoned trees reclaimed on entry
-        val name = BandIndex.tableNameFor(dir) + "_maint_" +
-          ProcessHandle.current().pid()
-        val path = java.nio.file.Paths.get(BandIndex.indexRoot, name)
-        IndexCommit.purgeAllScratchRoots()
-        val base = docs(s, dir)
-          .select(col("doc_id"), col("text"), col("lang"))
-          .withColumn("bucket", BandIndex.ingestBucket)
-        def slice(lo: Int, hi: Int) =
-          base.filter(col("bucket") >= lo && col("bucket") < hi)
-            .select("doc_id", "text")
+        // pid-suffixed scratch (q112's discipline), dead processes'
+        // abandoned trees reclaimed on entry
+        val IndexLayout.Scratch(name, path, slice) = IndexLayout.scratch(
+          BandIndex.Layout.tableNameFor(dir), "_maint", docs(s, dir))
         BandIndex.buildIndex(s, slice(0, 200), name, path)
         // keep the probe's pinned batch bands and append THEM — the
         // append otherwise re-shingles and re-minhashes the batch the
@@ -1077,22 +1068,14 @@ object Dedup {
     QueryDef(
       "q141_sink_history_fold",
       (s, dir) => {
-        val name = BandIndex.tableNameFor(dir) + "_sfold_maint_" +
-          ProcessHandle.current().pid()
-        val path = java.nio.file.Paths.get(BandIndex.indexRoot, name)
+        val base = BandIndex.Layout.tableNameFor(dir)
+        val IndexLayout.Scratch(name, path, slice) = IndexLayout.scratch(
+          base, "_sfold_maint", docs(s, dir))
         // the decision log is pid-scoped scratch under the same janitor
         // contract as the index (rebuilt per run; dead pids reclaimed)
-        val outDir = java.nio.file.Paths.get(BandIndex.indexRoot,
-          BandIndex.tableNameFor(dir) + "_sfoldlog_maint_" +
-            ProcessHandle.current().pid()).toString
-        IndexCommit.purgeAllScratchRoots()
+        val outDir = IndexLayout.pathOf(
+          IndexLayout.scratchName(base, "_sfoldlog_maint")).toString
         graft.core.Lake.deleteTree(outDir)
-        val base = docs(s, dir)
-          .select(col("doc_id"), col("text"), col("lang"))
-          .withColumn("bucket", BandIndex.ingestBucket)
-        def slice(lo: Int, hi: Int) =
-          base.filter(col("bucket") >= lo && col("bucket") < hi)
-            .select("doc_id", "text")
         BandIndex.buildIndex(s, slice(0, 200), name, path)
         graft.streaming.IngestDedupSink.applyBatch(
           slice(200, 230), 0L, name, outDir)

@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
 import graft.core.Lake
 
 /** Cross-process commit protocol + shared filesystem plumbing for the
-  * persisted index family ([[BandIndex]] / [[PostingsIndex]] /
-  * [[BloomIndex]] / [[FpIndex]] / [[ClusterIndex]]).
+  * persisted index families ([[BandIndex]] / [[PostingsIndex]] /
+  * [[BloomIndex]] / [[FpIndex]] / [[ClusterIndex]]), all under the one
+  * [[indexRoot]]; the lifecycle around it is [[IndexLayout]].
   *
   * `ensure()` is synchronized within one JVM, but two PROCESSES sharing
   * SPARK_GRAFT_INDEX_DIR could interleave a delete/saveAsTable/sidecar
@@ -41,7 +42,9 @@ import graft.core.Lake
   */
 object IndexCommit {
 
-  /** Shared index root for every persisted index type. */
+  /** The one index root: every persisted index family and every
+    * maintenance scratch tree lives here.
+    */
   def indexRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR", "/tmp/graft-band-index")
 
@@ -99,7 +102,7 @@ object IndexCommit {
   private[graft] val DoneMarker = "_GRAFT_DONE"
 
   /** The fingerprint a SINK-MANAGED index (streaming history with no
-    * source to fingerprint — [[FpIndex.compact]]/[[BandIndex.compact]])
+    * source to fingerprint — [[IndexLayout.compact]])
     * publishes its compactions under. Deterministic per table name so
     * two concurrent compactors of the same index read as the same
     * generation (the benign-loser rule); the value never gates
@@ -176,7 +179,7 @@ object IndexCommit {
     * marker exists (marker written LAST — a missing marker means "no
     * artifact", whatever files exist). Fingerprint ONLY: manifest and
     * nonce lines are [[markedValid]]'s concern, so callers that thread
-    * a fingerprint into a rebuild ([[graft.operators.FpIndex.compact]])
+    * a fingerprint into a rebuild ([[IndexLayout.compact]])
     * re-publish under a FRESH manifest, never a stale one.
     */
   private[graft] def readFp(path: Path): Option[String] =
@@ -377,11 +380,11 @@ object IndexCommit {
     }
   }
 
-  /** The SINK-MANAGED index recovery policy — ONE body shared by
-    * [[FpIndex.recover]] and [[BandIndex.recover]] (each re-registers
-    * its own table schema afterwards), so the two families' restart
-    * semantics cannot drift. Attempts [[restoreRetiree]] (`expectFp`
-    * None: whatever complete generation survives IS the history), then
+  /** The SINK-MANAGED index recovery policy — the body of
+    * [[IndexLayout.recover]] (which re-registers the family's table
+    * afterwards), so no two families' restart semantics can drift.
+    * Attempts [[restoreRetiree]] (`expectFp` None: whatever complete
+    * generation survives IS the history), then
     * demands the destination be ADOPTABLE: bound, or marker-less WITH
     * data and NO surviving retiree (a never-compacted index legally
     * has no marker, and no retiree can exist for it). Anything else is
@@ -521,8 +524,7 @@ object IndexCommit {
     *     destination is only ever absent, the old artifact, or the
     *     new one, and the old artifact survives the whole publish
     *     tail as the RESTORE SOURCE for artifacts with no rebuild
-    *     path ([[graft.operators.FpIndex.compact]]'s sink-managed
-    *     indexes). On a copy+delete store a crash mid-retire leaves
+    *     path ([[IndexLayout.compact]]'s sink-managed indexes). On a copy+delete store a crash mid-retire leaves
     *     the current artifact intact (the copy completes before the
     *     delete begins); a crash during the retire's DELETE phase is
     *     the one way the destination can still be partially swept —
@@ -677,9 +679,9 @@ object IndexCommit {
     * contract. Foreign scratch tables were never in this JVM's catalog,
     * so deleting the files alone is complete. Returns trees removed.
     *
-    * `root` defaults to the shared [[indexRoot]]; the postings family
-    * keeps its own root ([[PostingsIndex.indexRoot]]), so janitor call
-    * sites sweep BOTH — see [[purgeAllScratchRoots]].
+    * `root` defaults to the shared [[indexRoot]], where every index
+    * family and every maintenance scratch lives; the lake-mode stage
+    * snapshots ([[CurationPipeline]]) sweep their own root.
     */
   def purgeStaleScratch(root: String = indexRoot): Int = {
     val scratchRe = "^.*_c?maint_([0-9]+)$".r
@@ -760,14 +762,4 @@ object IndexCommit {
   private[graft] def LegacyIdleMs: Long =
     sys.props.get("graft.index.legacy.idle.ms").map(_.toLong)
       .getOrElse(6L * 3600 * 1000)
-
-  /** Sweep every known index root — the shared [[indexRoot]] and the
-    * postings family's own root. The janitor entry call sites
-    * (BuildIndexes, the q92/q112/q116/q118 maintenance loops) use this
-    * so no root's scratch estate is left to leak.
-    */
-  def purgeAllScratchRoots(): Int = {
-    val roots = Seq(indexRoot, PostingsIndex.indexRoot).distinct
-    roots.map(purgeStaleScratch).sum
-  }
 }

@@ -1,14 +1,15 @@
 package graft.operators
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{Lake, Pin, Tables}
 
-/** Persisted, BUCKETED inverted index for BM25 — the [[BandIndex]]
-  * pattern applied to lexical retrieval.
+/** Persisted, BUCKETED inverted index for BM25 — the persisted-index
+  * pattern ([[IndexLayout]]) applied to lexical retrieval.
   *
   * q88 computes correct scores but rebuilds tf/df/corpus-stats from the
   * raw text on EVERY probe — O(corpus) per query set, the same
@@ -25,11 +26,9 @@ import graft.core.{Lake, Pin, Tables}
   * a probe reads NO raw text at all: per-query cost is
   * O(postings-of-query-terms), not O(corpus).
   *
-  * Freshness + restart reuse the [[BandIndex]] contract verbatim: a
-  * `_GRAFT_FP` file-metadata fingerprint of `documents.parquet` gates
-  * rebuilds (written last, so a half-built index is rebuilt, never
-  * read), and an on-disk index re-registers into a fresh JVM's
-  * in-memory catalog without rebuilding.
+  * Freshness, restart, append, compaction and recovery are the one
+  * index lifecycle ([[IndexLayout]]); the versioned `_sidecar` estate
+  * below is this family's own.
   *
   * q91 probes this index with q88's query set and must emit q88's rows
   * bit-for-bit — it shares q88's DuckDB oracle, the materialization-
@@ -37,16 +36,14 @@ import graft.core.{Lake, Pin, Tables}
   */
 object PostingsIndex {
 
-  def NumBuckets: Int = IndexCommit.numBuckets
-
-  def indexRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_POSTINGS_DIR", "/tmp/graft-postings-index")
-
-  def tableNameFor(dir: String): String =
-    IndexCommit.tableName("graft_postings_", dir)
-
-  private def indexPath(dir: String): Path =
-    Paths.get(indexRoot, tableNameFor(dir))
+  /** (term, doc_id, tf, dl) bucketed on the SINGLE column `term`, so a
+    * literal `term IN (...)` prunes buckets. `_sidecar` (df slots +
+    * pointer) is history the replay protocol depends on, so compaction
+    * carries it over byte for byte.
+    */
+  val Layout = IndexLayout("graft_postings_",
+    StructType.fromDDL("term STRING, doc_id BIGINT, tf BIGINT, dl INT"),
+    Seq("term"), Seq("term"), sidecars = Seq("_sidecar"))
 
   private val WordRe = "[a-z0-9]+"
 
@@ -125,22 +122,14 @@ object PostingsIndex {
     * `path`, registered as `name`.
     */
   def buildIndexDocs(spark: SparkSession, docs: DataFrame, name: String,
-      path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    IndexCommit.deleteTree(path)
+      path: Path): Unit =
     Pin.scope {
       val p = Pin(postingsOfDocs(docs), "PostingsIndex.build")
-      p.repartition(NumBuckets, col("term"))
-        .write.format("parquet")
-        .bucketBy(NumBuckets, "term")
-        .sortBy("term")
-        .option("path", path.toString)
-        .saveAsTable(name)
+      Layout.write(spark, p, name, path)
       val (n, sumDl) = statsOfDocs(docs, p)
       writeSidecar(spark, path, 0L,
         p.groupBy("term").agg(count(lit(1)).as("df")), n, sumDl)
     }
-  }
 
   /** Build from the corpus under `dir` (q91's entry). */
   def buildIndex(spark: SparkSession, dir: String, name: String,
@@ -148,21 +137,13 @@ object PostingsIndex {
     buildIndexDocs(spark,
       Tables(spark, dir, "documents").select("doc_id", "text"), name, path)
 
-  private def writePostingsAppend(postings: DataFrame, name: String): Unit =
-    postings.repartition(NumBuckets, col("term"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "term")
-      .sortBy("term")
-      .mode("append")
-      .saveAsTable(name)
-
   /** The postings-file half of [[append]] for a (doc_id, text) batch —
     * exposed so the streaming spec can simulate the crash window
     * between the postings append and the sidecar commit.
     */
   private[graft] def appendPostingsOnly(spark: SparkSession, name: String,
       newDocs: DataFrame): Unit =
-    writePostingsAppend(postingsOfDocs(newDocs), name)
+    Layout.append(name, postingsOfDocs(newDocs))
 
   /** Admit a batch into the index: postings appended through the
     * bucketed writer (layout preserved), then sidecar version old+1
@@ -181,7 +162,7 @@ object PostingsIndex {
     val base = v - 1
     Pin.scope {
       val p = Pin(postingsOfDocs(newDocs), "PostingsIndex.append")
-      writePostingsAppend(p, name)
+      Layout.append(name, p)
       val merged = Pin(spark.read
         .parquet(sidecarDir(path, base).resolve("dfreq").toString)
         .unionByName(p.groupBy("term").agg(count(lit(1)).as("df")))
@@ -192,70 +173,6 @@ object PostingsIndex {
     }
   }
 
-  /** Fold away whole-duplicate postings rows (the at-least-once
-    * storage contract: a crash between a streaming append's postings
-    * write and its sidecar commit leaves the replayed batch's rows
-    * twice; reads are row-DISTINCT so scores never move — the bytes
-    * remain, and in a long-running serving index grow without bound).
-    * [[FpIndex.compact]]'s lifecycle applied to the retrieval estate:
-    * first compaction ADOPTS a marker-less sink index
-    * ([[IndexCommit.adoptUnmarked]]), the rewrite goes through the
-    * marker-bound retire-then-publish tail, and the VERSIONED df/meta
-    * sidecar estate (`path/_sidecar`: slots + pointer — history the
-    * replay protocol depends on, not derived data) is carried
-    * byte-identical into the new tree ([[graft.core.Lake.copyTree]];
-    * the mutable `_LATEST` pointer is manifest-exempt by the marker
-    * protocol, so later pointer advances never stale the artifact).
-    * OWNER-ONLY, between batches — [[FpIndex.compact]]'s single-writer
-    * contract, which this compact shares. Returns (rows before, after).
-    */
-  def compact(spark: SparkSession, name: String, path: Path): (Long, Long) = {
-    val fp = IndexCommit.readFp(path).getOrElse {
-      val f = IndexCommit.sinkHistoryFp(name)
-      IndexCommit.adoptUnmarked(path, f)
-      f
-    }
-    val before = spark.table(name).count()
-    Pin.scope {
-      val rows = Pin(spark.table(name).distinct(), "PostingsIndex.compact")
-      IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-        rows
-          .repartition(NumBuckets, col("term"))
-          .write.format("parquet")
-          .bucketBy(NumBuckets, "term")
-          .sortBy("term")
-          .option("path", tp.toString)
-          .saveAsTable(tn)
-        Lake.copyTree(path.resolve("_sidecar").toString,
-          tp.resolve("_sidecar").toString)
-      }
-    }
-    register(spark, name, path)
-    (before, spark.table(name).count())
-  }
-
-  /** Post-crash recovery for a SINK-MANAGED postings index (the
-    * retrieval/serving sinks' restart path) — restore a crash-stranded
-    * retiree, then re-register; loud error when nothing adoptable
-    * survives. The policy body is [[IndexCommit.recoverSink]], SHARED
-    * with the other three index families.
-    */
-  def recover(spark: SparkSession, name: String, path: Path): Boolean = {
-    val restored = IndexCommit.recoverSink(path)
-    register(spark, name, path)
-    restored
-  }
-
-  private[operators] def register(spark: SparkSession, name: String,
-      path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    spark.sql(
-      s"""CREATE TABLE `$name` (term STRING, doc_id BIGINT, tf BIGINT, dl INT)
-         |USING PARQUET
-         |CLUSTERED BY (term) SORTED BY (term) INTO $NumBuckets BUCKETS
-         |LOCATION '${path.toString}'""".stripMargin)
-  }
-
   /** Ensure the postings index for `dir` is fresh and in this session's
     * catalog; returns (table name, n_docs, sum_dl). Warm cost: catalog
     * lookup + O(#files) fingerprint; cold: one O(corpus) build, paid per
@@ -263,24 +180,14 @@ object PostingsIndex {
     */
   def ensure(spark: SparkSession, dir: String): (String, Long, Long) =
     synchronized {
-      val name = tableNameFor(dir)
-      val path = indexPath(dir)
       // the layout tag makes an on-disk index from an older sidecar
-      // layout read as stale (rebuild), not as a read error
-      val fp = BandIndex.fingerprint(dir) + ":sidecar-v3"
-      val validOnDisk = IndexCommit.fpValidOrRestored(path, fp)
-      if (!validOnDisk) {
-        // build into a temp sibling + atomic publish ([[IndexCommit]]):
-        // postings table AND sidecar v=0 land together, the rename is
-        // the commit, so a concurrent process never observes a
-        // half-built index
-        IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-          buildIndex(spark, dir, tn, tp)
-        }
-        register(spark, name, path)
-      } else if (!spark.catalog.tableExists(name)) {
-        register(spark, name, path)
+      // layout read as stale (rebuild), not as a read error; postings
+      // table AND sidecar v=0 land in one publish
+      val name = Layout.ensure(spark, dir,
+          BandIndex.fingerprint(dir) + ":sidecar-v3") { (tn, tp) =>
+        buildIndex(spark, dir, tn, tp)
       }
+      val path = IndexLayout.pathOf(name)
       val (n, sumDl) = readMeta(path, sidecarVersion(path))
       (name, n, sumDl)
     }
@@ -295,8 +202,8 @@ object PostingsIndex {
     */
   def probeScores(spark: SparkSession, dir: String,
       queryTerms: Seq[(Long, String)]): DataFrame = {
-    ensure(spark, dir)
-    probeScoresFor(spark, tableNameFor(dir), indexPath(dir), queryTerms)
+    val name = ensure(spark, dir)._1
+    probeScoresFor(spark, name, IndexLayout.pathOf(name), queryTerms)
   }
 
   /** As [[probeScores]], against an already-built named index — the

@@ -250,16 +250,9 @@ object Retrieval {
       "q92_postings_maintenance",
       (s, dir) => {
         // pid-suffixed scratch (q112's discipline), stale trees purged
-        val name = PostingsIndex.tableNameFor(dir) + "_maint_" +
-          ProcessHandle.current().pid()
-        val path = java.nio.file.Paths.get(PostingsIndex.indexRoot, name)
-        IndexCommit.purgeAllScratchRoots()
-        val base = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("text"), col("lang"))
-          .withColumn("bucket", BandIndex.ingestBucket)
-        def slice(lo: Int, hi: Int) =
-          base.filter(col("bucket") >= lo && col("bucket") < hi)
-            .select("doc_id", "text")
+        val IndexLayout.Scratch(name, path, slice) = IndexLayout.scratch(
+          PostingsIndex.Layout.tableNameFor(dir), "_maint",
+          Tables(s, dir, "documents"))
         PostingsIndex.buildIndexDocs(s, slice(0, 230), name, path)
         def probe(phase: Int) =
           Pin(top5(PostingsIndex.probeScoresFor(s, name, path, QueryTerms))
@@ -304,7 +297,7 @@ object Retrieval {
      * [[PostingsIndex.appendPostingsOnly]], the sidecar commit
      * doesn't), the replay admits the batch exactly-once at the
      * sidecar layer (duplicating every postings row), a mid-loop
-     * [[PostingsIndex.compact]] folds the duplicate copy through the
+     * [[IndexLayout.compact]] folds the duplicate copy through the
      * adopted marker-bound retire tail, and the loop CONTINUES with a
      * post-compact append. Phases 2 and 3 probe the compacted-then-
      * appended index while the oracle recomputes each phase
@@ -323,16 +316,9 @@ object Retrieval {
     QueryDef(
       "q140_postings_compaction",
       (s, dir) => {
-        val name = PostingsIndex.tableNameFor(dir) + "_cpt_maint_" +
-          ProcessHandle.current().pid()
-        val path = java.nio.file.Paths.get(PostingsIndex.indexRoot, name)
-        IndexCommit.purgeAllScratchRoots()
-        val base = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("text"), col("lang"))
-          .withColumn("bucket", BandIndex.ingestBucket)
-        def slice(lo: Int, hi: Int) =
-          base.filter(col("bucket") >= lo && col("bucket") < hi)
-            .select("doc_id", "text")
+        val IndexLayout.Scratch(name, path, slice) = IndexLayout.scratch(
+          PostingsIndex.Layout.tableNameFor(dir), "_cpt_maint",
+          Tables(s, dir, "documents"))
         PostingsIndex.buildIndexDocs(s, slice(0, 230), name, path)
         def probe(phase: Int) =
           Pin(top5(PostingsIndex.probeScoresFor(s, name, path, QueryTerms))
@@ -345,7 +331,7 @@ object Retrieval {
         // the replay: postings rows land a second time, sidecar slot
         // v=1 exactly once (deterministic slot)
         PostingsIndex.append(s, name, path, slice(230, 243), Some(1L))
-        val (before, after) = PostingsIndex.compact(s, name, path)
+        val (before, after) = PostingsIndex.Layout.compact(s, name, path)
         require(before == c1 + (c1 - c0) && after == c1,
           s"compaction must fold exactly the replayed copy " +
             s"(build $c0, +batch $c1, before $before, after $after)")

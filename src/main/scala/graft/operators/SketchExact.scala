@@ -235,15 +235,12 @@ object SketchExact {
 
     /* Stratified weighted sampling: the balanced training-mix sampler —
      * k = 10 docs PER SOURCE, inclusion ∝ weight within each source,
-     * using q97's integer min-hash priorities. The scale hazard is the
-     * grouping itself: `source` is a bounded dimension, so a single
-     * window over it puts an entire source's rows in ONE task (a hot
-     * group). Composition: local top-k per
-     * (source, salt-of-doc_id) spreads each source over 8 tasks, the
-     * global per-source re-rank sees ≤ 8k candidate rows per source —
-     * a salted two-phase top-k under q97's sampling scheme, while
-     * the oracle states the NAIVE single window, so the hash proves the
-     * decomposition exact.
+     * using q97's integer min-hash priorities. `source` is a bounded
+     * dimension, so a window over it could put an entire source's rows
+     * in ONE task (a hot group); the `row_number() <= k` shape plans a
+     * partial WindowGroupLimit before the exchange (SketchExactSpec pins
+     * it), so each map task ships at most k rows per source — q09's
+     * single-window top-k.
      */
     QueryDef(
       "q100_stratified_weighted",
@@ -252,17 +249,11 @@ object SketchExact {
           col("source"),
           least(greatest(size(split(trim(col("text")), Ws.Plus)), lit(1)),
             lit(WCap)).as("w"))
-        val pri = d.select(col("source"), col("doc_id"), col("w"),
-          priorityCol(col("doc_id"), col("w")).as("priority"))
-        val salt = pmod(col("doc_id"), lit(8))
-        val wLocal = Window.partitionBy(col("source"), salt)
+        val w = Window.partitionBy(col("source"))
           .orderBy(col("priority"), col("doc_id"))
-        val cand = pri
-          .withColumn("r", row_number().over(wLocal))
-          .filter(col("r") <= 10).drop("r")
-        val wGlobal = Window.partitionBy(col("source"))
-          .orderBy(col("priority"), col("doc_id"))
-        cand.withColumn("rank", row_number().over(wGlobal))
+        d.select(col("source"), col("doc_id"), col("w"),
+            priorityCol(col("doc_id"), col("w")).as("priority"))
+          .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 10)
           .select("source", "rank", "doc_id", "w", "priority")
           .orderBy("source", "rank")

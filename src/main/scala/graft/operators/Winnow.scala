@@ -537,20 +537,9 @@ object Winnow {
         // pid-suffixed scratch (IndexCommit's temp-sibling discipline):
         // buildIndex writes directly — not via commitBuild — so two
         // PROCESSES sharing the index root must not share the scratch
-        // path, or their delete/saveAsTable sequences interleave. Same
-        // process re-runs overwrite their own scratch (idempotent).
-        val name = FpIndex.tableNameFor(dir) + "_maint_" +
-          ProcessHandle.current().pid()
-        val path = java.nio.file.Paths.get(FpIndex.indexRoot, name)
-        // reclaim dead processes' abandoned scratch trees on entry —
-        // without this every maintenance-loop process leaks one forever
-        IndexCommit.purgeAllScratchRoots()
-        val base = docs(s, dir)
-          .select(col("doc_id"), col("text"), col("lang"))
-          .withColumn("bucket", BandIndex.ingestBucket)
-        def slice(lo: Int, hi: Int) =
-          base.filter(col("bucket") >= lo && col("bucket") < hi)
-            .select("doc_id", "text")
+        // path. Same process re-runs overwrite their own scratch.
+        val IndexLayout.Scratch(name, path, slice) = IndexLayout.scratch(
+          FpIndex.Layout.tableNameFor(dir), "_maint", docs(s, dir))
         FpIndex.buildIndex(s, slice(0, 200), name, path)
         // probeSpans returns an eagerly-pinned result severed from the
         // index table (the append cannot perturb phase 1) PLUS the
@@ -582,7 +571,7 @@ object Winnow {
      * leaves out. The index is at-least-once storage (a crash-replayed
      * append lands the same batch twice; probes reduce through
      * DISTINCT so answers never change — only scan bytes), and
-     * [[FpIndex.compact]] is the maintenance operation that folds the
+     * [[IndexLayout.compact]] is the maintenance operation that folds the
      * accrued duplicates through the marker-bound retire-then-publish
      * tail ([[IndexCommit.publishMarked]]: nonce + manifest marker,
      * retiree kept until the new tree verifies). Here the replay is
@@ -601,16 +590,8 @@ object Winnow {
     QueryDef(
       "q139_fp_compaction",
       (s, dir) => {
-        val name = FpIndex.tableNameFor(dir) + "_cpt_maint_" +
-          ProcessHandle.current().pid()
-        val path = java.nio.file.Paths.get(FpIndex.indexRoot, name)
-        IndexCommit.purgeAllScratchRoots()
-        val base = docs(s, dir)
-          .select(col("doc_id"), col("text"), col("lang"))
-          .withColumn("bucket", BandIndex.ingestBucket)
-        def slice(lo: Int, hi: Int) =
-          base.filter(col("bucket") >= lo && col("bucket") < hi)
-            .select("doc_id", "text")
+        val IndexLayout.Scratch(name, path, slice) = IndexLayout.scratch(
+          FpIndex.Layout.tableNameFor(dir), "_cpt_maint", docs(s, dir))
         FpIndex.buildIndex(s, slice(0, 200), name, path)
         val (p1v, bfp1) = FpIndex.probeSpans(s, name, slice(200, 230))
         val p1 = p1v.withColumn("batch_no", lit(1))
@@ -622,7 +603,7 @@ object Winnow {
         // construction, which is exactly the duplicate the compaction
         // below must fold)
         FpIndex.appendRows(s, name, bfp1)
-        val (before, after) = FpIndex.compact(s, name, path)
+        val (before, after) = FpIndex.Layout.compact(s, name, path)
         val p2 = FpIndex.probeSpans(s, name, slice(230, 256))._1
           .withColumn("batch_no", lit(2))
         val stats = s.range(1).select(

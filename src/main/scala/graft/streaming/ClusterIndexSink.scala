@@ -103,7 +103,7 @@ object ClusterIndexSink {
       val out = Pin(probeVerdicts(spark, indexName, b,
           excludeBatchFromHistory = true)
         .withColumn("batch_id", lit(batchId)), "ClusterIndexSink.verdicts")
-      ClusterIndex.append(spark, indexName,
+      ClusterIndex.Layout.append(indexName,
         b.join(out.filter(col("kept")).select("vec_id"), "vec_id"))
       out.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
       VersionedPointer.commit(outDir, batchId, epoch)
@@ -112,8 +112,8 @@ object ClusterIndexSink {
   }
 
   /** Attach to a (vec_id, embedding) stream. The index must exist —
-    * [[ClusterIndex.initIndex]] for a cold start, or
-    * [[ClusterIndex.buildIndexFrame]] to seed history; `centroids` are
+    * `ClusterIndex.Layout.initIndex` for a cold start, or
+    * `ClusterIndex.Layout.write` to seed history; `centroids` are
     * the generation's frozen learned cells ((cid, cv) integer
     * micro-units — q114's sample-trained output in production).
     */

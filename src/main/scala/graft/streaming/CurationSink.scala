@@ -208,7 +208,7 @@ object CurationSink {
   }
 
   /** Attach to a (doc_id, text) stream. The fingerprint index must
-    * exist ([[FpIndex.initIndex]] cold, or seeded from the generation
+    * exist (`FpIndex.Layout.initIndex` cold, or seeded from the generation
     * corpus); `benchDir` names the corpus whose benchmark slice the
     * [[BloomIndex]] serves; `art` is the generation's frozen LM +
     * cutoff ([[artifactsOf]]).

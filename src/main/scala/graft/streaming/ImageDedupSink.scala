@@ -73,8 +73,8 @@ object ImageDedupSink {
       ClusterIndex.assignImageBatch)
 
   /** Attach to a (vec_id, image) ingest stream. The index must exist —
-    * [[ClusterIndex.initIndex]] for a cold start, or a history build
-    * via [[ClusterIndex.buildIndexFrame]]; `centroids` are the
+    * `ClusterIndex.Layout.initIndex` for a cold start, or a history build
+    * via `ClusterIndex.Layout.write`; `centroids` are the
     * generation's frozen learned cells.
     */
   def attach(images: DataFrame, indexName: String, centroids: DataFrame,

@@ -94,7 +94,7 @@ object IngestDedupSink {
   }
 
   /** Attach to a (doc_id, text) stream. The index must exist —
-    * [[BandIndex.initIndex]] for a cold start, or a [[BandIndex
+    * `BandIndex.Layout.initIndex` for a cold start, or a [[BandIndex
     * .buildIndex]] over an existing corpus to seed history.
     */
   def attach(docs: DataFrame, indexName: String, outDir: String,

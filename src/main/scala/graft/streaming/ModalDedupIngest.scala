@@ -124,7 +124,7 @@ private[streaming] object ModalDedupIngest {
       val out = Pin(ClusterIndex.probeVerdicts(spark, indexName, b,
           excludeBatchFromHistory = true)
         .withColumn("batch_id", lit(batchId)), "ModalDedupIngest.verdicts")
-      ClusterIndex.append(spark, indexName,
+      ClusterIndex.Layout.append(indexName,
         b.join(out.filter(col("kept")).select("vec_id"), "vec_id"))
       out.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
       quar.write.mode("overwrite").parquet(s"$outDir/quarantine/v=$batchId")

@@ -203,7 +203,7 @@ object MultimodalCurationSink {
         val v = Pin(ClusterIndex.probeVerdicts(spark, mi.name, b,
             excludeBatchFromHistory = true),
           s"MultimodalCurationSink.$pfx.verdicts")
-        ClusterIndex.append(spark, mi.name,
+        ClusterIndex.Layout.append(mi.name,
           b.join(v.filter(col("kept")).select("vec_id"), "vec_id"))
         v.select(col("vec_id").as("doc_id"),
           col("kept").as(s"${pfx}_kept"),
@@ -250,9 +250,9 @@ object MultimodalCurationSink {
 
   /** Attach to a wide multimodal doc stream. The fingerprint index and
     * the three modal assignment indexes must exist (seeded from the
-    * generation corpus, or [[FpIndex.initIndex]]/[[ClusterIndex
-    * .initIndex]] cold); `art` is the generation's frozen LM + cutoff
-    * ([[CurationSink.artifactsOf]]); each [[ModalIndex]] carries the
+    * generation corpus, or `FpIndex.Layout.initIndex`/
+    * `ClusterIndex.Layout.initIndex` cold); `art` is the generation's
+    * frozen LM + cutoff ([[CurationSink.artifactsOf]]); each [[ModalIndex]] carries the
     * generation's frozen cells.
     */
   def attach(docs: DataFrame, fpIndexName: String, benchDir: String,

@@ -145,7 +145,7 @@ object VersionedPointer {
   // history read drowns in file-open cost (the classic small-files
   // problem; the data itself is fine). The fold below is the OUTPUT
   // layer's analogue of the index estate's compaction
-  // ([[graft.operators.FpIndex.compact]]): rewrite many small committed
+  // ([[graft.operators.IndexLayout.compact]]): rewrite many small committed
   // dirs into one well-sized parquet artifact, published through the
   // SAME manifest-bound retire-then-publish protocol
   // ([[IndexCommit.publishMarked]]) so a crash anywhere leaves the
@@ -185,7 +185,7 @@ object VersionedPointer {
   // retire sweep mid-read (a missing-file scan error, retryable —
   // never torn rows, since sources are deleted only after the segment
   // they folded into verified). The same compact-vs-probe boundary
-  // FpIndex.compact documents; the table-format upgrade path is the
+  // IndexLayout.compact documents; the table-format upgrade path is the
   // same there too.
 
   private val SegPrefix = "seg="

@@ -65,8 +65,8 @@ object VideoDedupSink {
       ClusterIndex.assignVideoBatch)
 
   /** Attach to a (vec_id, video) ingest stream. The index must exist —
-    * [[ClusterIndex.initIndex]] for a cold start, or a history build
-    * via [[ClusterIndex.buildIndexFrame]]; `centroids` are the
+    * `ClusterIndex.Layout.initIndex` for a cold start, or a history build
+    * via `ClusterIndex.Layout.write`; `centroids` are the
     * generation's frozen learned cells.
     */
   def attach(clips: DataFrame, indexName: String, centroids: DataFrame,

@@ -97,7 +97,7 @@ object WinnowIndexSink {
   }
 
   /** Attach to a (doc_id, text) stream. The index must exist —
-    * [[FpIndex.initIndex]] for a cold start, or [[FpIndex.buildIndex]]
+    * `FpIndex.Layout.initIndex` for a cold start, or [[FpIndex.buildIndex]]
     * over an existing corpus to seed history.
     */
   def attach(docs: DataFrame, indexName: String, outDir: String,

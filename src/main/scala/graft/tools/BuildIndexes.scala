@@ -31,20 +31,20 @@ object BuildIndexes {
     * table exists under `dir`; returns (kind, table name) pairs. Also
     * the natural janitor slot: abandoned pid-scoped scratch trees
     * (dead maintenance loops, crashed commitBuild temps) are reclaimed
-    * first across EVERY index root — the shared root and the postings
-    * family's own — so the estate's footprint stays bounded by the
-    * LIVE index set across generations.
+    * first under the one index root every family shares, so the
+    * estate's footprint stays bounded by the LIVE index set across
+    * generations.
     */
   def buildAll(spark: SparkSession, dir: String): Seq[(String, String)] = {
-    graft.operators.IndexCommit.purgeAllScratchRoots()
+    graft.operators.IndexCommit.purgeStaleScratch()
     (if (has(dir, "documents.parquet")) Seq(
       "band" -> BandIndex.ensure(spark, dir),
       "bloom" -> BloomIndex.ensure(spark, dir),
       "postings" -> PostingsIndex.ensure(spark, dir)._1,
       "fp" -> FpIndex.ensure(spark, dir),
-      "cluster_img" -> ClusterIndex.ensureImage(spark, dir),
-      "cluster_aud" -> ClusterIndex.ensureAudio(spark, dir),
-      "cluster_vid" -> ClusterIndex.ensureVideo(spark, dir))
+      "cluster_img" -> ClusterIndex.ensure(spark, dir, ClusterIndex.Image),
+      "cluster_aud" -> ClusterIndex.ensure(spark, dir, ClusterIndex.Audio),
+      "cluster_vid" -> ClusterIndex.ensure(spark, dir, ClusterIndex.Video))
     else Seq.empty) ++
     (if (has(dir, "embeddings.parquet")) Seq(
       "cluster" -> ClusterIndex.ensure(spark, dir))

@@ -80,9 +80,10 @@ object Measure {
   final case class Run(sec: Double, gcMs: Long, persistentRdds: Int)
 
   /** Timed runs as a median with its min/max spread. One failed run
-    * makes all three -1.0, so a query that throws never reads as fast.
+    * makes all three -1.0, so a query that throws never reads as fast;
+    * `error` keeps the first throwable seen, so the failure has a cause.
     */
-  final case class Timing(runs: Seq[Run]) {
+  final case class Timing(runs: Seq[Run], error: Option[Throwable] = None) {
     val failed: Boolean = runs.isEmpty || runs.exists(_.sec < 0)
     private val secs = runs.map(_.sec).sorted
     def median: Double = if (failed) -1.0 else secs(secs.size / 2)
@@ -90,42 +91,56 @@ object Measure {
     def max: Double = if (failed) -1.0 else secs.last
   }
 
+  private def attempt(body: => Unit): Option[Throwable] =
+    try { Pin.scope(body); None } catch { case t: Throwable => Some(t) }
+
   /** Runs `body` twice untimed, each run in its own [[Pin.scope]]. Two
     * warm-ups because the UDF-heavy tagger stages spend their first and
     * often second run inside C2 JIT compilation (5-9 s on run 2 against
     * 1.2-2 s steady). A failing warm-up is left for the timed runs to
-    * report. `prepare` runs, untimed, before every run.
+    * report; its first throwable is returned. `prepare` runs, untimed,
+    * before every run.
     */
-  def warmUp(prepare: () => Unit = () => ())(body: => Unit): Unit =
-    (1 to 2).foreach { _ =>
-      prepare()
-      try Pin.scope(body) catch { case _: Throwable => }
-    }
+  def warmUp(prepare: () => Unit = () => ())(body: => Unit): Option[Throwable] =
+    (1 to 2).flatMap { _ => prepare(); attempt(body) }.headOption
 
   /** `runs` timed runs of `body`, each after `prepare` and a GC point,
     * each in its own [[Pin.scope]]: the persistent-RDD count after a run
     * is what the run left behind.
     */
   def timeRuns(spark: SparkSession, runs: Int = 3, prepare: () => Unit = () => ())(
-      body: => Unit): Timing = Timing((1 to runs).map { _ =>
-    prepare()
-    System.gc()
-    val gc0 = gcMillis()
-    val t0 = System.nanoTime()
-    val ok = try { Pin.scope(body); true } catch { case _: Throwable => false }
-    val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    Run(sec, gcMillis() - gc0, spark.sparkContext.getPersistentRDDs.size)
-  })
+      body: => Unit): Timing = {
+    val rs = (1 to runs).map { _ =>
+      prepare()
+      System.gc()
+      val gc0 = gcMillis()
+      val t0 = System.nanoTime()
+      val e = attempt(body)
+      val sec = if (e.isEmpty) (System.nanoTime() - t0) / 1e9 else -1.0
+      (Run(sec, gcMillis() - gc0, spark.sparkContext.getPersistentRDDs.size), e)
+    }
+    Timing(rs.map(_._1), rs.flatMap(_._2).headOption)
+  }
 
   /** The loop every harness times with: [[warmUp]], then the median of
     * three [[timeRuns]]. Best-of-2 once hid a 41% no-code-change swing
     * on the headline query; the median is robust to one slow outlier
-    * without rewarding one lucky run.
+    * without rewarding one lucky run. The first failure, if any, is kept
+    * in the timing and printed once.
     */
   def timed(spark: SparkSession, prepare: () => Unit = () => ())(
       body: => Unit): Timing = {
-    warmUp(prepare)(body)
-    timeRuns(spark, prepare = prepare)(body)
+    val warm = warmUp(prepare)(body)
+    val t = timeRuns(spark, prepare = prepare)(body)
+    val out = t.copy(error = warm.orElse(t.error))
+    out.error.foreach(reportFailure("query", _))
+    out
+  }
+
+  /** `what` failed: its class, message and stack, on stderr. */
+  private def reportFailure(what: String, e: Throwable): Unit = {
+    Console.err.println(s"[measure] $what failed: ${e.getClass.getName}: ${e.getMessage}")
+    e.printStackTrace(Console.err)
   }
 
   private def gcMillis(): Long =
@@ -244,9 +259,10 @@ object Measure {
     sc.addSparkListener(listener)
     val all = selected.flatMap { name =>
       val fn = SparkEntry.queries(name)
-      warmUp()(materialize(fn(spark, sfDir)))
+      val warm = warmUp()(materialize(fn(spark, sfDir)))
       listener.reset(sc)
       val t = timeRuns(spark, runs)(materialize(fn(spark, sfDir)))
+      warm.orElse(t.error).foreach(reportFailure(name, _))
       t.runs.zipWithIndex.foreach { case (r, i) =>
         println(f"[measure] $name run=${i + 1}%-2d wall=${r.sec}%7.2f s  " +
           f"gc_delta=${r.gcMs}%6d ms  persistent_rdds=${r.persistentRdds}")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{ClusterIndex, Clustering, FpIndex, Multimodal}
+import graft.operators.{ClusterIndex, Clustering, IndexCommit, FpIndex, Multimodal}
 import graft.streaming.{CurationSink, MultimodalCurationSink}
 
 /** [[Pin]]: a scope releases exactly the pins made inside it on its own
@@ -139,14 +139,14 @@ class PinSpec extends SparkSpec {
   private def fpIndex(tag: String): String = {
     val name = s"graft_fp_pinspec_${tag}_$pid"
     FpIndex.buildIndex(spark, slice(0, 200), name,
-      Paths.get(FpIndex.indexRoot, name))
+      Paths.get(IndexCommit.indexRoot, name))
     name
   }
 
   private def drop(names: String*): Unit = names.foreach { n =>
     spark.sql(s"DROP TABLE IF EXISTS `$n`")
-    Lake.deleteTree(s"${ClusterIndex.indexRoot}/$n")
-    Lake.deleteTree(s"${FpIndex.indexRoot}/$n")
+    Lake.deleteTree(s"${IndexCommit.indexRoot}/$n")
+    Lake.deleteTree(s"${IndexCommit.indexRoot}/$n")
   }
 
   test("CurationSink.applyBatch leaves no persistent RDD behind") {
@@ -171,8 +171,8 @@ class PinSpec extends SparkSpec {
       val hist = featsOf(slice(0, 200))
       val cents = Clustering.lloydCentroids(hist.select(col("vec_id"),
         transform(col(featCol), x => x.cast("long")).as("qv")), 8, 1)
-      ClusterIndex.buildIndexFrame(spark, assignB(hist, cents), name,
-        Paths.get(ClusterIndex.indexRoot, name))
+      ClusterIndex.Layout.write(spark, assignB(hist, cents), name,
+        Paths.get(IndexCommit.indexRoot, name))
       MultimodalCurationSink.ModalIndex(name, cents)
     }
     val img = modal("img", Clustering.imageFeaturesOf(spark, _), "hist",

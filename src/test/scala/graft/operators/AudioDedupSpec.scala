@@ -58,7 +58,7 @@ class AudioDedupSpec extends SparkSpec {
 
   test("q126 plan: the AUDIO pair join reads its index bucketed, exchange-free") {
     // the q113/q121 plan discipline at the third modality
-    ClusterIndex.ensureAudio(spark, dir)
+    ClusterIndex.ensure(spark, dir, ClusterIndex.Audio)
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -66,7 +66,7 @@ class AudioDedupSpec extends SparkSpec {
     try {
       val plan = q("q126_audio_semdedup")(spark, dir)
         .queryExecution.executedPlan
-      val name = ClusterIndex.tableNameForAudio(dir)
+      val name = ClusterIndex.Audio.layout.tableNameFor(dir)
       def sideBucketedNoShuffle(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
         p.collect { case e: ShuffleExchangeExec => e }.isEmpty &&
           p.collect {
@@ -84,9 +84,9 @@ class AudioDedupSpec extends SparkSpec {
   }
 
   test("q126's audio index is served, never rebuilt in-line") {
-    val name = ClusterIndex.ensureAudio(spark, dir)
+    val name = ClusterIndex.ensure(spark, dir, ClusterIndex.Audio)
     val fpPath = java.nio.file.Paths.get(
-      ClusterIndex.indexRoot, name, "_GRAFT_FP")
+      IndexCommit.indexRoot, name, "_GRAFT_FP")
     val before = java.nio.file.Files.getLastModifiedTime(fpPath)
     // simulate a fresh JVM: catalog entry gone, files on disk
     spark.sql(s"DROP TABLE IF EXISTS `$name`")

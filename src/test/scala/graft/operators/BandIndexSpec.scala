@@ -149,7 +149,7 @@ class BandIndexSpec extends SparkSpec {
     try {
       BandIndex.buildIndex(spark, docsSlice(0, 200), name, path)
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      BandIndex.register(spark, name, path)
+      BandIndex.Layout.register(spark, name, path)
       BandIndex.append(spark, name, docsSlice(200, 230)) // must not throw
       val p2 = rows(BandIndex.probeIndex(spark, name, docsSlice(230, 256))._1)
       assert(p2 == rows(monolithic(spark,
@@ -168,7 +168,7 @@ class BandIndexSpec extends SparkSpec {
       BandIndex.append(spark, name, docsSlice(200, 230))
       BandIndex.append(spark, name, docsSlice(200, 230))
       val probe = rows(BandIndex.probeIndex(spark, name, docsSlice(230, 256))._1)
-      val (before, after) = BandIndex.compact(spark, name, path)
+      val (before, after) = BandIndex.Layout.compact(spark, name, path)
       assert(after < before, s"duplicates should fold: $before -> $after")
       assert(after == spark.table(name).distinct().count())
       // identical decisions, and the rewritten table still reads bucketed
@@ -230,7 +230,7 @@ class BandIndexSpec extends SparkSpec {
   test("a fresh session re-registers a valid on-disk index without rebuilding") {
     val name = BandIndex.ensure(spark, dir)
     val r1 = rows(BandIndex.probe(spark, dir))
-    val idxDir = java.nio.file.Paths.get(BandIndex.indexRoot, name)
+    val idxDir = java.nio.file.Paths.get(IndexCommit.indexRoot, name)
     val mtimeBefore = java.nio.file.Files.getLastModifiedTime(
       idxDir.resolve("_GRAFT_FP"))
     // simulate a JVM restart: Spark's default catalog is in-memory, so a

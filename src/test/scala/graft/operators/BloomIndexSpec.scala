@@ -80,7 +80,7 @@ class BloomIndexSpec extends SparkSpec {
     assert(n1 > 0, "bench slice must be non-empty for the drift test")
     val bloom1 = BloomIndex.bloom(spark, corpus.toString)
     // warm path: second ensure does not rewrite
-    val fpFile = java.nio.file.Paths.get(BloomIndex.indexRoot, name, "_GRAFT_FP")
+    val fpFile = java.nio.file.Paths.get(IndexCommit.indexRoot, name, "_GRAFT_FP")
     val mtime1 = java.nio.file.Files.getLastModifiedTime(fpFile)
     assert(BloomIndex.ensure(spark, corpus.toString) == name)
     assert(java.nio.file.Files.getLastModifiedTime(fpFile) == mtime1)
@@ -99,7 +99,7 @@ class BloomIndexSpec extends SparkSpec {
   test("a fresh session re-registers a valid on-disk index without rebuilding") {
     val name = BloomIndex.ensure(spark, dir)
     val r1 = graft.SparkEntry.queries("q99_decontam_indexed")(spark, dir).collect()
-    val fpFile = java.nio.file.Paths.get(BloomIndex.indexRoot, name, "_GRAFT_FP")
+    val fpFile = java.nio.file.Paths.get(IndexCommit.indexRoot, name, "_GRAFT_FP")
     val mtimeBefore = java.nio.file.Files.getLastModifiedTime(fpFile)
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
     assert(!spark.catalog.tableExists(name))

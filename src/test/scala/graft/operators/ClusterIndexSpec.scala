@@ -38,7 +38,7 @@ class ClusterIndexSpec extends SparkSpec {
     try {
       val plan = q("q113_semdedup_indexed")(spark, dir)
         .queryExecution.executedPlan
-      val name = ClusterIndex.tableNameFor(dir)
+      val name = ClusterIndex.Layout.tableNameFor(dir)
       val scans = plan.collect {
         case f: FileSourceScanExec
             if f.tableIdentifier.exists(_.table == name) => f
@@ -80,7 +80,7 @@ class ClusterIndexSpec extends SparkSpec {
   test("q121 plan: the IMAGE pair join reads its index bucketed, exchange-free") {
     // the q113 plan discipline at the multimodal layer: q121's
     // within-cell self-join must ride the image index's cid bucketing
-    ClusterIndex.ensureImage(spark, dir)
+    ClusterIndex.ensure(spark, dir, ClusterIndex.Image)
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -88,7 +88,7 @@ class ClusterIndexSpec extends SparkSpec {
     try {
       val plan = q("q121_image_semdedup")(spark, dir)
         .queryExecution.executedPlan
-      val name = ClusterIndex.tableNameForImage(dir)
+      val name = ClusterIndex.Image.layout.tableNameFor(dir)
       def sideBucketedNoShuffle(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
         p.collect { case e: ShuffleExchangeExec => e }.isEmpty &&
           p.collect {
@@ -106,9 +106,9 @@ class ClusterIndexSpec extends SparkSpec {
   }
 
   test("q121's image index is served, never rebuilt in-line") {
-    val name = ClusterIndex.ensureImage(spark, dir)
+    val name = ClusterIndex.ensure(spark, dir, ClusterIndex.Image)
     val fpPath = java.nio.file.Paths.get(
-      ClusterIndex.indexRoot, name, "_GRAFT_FP")
+      IndexCommit.indexRoot, name, "_GRAFT_FP")
     val before = java.nio.file.Files.getLastModifiedTime(fpPath)
     // simulate a fresh JVM: catalog entry gone, files on disk
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
@@ -141,7 +141,7 @@ class ClusterIndexSpec extends SparkSpec {
       8, 2)
     val name = "graft_clidx_q116_equiv"
     val root = java.nio.file.Files.createTempDirectory("graft-clidx-q116")
-    ClusterIndex.buildIndexFrame(spark,
+    ClusterIndex.Layout.write(spark,
       ClusterIndex.assignBatch(slice(0, 200), cents), name,
       root.resolve("idx"))
     val outDir = root.resolve("log").toString
@@ -182,7 +182,7 @@ class ClusterIndexSpec extends SparkSpec {
       8, 2)
     val name = "graft_clidx_q116_plan"
     val root = java.nio.file.Files.createTempDirectory("graft-clidx-q116p")
-    ClusterIndex.buildIndexFrame(spark,
+    ClusterIndex.Layout.write(spark,
       ClusterIndex.assignBatch(hist, cents), name, root.resolve("idx"))
     val b = ClusterIndex.assignBatch(batch, cents).localCheckpoint(true)
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
@@ -258,9 +258,9 @@ class ClusterIndexSpec extends SparkSpec {
       // Q*nprobe = 16 cells exist at all (K = 8), so the pruned scan
       // must select fewer buckets than the full layout.
       val pruned = scans.filter(f => f.optionalBucketSet.isDefined &&
-        f.optionalBucketSet.get.cardinality() < ClusterIndex.NumBuckets)
+        f.optionalBucketSet.get.cardinality() < IndexCommit.numBuckets)
       assert(pruned.nonEmpty,
-        s"candidate scan must be bucket-pruned below $name's ${ClusterIndex.NumBuckets}:\n$plan")
+        s"candidate scan must be bucket-pruned below $name's ${IndexCommit.numBuckets}:\n$plan")
       // and the probe side broadcasts onto it — the index never
       // shuffles to meet the probes
       val bhj = plan.collect {
@@ -278,7 +278,7 @@ class ClusterIndexSpec extends SparkSpec {
   test("q132 plan: the IMAGE candidate scan is bucket-pruned to the probed cells") {
     // q117's serving discipline at the multimodal layer: the image
     // probe must read ONLY the probed cells' buckets of the image index
-    val name = ClusterIndex.ensureImage(spark, dir)
+    val name = ClusterIndex.ensure(spark, dir, ClusterIndex.Image)
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -290,9 +290,9 @@ class ClusterIndexSpec extends SparkSpec {
       }
       assert(scans.nonEmpty)
       val pruned = scans.filter(f => f.optionalBucketSet.isDefined &&
-        f.optionalBucketSet.get.cardinality() < ClusterIndex.NumBuckets)
+        f.optionalBucketSet.get.cardinality() < IndexCommit.numBuckets)
       assert(pruned.nonEmpty,
-        s"image candidate scan must be bucket-pruned below ${ClusterIndex.NumBuckets}:\n$plan")
+        s"image candidate scan must be bucket-pruned below ${IndexCommit.numBuckets}:\n$plan")
       val bhj = plan.collect {
         case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
       }
@@ -308,7 +308,7 @@ class ClusterIndexSpec extends SparkSpec {
   test("a fresh session re-registers a valid on-disk index without rebuilding") {
     val name = ClusterIndex.ensure(spark, dir)
     val r1 = rows("q113_semdedup_indexed")
-    val idxDir = java.nio.file.Paths.get(ClusterIndex.indexRoot, name)
+    val idxDir = java.nio.file.Paths.get(IndexCommit.indexRoot, name)
     val mtimeBefore = java.nio.file.Files.getLastModifiedTime(
       idxDir.resolve("_GRAFT_FP"))
     spark.sql(s"DROP TABLE IF EXISTS `$name`")

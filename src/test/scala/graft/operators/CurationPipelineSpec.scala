@@ -35,7 +35,7 @@ class CurationPipelineSpec extends SparkSpec {
     def fpTime(root: String, name: String) =
       Files.getLastModifiedTime(Paths.get(root, name).resolve("_GRAFT_FP"))
     val (m1, m2) =
-      (fpTime(FpIndex.indexRoot, fpName), fpTime(BloomIndex.indexRoot, blName))
+      (fpTime(IndexCommit.indexRoot, fpName), fpTime(IndexCommit.indexRoot, blName))
     // simulate a fresh JVM: catalog entries gone, files on disk
     spark.sql(s"DROP TABLE IF EXISTS `$fpName`")
     spark.sql(s"DROP TABLE IF EXISTS `$blName`")
@@ -45,8 +45,8 @@ class CurationPipelineSpec extends SparkSpec {
       "q115 must serve char-span dedup from the persisted FpIndex")
     assert(spark.catalog.tableExists(blName),
       "q115 must serve decontamination from the persisted BloomIndex")
-    assert(fpTime(FpIndex.indexRoot, fpName) == m1 &&
-        fpTime(BloomIndex.indexRoot, blName) == m2,
+    assert(fpTime(IndexCommit.indexRoot, fpName) == m1 &&
+        fpTime(IndexCommit.indexRoot, blName) == m2,
       "a q115 run must never rebuild a persisted index in-line")
   }
 
@@ -107,9 +107,9 @@ class CurationPipelineSpec extends SparkSpec {
         "every doc must fan out into epochs 1..weight")
     }
     // cleanup the temp corpus's indexes (built once by this run)
-    Seq(FpIndex.tableNameFor(corpus) -> FpIndex.indexRoot,
-        BloomIndex.tableNameFor(corpus) -> BloomIndex.indexRoot,
-        BandIndex.tableNameFor(corpus) -> BandIndex.indexRoot)
+    Seq(FpIndex.Layout.tableNameFor(corpus) -> IndexCommit.indexRoot,
+        BloomIndex.Layout.tableNameFor(corpus) -> IndexCommit.indexRoot,
+        BandIndex.Layout.tableNameFor(corpus) -> IndexCommit.indexRoot)
       .foreach { case (n, root) =>
         spark.sql(s"DROP TABLE IF EXISTS `$n`")
         IndexCommit.deleteTree(Paths.get(root, n))
@@ -160,9 +160,9 @@ class CurationPipelineSpec extends SparkSpec {
     // (the index was built over the originals; a rewritten text would
     // misalign positions and the splice/evidence would light up)
     out.foreach(r => assert(r.getLong(4) == 0 && r.getLong(5) == 0))
-    Seq(FpIndex.tableNameFor(corpus) -> FpIndex.indexRoot,
-        BloomIndex.tableNameFor(corpus) -> BloomIndex.indexRoot,
-        BandIndex.tableNameFor(corpus) -> BandIndex.indexRoot)
+    Seq(FpIndex.Layout.tableNameFor(corpus) -> IndexCommit.indexRoot,
+        BloomIndex.Layout.tableNameFor(corpus) -> IndexCommit.indexRoot,
+        BandIndex.Layout.tableNameFor(corpus) -> IndexCommit.indexRoot)
       .foreach { case (n, root) =>
         spark.sql(s"DROP TABLE IF EXISTS `$n`")
         IndexCommit.deleteTree(Paths.get(root, n))
@@ -245,13 +245,13 @@ class CurationPipelineSpec extends SparkSpec {
     def fpTime(root: String, name: String) =
       Files.getLastModifiedTime(Paths.get(root, name).resolve("_GRAFT_FP"))
     val (m1, m2) =
-      (fpTime(FpIndex.indexRoot, fpName), fpTime(BloomIndex.indexRoot, blName))
+      (fpTime(IndexCommit.indexRoot, fpName), fpTime(IndexCommit.indexRoot, blName))
     val out = run118(dir)
     assert(out.map(_.getInt(0)).toSet == Set(1, 2),
       "both maintenance phases must emit verdicts")
-    assert(fpTime(FpIndex.indexRoot, fpName) == m1,
+    assert(fpTime(IndexCommit.indexRoot, fpName) == m1,
       "q118 must never touch the production FpIndex (scratch only)")
-    assert(fpTime(BloomIndex.indexRoot, blName) == m2,
+    assert(fpTime(IndexCommit.indexRoot, blName) == m2,
       "q118 reads the benchmark BloomIndex, never rebuilds it")
   }
 
@@ -302,12 +302,12 @@ class CurationPipelineSpec extends SparkSpec {
       assert(!r.getBoolean(10),
         "unseen-bigram batch docs must fall below the frozen cutoff")
     }
-    spark.sql(s"DROP TABLE IF EXISTS `${BloomIndex.tableNameFor(corpus)}`")
+    spark.sql(s"DROP TABLE IF EXISTS `${BloomIndex.Layout.tableNameFor(corpus)}`")
     IndexCommit.deleteTree(
-      Paths.get(BloomIndex.indexRoot, BloomIndex.tableNameFor(corpus)))
-    val scratch = FpIndex.tableNameFor(corpus) + "_cmaint_" +
+      Paths.get(IndexCommit.indexRoot, BloomIndex.Layout.tableNameFor(corpus)))
+    val scratch = FpIndex.Layout.tableNameFor(corpus) + "_cmaint_" +
       ProcessHandle.current().pid()
     spark.sql(s"DROP TABLE IF EXISTS `$scratch`")
-    IndexCommit.deleteTree(Paths.get(FpIndex.indexRoot, scratch))
+    IndexCommit.deleteTree(Paths.get(IndexCommit.indexRoot, scratch))
   }
 }

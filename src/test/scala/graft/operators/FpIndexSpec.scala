@@ -117,7 +117,7 @@ class FpIndexSpec extends SparkSpec {
       FpIndex.append(spark, name, docsSlice(200, 230))
       FpIndex.append(spark, name, docsSlice(200, 230))
       val probe = rows(FpIndex.probeSpans(spark, name, docsSlice(230, 256))._1)
-      val (before, after) = FpIndex.compact(spark, name, path)
+      val (before, after) = FpIndex.Layout.compact(spark, name, path)
       assert(after < before, s"duplicates should fold: $before -> $after")
       assert(after == spark.table(name).distinct().count())
       // identical spans, and the rewritten table still reads bucketed
@@ -158,7 +158,7 @@ class FpIndexSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val plan = q("q107_dup_spans")(spark, dir).queryExecution.executedPlan
-      val name = FpIndex.tableNameFor(dir)
+      val name = FpIndex.Layout.tableNameFor(dir)
       val scans = plan.collect {
         case f: FileSourceScanExec
             if f.tableIdentifier.exists(_.table == name) => f
@@ -198,7 +198,7 @@ class FpIndexSpec extends SparkSpec {
       // simulate a JVM restart: catalog entry gone, files remain, then
       // re-register through the REAL register() DDL
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      FpIndex.register(spark, name, path)
+      FpIndex.Layout.register(spark, name, path)
       FpIndex.append(spark, name, docsSlice(200, 230)) // must not throw
       val after = rows(FpIndex.probeSpans(spark, name, docsSlice(230, 256))._1)
       assert(before.nonEmpty || after.nonEmpty,
@@ -209,7 +209,7 @@ class FpIndexSpec extends SparkSpec {
   test("a fresh session re-registers a valid on-disk index without rebuilding") {
     val name = FpIndex.ensure(spark, dir)
     val r1 = q("q107_dup_spans")(spark, dir).collect().length
-    val idxDir = java.nio.file.Paths.get(FpIndex.indexRoot, name)
+    val idxDir = java.nio.file.Paths.get(IndexCommit.indexRoot, name)
     val mtimeBefore = java.nio.file.Files.getLastModifiedTime(
       idxDir.resolve("_GRAFT_FP"))
     // simulate a JVM restart: in-memory catalog loses the entry, files stay

@@ -42,7 +42,7 @@ class HotTermSpec extends SparkSpec {
 
   test("hot-term probe: bucket-pruned scan, postings-of-terms only") {
     val name = "graft_postings_hotterm_" + ProcessHandle.current().pid()
-    val path = Paths.get(PostingsIndex.indexRoot, name)
+    val path = Paths.get(IndexCommit.indexRoot, name)
     PostingsIndex.buildIndexDocs(spark, hotDocs(), name, path)
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -65,7 +65,7 @@ class HotTermSpec extends SparkSpec {
       }
       assert(scans.nonEmpty)
       val pruned = scans.filter(f => f.optionalBucketSet.isDefined &&
-        f.optionalBucketSet.get.cardinality() < PostingsIndex.NumBuckets)
+        f.optionalBucketSet.get.cardinality() < IndexCommit.numBuckets)
       assert(pruned.nonEmpty,
         s"probe must bucket-prune under a hot term:\n${probe.queryExecution}")
     } finally {

@@ -90,6 +90,18 @@ class IndexBucketsSpec extends SparkSpec with BeforeAndAfterAll {
       case other => other.children.exists(indexSideNoShuffle(_, name))
     }
 
+  /** The restart regression at a non-default count, the sinks' path:
+    * recover (re-register) must declare the SAME bucket number + sort
+    * spec or the bucketed append rejects.
+    */
+  private def appendAfterRestart(layout: IndexLayout, name: String,
+      path: java.nio.file.Path)(append: => Unit): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS `$name`")
+    layout.recover(spark, name, path)
+    append // must not throw
+    assert(spark.table(name).count() > 0)
+  }
+
   test("the bucket count participates in every index fingerprint") {
     val at8 = BandIndex.fingerprint(corpus)
     assert(at8.endsWith(s":bk$B"))
@@ -101,7 +113,7 @@ class IndexBucketsSpec extends SparkSpec with BeforeAndAfterAll {
       assert(atDefault.endsWith(":bk32"))
       // the tag rides sourceFingerprint, so all five families inherit
       // it: FpIndex and ClusterIndex append their params to this base
-      assert(ClusterIndex.fingerprint(corpus).contains(":bk32:"))
+      assert(ClusterIndex.Embedding.fingerprint(corpus).contains(":bk32:"))
     } finally sys.props("graft.index.buckets") = B.toString
   }
 
@@ -124,12 +136,9 @@ class IndexBucketsSpec extends SparkSpec with BeforeAndAfterAll {
             indexSideNoShuffle(j.right, name)),
           s"no sort-merge join reaches the 8-bucket index shuffle-free:\n$plan")
       }
-      // the restart regression at a non-default count: re-register must
-      // declare the SAME bucket number + sort spec or append rejects
-      spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      BandIndex.register(spark, name, path)
-      BandIndex.append(spark, name, docsSlice(200, 230)) // must not throw
-      assert(spark.table(name).count() > 0)
+      appendAfterRestart(BandIndex.Layout, name, path) {
+        BandIndex.append(spark, name, docsSlice(200, 230))
+      }
     } finally spark.sql(s"DROP TABLE IF EXISTS `$name`")
   }
 
@@ -150,10 +159,9 @@ class IndexBucketsSpec extends SparkSpec with BeforeAndAfterAll {
             indexSideNoShuffle(j.right, name)),
           s"history join must read the 8-bucket index shuffle-free:\n$plan")
       }
-      spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      FpIndex.register(spark, name, path)
-      FpIndex.append(spark, name, docsSlice(200, 230)) // must not throw
-      assert(spark.table(name).count() > 0)
+      appendAfterRestart(FpIndex.Layout, name, path) {
+        FpIndex.append(spark, name, docsSlice(200, 230))
+      }
     } finally spark.sql(s"DROP TABLE IF EXISTS `$name`")
   }
 
@@ -177,10 +185,10 @@ class IndexBucketsSpec extends SparkSpec with BeforeAndAfterAll {
       assert(sel.get.group(2).toInt == B,
         s"pruning denominator must be the configured count:\n$plan")
       assert(sel.get.group(1).toInt <= 2, "2 literal terms, <= 2 buckets")
-      spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      PostingsIndex.register(spark, name, path)
-      PostingsIndex.append(spark, name, path,
-        Seq((999999L, "alpha beta appended")).toDF("doc_id", "text"))
+      appendAfterRestart(PostingsIndex.Layout, name, path) {
+        PostingsIndex.append(spark, name, path,
+          Seq((999999L, "alpha beta appended")).toDF("doc_id", "text"))
+      }
       assert(spark.table(name)
         .filter(col("doc_id") === 999999L).count() > 0)
     } finally spark.sql(s"DROP TABLE IF EXISTS `$name`")
@@ -204,9 +212,27 @@ class IndexBucketsSpec extends SparkSpec with BeforeAndAfterAll {
     } finally spark.sql(s"DROP TABLE IF EXISTS `$name`")
   }
 
+  test("ClusterIndex at 8 buckets: post-restart append") {
+    val name = "graft_bk8_cluster"
+    val path = Files.createTempDirectory("graft-bk8-cluster").resolve("idx")
+    val rows = spark.table(ClusterIndex.ensure(spark, corpus))
+    try {
+      ClusterIndex.Layout.write(spark,
+        rows.filter(col("vec_id") % 2 === 0), name, path)
+      appendAfterRestart(ClusterIndex.Layout, name, path) {
+        ClusterIndex.Layout.append(name, rows.filter(col("vec_id") % 2 === 1))
+      }
+      assert(spark.table(name).count() == rows.count())
+      noBroadcastNoAqe {
+        assertBucketed(spark.table(name).groupBy("cid").count()
+          .queryExecution.executedPlan, name)
+      }
+    } finally spark.sql(s"DROP TABLE IF EXISTS `$name`")
+  }
+
   test("image ClusterIndex at 8 buckets: exchange-free cid pair join") {
     // the sixth persisted family under a non-default bucket count
-    val name = ClusterIndex.ensureImage(spark, corpus)
+    val name = ClusterIndex.ensure(spark, corpus, ClusterIndex.Image)
     try {
       noBroadcastNoAqe {
         val idx = spark.table(name)
@@ -225,7 +251,7 @@ class IndexBucketsSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("audio ClusterIndex at 8 buckets: exchange-free cid pair join") {
     // the seventh persisted family under a non-default bucket count
-    val name = ClusterIndex.ensureAudio(spark, corpus)
+    val name = ClusterIndex.ensure(spark, corpus, ClusterIndex.Audio)
     try {
       noBroadcastNoAqe {
         val idx = spark.table(name)
@@ -244,7 +270,7 @@ class IndexBucketsSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("video ClusterIndex at 8 buckets: exchange-free cid pair join") {
     // the eighth persisted family under a non-default bucket count
-    val name = ClusterIndex.ensureVideo(spark, corpus)
+    val name = ClusterIndex.ensure(spark, corpus, ClusterIndex.Video)
     try {
       noBroadcastNoAqe {
         val idx = spark.table(name)
@@ -281,7 +307,7 @@ class IndexBucketsSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("flipping the knob back stales the 8-bucket index and rebuilds") {
     val name = BandIndex.ensure(spark, corpus)
-    val idxDir = Paths.get(BandIndex.indexRoot, name)
+    val idxDir = Paths.get(IndexCommit.indexRoot, name)
     // fingerprint line only — the marker also carries its tree manifest
     val fp8 = Files.readString(idxDir.resolve("_GRAFT_FP"))
       .linesIterator.next()

@@ -14,8 +14,8 @@ import graft.SparkSpec
   * never touched. Bare legacy `_maint`/`_cmaint` names (pre-pid-scoping)
   * are reclaimed only once COLD — during a mixed-version rollout an
   * old binary still actively rewrites that exact name, so a fresh mtime
-  * means in-use, not orphaned. The postings family keeps its own root,
-  * so [[IndexCommit.purgeAllScratchRoots]] must sweep it too.
+  * means in-use, not orphaned. Every family, postings included, keeps
+  * its indexes and scratch under the one shared root.
   */
 class IndexCommitSpec extends SparkSpec {
 
@@ -141,22 +141,24 @@ class IndexCommitSpec extends SparkSpec {
     }
   }
 
-  test("purgeAllScratchRoots sweeps the postings root too") {
-    val proot = Paths.get(PostingsIndex.indexRoot)
+  test("a dead pid's postings scratch under the shared root is reclaimed") {
+    val proot = Paths.get(IndexCommit.indexRoot)
     Files.createDirectories(proot)
     val dead = Iterator.iterate(3999999999L)(_ - 7)
       .find(p => !ProcessHandle.of(p).isPresent).get
-    val deadMaint = proot.resolve(s"graft_postings_ictest_maint_$dead")
+    val deadMaint = proot.resolve(s"graft_postings_ictest_cpt_maint_$dead")
     val deadBuild = proot.resolve(s"graft_postings_ictest.build-$dead")
-    val live = proot.resolve(
-      s"graft_postings_ictest_maint_${ProcessHandle.current().pid()}")
+    // the live name comes from the helper every maintenance loop uses,
+    // so the janitor's name rule and the loops' names cannot drift
+    val live = IndexLayout.pathOf(
+      IndexLayout.scratchName("graft_postings_ictest", "_cpt_maint"))
     val all = Seq(deadMaint, deadBuild, live)
     all.foreach { p =>
       Files.createDirectories(p)
       Files.writeString(p.resolve("marker"), "x")
     }
     try {
-      IndexCommit.purgeAllScratchRoots()
+      IndexCommit.purgeStaleScratch()
       assert(!Files.exists(deadMaint),
         "dead pid's postings _maint_ tree must be reclaimed by the sweep")
       assert(!Files.exists(deadBuild),

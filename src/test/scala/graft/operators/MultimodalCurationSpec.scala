@@ -35,11 +35,11 @@ class MultimodalCurationSpec extends SparkSpec {
   test("q123 serves all three persisted indexes; none rebuilt in-line") {
     val fpName = FpIndex.ensure(spark, dir)
     val blName = BloomIndex.ensure(spark, dir)
-    val imName = ClusterIndex.ensureImage(spark, dir)
+    val imName = ClusterIndex.ensure(spark, dir, ClusterIndex.Image)
     def t(root: String, n: String) =
       Files.getLastModifiedTime(Paths.get(root, n).resolve("_GRAFT_FP"))
-    val named = Seq(FpIndex.indexRoot -> fpName,
-      BloomIndex.indexRoot -> blName, ClusterIndex.indexRoot -> imName)
+    val named = Seq(IndexCommit.indexRoot -> fpName,
+      IndexCommit.indexRoot -> blName, IndexCommit.indexRoot -> imName)
     val m0 = named.map { case (r, n) => t(r, n) }
     // simulate a fresh JVM: catalog entries gone, files on disk
     named.foreach { case (_, n) => spark.sql(s"DROP TABLE IF EXISTS `$n`") }
@@ -59,7 +59,7 @@ class MultimodalCurationSpec extends SparkSpec {
     // the prune verdicts, recomputed from the same persisted index the
     // pipeline reads
     val verd = Clustering.semdedupFrom(
-        spark.table(ClusterIndex.ensureImage(spark, dir))
+        spark.table(ClusterIndex.ensure(spark, dir, ClusterIndex.Image))
           .filter(col("vec_id") % 3 === 0))
       .select("vec_id", "kept").collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
@@ -115,13 +115,13 @@ class MultimodalCurationSpec extends SparkSpec {
   test("q128 serves all FOUR persisted indexes; none rebuilt in-line") {
     val fpName = FpIndex.ensure(spark, dir)
     val blName = BloomIndex.ensure(spark, dir)
-    val imName = ClusterIndex.ensureImage(spark, dir)
-    val auName = ClusterIndex.ensureAudio(spark, dir)
+    val imName = ClusterIndex.ensure(spark, dir, ClusterIndex.Image)
+    val auName = ClusterIndex.ensure(spark, dir, ClusterIndex.Audio)
     def t(root: String, n: String) =
       Files.getLastModifiedTime(Paths.get(root, n).resolve("_GRAFT_FP"))
-    val named = Seq(FpIndex.indexRoot -> fpName,
-      BloomIndex.indexRoot -> blName, ClusterIndex.indexRoot -> imName,
-      ClusterIndex.indexRoot -> auName)
+    val named = Seq(IndexCommit.indexRoot -> fpName,
+      IndexCommit.indexRoot -> blName, IndexCommit.indexRoot -> imName,
+      IndexCommit.indexRoot -> auName)
     val m0 = named.map { case (r, n) => t(r, n) }
     named.foreach { case (_, n) => spark.sql(s"DROP TABLE IF EXISTS `$n`") }
     assert(run("q128_trimodal_curation").collect().nonEmpty)
@@ -154,7 +154,7 @@ class MultimodalCurationSpec extends SparkSpec {
     // every shipped audio attachment passed the audio prune, recomputed
     // from the same persisted index the pipeline reads
     val verd = Clustering.semdedupFrom(
-        spark.table(ClusterIndex.ensureAudio(spark, dir))
+        spark.table(ClusterIndex.ensure(spark, dir, ClusterIndex.Audio))
           .filter(col("vec_id") % 4 === 1))
       .select("vec_id", "kept").collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
@@ -179,11 +179,11 @@ class MultimodalCurationSpec extends SparkSpec {
 
   test("q131 serves all FIVE persisted indexes; video stage load-bearing") {
     val named = Seq(
-      FpIndex.indexRoot -> FpIndex.ensure(spark, dir),
-      BloomIndex.indexRoot -> BloomIndex.ensure(spark, dir),
-      ClusterIndex.indexRoot -> ClusterIndex.ensureImage(spark, dir),
-      ClusterIndex.indexRoot -> ClusterIndex.ensureAudio(spark, dir),
-      ClusterIndex.indexRoot -> ClusterIndex.ensureVideo(spark, dir))
+      IndexCommit.indexRoot -> FpIndex.ensure(spark, dir),
+      IndexCommit.indexRoot -> BloomIndex.ensure(spark, dir),
+      IndexCommit.indexRoot -> ClusterIndex.ensure(spark, dir, ClusterIndex.Image),
+      IndexCommit.indexRoot -> ClusterIndex.ensure(spark, dir, ClusterIndex.Audio),
+      IndexCommit.indexRoot -> ClusterIndex.ensure(spark, dir, ClusterIndex.Video))
     def t(root: String, n: String) =
       Files.getLastModifiedTime(Paths.get(root, n).resolve("_GRAFT_FP"))
     val m0 = named.map { case (r, n) => t(r, n) }
@@ -200,7 +200,7 @@ class MultimodalCurationSpec extends SparkSpec {
     out.foreach(r => assert(r.getBoolean(1) == (r.getLong(0) % 5 == 2),
       s"doc ${r.getLong(0)}: has_video must track the arrival rule"))
     val verd = Clustering.semdedupFrom(
-        spark.table(ClusterIndex.ensureVideo(spark, dir))
+        spark.table(ClusterIndex.ensure(spark, dir, ClusterIndex.Video))
           .filter(col("vec_id") % 5 === 2))
       .select("vec_id", "kept").collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
@@ -239,7 +239,7 @@ class MultimodalCurationSpec extends SparkSpec {
   }
 
   test("s2i plan: the %3-filtered pair join stays bucketed, exchange-free") {
-    val name = ClusterIndex.ensureImage(spark, dir)
+    val name = ClusterIndex.ensure(spark, dir, ClusterIndex.Image)
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

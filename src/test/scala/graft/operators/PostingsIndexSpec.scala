@@ -32,7 +32,7 @@ class PostingsIndexSpec extends SparkSpec {
       .findFirstMatchIn(plan)
     assert(sel.nonEmpty, s"no bucket pruning in plan:\n$plan")
     val (k, n) = (sel.get.group(1).toInt, sel.get.group(2).toInt)
-    assert(n == PostingsIndex.NumBuckets)
+    assert(n == IndexCommit.numBuckets)
     assert(k < n, s"probe read all $n buckets — pruning did not engage")
     // 8 query terms can hash into at most 8 buckets
     assert(k <= 8, s"selected $k buckets for 8 terms")
@@ -64,7 +64,7 @@ class PostingsIndexSpec extends SparkSpec {
         .select("doc_id", "text").filter(col("doc_id") % 2 === 0)
       PostingsIndex.buildIndexDocs(spark, hist, name, path)
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      PostingsIndex.register(spark, name, path)
+      PostingsIndex.Layout.register(spark, name, path)
       val batch = Seq((999999L, "alpha beta gamma appended batch document"))
         .toDF("doc_id", "text")
       PostingsIndex.append(spark, name, path, batch) // must not throw
@@ -79,8 +79,8 @@ class PostingsIndexSpec extends SparkSpec {
     Files.copy(Paths.get(s"$sf0001/documents.parquet"),
       corpus.resolve("documents.parquet"), StandardCopyOption.COPY_ATTRIBUTES)
     val dir = corpus.toString
-    val name = PostingsIndex.tableNameFor(dir)
-    val idxDir = Paths.get(PostingsIndex.indexRoot, name)
+    val name = PostingsIndex.Layout.tableNameFor(dir)
+    val idxDir = Paths.get(IndexCommit.indexRoot, name)
     try {
       val (n1, docs1, _) = PostingsIndex.ensure(spark, dir)
       assert(n1 == name && spark.catalog.tableExists(name))

@@ -116,7 +116,7 @@ class RestoreSpec extends SparkSpec {
     try {
       // a sink-managed index is born MARKER-LESS (initIndex/append —
       // there is no source to fingerprint)
-      FpIndex.initIndex(spark, name, tornPath)
+      FpIndex.Layout.initIndex(spark, name, tornPath)
       FpIndex.append(spark, name, hist)
       assert(IndexCommit.readFp(tornPath).isEmpty,
         "a never-compacted sink index has no marker")
@@ -130,7 +130,7 @@ class RestoreSpec extends SparkSpec {
       // the hole, closed: compaction must synthesize a marker identity
       // and publish through the retire tail — a marker-less rewrite
       // would delete the one copy of the history in place
-      FpIndex.compact(spark, name, tornPath)
+      FpIndex.Layout.compact(spark, name, tornPath)
       assert(IndexCommit.readFp(tornPath)
           .contains(IndexCommit.sinkHistoryFp(name)),
         "compaction of a marker-less index must publish marker-bound")
@@ -146,7 +146,7 @@ class RestoreSpec extends SparkSpec {
         .count { case (p, _) => !p.split('/').last.startsWith("_") }
       assert(nData > 1, s"need a multi-file tree to tear (saw $nData)")
       TornRenameFileSystem.armDelete(name, afterNFiles = 1)
-      intercept[java.io.IOException](FpIndex.compact(spark, name, tornPath))
+      intercept[java.io.IOException](FpIndex.Layout.compact(spark, name, tornPath))
       assert(TornRenameFileSystem.deleteCrashes > 0)
       TornRenameFileSystem.disarm()
       assert(!IndexCommit.treeBound(tornPath),
@@ -158,7 +158,7 @@ class RestoreSpec extends SparkSpec {
 
       // the sink restart: recover restores the history and probes
       // answer exactly as before the crash
-      assert(FpIndex.recover(spark, name, tornPath),
+      assert(FpIndex.Layout.recover(spark, name, tornPath),
         "recover must restore the crash-stranded retiree")
       assert(IndexCommit.treeBound(tornPath))
       assert(probeRows() == want,
@@ -176,7 +176,7 @@ class RestoreSpec extends SparkSpec {
       Lake.deleteTree(tornPath.toString)
       Lake.mkdirs(tornPath.toString)
       val e = intercept[java.io.IOException](
-        FpIndex.recover(spark, name, tornPath))
+        FpIndex.Layout.recover(spark, name, tornPath))
       assert(e.getMessage.contains("not recoverable"))
       hist.unpersist()
     } finally {
@@ -224,27 +224,27 @@ class RestoreSpec extends SparkSpec {
       .localCheckpoint(true)
     val arrivals = hist.withColumn("doc_id", col("doc_id") + lit(1000000L))
     try {
-      BandIndex.initIndex(spark, name, tornPath)
+      BandIndex.Layout.initIndex(spark, name, tornPath)
       BandIndex.append(spark, name, hist)
       def probeRows() = BandIndex.probeIndex(spark, name, arrivals)._1
         .collect().map(_.toString).sorted.toSeq
       val want = probeRows()
       assert(want.nonEmpty, "exact-duplicate arrivals must hit history")
 
-      BandIndex.compact(spark, name, tornPath)
+      BandIndex.Layout.compact(spark, name, tornPath)
       assert(IndexCommit.readFp(tornPath)
           .contains(IndexCommit.sinkHistoryFp(name)))
       assert(probeRows() == want)
 
       TornRenameFileSystem.armDelete(name, afterNFiles = 1)
-      intercept[java.io.IOException](BandIndex.compact(spark, name, tornPath))
+      intercept[java.io.IOException](BandIndex.Layout.compact(spark, name, tornPath))
       TornRenameFileSystem.disarm()
       assert(!IndexCommit.treeBound(tornPath))
       Files.move(
         Paths.get(path.toString + ".old-" + ProcessHandle.current().pid()),
         Paths.get(path.toString + ".old-" + deadPid))
 
-      assert(BandIndex.recover(spark, name, tornPath))
+      assert(BandIndex.Layout.recover(spark, name, tornPath))
       assert(probeRows() == want,
         "the restored band history must answer probes identically")
       hist.unpersist()
@@ -271,15 +271,15 @@ class RestoreSpec extends SparkSpec {
       array(col("id").cast("double"), lit(1.0)).as("v"),
       lit(1.0).as("nrm"))
     try {
-      ClusterIndex.initIndex(spark, name, tornPath)
-      ClusterIndex.append(spark, name, rows)
-      ClusterIndex.append(spark, name, rows) // the crash-replayed batch
+      ClusterIndex.Layout.initIndex(spark, name, tornPath)
+      ClusterIndex.Layout.append(name, rows)
+      ClusterIndex.Layout.append(name, rows) // the crash-replayed batch
       // a frozen-cell sidecar rides along (the history-seeded shape)
       spark.range(4).select(col("id").as("cid"),
           array(lit(0.0), lit(1.0)).as("cv"))
         .coalesce(1).write.parquet(s"torn:${path.toString}/_CENTROIDS")
 
-      val (before, after) = ClusterIndex.compact(spark, name, tornPath)
+      val (before, after) = ClusterIndex.Layout.compact(spark, name, tornPath)
       assert(before == 80L && after == 40L,
         "compaction must fold exactly the duplicated rows")
       assert(IndexCommit.readFp(tornPath)
@@ -290,14 +290,14 @@ class RestoreSpec extends SparkSpec {
 
       TornRenameFileSystem.armDelete(name, afterNFiles = 1)
       intercept[java.io.IOException](
-        ClusterIndex.compact(spark, name, tornPath))
+        ClusterIndex.Layout.compact(spark, name, tornPath))
       TornRenameFileSystem.disarm()
       assert(!IndexCommit.treeBound(tornPath))
       Files.move(
         Paths.get(path.toString + ".old-" + ProcessHandle.current().pid()),
         Paths.get(path.toString + ".old-" + deadPid))
 
-      assert(ClusterIndex.recover(spark, name, tornPath))
+      assert(ClusterIndex.Layout.recover(spark, name, tornPath))
       assert(spark.table(name).count() == 40L,
         "the restored history must hold the compacted rows")
       assert(spark.read.parquet(s"torn:${path.toString}/_CENTROIDS")
@@ -343,7 +343,7 @@ class RestoreSpec extends SparkSpec {
       assert(c2 - c1 == c1 - c0, "the replay must duplicate exactly the batch")
       assert(PostingsIndex.sidecarVersion(tornPath) == 1L)
 
-      val (before, after) = PostingsIndex.compact(spark, name, tornPath)
+      val (before, after) = PostingsIndex.Layout.compact(spark, name, tornPath)
       assert(before == c2 && after == c1,
         "compaction must fold exactly the duplicate copy")
       assert(IndexCommit.readFp(tornPath)
@@ -362,14 +362,14 @@ class RestoreSpec extends SparkSpec {
 
       TornRenameFileSystem.armDelete(name, afterNFiles = 1)
       intercept[java.io.IOException](
-        PostingsIndex.compact(spark, name, tornPath))
+        PostingsIndex.Layout.compact(spark, name, tornPath))
       TornRenameFileSystem.disarm()
       assert(!IndexCommit.treeBound(tornPath))
       Files.move(
         Paths.get(path.toString + ".old-" + ProcessHandle.current().pid()),
         Paths.get(path.toString + ".old-" + deadPid))
 
-      assert(PostingsIndex.recover(spark, name, tornPath))
+      assert(PostingsIndex.Layout.recover(spark, name, tornPath))
       assert(PostingsIndex.sidecarVersion(tornPath) == 2L,
         "the restored history must hold the full sidecar estate")
       hist.unpersist(); batch.unpersist()

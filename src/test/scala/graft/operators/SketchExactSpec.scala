@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -15,7 +16,7 @@ import graft.SparkSpec
   *    weight, and the plan is TakeOrderedAndProject (top-k merge), not a
   *    global sort.
   */
-class SketchExactSpec extends SparkSpec {
+class SketchExactSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def q(name: String) =
     graft.SparkEntry.queries(name)(spark, sf0001)
@@ -132,6 +133,23 @@ class SketchExactSpec extends SparkSpec {
       assert(ranks == (1 to ranks.size), s"$src ranks not contiguous")
       assert(ranks.size <= 10)
     }
+  }
+
+  test("q100 plans one per-source window with a partial WindowGroupLimit") {
+    // the map side cuts each source to k rows before the exchange, so a
+    // hot source never lands whole in one task
+    val df = q("q100_stratified_weighted")
+    assert(df.collect().nonEmpty)
+    val plan = df.queryExecution.executedPlan
+    val partial = collectWithSubqueries(plan) {
+      case l: org.apache.spark.sql.execution.window.WindowGroupLimitExec
+          if l.mode == org.apache.spark.sql.execution.window.Partial => l
+    }
+    assert(partial.nonEmpty, plan)
+    val windows = collectWithSubqueries(plan) {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }
+    assert(windows.size == 1, plan)
   }
 
   test("q97 plans as TakeOrderedAndProject, not a global sort") {

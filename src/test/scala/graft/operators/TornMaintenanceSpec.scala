@@ -44,7 +44,7 @@ class TornMaintenanceSpec extends SparkSpec {
       IndexCommit.commitBuild(spark, name, tornPath, Some(fp1)) { (tn, tp) =>
         FpIndex.buildIndex(spark, hist, tn, tp)
       }
-      FpIndex.register(spark, name, tornPath)
+      FpIndex.Layout.register(spark, name, tornPath)
       assert(IndexCommit.fpValid(tornPath, fp1),
         "a clean publish on the torn store must read as valid")
 
@@ -88,7 +88,7 @@ class TornMaintenanceSpec extends SparkSpec {
       IndexCommit.commitBuild(spark, name, tornPath, Some(fp2)) { (tn, tp) =>
         FpIndex.buildIndex(spark, hist, tn, tp)
       }
-      FpIndex.register(spark, name, tornPath)
+      FpIndex.Layout.register(spark, name, tornPath)
       assert(IndexCommit.fpValid(tornPath, fp2))
       val p3 = FpIndex.probeSpans(spark, name, arrivals(3000000L))._1.collect()
       assert(p3.nonEmpty, "the rebuilt index must answer probes")

@@ -88,7 +88,7 @@ class VideoDedupSpec extends SparkSpec {
   }
 
   test("q129 plan: the VIDEO pair join reads its index bucketed, exchange-free") {
-    ClusterIndex.ensureVideo(spark, dir)
+    ClusterIndex.ensure(spark, dir, ClusterIndex.Video)
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     val broadcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -96,7 +96,7 @@ class VideoDedupSpec extends SparkSpec {
     try {
       val plan = q("q129_video_semdedup")(spark, dir)
         .queryExecution.executedPlan
-      val name = ClusterIndex.tableNameForVideo(dir)
+      val name = ClusterIndex.Video.layout.tableNameFor(dir)
       def sideBucketedNoShuffle(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
         p.collect { case e: ShuffleExchangeExec => e }.isEmpty &&
           p.collect {
@@ -114,9 +114,9 @@ class VideoDedupSpec extends SparkSpec {
   }
 
   test("q129's video index is served, never rebuilt in-line") {
-    val name = ClusterIndex.ensureVideo(spark, dir)
+    val name = ClusterIndex.ensure(spark, dir, ClusterIndex.Video)
     val fpPath = java.nio.file.Paths.get(
-      ClusterIndex.indexRoot, name, "_GRAFT_FP")
+      IndexCommit.indexRoot, name, "_GRAFT_FP")
     val before = java.nio.file.Files.getLastModifiedTime(fpPath)
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
     val out = q("q129_video_semdedup")(spark, dir).collect()

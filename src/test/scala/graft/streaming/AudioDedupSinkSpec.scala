@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.MediaCodecs.WavCodec
-import graft.operators.{ClusterIndex, Clustering}
+import graft.operators.{ClusterIndex, Clustering, IndexCommit}
 
 /** [[AudioDedupSink]] — the streamed audio-ingest verdicts must equal
   * q127's (the oracle-gated maintenance loop that runs the SAME
@@ -46,7 +46,7 @@ class AudioDedupSinkSpec extends SparkSpec {
     * iterations — the engine constants).
     */
   private def seed(name: String): DataFrame = {
-    val path = Paths.get(ClusterIndex.indexRoot, name)
+    val path = Paths.get(IndexCommit.indexRoot, name)
     val feats = Clustering.audioFeaturesOf(spark,
         graft.core.Tables(spark, dir, "documents")
           .select(col("doc_id"), col("text")))
@@ -59,7 +59,7 @@ class AudioDedupSinkSpec extends SparkSpec {
       hist.select(col("vec_id"),
         transform(col("env"), x => x.cast("long")).as("qv")), 8, 2)
       .localCheckpoint(true)
-    ClusterIndex.buildIndexFrame(spark,
+    ClusterIndex.Layout.write(spark,
       ClusterIndex.assignAudioBatch(hist, cents), name, path)
     feats.unpersist()
     cents
@@ -99,7 +99,7 @@ class AudioDedupSinkSpec extends SparkSpec {
     } finally {
       cents.unpersist()
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      graft.core.Lake.deleteTree(s"${ClusterIndex.indexRoot}/$name")
+      graft.core.Lake.deleteTree(s"${IndexCommit.indexRoot}/$name")
       graft.core.Lake.deleteTree(out)
     }
   }
@@ -120,7 +120,7 @@ class AudioDedupSinkSpec extends SparkSpec {
         .localCheckpoint(true)
       val verdicts = ClusterIndex.probeVerdicts(spark, name, b2,
         excludeBatchFromHistory = true).localCheckpoint(true)
-      ClusterIndex.append(spark, name,
+      ClusterIndex.Layout.append(name,
         b2.join(verdicts.filter(col("kept")).select("vec_id"), "vec_id"))
       // replay: the batch's own half-committed rows are in the index;
       // the exclusion leg must make the verdicts identical to a clean
@@ -135,7 +135,7 @@ class AudioDedupSinkSpec extends SparkSpec {
     } finally {
       cents.unpersist()
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      graft.core.Lake.deleteTree(s"${ClusterIndex.indexRoot}/$name")
+      graft.core.Lake.deleteTree(s"${IndexCommit.indexRoot}/$name")
       graft.core.Lake.deleteTree(out)
     }
   }

@@ -77,7 +77,7 @@ class ClusterIndexSinkSpec extends SparkSpec {
 
   private def freshIndex(tag: String): String = {
     val name = s"graft_clidx_$tag"
-    ClusterIndex.initIndex(spark, name,
+    ClusterIndex.Layout.initIndex(spark, name,
       java.nio.file.Paths.get(tmp(s"graft-clidx-$tag"), "idx"))
     name
   }
@@ -129,7 +129,7 @@ class ClusterIndexSinkSpec extends SparkSpec {
     assert(clean == probe(exclude = false),
       "exclusion must be a no-op before any append of this batch")
     // crash window: admitted rows appended, log NOT committed
-    ClusterIndex.append(spark, name,
+    ClusterIndex.Layout.append(name,
       b1.join(Seq(4L).toDF("vec_id"), "vec_id"))
     assert(probe(exclude = false) != clean,
       "seam must be real: vec 4 sees itself in history and self-prunes")

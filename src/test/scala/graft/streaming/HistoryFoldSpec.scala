@@ -94,7 +94,7 @@ class HistoryFoldSpec extends SparkSpec {
 
   test("a real ingest sink folds between batches; decisions stay identical and the stream continues") {
     val name = s"graft_histfold_idx_${ProcessHandle.current().pid()}"
-    BandIndex.initIndex(spark, name, Paths.get(tmp("graft-histfold-idx"), "i"))
+    BandIndex.Layout.initIndex(spark, name, Paths.get(tmp("graft-histfold-idx"), "i"))
     val dir = tmp("graft-histfold-sink")
     val a1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val b1 = "one two three four five six seven eight nine ten"
@@ -175,8 +175,8 @@ class HistoryFoldSpec extends SparkSpec {
       hist.select(col("vec_id"),
         transform(col("hist"), x => x.cast("long")).as("qv")), 8, 2)
       .localCheckpoint(true)
-    ClusterIndex.buildIndexFrame(spark, ClusterIndex.assignImageBatch(hist, cents),
-      name, java.nio.file.Paths.get(ClusterIndex.indexRoot, name))
+    ClusterIndex.Layout.write(spark, ClusterIndex.assignImageBatch(hist, cents),
+      name, java.nio.file.Paths.get(IndexCommit.indexRoot, name))
     hist.unpersist()
     try {
       val rows = docs.filter(col("bucket") >= 200)
@@ -223,7 +223,7 @@ class HistoryFoldSpec extends SparkSpec {
     } finally {
       cents.unpersist()
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      Lake.deleteTree(s"${ClusterIndex.indexRoot}/$name")
+      Lake.deleteTree(s"${IndexCommit.indexRoot}/$name")
       Lake.deleteTree(out)
     }
   }

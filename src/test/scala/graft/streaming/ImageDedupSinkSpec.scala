@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
 import graft.functions.MediaCodecs.PpmCodec
-import graft.operators.{ClusterIndex, Clustering}
+import graft.operators.{ClusterIndex, Clustering, IndexCommit}
 
 /** [[ImageDedupSink]] — the streamed image-ingest verdicts must equal
   * q125's (the oracle-gated maintenance loop that runs the SAME
@@ -48,7 +48,7 @@ class ImageDedupSinkSpec extends SparkSpec {
     * iterations — the engine constants).
     */
   private def seed(name: String): DataFrame = {
-    val path = Paths.get(ClusterIndex.indexRoot, name)
+    val path = Paths.get(IndexCommit.indexRoot, name)
     val feats = Clustering.imageFeaturesOf(spark,
         graft.core.Tables(spark, dir, "documents")
           .select(col("doc_id"), col("text")))
@@ -61,7 +61,7 @@ class ImageDedupSinkSpec extends SparkSpec {
       hist.select(col("vec_id"),
         transform(col("hist"), x => x.cast("long")).as("qv")), 8, 2)
       .localCheckpoint(true)
-    ClusterIndex.buildIndexFrame(spark,
+    ClusterIndex.Layout.write(spark,
       ClusterIndex.assignImageBatch(hist, cents), name, path)
     feats.unpersist()
     cents
@@ -101,7 +101,7 @@ class ImageDedupSinkSpec extends SparkSpec {
     } finally {
       cents.unpersist()
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      graft.core.Lake.deleteTree(s"${ClusterIndex.indexRoot}/$name")
+      graft.core.Lake.deleteTree(s"${IndexCommit.indexRoot}/$name")
       graft.core.Lake.deleteTree(out)
     }
   }
@@ -134,7 +134,7 @@ class ImageDedupSinkSpec extends SparkSpec {
     } finally {
       cents.unpersist()
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      graft.core.Lake.deleteTree(s"${ClusterIndex.indexRoot}/$name")
+      graft.core.Lake.deleteTree(s"${IndexCommit.indexRoot}/$name")
       graft.core.Lake.deleteTree(out)
     }
   }
@@ -155,7 +155,7 @@ class ImageDedupSinkSpec extends SparkSpec {
         .localCheckpoint(true)
       val verdicts = ClusterIndex.probeVerdicts(spark, name, b2,
         excludeBatchFromHistory = true).localCheckpoint(true)
-      ClusterIndex.append(spark, name,
+      ClusterIndex.Layout.append(name,
         b2.join(verdicts.filter(col("kept")).select("vec_id"), "vec_id"))
       // replay: the batch's own half-committed rows are in the index;
       // the exclusion leg must make the verdicts identical to a clean
@@ -170,7 +170,7 @@ class ImageDedupSinkSpec extends SparkSpec {
     } finally {
       cents.unpersist()
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      graft.core.Lake.deleteTree(s"${ClusterIndex.indexRoot}/$name")
+      graft.core.Lake.deleteTree(s"${IndexCommit.indexRoot}/$name")
       graft.core.Lake.deleteTree(out)
     }
   }
@@ -207,7 +207,7 @@ class ImageDedupSinkSpec extends SparkSpec {
         transform(col("hist"), x => x.cast("long")).as("qv")), 8, 2)
       .localCheckpoint(true)
     try {
-      ClusterIndex.buildIndexFrame(spark,
+      ClusterIndex.Layout.write(spark,
         ClusterIndex.assignImageBatch(hist, cents), name, tornPath)
       feats.unpersist()
       assert(ImageDedupSink.applyBatch(
@@ -215,7 +215,7 @@ class ImageDedupSinkSpec extends SparkSpec {
 
       TornRenameFileSystem.armDelete("imgdedup-recov", afterNFiles = 1)
       intercept[java.io.IOException](
-        ClusterIndex.compact(spark, name, tornPath))
+        ClusterIndex.Layout.compact(spark, name, tornPath))
       assert(TornRenameFileSystem.deleteCrashes > 0)
       TornRenameFileSystem.disarm()
       assert(!IndexCommit.treeBound(tornPath),
@@ -229,7 +229,7 @@ class ImageDedupSinkSpec extends SparkSpec {
         Paths.get(path.toString + ".old-" + ProcessHandle.current().pid()),
         Paths.get(path.toString + ".old-" + deadPid))
 
-      assert(ClusterIndex.recover(spark, name, tornPath),
+      assert(ClusterIndex.Layout.recover(spark, name, tornPath),
         "adoption must have made the first compaction's retiree restorable")
 
       // the restarted stream: replay guard still skips batch 0...

@@ -31,7 +31,7 @@ class IngestDedupSinkSpec extends SparkSpec {
 
   private def freshIndex(tag: String): String = {
     val name = s"graft_ingest_idx_$tag"
-    BandIndex.initIndex(spark, name,
+    BandIndex.Layout.initIndex(spark, name,
       java.nio.file.Paths.get(tmp(s"graft-ingest-$tag"), "idx"))
     name
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.MediaCodecs
-import graft.operators.{ClusterIndex, Clustering}
+import graft.operators.{ClusterIndex, Clustering, IndexCommit}
 
 /** The quarantine policy at the STANDALONE modal ingest sinks
   * (surfaces 20/22/23): a malformed payload in the ingest stream is
@@ -42,8 +42,8 @@ class ModalQuarantineSpec extends SparkSpec {
       hist.select(col("vec_id"),
         transform(col(featCol), x => x.cast("long")).as("qv")), 8, 2)
       .localCheckpoint(true)
-    ClusterIndex.buildIndexFrame(spark, assignB(hist, cents), name,
-      Paths.get(ClusterIndex.indexRoot, name))
+    ClusterIndex.Layout.write(spark, assignB(hist, cents), name,
+      Paths.get(IndexCommit.indexRoot, name))
     hist.unpersist()
     cents
   }
@@ -69,7 +69,7 @@ class ModalQuarantineSpec extends SparkSpec {
       outs: String*): Unit = {
     cents.unpersist()
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    graft.core.Lake.deleteTree(s"${ClusterIndex.indexRoot}/$name")
+    graft.core.Lake.deleteTree(s"${IndexCommit.indexRoot}/$name")
     outs.foreach(graft.core.Lake.deleteTree)
   }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{ClusterIndex, Clustering, FpIndex, Multimodal}
+import graft.operators.{ClusterIndex, Clustering, IndexCommit, FpIndex, Multimodal}
 
 /** [[MultimodalCurationSink]] (surface 24) — the streaming twin of the
   * q131 capstone's per-doc verdict stack. Certification is the house
@@ -63,8 +63,8 @@ class MultimodalCurationSinkSpec extends SparkSpec {
       hist.select(col("vec_id"),
         transform(col(featCol), x => x.cast("long")).as("qv")), 8, 2)
       .localCheckpoint(true)
-    ClusterIndex.buildIndexFrame(spark, assignB(hist, cents), name,
-      Paths.get(ClusterIndex.indexRoot, name))
+    ClusterIndex.Layout.write(spark, assignB(hist, cents), name,
+      Paths.get(IndexCommit.indexRoot, name))
     hist.unpersist()
     cents
   }
@@ -77,7 +77,7 @@ class MultimodalCurationSinkSpec extends SparkSpec {
       MultimodalCurationSink.ModalIndex) = {
     val fp = s"graft_fp_mmsink_${tag}_$pid"
     FpIndex.buildIndex(spark, slice(0, 200), fp,
-      Paths.get(FpIndex.indexRoot, fp))
+      Paths.get(IndexCommit.indexRoot, fp))
     val img = s"graft_cluster_img_mmsink_${tag}_$pid"
     val aud = s"graft_cluster_aud_mmsink_${tag}_$pid"
     val vid = s"graft_cluster_vid_mmsink_${tag}_$pid"
@@ -96,8 +96,8 @@ class MultimodalCurationSinkSpec extends SparkSpec {
       mis: MultimodalCurationSink.ModalIndex*): Unit = {
     (fp +: mis.map(_.name)).foreach { n =>
       spark.sql(s"DROP TABLE IF EXISTS `$n`")
-      graft.core.Lake.deleteTree(s"${ClusterIndex.indexRoot}/$n")
-      graft.core.Lake.deleteTree(s"${FpIndex.indexRoot}/$n")
+      graft.core.Lake.deleteTree(s"${IndexCommit.indexRoot}/$n")
+      graft.core.Lake.deleteTree(s"${IndexCommit.indexRoot}/$n")
     }
     mis.foreach(_.centroids.unpersist())
   }
@@ -275,7 +275,7 @@ class MultimodalCurationSinkSpec extends SparkSpec {
           .localCheckpoint(true)
         val v = ClusterIndex.probeVerdicts(spark, mi.name, b,
           excludeBatchFromHistory = true)
-        ClusterIndex.append(spark, mi.name,
+        ClusterIndex.Layout.append(mi.name,
           b.join(v.filter(col("kept")).select("vec_id"), "vec_id"))
         b.unpersist()
       }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.MediaCodecs.VideoCodec
-import graft.operators.{ClusterIndex, Clustering}
+import graft.operators.{ClusterIndex, Clustering, IndexCommit}
 
 /** [[VideoDedupSink]] — the streamed video-ingest verdicts must equal
   * q130's (the oracle-gated maintenance loop that runs the SAME
@@ -55,9 +55,9 @@ class VideoDedupSinkSpec extends SparkSpec {
       hist.select(col("vec_id"),
         transform(col("vfeat"), x => x.cast("long")).as("qv")), 8, 2)
       .localCheckpoint(true)
-    ClusterIndex.buildIndexFrame(spark,
+    ClusterIndex.Layout.write(spark,
       ClusterIndex.assignVideoBatch(hist, cents), name,
-      Paths.get(ClusterIndex.indexRoot, name))
+      Paths.get(IndexCommit.indexRoot, name))
     feats.unpersist()
     try {
       assert(VideoDedupSink.applyBatch(
@@ -85,7 +85,7 @@ class VideoDedupSinkSpec extends SparkSpec {
     } finally {
       cents.unpersist()
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      graft.core.Lake.deleteTree(s"${ClusterIndex.indexRoot}/$name")
+      graft.core.Lake.deleteTree(s"${IndexCommit.indexRoot}/$name")
       graft.core.Lake.deleteTree(out)
     }
   }

@@ -37,7 +37,7 @@ class WinnowIndexSinkSpec extends SparkSpec {
 
   private def freshIndex(tag: String): String = {
     val name = s"graft_winnow_idx_$tag"
-    FpIndex.initIndex(spark, name,
+    FpIndex.Layout.initIndex(spark, name,
       java.nio.file.Paths.get(tmp(s"graft-winnow-$tag"), "idx"))
     name
   }
@@ -187,7 +187,7 @@ class WinnowIndexSinkSpec extends SparkSpec {
     val root = "torn:" + tmp("graft-winnow-recov")
     val path = java.nio.file.Paths.get(root.stripPrefix("torn:"), "idx")
     val tornPath = java.nio.file.Paths.get("torn:" + path.toString)
-    FpIndex.initIndex(spark, name, tornPath)
+    FpIndex.Layout.initIndex(spark, name, tornPath)
     val outDir = tmp("graft-winnow-ko")
     val ckpt = tmp("graft-winnow-kc")
     implicit val sql = spark.sqlContext
@@ -201,7 +201,7 @@ class WinnowIndexSinkSpec extends SparkSpec {
       } finally q1.stop()
 
       TornRenameFileSystem.armDelete("winnow-recov", afterNFiles = 1)
-      intercept[java.io.IOException](FpIndex.compact(spark, name, tornPath))
+      intercept[java.io.IOException](FpIndex.Layout.compact(spark, name, tornPath))
       assert(TornRenameFileSystem.deleteCrashes > 0)
       TornRenameFileSystem.disarm()
       assert(!IndexCommit.treeBound(tornPath),
@@ -217,7 +217,7 @@ class WinnowIndexSinkSpec extends SparkSpec {
       java.nio.file.Files.move(retired,
         java.nio.file.Paths.get(path.toString + ".old-" + deadPid))
 
-      assert(FpIndex.recover(spark, name, tornPath),
+      assert(FpIndex.Layout.recover(spark, name, tornPath),
         "the restarted owner must restore the crash-stranded retiree")
 
       val q2 = WinnowIndexSink.attach(

@@ -35,6 +35,23 @@ class MeasureSpec extends SparkSpec {
     assert(fine.get("value").asDouble == ok.median)
   }
 
+  test("a failed timing keeps its first throwable and prints it once") {
+    val err = new java.io.ByteArrayOutputStream()
+    val bad = Console.withErr(new java.io.PrintStream(err, true)) {
+      Measure.timed(spark)(boom())
+    }
+    assert(bad.failed && bad.median == -1.0)
+    assert(bad.error.exists(e =>
+      e.isInstanceOf[IllegalStateException] && e.getMessage.contains("boom")), bad.error)
+    val printed = err.toString
+    assert(printed.linesIterator.count(_.startsWith(
+      "[measure] query failed: java.lang.IllegalStateException: boom")) == 1, printed)
+    assert(printed.contains("at graft.tools.MeasureSpec"), printed)
+    val direct = Measure.timeRuns(spark, runs = 2)(boom())
+    assert(direct.failed && direct.error.exists(_.getMessage.contains("boom")))
+    assert(Measure.timed(spark)(Measure.materialize(spark.range(3).toDF())).error.isEmpty)
+  }
+
   test("the bench line parses with the driver keys and the host stamp") {
     val t = Measure.Timing(Seq(Measure.Run(1.5, 3L, 0), Measure.Run(1.0, 2L, 0),
       Measure.Run(2.0, 1L, 0)))
@@ -127,5 +144,14 @@ class MeasureSpec extends SparkSpec {
     val (registry, rest) = calls.partition(_.contains("pipelines/Pipeline.scala:"))
     assert(rest.isEmpty, rest)
     assert(registry.size == 1, registry)
+  }
+
+  test("src/main writes and declares bucketed tables only in the index lifecycle") {
+    val needles = Seq("saveAsTable(", ".bucketBy(", "CLUSTERED BY")
+    val rest = needles.flatMap(hits)
+      .filterNot(_.contains("graft/operators/IndexLayout.scala:"))
+    assert(rest.isEmpty, rest)
+    // the scan sees the lifecycle's own uses, so the guard is not vacuous
+    assert(needles.forall(hits(_).nonEmpty))
   }
 }
