@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Lake
+
 /** Persisted Lloyd cluster assignment — the persisted-index "build
   * once, probe forever" pattern ([[IndexLayout]]) applied to the
   * clustering layer.
@@ -95,10 +97,16 @@ object ClusterIndex {
 
   /** The `_CENTROIDS` sidecar of ANY ensure()-managed index by table
     * name — every modality's build persists one, so every modality's
-    * index can serve ANN probes ([[Clustering.annProbeFrom]]).
+    * index can serve ANN probes ([[Clustering.annProbeFrom]]). The read
+    * names the sidecar's part files: Spark's hidden-path filter would
+    * flag the underscore directory itself (the name that keeps it out
+    * of the bucketed table's scan).
     */
-  def centroidsOf(spark: SparkSession, name: String): DataFrame =
-    spark.read.parquet(IndexLayout.pathOf(name).resolve("_CENTROIDS").toString)
+  def centroidsOf(spark: SparkSession, name: String): DataFrame = {
+    val dir = IndexLayout.pathOf(name).resolve("_CENTROIDS").toString
+    spark.read.parquet(Lake.listNames(dir).filter(_.endsWith(".parquet"))
+      .sorted.map(n => s"$dir/$n"): _*)
+  }
 
   /** SemDeDup's within-cell duplicate threshold (q104's rule) — shared
     * by the streaming sink and the q116 maintenance loop.

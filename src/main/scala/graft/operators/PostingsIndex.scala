@@ -85,8 +85,14 @@ object PostingsIndex {
   // bearing here: duplicate postings or a double-applied df delta
   // would change SCORES, not just cost.
 
+  /** The sidecar root — the streaming sink's versioned log, whose
+    * `_LATEST` is the pointer below. No sidecar reader lists it; every
+    * read names its `v=N` slot.
+    */
+  private[graft] def sidecarRoot(path: Path): Path = path.resolve("_sidecar")
+
   private def sidecarPointer(path: Path): Path =
-    path.resolve("_sidecar").resolve("_LATEST")
+    sidecarRoot(path).resolve("_LATEST")
 
   /** Committed sidecar version; -1 before any build. */
   def sidecarVersion(path: Path): Long = {
@@ -95,7 +101,7 @@ object PostingsIndex {
   }
 
   private def sidecarDir(path: Path, v: Long): Path =
-    path.resolve("_sidecar").resolve(s"v=$v")
+    sidecarRoot(path).resolve(s"v=$v")
 
   private def readMeta(path: Path, v: Long): (Long, Long) = {
     val m = Lake.readString(sidecarDir(path, v).resolve("META").toString).trim
@@ -112,7 +118,7 @@ object PostingsIndex {
     // advance the pointer only forward; a replay rewriting an old slot
     // with identical content must not rewind it
     if (v > sidecarVersion(path)) {
-      val tmp = path.resolve("_sidecar").resolve(s"_LATEST.tmp.$v")
+      val tmp = sidecarRoot(path).resolve(s"_LATEST.tmp.$v")
       Lake.writeString(tmp.toString, v.toString)
       Lake.overwriteRename(tmp.toString, sidecarPointer(path).toString)
     }

@@ -380,7 +380,7 @@ object Sources {
     * dir aside, move tmp into place, delete the old): atomic per rename
     * on a real filesystem, but a reader racing the swap can see the
     * window between the two renames — the same seam as [[graft.streaming
-    * .UpsertSink]]'s versioned-snapshot pointer, which is the protocol
+    * .VersionedPointer]]'s versioned-snapshot pointer, which is the protocol
     * to swap in on object stores or under concurrent readers (compact
     * into a NEW version dir and CAS the pointer; transactional table
     * formats are this exact idea productized).

@@ -22,8 +22,8 @@ import graft.operators.{Clustering, ClusterIndex}
   * Exactly-once is [[DecontamSink]]'s shape, deliberately: the index is
   * STATIONARY per corpus generation (serving never mutates it — no
   * append, no replay seam), so each batch's results are a pure function
-  * of (index generation, batch) and the versioned-pointer protocol
-  * alone makes replay and the crash window byte-identical. The index
+  * of (index generation, batch) and [[VersionedPointer]] alone makes
+  * replay and the crash window byte-identical. The index
   * generation is part of that purity: `_GRAFT_FP` staleness means a
   * corpus swap between crash and replay rebuilds the index and is
   * visible in the results rather than silently mixed.
@@ -40,21 +40,17 @@ object AnnServeSink {
     StructField("q_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
+  /** The result log (q_id, rank, n_id, cos, batch_id). */
+  val Log: SinkLog = SinkLog(StructType(Seq(
+    StructField("q_id", LongType),
+    StructField("rank", IntegerType),
+    StructField("n_id", LongType),
+    StructField("cos", DoubleType),
+    StructField("batch_id", LongType))))
 
-  /** All committed results (q_id, rank, n_id, cos, batch_id). */
-  def results(spark: SparkSession, dir: String): DataFrame = {
-    val dirs = VersionedPointer.committedDirs(dir)
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("q_id", LongType),
-          StructField("rank", IntegerType),
-          StructField("n_id", LongType),
-          StructField("cos", DoubleType),
-          StructField("batch_id", LongType))))
-  }
+  /** All committed results up to the pointer. */
+  def results(spark: SparkSession, dir: String): DataFrame =
+    Log.history(spark, dir)
 
   /** Answer one micro-batch of (q_id, embedding) against the persisted
     * index for `corpusDir`; false iff already served. `epoch` is the
@@ -63,11 +59,9 @@ object AnnServeSink {
     * served answers); attach() always passes it, direct calls may not.
     */
   def applyBatch(batch: DataFrame, batchId: Long, corpusDir: String,
-      outDir: String, epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else {
+      outDir: String, epoch: Option[String] = None): Boolean =
+    Log.serve(outDir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(outDir)
       val name = ClusterIndex.ensure(spark, corpusDir)
       val topk = Clustering.annProbeFrom(spark, name,
           ClusterIndex.centroids(spark, corpusDir),
@@ -76,23 +70,13 @@ object AnnServeSink {
         .withColumn("batch_id", lit(batchId))
         .orderBy("q_id", "rank")
       // coalesce(1): batch-sized (≤ k rows per query), a decision log
-      topk.coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/v=$batchId")
-      VersionedPointer.commit(outDir, batchId, epoch)
-      true
+      Seq(topk.coalesce(1))
     }
-  }
 
   /** Attach the server to a (q_id, embedding) query stream. */
   def attach(queries: DataFrame, corpusDir: String, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, corpusDir, outDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(queries, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, corpusDir, outDir, epoch)
+    }
 }

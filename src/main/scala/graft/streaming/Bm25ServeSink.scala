@@ -24,8 +24,8 @@ import graft.operators.{PostingsIndex, Retrieval}
   * Exactly-once is [[DecontamSink]]/[[AnnServeSink]]'s stationary
   * shape: the postings generation is immutable per corpus (serving
   * never appends), so results are a pure function of (generation,
-  * batch) and the versioned-pointer protocol — with the checkpoint-
-  * epoch guard — covers replay, crash, and checkpoint-reset windows.
+  * batch) and [[VersionedPointer]] covers replay, crash, and
+  * checkpoint-reset windows.
   *
   * The 100-TB shape: per micro-batch the driver pays one bounded
   * query-term collect (≤ batch terms — the AnnServeSink Q·nprobe
@@ -40,35 +40,29 @@ object Bm25ServeSink {
     StructField("q_id", LongType),
     StructField("terms", ArrayType(StringType))))
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
-
-  /** All committed results (q_id, rank, doc_id, n_hit, bm25_micro,
+  /** The result log (q_id, rank, doc_id, n_hit, bm25_micro,
     * batch_id).
     */
-  def results(spark: SparkSession, dir: String): DataFrame = {
-    val dirs = VersionedPointer.committedDirs(dir)
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("q_id", LongType),
-          StructField("rank", IntegerType),
-          StructField("doc_id", LongType),
-          StructField("n_hit", LongType),
-          StructField("bm25_micro", LongType),
-          StructField("batch_id", LongType))))
-  }
+  val Log: SinkLog = SinkLog(StructType(Seq(
+    StructField("q_id", LongType),
+    StructField("rank", IntegerType),
+    StructField("doc_id", LongType),
+    StructField("n_hit", LongType),
+    StructField("bm25_micro", LongType),
+    StructField("batch_id", LongType))))
+
+  /** All committed results up to the pointer. */
+  def results(spark: SparkSession, dir: String): DataFrame =
+    Log.history(spark, dir)
 
   /** Answer one micro-batch of (q_id, terms) against the persisted
     * postings index for `corpusDir`; false iff already served. `epoch`
     * is the checkpoint-lineage guard; attach() always passes it.
     */
   def applyBatch(batch: DataFrame, batchId: Long, corpusDir: String,
-      outDir: String, epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else {
+      outDir: String, epoch: Option[String] = None): Boolean =
+    Log.serve(outDir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(outDir)
       // the bounded driver-side collect: the term set is the bucket
       // pruning IN literal (batch-sized by construction — queries, not
       // corpus; the AnnServeSink cell-id rule)
@@ -81,23 +75,13 @@ object Bm25ServeSink {
         .withColumn("batch_id", lit(batchId))
         .orderBy("q_id", "rank")
       // coalesce(1): batch-sized (≤ 5 rows per query), a decision log
-      topk.coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/v=$batchId")
-      VersionedPointer.commit(outDir, batchId, epoch)
-      true
+      Seq(topk.coalesce(1))
     }
-  }
 
   /** Attach the server to a (q_id, terms) query stream. */
   def attach(queries: DataFrame, corpusDir: String, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, corpusDir, outDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(queries, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, corpusDir, outDir, epoch)
+    }
 }

@@ -19,8 +19,7 @@ import org.apache.spark.sql.types._
   * Exactly-once is [[DecontamSink]]'s stationary shape taken to its
   * simplest point: the extractor is STATELESS (pure per-doc function,
   * no index, no generation), so each batch's verdicts are a pure
-  * function of the batch alone and the versioned-pointer protocol
-  * covers replay and the crash window with nothing else to prove.
+  * function of the batch alone and [[VersionedPointer]] covers replay and the crash window with nothing else to prove.
   *
   * The rule set is q120's by construction — the sink calls the same
   * expression the oracle-gated query calls — so
@@ -34,39 +33,33 @@ object BoilerplateSink {
     StructField("doc_id", LongType),
     StructField("text", StringType)))
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
-
-  /** All committed verdicts (doc_id, clean_text, n_lines, n_kept,
+  /** The decision log (doc_id, clean_text, n_lines, n_kept,
     * n_short, n_link, n_stop, admit, batch_id).
     */
-  def decisions(spark: SparkSession, dir: String): DataFrame = {
-    val dirs = VersionedPointer.committedDirs(dir)
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("clean_text", StringType),
-          StructField("n_lines", IntegerType),
-          StructField("n_kept", IntegerType),
-          StructField("n_short", IntegerType),
-          StructField("n_link", IntegerType),
-          StructField("n_stop", IntegerType),
-          StructField("admit", BooleanType),
-          StructField("batch_id", LongType))))
-  }
+  val Log: SinkLog = SinkLog(StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("clean_text", StringType),
+    StructField("n_lines", IntegerType),
+    StructField("n_kept", IntegerType),
+    StructField("n_short", IntegerType),
+    StructField("n_link", IntegerType),
+    StructField("n_stop", IntegerType),
+    StructField("admit", BooleanType),
+    StructField("batch_id", LongType))))
+
+  /** All committed decisions up to the pointer. */
+  def decisions(spark: SparkSession, dir: String): DataFrame =
+    Log.history(spark, dir)
 
   /** Extract one micro-batch of (doc_id, text); false iff already
     * applied. `epoch` is the checkpoint-lineage guard
     * ([[VersionedPointer.alreadyServed]]); attach() always passes it.
     */
   def applyBatch(batch: DataFrame, batchId: Long, outDir: String,
-      epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else {
+      epoch: Option[String] = None): Boolean =
+    Log.serve(outDir, batchId, epoch) {
       val spark = batch.sparkSession
       graft.functions.GraftFunctions.register(spark)
-      graft.core.Lake.mkdirs(outDir)
       val verdicts = batch.select(docSchema.fieldNames.map(col): _*)
         .select(col("doc_id"),
           call_function("graft_boilerplate_clean", col("text")).as("c"))
@@ -77,23 +70,13 @@ object BoilerplateSink {
         .withColumn("batch_id", lit(batchId))
         .orderBy("doc_id")
       // coalesce(1): batch-sized decision log (one row per batch doc)
-      verdicts.coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/v=$batchId")
-      VersionedPointer.commit(outDir, batchId, epoch)
-      true
+      Seq(verdicts.coalesce(1))
     }
-  }
 
   /** Attach the gate to a (doc_id, text) ingest stream. */
   def attach(docs: DataFrame, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, outDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(docs, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, outDir, epoch)
+    }
 }

@@ -39,77 +39,44 @@ import graft.operators.ClusterIndex
   * excludes the batch's own ids from the history leg (idempotent under
   * replay-after-append) and the history dup-check reduces through a
   * grouped min (duplicate index rows from a crash-replayed append can
-  * never change a verdict). The log commits with the house
-  * write-version-then-move-pointer protocol.
+  * never change a verdict). The log commits through
+  * [[VersionedPointer]].
   */
 object ClusterIndexSink {
 
   /** SemDeDup's within-cell duplicate threshold (q104's rule). */
   val Tau: Double = ClusterIndex.Tau
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
-
-  /** All committed verdicts (vec_id, cid, dup_of, kept, batch_id) up to
-    * the pointer.
+  /** The verdict log (vec_id, cid, dup_of, kept, batch_id) — the modal
+    * sinks' verdict schema.
     */
+  val Log: SinkLog = SinkLog(ModalDedupIngest.Log.schema)
+
+  /** All committed verdicts up to the pointer, folded history included. */
   def verdicts(spark: SparkSession, dir: String): DataFrame =
-    latestVersion(dir) match {
-      case Some(v) =>
-        val dirs = (0L to v).map(i => s"$dir/v=$i")
-          .filter(graft.core.Lake.exists)
-        spark.read.parquet(dirs: _*)
-      case None =>
-        import org.apache.spark.sql.types._
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("vec_id", LongType),
-            StructField("cid", LongType),
-            StructField("dup_of", LongType),
-            StructField("kept", BooleanType),
-            StructField("batch_id", LongType))))
-    }
+    Log.history(spark, dir)
 
-  /** The assignment and probe halves live in [[ClusterIndex]]
-    * (`assignBatch` / `probeVerdicts`) so the oracle-gated q116
-    * maintenance loop runs the SAME code this sink runs per
-    * micro-batch — batch and stream cannot diverge, the
-    * [[WinnowIndexSink]]/`Winnow.spliceClean` discipline at the vector
-    * layer. These thin delegates keep the sink's seam spec-visible.
+  /** Apply one micro-batch; false iff already applied. The assignment
+    * and probe halves are [[ClusterIndex]]'s `assignBatch` and
+    * `probeVerdicts`, the code the oracle-gated q116 maintenance loop
+    * runs, so batch and stream cannot diverge.
     */
-  private[streaming] def probeVerdicts(spark: SparkSession,
-      indexName: String, b: DataFrame,
-      excludeBatchFromHistory: Boolean): DataFrame =
-    ClusterIndex.probeVerdicts(spark, indexName, b, excludeBatchFromHistory)
-
-  /** (vec_id, cid, v, nrm) of a raw (vec_id, embedding) batch under
-    * frozen centroids — exposed for the seam spec's crash-window setup.
-    */
-  private[streaming] def assignedBatch(batch: DataFrame,
-      centroids: DataFrame): DataFrame =
-    ClusterIndex.assignBatch(batch, centroids)
-
-  /** Apply one micro-batch; false iff already applied. */
   def applyBatch(batch: DataFrame, batchId: Long, indexName: String,
       centroids: DataFrame, outDir: String,
-      epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else Pin.scope {
+      epoch: Option[String] = None): Boolean =
+    Log.serve(outDir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(outDir)
       val b = Pin(ClusterIndex.assignBatch(batch, centroids),
         "ClusterIndexSink.assign")
       // exclusion on: a crashed previous attempt may have appended this
       // batch's own rows (the WinnowIndexSink replay seam, by vec_id)
-      val out = Pin(probeVerdicts(spark, indexName, b,
+      val out = Pin(ClusterIndex.probeVerdicts(spark, indexName, b,
           excludeBatchFromHistory = true)
         .withColumn("batch_id", lit(batchId)), "ClusterIndexSink.verdicts")
       ClusterIndex.Layout.append(indexName,
         b.join(out.filter(col("kept")).select("vec_id"), "vec_id"))
-      out.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
-      VersionedPointer.commit(outDir, batchId, epoch)
-      true
+      Seq(out)
     }
-  }
 
   /** Attach to a (vec_id, embedding) stream. The index must exist —
     * `ClusterIndex.Layout.initIndex` for a cold start, or
@@ -118,14 +85,8 @@ object ClusterIndexSink {
     * micro-units — q114's sample-trained output in production).
     */
   def attach(vecs: DataFrame, indexName: String, centroids: DataFrame,
-      outDir: String, checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, indexName, centroids, outDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      outDir: String, checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(vecs, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, indexName, centroids, outDir, epoch)
+    }
 }

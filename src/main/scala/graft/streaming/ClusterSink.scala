@@ -29,9 +29,9 @@ import graft.operators.Clustering
   * `DIV`, never a float division that loses exactness past 2^53), so
   * the spec can assert stream ≡ an independent driver-side sequential
   * replay at EQUALITY — and that is also what makes the exactly-once
-  * story degenerate to [[UpsertSink]]'s pointer protocol: a replayed
-  * or crash-window batch recomputes byte-identical state into the
-  * same version slot.
+  * story degenerate to [[VersionedPointer]] alone: a replayed or
+  * crash-window batch recomputes byte-identical state into the same
+  * version slot.
   *
   * Seeding: the first batch's K smallest vec_ids become the centroids
   * (S=0, n=0 — seeds are then assigned like every other point of that
@@ -45,11 +45,16 @@ object ClusterSink {
     StructField("vec_id", LongType),
     StructField("qv", ArrayType(LongType))))
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
+  /** The state: per cluster the cumulative sums, count and centroid. */
+  val Log: SinkLog = SinkLog(StructType(Seq(
+    StructField("cid", LongType),
+    StructField("s", ArrayType(LongType)),
+    StructField("n", LongType),
+    StructField("cv", ArrayType(LongType)))))
 
   /** Current state (cid, s, n, cv); None before the first batch. */
   def state(spark: SparkSession, dir: String): Option[DataFrame] =
-    latestVersion(dir).map(v => spark.read.parquet(s"$dir/v=$v"))
+    Log.state(spark, dir)
 
   /** Current centroids (cid, cv) for assignment/inspection. */
   def centroids(spark: SparkSession, dir: String): Option[DataFrame] =
@@ -57,11 +62,9 @@ object ClusterSink {
 
   /** Apply one micro-batch; false iff skipped as already applied. */
   def applyBatch(batch: DataFrame, batchId: Long, dir: String,
-      epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(dir, batchId, epoch)) false
-    else Pin.scope {
+      epoch: Option[String] = None): Boolean =
+    Log.serve(dir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(dir)
       val vecs = Pin(batch.select(vecSchema.fieldNames.map(col): _*),
         "ClusterSink.vecs")
       val prior = state(spark, dir).getOrElse {
@@ -101,26 +104,13 @@ object ClusterSink {
             p => p.getField("c")).as("cv"))
         .orderBy("cid")
       // coalesce(1): bounded state — the frame is exactly K centroid rows
-      next.coalesce(1).write.mode("overwrite").parquet(s"$dir/v=$batchId")
-      VersionedPointer.commit(dir, batchId, epoch)
-      true
+      Seq(next.coalesce(1))
     }
-  }
-
-  /** Drop state versions older than the `keep` most recent. */
-  def vacuum(dir: String, keep: Int): Seq[Long] =
-    UpsertSink.vacuum(dir, keep)
 
   /** Attach the sink to a (vec_id, qv) embedding ingest stream. */
   def attach(vecs: DataFrame, stateDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, stateDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(vecs, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, stateDir, epoch)
+    }
 }

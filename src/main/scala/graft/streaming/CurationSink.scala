@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
 import graft.core.Pin
 import graft.operators.{BloomIndex, Dedup, FpIndex, TextAnalysis, Winnow}
@@ -49,7 +50,7 @@ import graft.operators.{BloomIndex, Dedup, FpIndex, TextAnalysis, Winnow}
   * mutation is the same fingerprint append): the splice probe excludes
   * the batch's own ids from history, the decontam/LM stages are pure
   * functions of (artifacts, spliced batch), and the verdict log commits
-  * with the house write-version-then-move-pointer protocol.
+  * through [[VersionedPointer]].
   */
 object CurationSink {
 
@@ -82,35 +83,26 @@ object CurationSink {
     Artifacts(lm, cut)
   }
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
-
-  /** All committed verdicts up to the pointer: (doc_id, n_spans,
-    * n_chars_removed, n_sh, n_hit, n_bigrams, lm_micro_nats, avg_mn,
-    * contaminated, kept, clean_text, batch_id).
+  /** The verdict log: (doc_id, n_spans, n_chars_removed, n_sh, n_hit,
+    * n_bigrams, lm_micro_nats, avg_mn, contaminated, kept, clean_text,
+    * batch_id).
     */
+  val Log: SinkLog = SinkLog(StructType(Seq(StructField("doc_id", LongType),
+    StructField("n_spans", LongType),
+    StructField("n_chars_removed", LongType),
+    StructField("n_sh", LongType),
+    StructField("n_hit", LongType),
+    StructField("n_bigrams", LongType),
+    StructField("lm_micro_nats", LongType),
+    StructField("avg_mn", LongType),
+    StructField("contaminated", BooleanType),
+    StructField("kept", BooleanType),
+    StructField("clean_text", StringType),
+    StructField("batch_id", LongType))))
+
+  /** All committed verdicts up to the pointer, folded history included. */
   def verdicts(spark: SparkSession, dir: String): DataFrame =
-    latestVersion(dir) match {
-      case Some(v) =>
-        val dirs = (0L to v).map(i => s"$dir/v=$i")
-          .filter(graft.core.Lake.exists)
-        spark.read.parquet(dirs: _*)
-      case None =>
-        import org.apache.spark.sql.types._
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("doc_id", LongType),
-            StructField("n_spans", LongType),
-            StructField("n_chars_removed", LongType),
-            StructField("n_sh", LongType),
-            StructField("n_hit", LongType),
-            StructField("n_bigrams", LongType),
-            StructField("lm_micro_nats", LongType),
-            StructField("avg_mn", LongType),
-            StructField("contaminated", BooleanType),
-            StructField("kept", BooleanType),
-            StructField("clean_text", StringType),
-            StructField("batch_id", LongType))))
-    }
+    Log.history(spark, dir)
 
   /** The three per-doc stage verdicts for ONE batch of (doc_id, text)
     * — splice, decontam, frozen-LM gate — as a lazy frame, plus the
@@ -186,11 +178,9 @@ object CurationSink {
   /** Apply one micro-batch of (doc_id, text); false iff already applied. */
   def applyBatch(batch: DataFrame, batchId: Long, fpIndexName: String,
       benchDir: String, art: Artifacts, outDir: String,
-      epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else Pin.scope {
+      epoch: Option[String] = None): Boolean =
+    Log.serve(outDir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(outDir)
       val docs = batch.select("doc_id", "text")
       val (v, bfp) = verdictBatch(spark, docs, fpIndexName, benchDir, art)
       val out = Pin(v.withColumn("batch_id", lit(batchId)),
@@ -201,11 +191,8 @@ object CurationSink {
       // on what "history" means. The probe's pinned winnow rows are
       // appended directly (no second winnow of the batch).
       FpIndex.appendRows(spark, fpIndexName, bfp)
-      out.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
-      VersionedPointer.commit(outDir, batchId, epoch)
-      true
+      Seq(out)
     }
-  }
 
   /** Attach to a (doc_id, text) stream. The fingerprint index must
     * exist (`FpIndex.Layout.initIndex` cold, or seeded from the generation
@@ -214,14 +201,8 @@ object CurationSink {
     * cutoff ([[artifactsOf]]).
     */
   def attach(docs: DataFrame, fpIndexName: String, benchDir: String,
-      art: Artifacts, outDir: String, checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, fpIndexName, benchDir, art, outDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      art: Artifacts, outDir: String, checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(docs, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, fpIndexName, benchDir, art, outDir, epoch)
+    }
 }

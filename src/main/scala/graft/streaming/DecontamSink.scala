@@ -21,8 +21,8 @@ import graft.operators.{BloomIndex, Dedup}
   * deliberately so: the benchmark is STATIONARY (it changes when the
   * eval suite changes, not per batch), so unlike IngestDedupSink there
   * is no index append and no replay seam — each batch's verdicts are a
-  * pure function of (benchmark generation, batch), and the
-  * versioned-pointer protocol alone makes replay and the crash window
+  * pure function of (benchmark generation, batch), and
+  * [[VersionedPointer]] alone makes replay and the crash window
   * byte-identical. The benchmark generation is part of that purity:
   * BloomIndex's `_GRAFT_FP` fingerprint guards staleness, so a
   * benchmark swap between a crash and its replay rebuilds the index
@@ -39,34 +39,26 @@ object DecontamSink {
     StructField("doc_id", LongType),
     StructField("text", StringType)))
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
+  /** The decision log (doc_id, n_sh, n_hit, admit, batch_id). */
+  val Log: SinkLog = SinkLog(StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("n_sh", IntegerType),
+    StructField("n_hit", LongType),
+    StructField("admit", BooleanType),
+    StructField("batch_id", LongType))))
 
-  /** All committed verdicts (doc_id, n_sh, n_hit, admit, batch_id). */
+  /** All committed decisions up to the pointer. */
   def decisions(spark: SparkSession, dir: String): DataFrame =
-    latestVersion(dir) match {
-      case Some(v) =>
-        val dirs = VersionedPointer.committedDirs(dir)
-        spark.read.parquet(dirs: _*)
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("doc_id", LongType),
-            StructField("n_sh", IntegerType),
-            StructField("n_hit", LongType),
-            StructField("admit", BooleanType),
-            StructField("batch_id", LongType))))
-    }
+    Log.history(spark, dir)
 
   /** Apply one micro-batch of (doc_id, text) against the benchmark
     * index built from `benchDir`; false iff already applied.
     */
   def applyBatch(batch: DataFrame, batchId: Long, benchDir: String,
       outDir: String,
-      epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else {
+      epoch: Option[String] = None): Boolean =
+    Log.serve(outDir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(outDir)
       val shingled = batch.select(docSchema.fieldNames.map(col): _*)
         .select(col("doc_id"),
           Dedup.shinglesOf(split(trim(col("text")), Ws.Plus)).as("shs"))
@@ -81,23 +73,13 @@ object DecontamSink {
         .orderBy("doc_id")
       // coalesce(1): batch-sized, not corpus-sized — one verdict row per
       // micro-batch doc; acceptable for a per-batch decision log
-      verdicts.coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/v=$batchId")
-      VersionedPointer.commit(outDir, batchId, epoch)
-      true
+      Seq(verdicts.coalesce(1))
     }
-  }
 
   /** Attach the gate to a (doc_id, text) ingest stream. */
   def attach(docs: DataFrame, benchDir: String, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, benchDir, outDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(docs, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, benchDir, outDir, epoch)
+    }
 }

@@ -34,11 +34,10 @@ import graft.operators.SketchExact
   *    instead of every batch. The spec proves certify ≡ the q96-style
   *    exact recompute after every batch.
   *
-  * Exactly-once: [[UpsertSink]]'s versioned-snapshot + `_LATEST`
-  * pointer protocol — summary parquet and `_TOTAL` are both inside
-  * `v=<batchId>`, written before the pointer moves, so a replayed or
-  * crash-window batch recomputes byte-identical state into the same
-  * slot (the merge is a pure function of (pointer state, batch);
+  * Exactly-once: [[VersionedPointer]] — summary parquet and `_TOTAL`
+  * are both inside `v=<batchId>`, written before the pointer moves, so
+  * a replayed or crash-window batch recomputes byte-identical state
+  * into the same slot (the merge is a pure function of (pointer state, batch);
   * no RNG, value-based cut, deterministic tie handling: keys whose
   * combined count equals the cut value drop to zero and out).
   */
@@ -52,21 +51,17 @@ object HeavyHittersSink {
     StructField("doc_id", LongType),
     StructField("text", StringType)))
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
+  /** The state: the MG summary (bg, cnt) under `v=N/summary`, beside
+    * the `_TOTAL` bigram count the batch body writes.
+    */
+  val Log: SinkLog = SinkLog(StructType(Seq(
+    StructField("bg", StringType),
+    StructField("cnt", LongType))), leaf = Some("summary"))
 
   /** (summary frame (bg, cnt), total bigrams ingested). */
   def state(spark: SparkSession, dir: String): (DataFrame, Long) =
-    latestVersion(dir) match {
-      case Some(v) =>
-        val total = graft.core.Lake.readString(s"$dir/v=$v/_TOTAL").trim.toLong
-        (spark.read.parquet(s"$dir/v=$v/summary"), total)
-      case None =>
-        (spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("bg", StringType),
-            StructField("cnt", LongType)))), 0L)
-    }
+    (Log.current(spark, dir), VersionedPointer.latest(dir).fold(0L)(v =>
+      graft.core.Lake.readString(s"$dir/v=$v/_TOTAL").trim.toLong))
 
   /** MG undercount bound for the current state, rounded UP so the
     * emitted upper bounds stay conservative.
@@ -101,11 +96,9 @@ object HeavyHittersSink {
 
   /** Apply one micro-batch; false iff skipped as already applied. */
   def applyBatch(batch: DataFrame, batchId: Long, dir: String,
-      epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(dir, batchId, epoch)) false
-    else Pin.scope {
+      epoch: Option[String] = None): Boolean =
+    Log.serve(dir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(dir)
       val (prior, priorTotal) = state(spark, dir)
       val bgs = SketchExact.bigramsOf(
         batch.select(docSchema.fieldNames.map(col): _*))
@@ -124,30 +117,16 @@ object HeavyHittersSink {
       val next = merged.filter(col("cnt") > lit(cut))
         .select(col("bg"), (col("cnt") - lit(cut)).as("cnt"))
         .orderBy("bg")
-      val vDir = s"$dir/v=$batchId"
-      // coalesce(1): bounded state — the summary holds at most MgK counter rows
-      next.coalesce(1).write.mode("overwrite").parquet(s"$vDir/summary")
-      graft.core.Lake.writeString(s"$vDir/_TOTAL",
+      graft.core.Lake.writeString(s"$dir/v=$batchId/_TOTAL",
         (priorTotal + batchN).toString)
-      VersionedPointer.commit(dir, batchId, epoch)
-      true
+      // coalesce(1): bounded state — the summary holds at most MgK counter rows
+      Seq(next.coalesce(1))
     }
-  }
-
-  /** Drop state versions older than the `keep` most recent. */
-  def vacuum(dir: String, keep: Int): Seq[Long] =
-    UpsertSink.vacuum(dir, keep)
 
   /** Attach the sink to a (doc_id, text) ingest stream. */
   def attach(docs: DataFrame, stateDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, stateDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(docs, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, stateDir, epoch)
+    }
 }

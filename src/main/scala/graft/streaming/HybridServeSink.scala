@@ -34,9 +34,8 @@ import graft.operators.{Clustering, ClusterIndex, PostingsIndex, Retrieval}
   *
   * Exactly-once: both indexes are STATIONARY per corpus generation
   * (serving never mutates them), so results are a pure function of
-  * (generations, batch) and the versioned-pointer protocol with the
-  * checkpoint-epoch guard covers replay, crash, and checkpoint-reset
-  * windows — the AnnServeSink/Bm25ServeSink shape.
+  * (generations, batch) and [[VersionedPointer]] covers replay, crash,
+  * and checkpoint-reset windows — the AnnServeSink/Bm25ServeSink shape.
   *
   * The 100-TB shape: per batch one bounded term collect (the postings
   * bucket-pruning literal), one K-row centroid broadcast + bounded
@@ -51,25 +50,21 @@ object HybridServeSink {
     StructField("terms", ArrayType(StringType)),
     StructField("embedding", ArrayType(FloatType))))
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
-
-  /** All committed results (q_id, rank, doc_id, lex_rank, sem_rank,
+  /** The result log (q_id, rank, doc_id, lex_rank, sem_rank,
     * rrf_micro, batch_id).
     */
-  def results(spark: SparkSession, dir: String): DataFrame = {
-    val dirs = VersionedPointer.committedDirs(dir)
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("q_id", LongType),
-          StructField("rank", IntegerType),
-          StructField("doc_id", LongType),
-          StructField("lex_rank", IntegerType),
-          StructField("sem_rank", IntegerType),
-          StructField("rrf_micro", LongType),
-          StructField("batch_id", LongType))))
-  }
+  val Log: SinkLog = SinkLog(StructType(Seq(
+    StructField("q_id", LongType),
+    StructField("rank", IntegerType),
+    StructField("doc_id", LongType),
+    StructField("lex_rank", IntegerType),
+    StructField("sem_rank", IntegerType),
+    StructField("rrf_micro", LongType),
+    StructField("batch_id", LongType))))
+
+  /** All committed results up to the pointer. */
+  def results(spark: SparkSession, dir: String): DataFrame =
+    Log.history(spark, dir)
 
   /** The semantic leg of one batch: q117's probe at k=20, lifted to
     * (q_id, doc_id, sem_rank) — shared by [[applyBatch]] and the
@@ -88,11 +83,9 @@ object HybridServeSink {
     * already served. `epoch` is the checkpoint-lineage guard.
     */
   def applyBatch(batch: DataFrame, batchId: Long, corpusDir: String,
-      outDir: String, epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else Pin.scope {
+      outDir: String, epoch: Option[String] = None): Boolean =
+    Log.serve(outDir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(outDir)
       val b = Pin(batch.select(querySchema.fieldNames.map(col): _*),
         "HybridServeSink.queries")
       // bounded driver-side collect: the term set is the postings
@@ -108,23 +101,13 @@ object HybridServeSink {
         .withColumn("batch_id", lit(batchId))
         .orderBy("q_id", "rank")
       // coalesce(1): batch-sized (≤ 10 rows per query), a decision log
-      fused.coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/v=$batchId")
-      VersionedPointer.commit(outDir, batchId, epoch)
-      true
+      Seq(fused.coalesce(1))
     }
-  }
 
   /** Attach the server to a (q_id, terms, embedding) query stream. */
   def attach(queries: DataFrame, corpusDir: String, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, corpusDir, outDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(queries, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, corpusDir, outDir, epoch)
+    }
 }

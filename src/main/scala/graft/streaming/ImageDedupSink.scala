@@ -29,8 +29,7 @@ import graft.operators.{ClusterIndex, Clustering}
   * append and the log commit cannot be atomic together, so the probe
   * excludes the batch's own ids from the history leg (idempotent
   * under replay-after-append), the history dup-check reduces through
-  * a grouped min, and the log commits under the versioned-pointer
-  * protocol with the checkpoint-epoch guard.
+  * a grouped min, and the log commits through [[VersionedPointer]].
   *
   * The 100-TB shape: per batch one decode pass (O(batch), codec init
   * amortized per partition), one broadcast K-row assignment, and one
@@ -42,8 +41,6 @@ object ImageDedupSink {
   val imageSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("image", BinaryType)))
-
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
 
   /** All committed verdicts (vec_id, cid, dup_of, kept, batch_id). */
   def verdicts(spark: SparkSession, dir: String): DataFrame =
@@ -79,7 +76,7 @@ object ImageDedupSink {
     */
   def attach(images: DataFrame, indexName: String, centroids: DataFrame,
       outDir: String, checkpointDir: String): StreamingQuery =
-    ModalDedupIngest.attach(images, checkpointDir) { (batch, id, epoch) =>
+    VersionedPointer.attach(images, checkpointDir) { (batch, id, epoch) =>
       applyBatch(batch, id, indexName, centroids, outDir, epoch)
     }
 }

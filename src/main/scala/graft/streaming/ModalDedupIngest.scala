@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.core.Pin
@@ -25,8 +24,8 @@ import graft.operators.ClusterIndex
   * append and the log commit cannot be atomic together, so the probe
   * excludes the batch's own ids from the history leg (idempotent
   * under replay-after-append), the history dup-check reduces through
-  * a grouped min, and the log commits under the versioned-pointer
-  * protocol with the checkpoint-epoch guard.
+  * a grouped min, and the verdict and quarantine logs commit through
+  * [[VersionedPointer]] with the checkpoint-epoch guard.
   *
   * The 100-TB shape: per batch one decode pass (O(batch), codec init
   * amortized per partition), one broadcast K-row assignment, and one
@@ -35,34 +34,28 @@ import graft.operators.ClusterIndex
   */
 private[streaming] object ModalDedupIngest {
 
-  /** All committed verdicts (vec_id, cid, dup_of, kept, batch_id). */
-  def verdicts(spark: SparkSession, dir: String): DataFrame = {
-    val dirs = VersionedPointer.committedDirs(dir)
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("vec_id", LongType),
-          StructField("cid", LongType),
-          StructField("dup_of", LongType),
-          StructField("kept", BooleanType),
-          StructField("batch_id", LongType))))
-  }
-
-  /** All committed quarantine rows (vec_id, reason, batch_id) — the
-    * bad-record evidence stream of a modal ingest (q135's policy at
-    * the standalone-sink layer).
+  /** The verdict log (vec_id, cid, dup_of, kept, batch_id) and its
+    * quarantine sub-log (vec_id, reason, batch_id) — the bad-record
+    * evidence stream of a modal ingest (q135's policy at the
+    * standalone-sink layer).
     */
-  def quarantined(spark: SparkSession, dir: String): DataFrame = {
-    val dirs = VersionedPointer.committedSubDirs(dir, "quarantine")
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("vec_id", LongType),
-          StructField("reason", StringType),
-          StructField("batch_id", LongType))))
-  }
+  val Log: SinkLog = SinkLog(
+    StructType(Seq(StructField("vec_id", LongType),
+      StructField("cid", LongType),
+      StructField("dup_of", LongType),
+      StructField("kept", BooleanType),
+      StructField("batch_id", LongType))),
+    quarantine = Some(StructType(Seq(StructField("vec_id", LongType),
+      StructField("reason", StringType),
+      StructField("batch_id", LongType)))))
+
+  /** All committed verdicts (vec_id, cid, dup_of, kept, batch_id). */
+  def verdicts(spark: SparkSession, dir: String): DataFrame =
+    Log.history(spark, dir)
+
+  /** All committed quarantine rows (vec_id, reason, batch_id). */
+  def quarantined(spark: SparkSession, dir: String): DataFrame =
+    Log.quarantined(spark, dir)
 
   /** The quarantining featurize shared by the three modal sinks: each
     * raw (vec_id, payload) row decoded through a
@@ -106,11 +99,9 @@ private[streaming] object ModalDedupIngest {
   def applyBatch(batch: DataFrame, batchId: Long, indexName: String,
       centroids: DataFrame, outDir: String, epoch: Option[String],
       featurize: DataFrame => DataFrame,
-      assignB: (DataFrame, DataFrame) => DataFrame): Boolean = {
-    if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else Pin.scope {
+      assignB: (DataFrame, DataFrame) => DataFrame): Boolean =
+    Log.serve(outDir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(outDir)
       // ONE decode pass, pinned: consumed by the quarantine log and
       // the healthy assignment leg
       val f = Pin(featurize(batch), "ModalDedupIngest.decode")
@@ -126,25 +117,6 @@ private[streaming] object ModalDedupIngest {
         .withColumn("batch_id", lit(batchId)), "ModalDedupIngest.verdicts")
       ClusterIndex.Layout.append(indexName,
         b.join(out.filter(col("kept")).select("vec_id"), "vec_id"))
-      out.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
-      quar.write.mode("overwrite").parquet(s"$outDir/quarantine/v=$batchId")
-      VersionedPointer.commit(outDir, batchId, epoch)
-      true
+      Seq(out, quar)
     }
-  }
-
-  /** Attach `apply(batch, batchId, epoch)` to a payload stream under
-    * the checkpoint-epoch guard.
-    */
-  def attach(rows: DataFrame, checkpointDir: String)(
-      apply: (DataFrame, Long, Option[String]) => Boolean): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        apply(batch, batchId, Some(epoch)); ()
-      }
-      .start()
-  }
 }

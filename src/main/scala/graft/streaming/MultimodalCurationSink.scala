@@ -118,55 +118,46 @@ object MultimodalCurationSink {
       }.toDF()
   }
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
+  /** The verdict log and its quarantine sub-log (doc_id, modality,
+    * reason, batch_id) — the bad-record evidence stream.
+    */
+  val Log: SinkLog = SinkLog(
+    StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("n_spans", LongType),
+      StructField("n_chars_removed", LongType),
+      StructField("n_sh", LongType),
+      StructField("n_hit", LongType),
+      StructField("n_bigrams", LongType),
+      StructField("lm_micro_nats", LongType),
+      StructField("avg_mn", LongType),
+      StructField("contaminated", BooleanType),
+      StructField("text_kept", BooleanType),
+      StructField("has_image", BooleanType),
+      StructField("has_audio", BooleanType),
+      StructField("has_video", BooleanType),
+      StructField("img_kept", BooleanType),
+      StructField("aud_kept", BooleanType),
+      StructField("vid_kept", BooleanType),
+      StructField("img_dup_of", LongType),
+      StructField("aud_dup_of", LongType),
+      StructField("vid_dup_of", LongType),
+      StructField("n_quarantined", IntegerType),
+      StructField("kept", BooleanType),
+      StructField("clean_text", StringType),
+      StructField("batch_id", LongType))),
+    quarantine = Some(StructType(Seq(StructField("doc_id", LongType),
+      StructField("modality", StringType),
+      StructField("reason", StringType),
+      StructField("batch_id", LongType)))))
 
   /** All committed verdict rows up to the pointer. */
-  def verdicts(spark: SparkSession, dir: String): DataFrame = {
-    val dirs = VersionedPointer.committedDirs(dir)
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      verdictSchema)
-  }
+  def verdicts(spark: SparkSession, dir: String): DataFrame =
+    Log.history(spark, dir)
 
-  /** All committed quarantine rows (doc_id, modality, reason,
-    * batch_id) up to the pointer — the bad-record evidence stream.
-    */
-  def quarantined(spark: SparkSession, dir: String): DataFrame = {
-    val dirs = VersionedPointer.committedSubDirs(dir, "quarantine")
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("modality", StringType),
-        StructField("reason", StringType),
-        StructField("batch_id", LongType))))
-  }
-
-  private def verdictSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("n_spans", LongType),
-    StructField("n_chars_removed", LongType),
-    StructField("n_sh", LongType),
-    StructField("n_hit", LongType),
-    StructField("n_bigrams", LongType),
-    StructField("lm_micro_nats", LongType),
-    StructField("avg_mn", LongType),
-    StructField("contaminated", BooleanType),
-    StructField("text_kept", BooleanType),
-    StructField("has_image", BooleanType),
-    StructField("has_audio", BooleanType),
-    StructField("has_video", BooleanType),
-    StructField("img_kept", BooleanType),
-    StructField("aud_kept", BooleanType),
-    StructField("vid_kept", BooleanType),
-    StructField("img_dup_of", LongType),
-    StructField("aud_dup_of", LongType),
-    StructField("vid_dup_of", LongType),
-    StructField("n_quarantined", IntegerType),
-    StructField("kept", BooleanType),
-    StructField("clean_text", StringType),
-    StructField("batch_id", LongType)))
+  /** All committed quarantine rows up to the pointer. */
+  def quarantined(spark: SparkSession, dir: String): DataFrame =
+    Log.quarantined(spark, dir)
 
   /** Apply one micro-batch of wide multimodal rows (doc_id, text,
     * image?, audio?, video?); false iff already applied.
@@ -174,11 +165,9 @@ object MultimodalCurationSink {
   def applyBatch(batch: DataFrame, batchId: Long, fpIndexName: String,
       benchDir: String, art: CurationSink.Artifacts,
       img: ModalIndex, aud: ModalIndex, vid: ModalIndex,
-      outDir: String, epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else Pin.scope {
+      outDir: String, epoch: Option[String] = None): Boolean =
+    Log.serve(outDir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(outDir)
       val docs = batch.select("doc_id", "text")
       // ONE decode pass, pinned: consumed by three modal legs + the
       // quarantine log + the evidence join
@@ -241,12 +230,8 @@ object MultimodalCurationSink {
       // batch docs' text fingerprints enter history, whatever their
       // verdicts — the probe's pinned winnow rows appended directly
       FpIndex.appendRows(spark, fpIndexName, bfp)
-      out.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
-      quar.write.mode("overwrite").parquet(s"$outDir/quarantine/v=$batchId")
-      VersionedPointer.commit(outDir, batchId, epoch)
-      true
+      Seq(out, quar)
     }
-  }
 
   /** Attach to a wide multimodal doc stream. The fingerprint index and
     * the three modal assignment indexes must exist (seeded from the
@@ -258,15 +243,9 @@ object MultimodalCurationSink {
   def attach(docs: DataFrame, fpIndexName: String, benchDir: String,
       art: CurationSink.Artifacts, img: ModalIndex, aud: ModalIndex,
       vid: ModalIndex, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, fpIndexName, benchDir, art,
-          img, aud, vid, outDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(docs, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, fpIndexName, benchDir, art,
+        img, aud, vid, outDir, epoch)
+    }
 }

@@ -26,8 +26,11 @@ import graft.operators.PostingsIndex
   *    sidecar slot v=b+1 computed deterministically from slot v=b and
   *    the batch content, so a crash ANYWHERE between the postings
   *    append and the pointer move replays into byte-identical files in
-  *    the same slot (the pointer gate skips fully-committed batches
-  *    before touching anything);
+  *    the same slot. The sidecar root is this sink's [[VersionedPointer]]
+  *    log: its `_LATEST` is the gate (batch b is served once the
+  *    pointer reaches b+1) and its `_EPOCH` binds the checkpoint
+  *    lineage, so a stream restarted with a wiped checkpoint fails
+  *    fast instead of skipping every batch below the old pointer;
   *  - postings file storage stays at-least-once, and the probe reads
   *    row-DISTINCT on (term, doc_id) — replay duplicates are identical
   *    full rows, so the distinct restores the exact posting set.
@@ -38,15 +41,15 @@ import graft.operators.PostingsIndex
 object RetrievalIndexSink {
 
   /** Apply one micro-batch of (doc_id, text); false iff batch b was
-    * already fully committed (sidecar pointer at or past b+1).
+    * already fully committed (sidecar pointer at or past b+1). `epoch`
+    * is the checkpoint-lineage guard; attach() always passes it.
     */
   def applyBatch(batch: DataFrame, batchId: Long, indexName: String,
-      indexPath: Path): Boolean =
-    if (PostingsIndex.sidecarVersion(indexPath) >= batchId + 1) false
-    else {
+      indexPath: Path, epoch: Option[String] = None): Boolean =
+    VersionedPointer.serve(PostingsIndex.sidecarRoot(indexPath).toString,
+        batchId + 1, epoch) {
       PostingsIndex.append(batch.sparkSession, indexName, indexPath,
         batch.select("doc_id", "text"), toVersion = Some(batchId + 1))
-      true
     }
 
   /** Attach to a (doc_id, text) stream. The index must exist:
@@ -55,11 +58,7 @@ object RetrievalIndexSink {
     */
   def attach(docs: DataFrame, indexName: String, indexPath: Path,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, indexName, indexPath); ()
-      }
-      .start()
+    VersionedPointer.attach(docs, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, indexName, indexPath, epoch)
+    }
 }

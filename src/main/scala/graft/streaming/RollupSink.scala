@@ -23,8 +23,8 @@ import org.apache.spark.sql.types._
   * recompute bit-for-bit (RollupSinkSpec asserts equality after every
   * batch).
   *
-  * Exactly-once uses [[UpsertSink]]'s versioned-snapshot + `_LATEST`
-  * pointer protocol on the rollup's own directory. One subtlety is
+  * Exactly-once is [[VersionedPointer]]'s, on the rollup's own
+  * directory. One subtlety is
   * load-bearing: the pre-batch snapshot is resolved as the newest
   * version STRICTLY BELOW this batchId — NOT the snapshot pointer —
   * because after a crash between the two sinks the snapshot pointer
@@ -39,28 +39,18 @@ object RollupSink {
     StructField("n_keys", LongType),
     StructField("cents_total", LongType)))
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
+  /** The rollup table, one version per batch. */
+  val Log: SinkLog = SinkLog(rollupSchema)
 
   /** Newest snapshot version strictly below `batchId` in an UpsertSink
-    * directory (None before the first batch).
+    * directory (None before the first batch) — the pointer-free
+    * listing [[VersionedPointer.vacuum]] uses.
     */
-  def versionBefore(dir: String, batchId: Long): Option[Long] = {
-    graft.core.Lake.listNames(dir)
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong)
-      .filter(_ < batchId)
-      .sorted.lastOption
-  }
-
-  private def emptyRollup(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rollupSchema)
+  def versionBefore(dir: String, batchId: Long): Option[Long] =
+    VersionedPointer.liveIds(dir, -1L, batchId - 1).lastOption
 
   def rollup(spark: SparkSession, dir: String): DataFrame =
-    latestVersion(dir) match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v")
-      case None => emptyRollup(spark)
-    }
+    Log.current(spark, dir)
 
   private def snapshotAt(spark: SparkSession, snapDir: String,
       batchId: Long): DataFrame =
@@ -86,10 +76,8 @@ object RollupSink {
                 "pre-batch version was vacuumed (snapshot vacuum must " +
                 "keep >= 2 versions); refusing to double-count")
         }
-        // before the first batch the snapshot is empty; reuse
-        // UpsertSink's empty-schema frame via an impossible filter so
-        // the schema stays canonical
-        UpsertSink.snapshot(spark, snapDir).filter(lit(false))
+        // before the first batch the snapshot is empty
+        UpsertSink.Log.empty(spark)
     }
 
   /** Apply one micro-batch's rollup delta; false iff already applied.
@@ -99,11 +87,9 @@ object RollupSink {
     */
   def applyBatch(batch: DataFrame, batchId: Long, snapDir: String,
       rollDir: String,
-      epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(rollDir, batchId, epoch)) false
-    else {
+      epoch: Option[String] = None): Boolean =
+    Log.serve(rollDir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(rollDir)
       val collapsed = UpsertSink.collapse(
         batch.select(UpsertSink.changeSchema.fieldNames.map(col): _*))
       val oldSnap = snapshotAt(spark, snapDir, batchId)
@@ -130,11 +116,8 @@ object RollupSink {
           (coalesce(col("cents_total"), lit(0L)) + coalesce(col("dc"), lit(0L)))
             .as("cents_total"))
         .filter(col("n_keys") > 0)
-      merged.write.mode("overwrite").parquet(s"$rollDir/v=$batchId")
-      VersionedPointer.commit(rollDir, batchId, epoch)
-      true
+      Seq(merged)
     }
-  }
 
   /** Attach BOTH sinks to one change stream: the rollup applies first
     * (it must see the pre-batch snapshot versions; applying it after a
@@ -144,16 +127,10 @@ object RollupSink {
     * idempotent, so any crash point replays cleanly.
     */
   def attach(changes: DataFrame, snapshotDir: String, rollupDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    changes.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, snapshotDir, rollupDir, Some(epoch))
-        UpsertSink.applyBatch(batch, batchId, snapshotDir, Some(epoch))
-        ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(changes, checkpointDir, "update") {
+      (batch, batchId, epoch) =>
+        applyBatch(batch, batchId, snapshotDir, rollupDir, epoch)
+        UpsertSink.applyBatch(batch, batchId, snapshotDir, epoch)
+    }
 }

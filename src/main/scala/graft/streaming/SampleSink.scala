@@ -22,11 +22,9 @@ import graft.operators.SketchExact
   * after every batch — determinism of the md5 priorities is what makes
   * the claim testable at equality, not approximately).
   *
-  * Exactly-once: [[UpsertSink]]'s versioned-snapshot + `_LATEST`
-  * pointer protocol verbatim — `v=<batchId>` written first, pointer
-  * moved atomically after; a replayed batch with `latest >= batchId`
-  * skips; a crash between write and pointer-move recomputes the SAME
-  * bytes into the same version slot (the merge reads the POINTER
+  * Exactly-once: [[VersionedPointer]] — a replayed batch skips; a
+  * crash between write and pointer-move recomputes the SAME bytes
+  * into the same version slot (the merge reads the POINTER
   * version, never max-v, so the half-committed slot is invisible).
   * Because priorities are a pure function of (doc_id, w), a replayed
   * merge is deterministic with no further coordination — the seam that
@@ -48,20 +46,15 @@ object SampleSink {
     StructField("doc_id", LongType),
     StructField("text", StringType)))
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
+  /** The sample: k rows (doc_id, w, priority). */
+  val Log: SinkLog = SinkLog(StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("w", IntegerType),
+    StructField("priority", LongType))))
 
   /** Current k-row sample (empty-schema frame before the first batch). */
   def sample(spark: SparkSession, dir: String): DataFrame =
-    latestVersion(dir) match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v")
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("doc_id", LongType),
-            StructField("w", IntegerType),
-            StructField("priority", LongType))))
-    }
+    Log.current(spark, dir)
 
   /** q97's row shape for a (doc_id, text) frame: weight = token count
     * clipped to [1, 64], priority = min over w md5 replica hashes.
@@ -78,37 +71,22 @@ object SampleSink {
 
   /** Apply one micro-batch; false iff skipped as already applied. */
   def applyBatch(batch: DataFrame, batchId: Long, dir: String,
-      epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(dir, batchId, epoch)) false
-    else {
+      epoch: Option[String] = None): Boolean =
+    Log.serve(dir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(dir)
       // batch-local bottom-k FIRST: the union the merge sorts is ≤ 2k
       // rows however large the batch was
       val cand = bottomK(prioritized(
         batch.select(docSchema.fieldNames.map(col): _*)))
       val merged = bottomK(sample(spark, dir).unionByName(cand).distinct())
       // coalesce(1): bounded state — the merged frame is at most k sample rows
-      merged.coalesce(1).write.mode("overwrite").parquet(s"$dir/v=$batchId")
-      VersionedPointer.commit(dir, batchId, epoch)
-      true
+      Seq(merged.coalesce(1))
     }
-  }
-
-  /** Drop sample versions older than the `keep` most recent. */
-  def vacuum(dir: String, keep: Int): Seq[Long] =
-    UpsertSink.vacuum(dir, keep)
 
   /** Attach the sink to a (doc_id, text) ingest stream. */
   def attach(docs: DataFrame, sampleDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, sampleDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(docs, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, sampleDir, epoch)
+    }
 }

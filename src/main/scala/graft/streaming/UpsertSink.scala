@@ -12,19 +12,12 @@ import org.apache.spark.sql.types._
   *
   * `foreachBatch` is an AT-LEAST-ONCE surface: after a crash the engine
   * re-delivers the last uncommitted micro-batch with the SAME batchId.
-  * The sink turns that into exactly-once with a versioned-snapshot +
-  * pointer protocol:
-  *
-  *   1. read the current snapshot version from the `_LATEST` pointer;
-  *   2. if `latest >= batchId` the batch was already applied — SKIP
-  *      (the replay no-op; with delta-accumulating changes a re-apply
-  *      would visibly double-add, so idempotence is load-bearing, not
-  *      cosmetic);
-  *   3. else merge the collapsed batch into snapshot `v=<latest>` and
-  *      write `v=<batchId>`, then atomically move the new pointer into
-  *      place (temp file + ATOMIC_MOVE — rename is atomic on POSIX and
-  *      HDFS; an object-store deployment swaps this one seam for a
-  *      metastore/commit-log CAS, the snapshot layout is unchanged).
+  * The sink turns that into exactly-once through [[VersionedPointer]]:
+  * each batch merges the collapsed changes into the snapshot the
+  * pointer names and writes the result as version `v=<batchId>`; a
+  * replayed batch is skipped by the pointer gate (with
+  * delta-accumulating changes a re-apply would visibly double-add, so
+  * idempotence is load-bearing, not cosmetic).
   *
   * Batch collapse is COMMUTATIVE per key (sum of deltas, tombstone wins,
   * name by latest event-time) so the distributed aggregation is
@@ -33,7 +26,8 @@ import org.apache.spark.sql.types._
   * At scale: the merge is ONE shuffle of snapshot + change-set on the
   * merge key per micro-batch (identical plan to q71); the change side of
   * a real CDC feed is micro-batch-sized (broadcastable); old versions are
-  * reclaimed by [[vacuum]], so storage is `keep` × snapshot size.
+  * reclaimed by [[VersionedPointer.vacuum]], so storage is `keep` ×
+  * snapshot size.
   */
 object UpsertSink {
 
@@ -68,70 +62,31 @@ object UpsertSink {
         (coalesce(col("s.balance_cents"), lit(0L)) +
           coalesce(col("c.delta_cents"), lit(0L))).as("balance_cents"))
 
-  /** Version of the last applied batch, if any. */
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
+  /** The snapshot table, one version per batch. */
+  val Log: SinkLog = SinkLog(StructType(Seq(
+    StructField("key", LongType),
+    StructField("name", StringType),
+    StructField("balance_cents", LongType))))
 
   /** Current snapshot table (empty-schema frame before the first batch). */
   def snapshot(spark: SparkSession, dir: String): DataFrame =
-    latestVersion(dir) match {
-      case Some(v) => spark.read.parquet(s"$dir/v=$v")
-      case None =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("key", LongType),
-            StructField("name", StringType),
-            StructField("balance_cents", LongType))))
-    }
+    Log.current(spark, dir)
 
   /** Apply one micro-batch; returns false iff skipped as already applied.
     * Streaming-internal columns are projected away so the same method
     * serves foreachBatch and direct (batch-backfill) callers.
     */
   def applyBatch(batch: DataFrame, batchId: Long, dir: String,
-      epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(dir, batchId, epoch)) false
-    else {
-      val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(dir)
-      val merged = merge(snapshot(spark, dir),
-        collapse(batch.select(changeSchema.fieldNames.map(col): _*)))
-      merged.write.mode("overwrite").parquet(s"$dir/v=$batchId")
-      VersionedPointer.commit(dir, batchId, epoch)
-      true
+      epoch: Option[String] = None): Boolean =
+    Log.serve(dir, batchId, epoch) {
+      Seq(merge(snapshot(batch.sparkSession, dir),
+        collapse(batch.select(changeSchema.fieldNames.map(col): _*))))
     }
-  }
-
-  /** Drop snapshot versions older than the `keep` most recent. The
-    * pointer is the source of truth, so removing superseded versions
-    * never races a reader that re-resolves the pointer — and the
-    * pointer-resolved version itself is NEVER dropped: in the crash
-    * window a half-committed orphan slot (v > pointer) exists, and
-    * counting it against `keep` would otherwise delete the one version
-    * the pointer still resolves to (every sink sharing this vacuum
-    * would then fail its next read instead of replaying).
-    */
-  def vacuum(dir: String, keep: Int): Seq[Long] = {
-    val pointer = latestVersion(dir)
-    val versions = graft.core.Lake.listNames(dir)
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong)
-      .sorted
-    val drop = versions.dropRight(keep)
-      .filter(v => !pointer.contains(v))
-    drop.foreach(v => graft.core.Lake.deleteTree(s"$dir/v=$v"))
-    drop
-  }
 
   /** Attach the sink to a change stream. */
   def attach(changes: DataFrame, snapshotDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    changes.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, snapshotDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(changes, checkpointDir, "update") {
+      (batch, batchId, epoch) => applyBatch(batch, batchId, snapshotDir, epoch)
+    }
 }

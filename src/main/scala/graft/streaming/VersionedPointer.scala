@@ -2,10 +2,82 @@ package graft.streaming
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
-import graft.core.Lake
+import graft.core.{Lake, Pin}
 import graft.operators.IndexCommit
+
+/** One foreachBatch sink's output log, declared once: the schema of the
+  * rows a batch commits under `v=N` (under `v=N/<leaf>` when the sink
+  * keeps control files beside them), and the schema of the sink's
+  * `quarantine/v=N` sub-log if it has one. The writer ([[serve]]), the
+  * history and state readers and their empty-frame fallbacks all derive
+  * from this one value, so a reader before the first batch answers with
+  * the schema a reader after it does. The protocol itself is
+  * [[VersionedPointer]]'s.
+  */
+final case class SinkLog(schema: StructType,
+    quarantine: Option[StructType] = None, leaf: Option[String] = None) {
+
+  private def versionDir(dir: String, v: Long): String =
+    s"$dir/v=$v" + leaf.fold("")("/" + _)
+
+  /** Serve one batch through [[VersionedPointer.serve]]: `frames` — the
+    * `v=N` rows, then the quarantine rows when the log declares them —
+    * is evaluated after the replay gate and inside the batch's
+    * [[graft.core.Pin.scope]], so a sink's index appends run before
+    * its log is written and its pins are released after the commit.
+    */
+  def serve(outDir: String, batchId: Long, epoch: Option[String])(
+      frames: => Seq[DataFrame]): Boolean =
+    VersionedPointer.serve(outDir, batchId, epoch) {
+      val fs = frames
+      require(fs.size == 1 + quarantine.size,
+        s"a batch of $outDir writes ${1 + quarantine.size} frames, got ${fs.size}")
+      fs.head.write.mode("overwrite").parquet(versionDir(outDir, batchId))
+      fs.tail.foreach(_.write.mode("overwrite")
+        .parquet(s"$outDir/${SinkLog.Quarantine}/v=$batchId"))
+    }
+
+  /** Every committed row, folded history included (empty before the
+    * first commit).
+    */
+  def history(spark: SparkSession, dir: String): DataFrame =
+    read(spark, VersionedPointer.committedDirs(dir), schema)
+
+  /** Every committed quarantine row, folded history included. */
+  def quarantined(spark: SparkSession, dir: String): DataFrame =
+    read(spark, VersionedPointer.committedSubDirs(dir, SinkLog.Quarantine),
+      quarantine.get)
+
+  /** The latest committed state, None before the first commit — the
+    * snapshot sinks' reader.
+    */
+  def state(spark: SparkSession, dir: String): Option[DataFrame] =
+    VersionedPointer.latest(dir)
+      .map(v => spark.read.parquet(versionDir(dir, v)))
+
+  /** The latest committed state, or an empty frame of the schema. */
+  def current(spark: SparkSession, dir: String): DataFrame =
+    state(spark, dir).getOrElse(empty(spark))
+
+  def empty(spark: SparkSession): DataFrame = emptyOf(spark, schema)
+
+  private def emptyOf(spark: SparkSession, s: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
+
+  private def read(spark: SparkSession, dirs: Seq[String],
+      s: StructType): DataFrame =
+    if (dirs.nonEmpty) spark.read.parquet(dirs: _*) else emptyOf(spark, s)
+}
+
+object SinkLog {
+
+  /** The one sub-log name: the modal sinks' bad-record evidence. */
+  val Quarantine = "quarantine"
+}
 
 /** The versioned-pointer exactly-once protocol every foreachBatch sink
   * in this package speaks, factored to ONE implementation: results for
@@ -16,6 +88,14 @@ import graft.operators.IndexCommit
   * I/O goes through [[graft.core.Lake]] (Hadoop `FileSystem`), so the
   * decision logs can live beside the data on HDFS/object stores — see
   * Lake's per-store portability contract.
+  *
+  * The lifecycle is one body per step, and no sink restates it: [[attach]]
+  * starts the stream under the checkpoint-epoch guard, [[serve]] gates,
+  * writes and commits one batch (a sink declares its log as a
+  * [[SinkLog]], whose readers list [[committedDirs]]), and [[vacuum]]
+  * reclaims superseded snapshot versions. This file is the only place
+  * in `src/main` that starts a stream, tests the replay gate or moves a
+  * pointer (MeasureSpec's source scan holds it).
   *
   * CHECKPOINT-EPOCH GUARD: the replay rule "batchId ≤ pointer ⇒
   * already served" assumes batch ids are monotonic per outDir — true
@@ -94,6 +174,56 @@ object VersionedPointer {
     val tmp = s"$outDir/_LATEST.tmp.$batchId"
     Lake.writeString(tmp, batchId.toString)
     Lake.overwriteRename(tmp, pointer(outDir))
+  }
+
+  /** Attach `apply(batch, batchId, epoch)` to `rows` under the
+    * checkpoint-epoch guard — the one `writeStream` body. `outputMode`
+    * is "update" for the sinks fed by a keyed change stream.
+    */
+  def attach(rows: DataFrame, checkpointDir: String,
+      outputMode: String = "append")(
+      apply: (DataFrame, Long, Option[String]) => Unit): StreamingQuery = {
+    val epoch = epochOf(checkpointDir)
+    rows.writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        apply(batch, batchId, Some(epoch))
+      }
+      .start()
+  }
+
+  /** Serve one batch: the replay gate, then — inside one
+    * [[graft.core.Pin.scope]] — `write` the batch's results under
+    * `outDir` and commit `batchId`. False iff the batch was already
+    * served. `write` may run index appends before its log write; a
+    * crash anywhere before the commit replays the whole body.
+    */
+  def serve(outDir: String, batchId: Long, epoch: Option[String])(
+      write: => Unit): Boolean =
+    if (alreadyServed(outDir, batchId, epoch)) false
+    else Pin.scope {
+      Lake.mkdirs(outDir)
+      write
+      commit(outDir, batchId, epoch)
+      true
+    }
+
+  /** Drop snapshot versions older than the `keep` most recent. The
+    * pointer is the source of truth, so removing superseded versions
+    * never races a reader that re-resolves the pointer — and the
+    * pointer-resolved version itself is NEVER dropped: in the crash
+    * window a half-committed orphan slot (v > pointer) exists, and
+    * counting it against `keep` would otherwise delete the one version
+    * the pointer still resolves to (the next read would then fail
+    * instead of replaying).
+    */
+  def vacuum(dir: String, keep: Int): Seq[Long] = {
+    val pointer = latest(dir)
+    val drop = liveIds(dir, -1L, Long.MaxValue).dropRight(keep)
+      .filterNot(pointer.contains)
+    drop.foreach(v => Lake.deleteTree(s"$dir/v=$v"))
+    drop
   }
 
   /** All committed result directories of `dir`, oldest history first:
@@ -204,7 +334,8 @@ object VersionedPointer {
     * — ONE listing rule shared by the readers, the trigger, and the
     * fold, so they cannot disagree on what is live.
     */
-  private def liveIds(root: String, floor: Long, cap: Long): Seq[Long] =
+  private[streaming] def liveIds(root: String, floor: Long,
+      cap: Long): Seq[Long] =
     Lake.listNames(root)
       .filter(_.startsWith("v="))
       .flatMap(_.stripPrefix("v=").toLongOption)

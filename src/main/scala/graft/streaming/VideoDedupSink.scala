@@ -34,8 +34,6 @@ object VideoDedupSink {
     StructField("vec_id", LongType),
     StructField("video", BinaryType)))
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
-
   /** All committed verdicts (vec_id, cid, dup_of, kept, batch_id). */
   def verdicts(spark: SparkSession, dir: String): DataFrame =
     ModalDedupIngest.verdicts(spark, dir)
@@ -71,7 +69,7 @@ object VideoDedupSink {
     */
   def attach(clips: DataFrame, indexName: String, centroids: DataFrame,
       outDir: String, checkpointDir: String): StreamingQuery =
-    ModalDedupIngest.attach(clips, checkpointDir) { (batch, id, epoch) =>
+    VersionedPointer.attach(clips, checkpointDir) { (batch, id, epoch) =>
       applyBatch(batch, id, indexName, centroids, outDir, epoch)
     }
 }

@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
-import graft.core.Pin
 import graft.operators.{FpIndex, Winnow}
 
 /** Continuous-ingest char-level exact-substring dedup — the streaming
@@ -35,43 +35,33 @@ import graft.operators.{FpIndex, Winnow}
   *    fingerprint rows) can never change any later batch's spans
   *    either.
   *
-  * The log commits with the house write-version-then-move-pointer
-  * protocol; a replay of a fully-committed batch is skipped by the
+  * The log commits through [[VersionedPointer]]; a replay of a
+  * fully-committed batch is skipped by the
   * pointer gate before touching anything. The index is at-least-once
   * storage with idempotent read semantics — [[IngestDedupSink]]'s
   * documented contract, verbatim.
   */
 object WinnowIndexSink {
 
-  def latestVersion(dir: String): Option[Long] = VersionedPointer.latest(dir)
-
-  /** All committed cleaned docs (doc_id, n_spans, n_chars_removed,
-    * clean_text, batch_id) up to the pointer.
+  /** The cleaned-doc log (doc_id, n_spans, n_chars_removed,
+    * clean_text, batch_id).
     */
+  val Log: SinkLog = SinkLog(StructType(Seq(StructField("doc_id", LongType),
+    StructField("n_spans", LongType),
+    StructField("n_chars_removed", LongType),
+    StructField("clean_text", StringType),
+    StructField("batch_id", LongType))))
+
+  /** All committed cleaned docs up to the pointer. */
   def cleanedDocs(spark: SparkSession, dir: String): DataFrame =
-    latestVersion(dir) match {
-      case Some(v) =>
-        val dirs = VersionedPointer.committedDirs(dir)
-        spark.read.parquet(dirs: _*)
-      case None =>
-        import org.apache.spark.sql.types._
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("doc_id", LongType),
-            StructField("n_spans", LongType),
-            StructField("n_chars_removed", LongType),
-            StructField("clean_text", StringType),
-            StructField("batch_id", LongType))))
-    }
+    Log.history(spark, dir)
 
   /** Apply one micro-batch of (doc_id, text); false iff already applied. */
   def applyBatch(batch: DataFrame, batchId: Long, indexName: String,
       outDir: String,
-      epoch: Option[String] = None): Boolean = {
-    if (VersionedPointer.alreadyServed(outDir, batchId, epoch)) false
-    else Pin.scope {
+      epoch: Option[String] = None): Boolean =
+    Log.serve(outDir, batchId, epoch) {
       val spark = batch.sparkSession
-      graft.core.Lake.mkdirs(outDir)
       val docs = batch.select("doc_id", "text")
       // keep the probe's pinned winnow rows and append THEM — the
       // append otherwise re-winnows the batch the probe just paid for
@@ -90,25 +80,16 @@ object WinnowIndexSink {
       val out = Winnow.spliceClean(alld, spans)
         .withColumn("batch_id", lit(batchId))
       FpIndex.appendRows(spark, indexName, bfp)
-      out.write.mode("overwrite").parquet(s"$outDir/v=$batchId")
-      VersionedPointer.commit(outDir, batchId, epoch)
-      true
+      Seq(out)
     }
-  }
 
   /** Attach to a (doc_id, text) stream. The index must exist —
     * `FpIndex.Layout.initIndex` for a cold start, or [[FpIndex.buildIndex]]
     * over an existing corpus to seed history.
     */
   def attach(docs: DataFrame, indexName: String, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val epoch = VersionedPointer.epochOf(checkpointDir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, indexName, outDir, Some(epoch)); ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    VersionedPointer.attach(docs, checkpointDir) { (batch, batchId, epoch) =>
+      applyBatch(batch, batchId, indexName, outDir, epoch)
+    }
 }

@@ -584,17 +584,17 @@ object ScaleBench {
           // per session (folds mutate them; replica caching would
           // carry one session's chain into the next factor's claim).
           def timeHistFold(majorLeg: Boolean): Double = {
-            import graft.streaming.VersionedPointer
+            import graft.streaming.{SinkLog, VersionedPointer}
             val log = s"$workDir/x$n-histlog-" +
               (if (majorLeg) "maj" else "min")
             graft.core.Lake.deleteTree(log)
+            val histLog = SinkLog(org.apache.spark.sql.types.StructType.fromDDL(
+              "x BIGINT, y BIGINT, batch_id BIGINT"))
             var nextId = 0L
             def addBatch(): Unit = {
-              spark.range(65536).select(
+              histLog.serve(log, nextId, None)(Seq(spark.range(65536).select(
                   col("id").as("x"), (col("id") * lit(7)).as("y"),
-                  lit(nextId).as("batch_id"))
-                .coalesce(1).write.mode("overwrite").parquet(s"$log/v=$nextId")
-              VersionedPointer.commit(log, nextId)
+                  lit(nextId).as("batch_id")).coalesce(1)))
               nextId += 1
             }
             (1 to 2 * n).foreach { _ =>

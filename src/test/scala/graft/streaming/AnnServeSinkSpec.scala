@@ -64,7 +64,7 @@ class AnnServeSinkSpec extends SparkSpec {
     Seq((999L, 1, 999L, 0.0, 1L))
       .toDF("q_id", "rank", "n_id", "cos", "batch_id")
       .write.mode("overwrite").parquet(s"$dir/v=1")
-    assert(AnnServeSink.latestVersion(dir).contains(0L))
+    assert(VersionedPointer.latest(dir).contains(0L))
     assert(served(dir) == committed, "uncommitted junk must be invisible")
     // the replay overwrites the orphan with the real results
     assert(AnnServeSink.applyBatch(qs.filter(col("q_id") >= 4), 1L, sf0001, dir))
@@ -89,7 +89,7 @@ class AnnServeSinkSpec extends SparkSpec {
     try {
       stream.addData(rows.filter(_._1 >= 4): _*)
       q2.processAllAvailable()
-      assert(AnnServeSink.latestVersion(dir).exists(_ >= 1L))
+      assert(VersionedPointer.latest(dir).exists(_ >= 1L))
     } finally q2.stop()
     assert(served(dir) == q117())
   }

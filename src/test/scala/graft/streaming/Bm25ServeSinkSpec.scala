@@ -62,7 +62,7 @@ class Bm25ServeSinkSpec extends SparkSpec {
     Seq((999L, 1, 999L, 9L, 9L, 1L))
       .toDF("q_id", "rank", "doc_id", "n_hit", "bm25_micro", "batch_id")
       .write.mode("overwrite").parquet(s"$dir/v=1")
-    assert(Bm25ServeSink.latestVersion(dir).contains(0L))
+    assert(VersionedPointer.latest(dir).contains(0L))
     assert(served(dir) == committed, "uncommitted junk must be invisible")
     assert(Bm25ServeSink.applyBatch(qs.filter(col("q_id") > 1), 1L, sf0001, dir))
     assert(served(dir) == q91())
@@ -86,7 +86,7 @@ class Bm25ServeSinkSpec extends SparkSpec {
     try {
       stream.addData(rows.filter(_._1 > 1L): _*)
       q2.processAllAvailable()
-      assert(Bm25ServeSink.latestVersion(dir).exists(_ >= 1L))
+      assert(VersionedPointer.latest(dir).exists(_ >= 1L))
     } finally q2.stop()
     assert(served(dir) == q91())
   }

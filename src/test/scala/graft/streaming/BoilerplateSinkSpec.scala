@@ -69,7 +69,7 @@ class BoilerplateSinkSpec extends SparkSpec {
       .toDF("doc_id", "clean_text", "n_lines", "n_kept", "n_short",
         "n_link", "n_stop", "admit", "batch_id")
       .write.mode("overwrite").parquet(s"$dir/v=1")
-    assert(BoilerplateSink.latestVersion(dir).contains(0L))
+    assert(VersionedPointer.latest(dir).contains(0L))
     assert(served(dir) == committed, "uncommitted junk must be invisible")
     assert(BoilerplateSink.applyBatch(
       docs.filter(col("doc_id") % 2 === 1), 1L, dir))
@@ -93,7 +93,7 @@ class BoilerplateSinkSpec extends SparkSpec {
     try {
       stream.addData(rows.filter(_._1 % 2 == 1): _*)
       q2.processAllAvailable()
-      assert(BoilerplateSink.latestVersion(dir).exists(_ >= 1L))
+      assert(VersionedPointer.latest(dir).exists(_ >= 1L))
     } finally q2.stop()
     assert(served(dir) == q120())
   }

@@ -121,10 +121,10 @@ class ClusterIndexSinkSpec extends SparkSpec {
     val outDir = tmp("graft-clidx-seam")
     assert(ClusterIndexSink.applyBatch(batchDf(batches(0)), 0L, name,
       centDf, outDir))
-    val b1 = ClusterIndexSink.assignedBatch(batchDf(batches(1)), centDf)
+    val b1 = ClusterIndex.assignBatch(batchDf(batches(1)), centDf)
       .localCheckpoint(true)
     def probe(exclude: Boolean) = verdictMap(
-      ClusterIndexSink.probeVerdicts(spark, name, b1, exclude))
+      ClusterIndex.probeVerdicts(spark, name, b1, exclude))
     val clean = probe(exclude = true)
     assert(clean == probe(exclude = false),
       "exclusion must be a no-op before any append of this batch")

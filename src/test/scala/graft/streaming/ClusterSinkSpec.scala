@@ -110,7 +110,7 @@ class ClusterSinkSpec extends SparkSpec {
     Seq((99L, Array(1L, 2L), 5L, Array(1L, 2L)))
       .toDF("cid", "s", "n", "cv")
       .write.mode("overwrite").parquet(s"$dir/v=1")
-    assert(ClusterSink.latestVersion(dir).contains(0L))
+    assert(VersionedPointer.latest(dir).contains(0L))
     assert(ClusterSink.applyBatch(batchOf(all, 1), 1L, dir))
     assertSame(dir,
       replay((0 to 1).map(i => all.filter(_._1 % 3 == i))))
@@ -136,7 +136,7 @@ class ClusterSinkSpec extends SparkSpec {
       assertSame(dir,
         replay((0 to 1).map(i => all.filter(_._1 % 3 == i))))
     } finally q2.stop()
-    ClusterSink.vacuum(dir, 1)
+    VersionedPointer.vacuum(dir, 1)
     assertSame(dir,
       replay((0 to 1).map(i => all.filter(_._1 % 3 == i))))
   }

@@ -77,7 +77,7 @@ class DecontamSinkSpec extends SparkSpec {
     Seq((999L, 1, 1L, false, 1L))
       .toDF("doc_id", "n_sh", "n_hit", "admit", "batch_id")
       .write.mode("overwrite").parquet(s"$dir/v=1")
-    assert(DecontamSink.latestVersion(dir).contains(0L))
+    assert(VersionedPointer.latest(dir).contains(0L))
     assert(DecontamSink.applyBatch(third(1), 1L, sf0001, dir))
     val exact = q53()
     verdictRows(dir).foreach { case (id, nSh, nHit, admit) =>
@@ -104,7 +104,7 @@ class DecontamSinkSpec extends SparkSpec {
     try {
       stream.addData(rows.filter(_._1 % 2 == 1): _*)
       q2.processAllAvailable()
-      assert(DecontamSink.latestVersion(dir).exists(_ >= 1L))
+      assert(VersionedPointer.latest(dir).exists(_ >= 1L))
     } finally q2.stop()
     val exact = q53()
     val got = verdictRows(dir)

@@ -105,7 +105,7 @@ class HeavyHittersSinkSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/v=1/summary")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/v=1", "_TOTAL"), "999")
-    assert(HeavyHittersSink.latestVersion(dir).contains(0L))
+    assert(VersionedPointer.latest(dir).contains(0L))
     assert(HeavyHittersSink.applyBatch(third(1), 1L, dir))
     checkInvariants(dir, 1)
   }
@@ -128,10 +128,10 @@ class HeavyHittersSinkSpec extends SparkSpec {
       stream.addData(rows.filter(_._1 % 3 == 1): _*)
       q2.processAllAvailable()
       checkInvariants(dir, 1)
-      assert(HeavyHittersSink.latestVersion(dir).exists(_ >= 1L))
+      assert(VersionedPointer.latest(dir).exists(_ >= 1L))
     } finally q2.stop()
     // vacuum keeps the pointer-resolved version readable
-    HeavyHittersSink.vacuum(dir, 1)
+    VersionedPointer.vacuum(dir, 1)
     checkInvariants(dir, 1)
   }
 }

@@ -92,6 +92,42 @@ class HistoryFoldSpec extends SparkSpec {
       major = true).isEmpty)
   }
 
+  // every history reader, fed a log of plain committed batches: a minor
+  // fold (newest dir kept live) and then a full fold (nothing live) must
+  // both read back exactly the committed rows
+  private val historyReaders: Seq[(String, String => DataFrame)] = Seq(
+    "IngestDedupSink.decisions" -> (IngestDedupSink.decisions(spark, _)),
+    "WinnowIndexSink.cleanedDocs" -> (WinnowIndexSink.cleanedDocs(spark, _)),
+    "ClusterIndexSink.verdicts" -> (ClusterIndexSink.verdicts(spark, _)),
+    "CurationSink.verdicts" -> (CurationSink.verdicts(spark, _)),
+    "MultimodalCurationSink.verdicts" ->
+      (MultimodalCurationSink.verdicts(spark, _)),
+    "ImageDedupSink.verdicts" -> (ImageDedupSink.verdicts(spark, _)),
+    "BoilerplateSink.decisions" -> (BoilerplateSink.decisions(spark, _)),
+    "DecontamSink.decisions" -> (DecontamSink.decisions(spark, _)),
+    "AnnServeSink.results" -> (AnnServeSink.results(spark, _)),
+    "Bm25ServeSink.results" -> (Bm25ServeSink.results(spark, _)),
+    "HybridServeSink.results" -> (HybridServeSink.results(spark, _)))
+
+  historyReaders.foreach { case (reader, read) =>
+    test(s"$reader is fold-blind after a minor and a full fold") {
+      val dir = tmp("graft-histfold-reader")
+      def rows = read(dir).select("x", "batch_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      (0L to 2L).foreach(i => writeBatch(dir, i, Seq(i * 10, i * 10 + 1)))
+      val before = rows
+      assert(before.size == 6)
+      assert(VersionedPointer.compactHistory(spark, dir, keepLast = 1)
+        .contains((0L, 1L)))
+      assert(rows == before, "a minor fold must not hide folded batches")
+      writeBatch(dir, 3L, Seq(30L))
+      assert(VersionedPointer.compactHistory(spark, dir, keepLast = 0)
+        .contains((2L, 3L)))
+      assert(rows == before :+ ((30L, 3L)),
+        "a fold with no live dir left must still read the whole history")
+    }
+  }
+
   test("a real ingest sink folds between batches; decisions stay identical and the stream continues") {
     val name = s"graft_histfold_idx_${ProcessHandle.current().pid()}"
     BandIndex.Layout.initIndex(spark, name, Paths.get(tmp("graft-histfold-idx"), "i"))

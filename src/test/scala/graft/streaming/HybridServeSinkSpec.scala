@@ -86,7 +86,7 @@ class HybridServeSinkSpec extends SparkSpec {
       .toDF("q_id", "rank", "doc_id", "lex_rank", "sem_rank",
         "rrf_micro", "batch_id")
       .write.mode("overwrite").parquet(s"$dir/v=1")
-    assert(HybridServeSink.latestVersion(dir).contains(0L))
+    assert(VersionedPointer.latest(dir).contains(0L))
     assert(canon(HybridServeSink.results(spark, dir)) == committed,
       "uncommitted junk must be invisible")
     assert(HybridServeSink.applyBatch(

@@ -127,7 +127,7 @@ class ImageDedupSinkSpec extends SparkSpec {
       try {
         stream.addData(rows(230, 256): _*)
         q2.processAllAvailable()
-        assert(ImageDedupSink.latestVersion(out).exists(_ >= 1L))
+        assert(VersionedPointer.latest(out).exists(_ >= 1L))
       } finally q2.stop()
       assert(streamed(out) == q125().sortBy(t => (t._1, t._2)),
         "the restarted stream's verdicts must equal q125's loop")

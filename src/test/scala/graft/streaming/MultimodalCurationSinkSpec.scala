@@ -291,7 +291,7 @@ class MultimodalCurationSinkSpec extends SparkSpec {
       val q2 = start()
       try { stream.addData(rows(w2): _*); q2.processAllAvailable() }
       finally q2.stop()
-      assert(MultimodalCurationSink.latestVersion(outC).exists(_ >= 1L))
+      assert(VersionedPointer.latest(outC).exists(_ >= 1L))
       def all(out: String): Seq[Seq[Any]] =
         MultimodalCurationSink.verdicts(spark, out).collect().toSeq
           .map(_.toSeq).sortBy(_.toString)

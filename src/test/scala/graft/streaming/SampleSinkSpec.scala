@@ -54,7 +54,7 @@ class SampleSinkSpec extends SparkSpec {
     val before = sampleRows(dir)
     assert(!SampleSink.applyBatch(batchDf(0 until 200), 0L, dir))
     assert(sampleRows(dir) == before)
-    assert(SampleSink.latestVersion(dir).contains(0L))
+    assert(VersionedPointer.latest(dir).contains(0L))
   }
 
   test("crash between version write and pointer move recomputes identically") {
@@ -66,9 +66,9 @@ class SampleSinkSpec extends SparkSpec {
     SampleSink.prioritized(batchDf(100 until 150))
       .orderBy(col("priority"), col("doc_id")).limit(SampleSink.K)
       .write.mode("overwrite").parquet(s"$dir/v=1") // wrong content on purpose
-    assert(SampleSink.latestVersion(dir).contains(0L))
+    assert(VersionedPointer.latest(dir).contains(0L))
     assert(SampleSink.applyBatch(batchDf(100 until 150), 1L, dir))
-    assert(SampleSink.latestVersion(dir).contains(1L))
+    assert(VersionedPointer.latest(dir).contains(1L))
     assert(sampleRows(dir) == recompute(0 until 150))
   }
 
@@ -90,10 +90,10 @@ class SampleSinkSpec extends SparkSpec {
       stream.addData(docs(150 until 300): _*)
       q2.processAllAvailable()
       assert(sampleRows(dir) == recompute(0 until 300))
-      assert(SampleSink.latestVersion(dir).exists(_ >= 1L))
+      assert(VersionedPointer.latest(dir).exists(_ >= 1L))
     } finally q2.stop()
     // vacuum keeps the pointer-resolved version readable
-    SampleSink.vacuum(dir, 1)
+    VersionedPointer.vacuum(dir, 1)
     assert(sampleRows(dir) == recompute(0 until 300))
   }
 }

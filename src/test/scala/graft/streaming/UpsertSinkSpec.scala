@@ -57,7 +57,7 @@ class UpsertSinkSpec extends SparkSpec {
     assert(UpsertSink.applyBatch(
       changes((2L, "two-again", 7L, false, at("12:00"))), 2L, dir))
     assert(snapshotMap(dir)(2L) == ("two-again", 7L))
-    assert(UpsertSink.latestVersion(dir).contains(2L))
+    assert(VersionedPointer.latest(dir).contains(2L))
   }
 
   test("replaying a committed batchId is a no-op (the exactly-once seam)") {
@@ -91,7 +91,7 @@ class UpsertSinkSpec extends SparkSpec {
       q1.processAllAvailable()
     } finally q1.stop()
     assert(snapshotMap(snapDir) == Map(1L -> ("one", 100L)))
-    val v1 = UpsertSink.latestVersion(snapDir).get
+    val v1 = VersionedPointer.latest(snapDir).get
 
     // data queued while the sink is down is delivered once after restart
     stream.addData((1L, "one", 11L, false, at("11:00")),
@@ -108,7 +108,7 @@ class UpsertSinkSpec extends SparkSpec {
     } finally q2.stop()
     assert(snapshotMap(snapDir) == Map(1L -> ("one", 111L)),
       "post-restart state must accumulate exactly once and apply the tombstone")
-    assert(UpsertSink.latestVersion(snapDir).get > v1)
+    assert(VersionedPointer.latest(snapDir).get > v1)
   }
 
   test("vacuum drops superseded versions; the pointer target survives") {
@@ -117,7 +117,7 @@ class UpsertSinkSpec extends SparkSpec {
       assert(UpsertSink.applyBatch(
         changes((1L, "one", 10L, false, at("10:00"))), i.toLong, dir))
     }
-    val dropped = UpsertSink.vacuum(dir, keep = 2)
+    val dropped = VersionedPointer.vacuum(dir, keep = 2)
     assert(dropped == Seq(0L, 1L))
     val left = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("v=")).map(_.getName).sorted.toSeq
@@ -138,8 +138,8 @@ class UpsertSinkSpec extends SparkSpec {
     val orphanSrc = new java.io.File(s"$dir/v=1")
     val orphanDst = new java.io.File(s"$dir/v=2")
     org.apache.commons.io.FileUtils.copyDirectory(orphanSrc, orphanDst)
-    assert(UpsertSink.latestVersion(dir).contains(1L))
-    UpsertSink.vacuum(dir, keep = 1)
+    assert(VersionedPointer.latest(dir).contains(1L))
+    VersionedPointer.vacuum(dir, keep = 1)
     // the pointer version survives and the snapshot still reads
     assert(new java.io.File(s"$dir/v=1").isDirectory)
     assert(snapshotMap(dir) == committed)

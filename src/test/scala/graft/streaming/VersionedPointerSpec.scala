@@ -2,9 +2,12 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQueryException
 
+import graft.SparkSpec
 import graft.core.Lake
+import graft.operators.PostingsIndex
 
 /** The shared versioned-pointer protocol ([[VersionedPointer]]) every
   * foreachBatch sink speaks, including the CHECKPOINT-EPOCH guard: the
@@ -18,8 +21,12 @@ import graft.core.Lake
   * dir, and the fail-fast on a lineage mismatch. I/O runs through
   * [[graft.core.Lake]] (Hadoop FileSystem), so this spec also proves
   * the protocol through the Hadoop local filesystem implementation.
+  * The fail-fast also holds for [[RetrievalIndexSink]], whose log is
+  * the postings index's sidecar chain.
   */
-class VersionedPointerSpec extends AnyFunSuite {
+class VersionedPointerSpec extends SparkSpec {
+
+  import spark.implicits._
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
@@ -77,5 +84,36 @@ class VersionedPointerSpec extends AnyFunSuite {
       // epoch-less direct calls (tests/backfills) keep the plain rule
       assert(VersionedPointer.alreadyServed(out, 0L, None))
     } finally Lake.deleteTree(out)
+
+    // the same reset against a stream whose log is an index sidecar:
+    // the new lineage's batch 0 sits below the old sidecar pointer (2)
+    val root = Files.createTempDirectory("graft-vp-retr")
+    try {
+      val name = "graft_vp_retr"
+      val path = root.resolve("idx")
+      PostingsIndex.buildIndexDocs(spark,
+        Seq(1L -> "spark shuffles the hash join build side")
+          .toDF("doc_id", "text"), name, path)
+      implicit val sql = spark.sqlContext
+      def run(ckpt: String, batches: Seq[(Long, String)]*): Unit = {
+        val s = MemoryStream[(Long, String)]
+        val q = RetrievalIndexSink.attach(s.toDF().toDF("doc_id", "text"),
+          name, path, ckpt)
+        try batches.foreach { b => s.addData(b: _*); q.processAllAvailable() }
+        finally q.stop()
+      }
+      val ckpt = root.resolve("ckpt").toString
+      run(ckpt, Seq(2L -> "parquet footers carry min max stats"),
+        Seq(3L -> "the hash aggregate spills to disk"))
+      assert(PostingsIndex.sidecarVersion(path) == 2L)
+      Lake.deleteTree(ckpt)
+      val ex = intercept[StreamingQueryException] {
+        run(ckpt, Seq(4L -> "broadcast the small hash side of a join"))
+      }
+      assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(e => Option(e.getMessage).exists(_.contains("lineage"))),
+        "the sink must fail on the lineage conflict, not skip the batch")
+      assert(PostingsIndex.sidecarVersion(path) == 2L)
+    } finally Lake.deleteTree(root.toString)
   }
 }

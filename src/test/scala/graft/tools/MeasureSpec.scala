@@ -154,4 +154,18 @@ class MeasureSpec extends SparkSpec {
     // the scan sees the lifecycle's own uses, so the guard is not vacuous
     assert(needles.forall(hits(_).nonEmpty))
   }
+
+  test("src/main starts streams, gates and commits sink batches only in the sink lifecycle") {
+    val needles = Seq(".writeStream", "alreadyServed(", "VersionedPointer.commit(")
+    val rest = needles.flatMap(hits)
+      .filterNot(_.contains("graft/streaming/VersionedPointer.scala:"))
+    assert(rest.isEmpty, rest)
+    assert(hits(".writeStream").nonEmpty && hits("alreadyServed(").nonEmpty)
+    // empty frames of a declared schema: the sink log's and the index
+    // layout's, nowhere else
+    val empties = hits("emptyRDD").filterNot(h =>
+      h.contains("graft/streaming/VersionedPointer.scala:") ||
+        h.contains("graft/operators/IndexLayout.scala:"))
+    assert(empties.isEmpty, empties)
+  }
 }
