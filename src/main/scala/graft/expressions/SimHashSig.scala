@@ -65,11 +65,12 @@ object SimHashSig {
     * `string_split_regex` on the same class (a pre-trimmed input has no
     * trailing separators, so no trailing empties; a leading non-space
     * whitespace char survives trim on BOTH engines and yields the same
-    * leading empty token here as there).
+    * leading empty token here as there). [[MinHashBands]] tokenizes with
+    * it too.
     */
-  private val SplitRe = java.util.regex.Pattern.compile("[ \t\n\f\r]+")
+  private[expressions] val SplitRe = java.util.regex.Pattern.compile("[ \t\n\f\r]+")
 
-  private val Digest: ThreadLocal[MessageDigest] =
+  private[expressions] val Digest: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
   /** Static entry point shared by interpreted + generated code paths. */

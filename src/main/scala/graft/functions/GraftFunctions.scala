@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
@@ -43,31 +44,41 @@ object GraftFunctions {
     udf((s: String) => if (s == null) None
     else Some(DetailsLib.extractDrugDetails(s)))
 
-  def register(spark: SparkSession): Unit = {
-    // native codegen Expression (preferred on hot paths)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_normalize_basic_native",
-      exprs => graft.expressions.NormalizeBasic(exprs.head),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow_fingerprints",
-      exprs => graft.expressions.WinnowFingerprints(exprs.head),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_sig",
-      exprs => graft.expressions.SimHashSig(exprs.head),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_boilerplate_clean",
-      exprs => graft.expressions.BoilerplateClean(exprs.head),
-      "scala_udf")
-    spark.udf.register("graft_normalize_text", normalizeText)
-    spark.udf.register("graft_normalize_basic", normalizeBasic)
-    spark.udf.register("graft_slug_id", slugId)
-    spark.udf.register("graft_clean_atc", cleanAtc)
-    spark.udf.register("graft_parse_dose", parseDose)
-    spark.udf.register("graft_normalize_dose_ratio", normalizeDoseRatio)
-    spark.udf.register("graft_normalize_weight_to_mg", normalizeWeightToMg)
-    spark.udf.register("graft_extract_drug_details", extractDrugDetails)
-  }
+  /** Registers every function in `spark`'s session once; a later call on
+    * the same session is a no-op (replacing a function logs a WARN per
+    * name, and the band-key and boilerplate paths call this per plan).
+    */
+  def register(spark: SparkSession): Unit =
+    if (!spark.sessionState.functionRegistry.functionExists(
+        FunctionIdentifier("graft_extract_drug_details"))) {
+      // native codegen Expression (preferred on hot paths)
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "graft_normalize_basic_native",
+        exprs => graft.expressions.NormalizeBasic(exprs.head),
+        "scala_udf")
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "graft_winnow_fingerprints",
+        exprs => graft.expressions.WinnowFingerprints(exprs.head),
+        "scala_udf")
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "graft_simhash_sig",
+        exprs => graft.expressions.SimHashSig(exprs.head),
+        "scala_udf")
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "graft_minhash_bands",
+        exprs => graft.expressions.MinHashBands(exprs.head),
+        "scala_udf")
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "graft_boilerplate_clean",
+        exprs => graft.expressions.BoilerplateClean(exprs.head),
+        "scala_udf")
+      spark.udf.register("graft_normalize_text", normalizeText)
+      spark.udf.register("graft_normalize_basic", normalizeBasic)
+      spark.udf.register("graft_slug_id", slugId)
+      spark.udf.register("graft_clean_atc", cleanAtc)
+      spark.udf.register("graft_parse_dose", parseDose)
+      spark.udf.register("graft_normalize_dose_ratio", normalizeDoseRatio)
+      spark.udf.register("graft_normalize_weight_to_mg", normalizeWeightToMg)
+      spark.udf.register("graft_extract_drug_details", extractDrugDetails)
+    }
 }

@@ -80,29 +80,25 @@ object BandIndex {
       .select(col("doc_id"), col("text"), col("lang"))
       .withColumn("bucket", ingestBucket)
 
-  /** Capped band keys for an arbitrary (doc_id, text) frame. */
-  private[operators] def bandsOfDocs(d: DataFrame): DataFrame =
-    Dedup.bandsOf(Dedup.shingleIndexOf(d).select("doc_id", "sh"))
-
   /** Build the bucketed index over `histDocs` (doc_id, text) at `path`,
     * registered as `name`.
     */
   def buildIndex(spark: SparkSession, histDocs: DataFrame, name: String,
       path: Path): Unit =
-    Layout.write(spark, histRows(bandsOfDocs(histDocs)), name, path)
+    Layout.write(spark, histRows(Dedup.bandsOf(histDocs)), name, path)
 
   private def histRows(bands: DataFrame): DataFrame =
     bands.select(col("doc_id").as("hist_id"), col("band_idx"), col("band_key"))
 
   /** Append an admitted batch's bands to the index. */
   def append(spark: SparkSession, name: String, admittedDocs: DataFrame): Unit =
-    appendBands(spark, name, bandsOfDocs(admittedDocs))
+    appendBands(spark, name, Dedup.bandsOf(admittedDocs))
 
   /** [[append]] over ALREADY-COMPUTED band rows (doc_id, band_idx,
     * band_key) — for callers that just probed the same batch and hold
-    * the probe's pinned band frame ([[probeIndex]]): the
-    * shingle+minhash of the batch is the probe's dominant per-row cost
-    * and must not be paid a second time by the append.
+    * the probe's pinned band frame ([[probeIndex]]): banding the batch
+    * is the probe's dominant per-row cost and must not be paid a second
+    * time by the append.
     */
   private[graft] def appendBands(spark: SparkSession, name: String,
       bands: DataFrame): Unit =
@@ -141,18 +137,18 @@ object BandIndex {
     * Returns (decisions, batch bands), both pinned. The bands are for
     * the probe→admit→append loops that append the same batch's bands
     * right after ([[appendBands]]). Two structural fixes over the lazy
-    * formulation in one: (a) the batch banding subtree — shingle
-    * explode + 8-seed minhash aggregate + band keys — was consumed by
-    * BOTH probe legs and both sides of the within-batch self-join, so
-    * Catalyst evaluated it ~3x per probe (and a 4th time in the
-    * caller's append); the pin bounds it to once. (b) the decision
+    * formulation in one: (a) the batch banding subtree
+    * ([[Dedup.bandsOf]]) was consumed by BOTH probe legs and both sides
+    * of the within-batch self-join, so Catalyst evaluated it ~3x per
+    * probe (and a 4th time in the caller's append); the pin bounds it to
+    * once. (b) the decision
     * frame is eagerly pinned HERE, before any caller's append can
     * mutate the table it reads (q87's ordering rule, now enforced by
     * construction instead of by every call site).
     */
   def probeIndex(spark: SparkSession, name: String, batchDocs: DataFrame,
       excludeBatchFromHistory: Boolean = false): (DataFrame, DataFrame) = {
-    val newb = Pin(bandsOfDocs(batchDocs), "BandIndex.batchBands")
+    val newb = Pin(Dedup.bandsOf(batchDocs), "BandIndex.batchBands")
     val dec = Pin(probeIndexPlan(spark, name, newb, batchDocs,
       excludeBatchFromHistory), "BandIndex.decisions")
     (dec, newb)

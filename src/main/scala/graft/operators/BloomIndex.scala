@@ -81,26 +81,27 @@ object BloomIndex {
     })
   }
 
-  /** Per-doc benchmark-hit counts via the persisted index: map-side
-    * bloom prefilter, then the exact confirm join against the bucketed
-    * shingle table (index side exchange-free — spec-pinned). Output is
-    * identical to q53's exact-broadcast hits.
+  /** Per-doc (doc_id, n_sh, n_hit) via the persisted index, from one
+    * shingled corpus frame ([[Dedup.decontamCounts]]): map-side bloom
+    * prefilter, then the exact confirm join against the bucketed shingle
+    * table (index side exchange-free — spec-pinned). Counts are
+    * identical to q53's.
     */
   def probeHits(spark: SparkSession, dir: String): DataFrame = {
     val (_, corpus) = Dedup.decontamSides(spark, dir)
-    probeHitsOf(spark, dir, corpus)
+    Dedup.decontamCounts(corpus,
+      SketchExact.bloomTest(spark, bloom(spark, dir)), spark.table(ensure(spark, dir)))
   }
 
-  /** The same indexed probe over ANY (doc_id, shs) frame — shared with
-    * the streaming [[graft.streaming.DecontamSink]], whose batches are
-    * not the full corpus.
+  /** Per-doc benchmark-hit counts (doc_id, n_hit; docs without a hit
+    * absent) for ANY (doc_id, shs) frame — shared with the streaming
+    * [[graft.streaming.DecontamSink]], whose batches are not the full
+    * corpus.
     */
   def probeHitsOf(spark: SparkSession, dir: String,
       shingled: DataFrame): DataFrame = {
     val name = ensure(spark, dir)
-    val bfB = spark.sparkContext.broadcast(bloom(spark, dir))
-    val mightContain =
-      udf((x: String) => x != null && bfB.value.mightContain(x))
+    val mightContain = SketchExact.bloomTest(spark, bloom(spark, dir))
     shingled.select(col("doc_id"), explode(col("shs")).as("sh"))
       .filter(mightContain(col("sh")))
       .join(spark.table(name), Seq("sh"))
@@ -108,8 +109,6 @@ object BloomIndex {
   }
 
   /** The full q53-equivalent report from the persisted index. */
-  def probe(spark: SparkSession, dir: String): DataFrame = {
-    val (_, corpus) = Dedup.decontamSides(spark, dir)
-    Dedup.decontamAssemble(corpus, probeHits(spark, dir))
-  }
+  def probe(spark: SparkSession, dir: String): DataFrame =
+    Dedup.decontamAssemble(probeHits(spark, dir))
 }

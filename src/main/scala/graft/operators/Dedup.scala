@@ -81,15 +81,8 @@ object Dedup {
     * few partitions (see [[graft.core.CpuSpread]]).
     */
   private def shingleIndex(s: SparkSession, dir: String): DataFrame =
-    shingleIndexOf(docs(s, dir))
-
-  /** [[shingleIndex]] over an arbitrary (doc_id, text) frame — the entry
-    * point [[BandIndex]] uses to shingle ONLY an ingest batch (or only
-    * the history side at index-build time) instead of the whole corpus.
-    */
-  private[operators] def shingleIndexOf(d: DataFrame): DataFrame =
     graft.core.CpuSpread.byKey(
-      d.select(col("doc_id"), split(trim(col("text")), Ws.Plus).as("t")),
+      docs(s, dir).select(col("doc_id"), split(trim(col("text")), Ws.Plus).as("t")),
       col("doc_id"))
       .select(col("doc_id"), shinglesOf(col("t")).as("shs"))
       .select(col("doc_id"), size(col("shs")).as("n_sh"), explode(col("shs")).as("sh"))
@@ -116,12 +109,24 @@ object Dedup {
     (bench, base.filter(col("bucket") < 250))
   }
 
-  /** Shared decontamination report tail: per-doc hit counts -> containment. */
-  private[operators] def decontamAssemble(
-      corpus: DataFrame, hits: DataFrame): DataFrame =
-    corpus.select(col("doc_id"), size(col("shs")).as("n_sh"))
-      .join(hits, Seq("doc_id"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
+  /** Per-doc (doc_id, n_sh, n_hit) of a (doc_id, shs) corpus frame in ONE
+    * pass over it: `mightContain` (the bloom prefilter) keeps each doc's
+    * candidate shingles inside its array, `explode_outer` leaves one null
+    * row for a doc with none, and a left join against `bench` (the
+    * benchmark shingle set, or its persisted index) marks the true hits.
+    * shinglesOf is distinct per doc and the set is distinct, so
+    * count(hit) = |doc ∩ bench|.
+    */
+  private[operators] def decontamCounts(corpus: DataFrame,
+      mightContain: Column => Column, bench: DataFrame): DataFrame =
+    corpus.select(col("doc_id"), size(col("shs")).as("n_sh"),
+        explode_outer(filter(col("shs"), mightContain)).as("sh"))
+      .join(bench.select(col("sh"), lit(true).as("hit")), Seq("sh"), "left")
+      .groupBy("doc_id", "n_sh").agg(count(col("hit")).as("n_hit"))
+
+  /** Shared decontamination report tail: per-doc counts -> containment. */
+  private[operators] def decontamAssemble(counts: DataFrame): DataFrame =
+    counts
       .withColumn("containment",
         when(col("n_sh") > 0,
           col("n_hit").cast("double") / col("n_sh").cast("double"))
@@ -129,16 +134,13 @@ object Dedup {
       .withColumn("contaminated", col("containment") >= 0.2)
       .orderBy("doc_id")
 
-  /** The q53/q95 report: each corpus doc's benchmark containment. The
-    * bloom prefilter ([[SketchExact.bloomSurvivors]]) drops corpus
-    * shingles that cannot be in the benchmark set; the exact confirm join
-    * counts the rest. shinglesOf is distinct per doc and the set is
-    * distinct, so count(*) after the inner join = |doc ∩ bench|.
+  /** The q53/q95 report: each corpus doc's benchmark containment, the
+    * bloom prefilter ([[SketchExact.benchBloom]]) pruning the exact
+    * confirm join to true hits plus ~1% false positives.
     */
   private[operators] def decontam(s: SparkSession, dir: String): DataFrame = {
-    val (survivors, bench, corpus) = SketchExact.bloomSurvivors(s, dir)
-    decontamAssemble(corpus, survivors.join(bench, Seq("sh"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_hit")))
+    val (bench, mightContain, corpus) = SketchExact.benchBloom(s, dir)
+    decontamAssemble(decontamCounts(corpus, mightContain, bench))
   }
 
   /** One oracle for q53, q95 and q99 (the persisted-index probe): how
@@ -169,25 +171,34 @@ object Dedup {
       |       ELSE 0.0 END >= 0.2 AS contaminated
       |FROM c ORDER BY doc_id""".stripMargin
 
-  /** Capped LSH band keys (8 minhashes, 4 bands x 2 rows) for a
-    * (doc_id, sh) exploded-shingle frame — the signature/banding core
-    * shared by q36/q39/q48/q59 (via [[minhashPairs]]) and q78's
-    * incremental probe (which joins NEW-batch bands against this index
-    * instead of self-joining it).
+  /** A document's 4 LSH band keys from `text`: the one MinHash body,
+    * [[graft.expressions.MinHashBands]] over `trim(text)`. Null text
+    * gives null; fewer than 3 tokens gives an empty array.
     */
-  private[operators] def bandsOf(sh: DataFrame): DataFrame = {
-    val minCols = (0 until 8).map(i =>
-      min(md5(concat_ws(":", lit(i), col("sh")))).as(s"mh$i"))
-    val sig = sh.groupBy("doc_id")
-      .agg(minCols.head, minCols.tail: _*)
-      .select(col("doc_id"), array((0 until 8).map(i => col(s"mh$i")): _*).as("sig"))
+  private[graft] def bandKeys(s: SparkSession, text: Column): Column = {
+    graft.functions.GraftFunctions.register(s)
+    call_function("graft_minhash_bands", trim(text))
+  }
+
+  /** Capped LSH band keys (8 minhashes, 4 bands x 2 rows) of a
+    * (doc_id, text) frame, one (doc_id, band_idx, band_key) row per doc
+    * and band — the banding core shared by q36/q39/q48/q59 (via
+    * [[minhashPairs]]) and the persisted [[BandIndex]] (which joins
+    * NEW-batch bands against the index instead of self-joining).
+    *
+    * Precondition: `doc_id` is unique in `docs`. Each row is banded on
+    * its own, so two rows with one id give that id two band sets.
+    *
+    * The repartition spreads the per-doc hashing over all cores at a
+    * pinned count AQE cannot coalesce ([[graft.core.CpuSpread]]); the
+    * cap window is the only other exchange.
+    */
+  private[graft] def bandsOf(docs: DataFrame): DataFrame =
     capHotKeys(
-      sig.select(col("doc_id"),
-          posexplode(expr(
-            "transform(sequence(0, 3), b -> md5(concat(sig[b*2], sig[b*2+1])))")))
+      graft.core.CpuSpread.byKey(docs.select("doc_id", "text"), col("doc_id"))
+        .select(col("doc_id"), posexplode(bandKeys(docs.sparkSession, col("text"))))
         .toDF("doc_id", "band_idx", "band_key"),
       HotKeyCap, "band_idx", "band_key")
-  }
 
   /** q36's LSH candidate pairs (8 minhashes, 4 bands x 2 rows), shared by
     * the pair query and the clustering query.
@@ -203,12 +214,10 @@ object Dedup {
     */
   private[operators] def minhashPairsOf(d: DataFrame): DataFrame = {
     // the band frame is pinned: both sides of the self-join consume it,
-    // and lazy, the shingle explode + 8-seed minhash aggregate ran
-    // twice per pair-generation call (the capstone runs this twice per
-    // chain — four band computations per capstone run). The pin lives
-    // until the caller's scope closes.
-    val bands = Pin(bandsOf(shingleIndexOf(d).select("doc_id", "sh")),
-      "Dedup.minhashBands")
+    // and lazy, the banding ran twice per pair-generation call (the
+    // capstone runs this twice per chain). The pin lives until the
+    // caller's scope closes.
+    val bands = Pin(bandsOf(d), "Dedup.minhashBands")
     // renamed-projection self-join, not as("a")/as("b") aliases: aliased
     // conditions can silently mis-bind when the frame is reused across
     // subtrees of a larger plan (observed in BandIndex.probeIndex's
@@ -492,10 +501,6 @@ object Dedup {
              |ORDER BY d1, d2""".stripMargin)),
 
     // ---- MinHash (8 hashes) + LSH (4 bands x 2 rows) candidate pairs
-    // All 8 minhashes compute in ONE aggregation pass (8 partial mins
-    // with map-side combine) instead of a seed crossJoin +
-    // per-(doc,seed) shuffle — one shuffle total, no row blowup (see
-    // minhashPairs).
     QueryDef(
       "q36_minhash_lsh",
       (s, dir) => minhashPairs(s, dir).orderBy("d1", "d2"),

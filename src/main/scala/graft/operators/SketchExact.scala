@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 import graft.core.{Pin, QueryDef, Tables, Ws}
 
@@ -46,14 +47,20 @@ object SketchExact {
 
   // ---------------------------------------------------------------- q95
 
-  /** Corpus shingles surviving the bloom prefilter, plus the bench set
-    * and the corpus (doc_id, bucket, shs) frame — the first half of
-    * [[Dedup.decontam]], exposed for the spec, which asserts the
-    * prefilter really prunes (|survivors| << |corpus shingles|) and never
-    * drops a true hit (survivors ⊇ exact-join hits).
+  /** A membership test against `bf`, broadcast once: false means the
+    * shingle is certainly not in the set.
     */
-  private[graft] def bloomSurvivors(
-      s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+  private[graft] def bloomTest(s: SparkSession, bf: BloomFilter): Column => Column = {
+    val bfB = s.sparkContext.broadcast(bf)
+    val mightContain = udf((x: String) => x != null && bfB.value.mightContain(x))
+    c => mightContain(c)
+  }
+
+  /** The pinned bench shingle set, the bloom test over it and the corpus
+    * (doc_id, bucket, shs) frame — the sides of [[Dedup.decontam]].
+    */
+  private[graft] def benchBloom(
+      s: SparkSession, dir: String): (DataFrame, Column => Column, DataFrame) = {
     val (bench0, corpus) = Dedup.decontamSides(s, dir)
     // THREE consumers read the bench shingle set (the sizing count, the
     // bloom build, and the exact confirm join) — pin it once instead of
@@ -66,8 +73,17 @@ object SketchExact {
     // filter bits ever reach the driver — fact data never does.
     val nBench = bench.count()
     val bf = bench.stat.bloomFilter("sh", math.max(nBench, 1L), 0.01)
-    val bfB = s.sparkContext.broadcast(bf)
-    val mightContain = udf((x: String) => x != null && bfB.value.mightContain(x))
+    (bench, bloomTest(s, bf), corpus)
+  }
+
+  /** Corpus (doc_id, sh) rows surviving the bloom prefilter, plus the
+    * bench set and the corpus frame — exposed for the spec, which
+    * asserts the prefilter really prunes (|survivors| << |corpus
+    * shingles|) and never drops a true hit (survivors ⊇ exact-join hits).
+    */
+  private[graft] def bloomSurvivors(
+      s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val (bench, mightContain, corpus) = benchBloom(s, dir)
     val corpusSh = corpus.select(col("doc_id"), explode(col("shs")).as("sh"))
     (corpusSh.filter(mightContain(col("sh"))), bench, corpus)
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
@@ -11,23 +11,17 @@ import graft.operators.Dedup
   * collides with an EARLIER document on any LSH band, across
   * micro-batches.
   *
-  * The batch path computes signatures with a groupBy over exploded
-  * shingles; a streaming aggregation would force watermark/output-mode
-  * constraints, so here the 8-minhash signature folds PER ROW with
-  * higher-order array functions (`transform` + `array_min` over the
-  * shingle array — same md5 min-wise family, provably equal to the
-  * batch aggregation; DedupStreamSpec asserts signature parity). The
-  * only stateful operator is one `flatMapGroupsWithState` keyed by band
-  * key holding the first doc_id seen — exactly the state a 100-TB
-  * ingest dedup needs (band-key -> representative).
+  * Each row's band keys come from the batch path's one per-document
+  * MinHash body ([[Dedup.bandKeys]]), which needs no aggregation and so
+  * no watermark/output-mode constraints. The only stateful operator is
+  * one `flatMapGroupsWithState` keyed by band key holding the first
+  * doc_id seen — exactly the state a 100-TB ingest dedup needs
+  * (band-key -> representative).
   *
   * Scale guards, mirroring the batch path ([[Dedup]]):
-  *   - docs with < 3 tokens have NO shingles, so every per-row minhash
-  *     is null and every band key is null — they carry no near-dup
-  *     signal and are dropped before the stateful operator (the batch
-  *     path drops them at the shingle explode). Without this filter all
-  *     short docs would share the null band key and false-positive
-  *     against each other forever.
+  *   - docs with < 3 tokens have NO shingles and an empty band-key
+  *     array, so they explode to no rows and never reach the stateful
+  *     operator: they carry no near-dup signal.
   *   - a band key hotter than `hotKeyCap` WITHIN one micro-batch is
   *     boilerplate by definition (same argument as [[Dedup.HotKeyCap]]);
   *     its rows are dropped for that batch and it claims no state, so a
@@ -50,38 +44,17 @@ import graft.operators.Dedup
   */
 object DedupStream {
 
-  /** Word-trigram shingles of `text` (same zip_with shape as
-    * Dedup.shinglesOf: lambda-argument-only, no inlined regex).
-    */
-  private def shingles(textCol: Column): Column = {
-    val t = split(trim(textCol), graft.core.Ws.Plus)
-    val tri = zip_with(
-      zip_with(t, slice(t, lit(2), greatest(size(t) - 1, lit(0))),
-        (a, b) => concat(a, lit(" "), b)),
-      slice(t, lit(3), greatest(size(t) - 2, lit(0))),
-      (ab, c) => concat(ab, lit(" "), c))
-    array_distinct(filter(tri, x => x.isNotNull))
-  }
-
-  /** Per-row 8-minhash signature: min(md5(seed:shingle)) per seed — no
-    * aggregation, so it runs on a stream without watermarks. Null (all
-    * 8 entries) when the doc has fewer than 3 tokens.
-    */
-  def signature(textCol: Column): Column =
-    transform(sequence(lit(0), lit(7)),
-      i => array_min(transform(shingles(textCol),
-        s => md5(concat_ws(":", i, s)))))
-
-  /** 4 band keys (2 rows per band) from a signature column. */
-  def bandKeys(sig: Column): Column =
-    transform(sequence(lit(0), lit(3)),
-      b => md5(concat(element_at(sig, b * 2 + 1), element_at(sig, b * 2 + 2))))
-
   final case class BandHit(doc_id: Long, band_key: String,
       ts: java.sql.Timestamp)
   final case class DupFlag(doc_id: Long, dup_of: Long)
   /** Band state: first-seen doc in the current horizon + when (event ms). */
   final case class BandState(rep: Long, lastSeenMs: Long)
+
+  /** (doc_id, band_key, ts) per band of each (id, text, ts) row. */
+  private[streaming] def bandHits(docs: DataFrame): DataFrame =
+    docs.select(col("id").cast("long").as("doc_id"),
+      explode(Dedup.bandKeys(docs.sparkSession, col("text"))).as("band_key"),
+      col("ts"))
 
   /** @param docs STREAMING (id, text, ts) frame; `ts` is the event-time
     *        column the dedup horizon is measured on (ingest time at the
@@ -115,14 +88,7 @@ object DedupStream {
       hotKeyCap: Int = Dedup.HotKeyCap,
       lateness: String = "10 minutes"): DataFrame = {
     import spark.implicits._
-    docs
-      .withWatermark("ts", lateness)
-      .select(col("id").cast("long").as("doc_id"),
-        explode(bandKeys(signature(col("text")))).as("band_key"),
-        col("ts"))
-      // < 3 tokens -> null minhashes -> null band keys: no signal (see
-      // scaladoc); must not reach the stateful operator
-      .where(col("band_key").isNotNull)
+    bandHits(docs.withWatermark("ts", lateness))
       .as[BandHit]
       .groupByKey(_.band_key)
       .flatMapGroupsWithState(

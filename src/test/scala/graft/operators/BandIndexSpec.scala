@@ -28,8 +28,7 @@ class BandIndexSpec extends SparkSpec {
       .select(col("doc_id"), col("text"), col("lang"))
       .withColumn("bucket", BandIndex.ingestBucket)
       .filter(histPred || batchPred)
-    val bands = Dedup.bandsOf(
-        Dedup.shingleIndexOf(base.select("doc_id", "text")).select("doc_id", "sh"))
+    val bands = Dedup.bandsOf(base.select("doc_id", "text"))
       .join(base.select("doc_id", "bucket"), "doc_id")
     val hist = bands.filter(histPred)
       .select(col("doc_id").as("hist_id"), col("band_idx"), col("band_key"))
@@ -112,7 +111,7 @@ class BandIndexSpec extends SparkSpec {
       // (round 16), which hides the join shape behind a checkpoint scan
       val batch = docsSlice(BandIndex.BatchThreshold, 256)
       val probe = BandIndex.probeIndexPlan(spark, name,
-        BandIndex.bandsOfDocs(batch), batch,
+        Dedup.bandsOf(batch), batch,
         excludeBatchFromHistory = false)
       val plan = probe.queryExecution.executedPlan
       def indexScanNoShuffle(p: SparkPlan): Boolean = p match {
@@ -181,7 +180,7 @@ class BandIndexSpec extends SparkSpec {
         // the lazy plan layer again: the pinned probe hides the scan
         val batch2 = docsSlice(230, 256)
         val plan = BandIndex.probeIndexPlan(spark, name,
-            BandIndex.bandsOfDocs(batch2), batch2,
+            Dedup.bandsOf(batch2), batch2,
             excludeBatchFromHistory = false)
           .queryExecution.executedPlan
         val scans = plan.collect {

@@ -127,7 +127,7 @@ class IndexBucketsSpec extends SparkSpec with BeforeAndAfterAll {
         // decision frame since round 16) — the FpIndex twin below
         val batch = docsSlice(200, 230)
         val plan = BandIndex.probeIndexPlan(spark, name,
-            BandIndex.bandsOfDocs(batch), batch,
+            Dedup.bandsOf(batch), batch,
             excludeBatchFromHistory = false)
           .queryExecution.executedPlan
         assertBucketed(plan, name)

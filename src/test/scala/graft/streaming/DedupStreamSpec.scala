@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.SparkSpec
+import graft.operators.Dedup
 
-/** Streaming MinHash near-dup: per-row signature parity with the batch
-  * aggregation, cross-batch first-seen flagging, short-doc null-band
+/** Streaming MinHash near-dup: per-row band-key parity with the batch
+  * banding, cross-batch first-seen flagging, short-doc null-band
   * hygiene, per-batch hot-key capping, and the sliding event-time
   * horizon (stale representatives re-seed; idle band state is evicted
   * once the watermark passes its deadline). Event timestamps are
@@ -39,31 +40,17 @@ class DedupStreamSpec extends SparkSpec {
       .getOrElse(-1L)
 
   test("per-row signature equals the batch groupBy signature") {
-    // the stream folds min(md5(seed:shingle)) per ROW; q36's batch path
-    // aggregates min over exploded shingles — same min-wise family, must
-    // be identical on identical text
-    val docs = Seq((1L, original), (2L, unrelated)).toDF("id", "text")
-    val perRow = docs
-      .select(col("id"), DedupStream.signature(col("text")).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-
-    val exploded = docs
-      .select(col("id"), explode(expr(
-        """array_distinct(filter(
-          |  zip_with(
-          |    zip_with(split(trim(text), '[ \\t\\n\\f\\r]+'),
-          |      slice(split(trim(text), '[ \\t\\n\\f\\r]+'), 2,
-          |        greatest(size(split(trim(text), '[ \\t\\n\\f\\r]+')) - 1, 0)),
-          |      (a, b) -> concat(a, ' ', b)),
-          |    slice(split(trim(text), '[ \\t\\n\\f\\r]+'), 3,
-          |      greatest(size(split(trim(text), '[ \\t\\n\\f\\r]+')) - 2, 0)),
-          |    (ab, c) -> concat(ab, ' ', c)),
-          |  x -> x IS NOT NULL))""".stripMargin)).as("sh"))
-    val agged = exploded.groupBy("id")
-      .agg(array((0 until 8).map(i =>
-        min(md5(concat_ws(":", lit(i), col("sh"))))): _*).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    assert(perRow == agged)
+    // the stream bands each ROW; q36's batch path bands a (doc_id, text)
+    // frame — one kernel, so the same docs must give the same keys
+    val docs = Seq((1L, original, at("10:00")), (2L, unrelated, at("10:00")),
+        (3L, nearCopy, at("10:00")), (4L, "two words", at("10:00")))
+      .toDF("id", "text", "ts")
+    val perRow = DedupStream.bandHits(docs)
+      .select("doc_id", "band_key").as[(Long, String)].collect().sorted.toSeq
+    val batch = Dedup.bandsOf(docs.select(col("id").as("doc_id"), col("text")))
+      .select("doc_id", "band_key").as[(Long, String)].collect().sorted.toSeq
+    assert(perRow.size == 12, perRow)
+    assert(perRow == batch)
   }
 
   test("cross-batch collisions flag against the first-seen representative") {
@@ -91,9 +78,9 @@ class DedupStreamSpec extends SparkSpec {
   }
 
   test("short docs (< 3 tokens) produce no band keys, no flags, no state") {
-    // < 3 tokens -> empty shingle array -> all-null signature -> null
-    // band keys; without the null filter every short doc would share the
-    // null key and all but the first would be flagged forever
+    // < 3 tokens -> no shingles -> an empty band-key array; a null key
+    // here would be shared by every short doc and flag all but the
+    // first forever
     implicit val sql = spark.sqlContext
     val stream = MemoryStream[(Long, String, Timestamp)]
     val q = DedupStream.nearDupFlags(
@@ -157,8 +144,7 @@ class DedupStreamSpec extends SparkSpec {
       .createTempDirectory("graft-dedup-ckpt").toString
     def bandsOf(text: String): Set[String] =
       Seq(text).toDF("text")
-        .select(explode(DedupStream.bandKeys(
-          DedupStream.signature(col("text")))).as("b"))
+        .select(explode(Dedup.bandKeys(spark, col("text"))).as("b"))
         .as[String].collect().toSet
     val unrelated2 = "parquet row groups carry min max stats for pruning scans"
     val fresh = "entirely new tokens appear here after the restart happened"

@@ -3,9 +3,12 @@
 
     python3 tools/paired_perfbench.py PARENT_REF --workload esoa_link --pairs 10 --seed0 3
 
-Run from the root of a graft checkout. PARENT_REF is exported with
-`git archive` into a fresh temporary directory (set TMPDIR to choose
-where), and each tree runs its own `perfbench/run.py --trace 0`. Pair i
+Run from the root of a graft checkout. Both sides run from fresh
+`git archive` exports in their own temporary directories (set TMPDIR to
+choose where): PARENT_REF, and a snapshot of the checkout's working
+files (modified and untracked-but-not-ignored files included), so
+neither side runs in the checkout and the two trees differ only in
+their source. Each tree runs its own `perfbench/run.py --trace 0`. Pair i
 uses seed seed0 + i on both sides; even pairs run the parent first, odd
 pairs the change. A pair whose two host stamps differ
 (perfbench/compare.py's `host()`), or where a side failed, is refused and
@@ -113,9 +116,32 @@ def run_side(tree, workload, seed, seconds):
     return info.get("stamp"), values, ""
 
 
-def export(ref, dest):
-    """PARENT_REF's files under dest."""
-    archive = subprocess.run(["git", "-C", ROOT, "archive", ref],
+def snapshot(root):
+    """A tree id of root's working files: tracked files as they are on
+    disk plus untracked files git does not ignore. Staged through a
+    throwaway copy of root's index, so the real index is untouched."""
+    def git(*args, env=None):
+        return subprocess.run(["git", "-C", root, *args], env=env, check=True,
+                              stdout=subprocess.PIPE, text=True).stdout.strip()
+    index = os.path.join(root, git("rev-parse", "--git-path", "index"))
+    fd, tmp = tempfile.mkstemp(prefix="paired-index-")
+    os.close(fd)
+    try:
+        if os.path.exists(index):
+            shutil.copyfile(index, tmp)
+        else:
+            os.unlink(tmp)
+        env = dict(os.environ, GIT_INDEX_FILE=tmp)
+        git("add", "-A", env=env)
+        return git("write-tree", env=env)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+
+
+def export(ref, dest, root=None):
+    """The files of tree-ish `ref` of the repo at root under dest."""
+    archive = subprocess.run(["git", "-C", root or ROOT, "archive", ref],
                              stdout=subprocess.PIPE, check=True)
     subprocess.run(["tar", "-x", "-C", dest], input=archive.stdout, check=True)
 
@@ -132,13 +158,15 @@ def main(argv=None):
     seconds = bench["run_seconds"]
     metrics = {m["name"]: m for m in bench["end_to_end"]}
     host = perfbench_compare(ROOT).host
-    parent_tree = tempfile.mkdtemp(prefix="paired-")
+    parent_tree = tempfile.mkdtemp(prefix="paired-parent-")
+    change_tree = tempfile.mkdtemp(prefix="paired-change-")
     try:
         export(a.parent_ref, parent_tree)
+        export(snapshot(ROOT), change_tree)
         parent, change = [], []
         for i in range(a.pairs):
             seed = a.seed0 + i
-            order = [("parent", parent_tree), ("change", ROOT)]
+            order = [("parent", parent_tree), ("change", change_tree)]
             if i % 2:
                 order.reverse()
             got = {side: run_side(tree, a.workload, seed, seconds)
@@ -178,6 +206,7 @@ def main(argv=None):
         return 1 if worse else 0
     finally:
         shutil.rmtree(parent_tree, ignore_errors=True)
+        shutil.rmtree(change_tree, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -2,8 +2,14 @@
 
     python3 -m unittest discover -s tools -p 'test_*.py'
 """
+import json
+import os
+import subprocess
+import tempfile
 import unittest
+from unittest import mock
 
+import paired_perfbench
 from paired_perfbench import bound_check, quartiles, verdict
 
 PARENT = [16.6, 15.1, 18.4, 13.3, 17.0, 16.2, 14.8, 17.9, 16.9, 15.5]
@@ -72,6 +78,67 @@ class VerdictTest(unittest.TestCase):
     def test_unpaired_input_is_refused(self):
         with self.assertRaises(ValueError):
             verdict([1.0], [1.0, 2.0])
+
+
+class ExportTest(unittest.TestCase):
+    """Both sides run from exports: the change side carries the
+    checkout's uncommitted and untracked files, and nothing runs in the
+    checkout itself."""
+
+    def setUp(self):
+        self.tmp = tempfile.TemporaryDirectory()
+        self.root = root = self.tmp.name
+
+        def git(*args):
+            subprocess.run(["git", "-C", root, *args], check=True,
+                           stdout=subprocess.DEVNULL)
+
+        def write(path, text):
+            os.makedirs(os.path.dirname(os.path.join(root, path)), exist_ok=True)
+            with open(os.path.join(root, path), "w") as f:
+                f.write(text)
+
+        git("init", "-q")
+        write("BENCHMARK.json", json.dumps({"run_seconds": 1, "end_to_end": [
+            {"name": "wall_s", "better": "lower", "bound": 0.25}]}))
+        write("perfbench/compare.py", "def host(stamp):\n    return stamp\n")
+        write("src.txt", "parent\n")
+        write(".gitignore", "ignored.txt\n")
+        git("add", "-A")
+        git("-c", "user.name=t", "-c", "user.email=t@t", "commit", "-q", "-m", "p")
+        write("src.txt", "change\n")
+        write("new.txt", "untracked\n")
+        write("ignored.txt", "build output\n")
+
+    def tearDown(self):
+        self.tmp.cleanup()
+
+    def test_change_export_has_modified_and_untracked_files(self):
+        trees = {}
+
+        def fake_run(tree, workload, seed, seconds):
+            with open(os.path.join(tree, "src.txt")) as f:
+                side = f.read().strip()
+            trees.setdefault(side, set()).add(tree)
+            if side == "change":
+                self.assertTrue(os.path.exists(os.path.join(tree, "new.txt")))
+            self.assertFalse(os.path.exists(os.path.join(tree, "ignored.txt")))
+            return "host", {"wall_s": 1.0}, ""
+
+        with mock.patch.object(paired_perfbench, "ROOT", self.root), \
+                mock.patch.object(paired_perfbench, "run_side", fake_run), \
+                mock.patch("sys.stdout"):
+            self.assertEqual(paired_perfbench.main(
+                ["HEAD", "--workload", "w", "--pairs", "2", "--seed0", "1"]), 0)
+        self.assertEqual(set(trees), {"parent", "change"})
+        used = trees["parent"] | trees["change"]
+        self.assertEqual(len(used), 2)
+        self.assertNotIn(self.root, used)
+        # the checkout's own index still stages nothing
+        status = subprocess.run(["git", "-C", self.root, "diff", "--cached",
+                                 "--name-only"], stdout=subprocess.PIPE,
+                                text=True, check=True).stdout
+        self.assertEqual(status, "")
 
 
 if __name__ == "__main__":
