@@ -172,19 +172,10 @@ object BandIndex {
       else histHits
     val histDups = histClean
       .groupBy("doc_id").agg(count(lit(1)).as("n_hist_dups"))
-    // within-batch keep-first: the b-side is a RENAMED projection, not an
-    // as("a")/as("b") alias pair — in a plan where the batch frame
-    // already appears in several subtrees (bands, exclusion, join-back),
-    // Spark's self-join disambiguation mis-bound the aliased condition
-    // (observed: the pair landed on the SMALLER id), while renamed
-    // top-level attributes cannot mis-resolve
-    val bSide = newb.select(col("doc_id").as("other"),
-      col("band_idx").as("b_idx"), col("band_key").as("b_key"))
-    val batchDups = newb.join(bSide,
-        col("band_idx") === col("b_idx") && col("band_key") === col("b_key")
-          && col("other") < col("doc_id"))
-      .select("doc_id", "other").distinct()
-      .groupBy("doc_id").agg(count(lit(1)).as("n_batch_dups"))
+    // within-batch keep-first: the later doc of each colliding pair
+    val batchDups = Dedup.pairsWithin(newb, "doc_id", Seq("band_idx", "band_key"))
+      .distinct()
+      .groupBy(col("d2").as("doc_id")).agg(count(lit(1)).as("n_batch_dups"))
     batchDocs.select("doc_id")
       .join(histDups, Seq("doc_id"), "left")
       .join(batchDups, Seq("doc_id"), "left")

@@ -109,7 +109,8 @@ object ClusterIndex {
   }
 
   /** SemDeDup's within-cell duplicate threshold (q104's rule) — shared
-    * by the streaming sink and the q116 maintenance loop.
+    * by every within-cell prune ([[Clustering.cellDups]]) and the
+    * history leg of [[probeVerdicts]].
     */
   val Tau = 0.3
 
@@ -209,15 +210,7 @@ object ClusterIndex {
           Seq("h_id"), "left_anti")
       else pairs0
     val histDup = pairs.groupBy("vec_id").agg(min(col("h_id")).as("h_dup"))
-    val bSide = b.select(col("vec_id").as("b_id"), col("cid").as("b_cid"),
-      col("v").as("bv"), col("nrm").as("bn"))
-    val batchDup = b.join(bSide,
-        col("cid") === col("b_cid") && col("b_id") < col("vec_id"))
-      .withColumn("cos", aggregate(
-        zip_with(col("v"), col("bv"), (x, y) => x * y),
-        lit(0.0), (acc, x) => acc + x) / (col("nrm") * col("bn")))
-      .filter(col("cos") >= Tau)
-      .groupBy("vec_id").agg(min(col("b_id")).as("b_dup"))
+    val batchDup = Clustering.cellDups(b).withColumnRenamed("dup_of", "b_dup")
     b.select("vec_id", "cid")
       .join(histDup, Seq("vec_id"), "left")
       .join(batchDup, Seq("vec_id"), "left")

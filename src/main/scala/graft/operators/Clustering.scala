@@ -332,30 +332,33 @@ object Clustering {
       dir: String): (DataFrame, DataFrame) =
     sampledArtifacts(audioFeatures(s, dir), "env")
 
-  /** SemDeDup's within-cell keep-first prune over a (vec_id, cid, v,
-    * nrm) frame — shared by q104 (in-query Lloyd) and q113 (persisted
-    * [[ClusterIndex]]) so the two queries cannot drift; both run under
-    * ONE oracle string (the q91 ≡ q88 materialization-not-semantics
-    * gate). The renamed-projection self-join never crosses cells.
+  /** (vec_id, dup_of) of every row of a (vec_id, cid, v, nrm) frame
+    * whose cell holds a SMALLER vec_id at cosine >= [[ClusterIndex.Tau]],
+    * `dup_of` the least such id — the one within-cell cosine prune of
+    * [[semdedupFrom]] and [[ClusterIndex.probeVerdicts]]' batch leg.
+    * Pairs never cross cells.
     */
-  private[graft] def semdedupFrom(full: DataFrame): DataFrame = {
-    val a = full.select(col("vec_id").as("d1"), col("cid").as("c1"),
-      col("v").as("v1"), col("nrm").as("n1"))
-    val b = full.select(col("vec_id").as("d2"), col("cid").as("c2"),
-      col("v").as("v2"), col("nrm").as("n2"))
-    val removed = a.join(b, col("c1") === col("c2") && col("d1") < col("d2"))
+  private[operators] def cellDups(full: DataFrame): DataFrame =
+    Dedup.pairsWithin(full, "vec_id", Seq("cid"), Seq("v", "nrm"))
       .withColumn("cos", aggregate(
         zip_with(col("v1"), col("v2"), (x, y) => x * y),
-        lit(0.0), (acc, x) => acc + x) / (col("n1") * col("n2")))
-      .filter(col("cos") >= 0.3)
+        lit(0.0), (acc, x) => acc + x) / (col("nrm1") * col("nrm2")))
+      .filter(col("cos") >= ClusterIndex.Tau)
       .groupBy(col("d2").as("vec_id"))
       .agg(min(col("d1")).as("dup_of"))
+
+  /** SemDeDup's within-cell keep-first prune ([[cellDups]]) as per-row
+    * verdicts — shared by q89 (fixed centroid rows), q104 (in-query
+    * Lloyd) and q113 (persisted [[ClusterIndex]]) so the queries cannot
+    * drift; q104 and q113 run under ONE oracle string (the q91 ≡ q88
+    * materialization-not-semantics gate).
+    */
+  private[graft] def semdedupFrom(full: DataFrame): DataFrame =
     full.select("vec_id", "cid")
-      .join(removed, Seq("vec_id"), "left")
+      .join(cellDups(full), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cid"), col("dup_of"),
         col("dup_of").isNull.as("kept"))
       .orderBy("vec_id")
-  }
 
   /** The within-cell prune under the PRODUCTION cell-count knob:
     * `cells` ∝ corpus with cell size bounded — the regime q89/q104's
@@ -860,8 +863,8 @@ object Clustering {
      * (q104), draw the balanced sample (q102). Scale shape matches
      * q89's: the quadratic regime is confined within a cell, and the
      * production knob is cell COUNT ∝ corpus (cell size bounded), so
-     * the within-cell renamed-projection self-join shuffles once on
-     * cid and never crosses cells. The oracle prepends q101's Lloyd
+     * the within-cell pair join ([[cellDups]]) shuffles once on cid
+     * and never crosses cells. The oracle prepends q101's Lloyd
      * CTEs, so the hash pins the learned cells AND the prune decisions
      * through one value — a drifted centroid flips cell membership,
      * pair candidacy, and the final rows.

@@ -47,6 +47,34 @@ object Dedup {
       .drop("_kfreq")
   }
 
+  /** Every pair of `frame` rows equal on all `keys` columns, as (d1, d2)
+    * ids with d1 < d2, plus each `payload` column p once per side as p1
+    * (d1's row) and p2 (d2's row) — the blocking step every within-
+    * bucket candidate generator shares. Null keys never pair (`===` on a
+    * null is not true), and multiplicity is kept: two ids that share two
+    * keys pair twice (q35 counts its intersection from that).
+    *
+    * The d2 side is a RENAMED projection, never an as("x")/as("y") alias
+    * pair: when the frame already appears in several subtrees of a larger
+    * plan (bands, exclusion, join-back in [[BandIndex.probeIndexPlan]]),
+    * Spark's self-join disambiguation mis-bound the aliased condition
+    * (observed: the pair landed on the SMALLER id), while renamed
+    * top-level attributes cannot mis-resolve. The renames keep the
+    * frame's partitioning, so a frame bucketed or already shuffled on
+    * `keys` pairs without an exchange. Hot-key caps and pins stay with
+    * the callers: some pair uncapped by contract, and a pin here would
+    * hide a bucketed scan from the join.
+    */
+  private[operators] def pairsWithin(frame: DataFrame, id: String,
+      keys: Seq[String], payload: Seq[String] = Nil): DataFrame = {
+    val other = frame.select(Seq(col(id).as("d2")) ++
+      keys.map(k => col(k).as(k + "_2")) ++ payload.map(p => col(p).as(p + "2")): _*)
+    frame.join(other, keys.map(k => col(k) === col(k + "_2")).reduce(_ && _)
+        && col(id) < col("d2"))
+      .select(Seq(col(id).as("d1"), col("d2")) ++
+        payload.flatMap(p => Seq(col(p).as(p + "1"), col(p + "2"))): _*)
+  }
+
   private[operators] def docs(s: SparkSession, dir: String): DataFrame = Tables(s, dir, "documents")
 
   /** distinct word-3-gram shingles, built WITHOUT outer-capturing lambdas.
@@ -212,24 +240,13 @@ object Dedup {
     * exact-dedup survivors, leakage-safe split over the filtered
     * corpus), identical banding to the corpus queries.
     */
-  private[operators] def minhashPairsOf(d: DataFrame): DataFrame = {
+  private[operators] def minhashPairsOf(d: DataFrame): DataFrame =
     // the band frame is pinned: both sides of the self-join consume it,
     // and lazy, the banding ran twice per pair-generation call (the
     // capstone runs this twice per chain). The pin lives until the
     // caller's scope closes.
-    val bands = Pin(bandsOf(d), "Dedup.minhashBands")
-    // renamed-projection self-join, not as("a")/as("b") aliases: aliased
-    // conditions can silently mis-bind when the frame is reused across
-    // subtrees of a larger plan (observed in BandIndex.probeIndex's
-    // batch leg); renamed top-level attributes cannot
-    val bSide = bands.select(col("doc_id").as("d2"),
-      col("band_idx").as("b_idx"), col("band_key").as("b_key"))
-    bands.join(bSide,
-        col("band_idx") === col("b_idx") && col("band_key") === col("b_key")
-          && col("doc_id") < col("d2"))
-      .select(col("doc_id").as("d1"), col("d2"))
-      .distinct()
-  }
+    pairsWithin(Pin(bandsOf(d), "Dedup.minhashBands"), "doc_id",
+      Seq("band_idx", "band_key")).distinct()
 
   /** Per-round progress line for the connected-components loop, gated
     * behind SPARK_GRAFT_CC_LOG (any value): a long-running production CC
@@ -471,12 +488,10 @@ object Dedup {
     QueryDef(
       "q35_ngram_jaccard",
       (s, dir) => {
-        val ex = capHotKeys(shingleIndex(s, dir), HotKeyCap, "sh")
-        ex.as("x").join(ex.as("y"),
-            col("x.sh") === col("y.sh") && col("x.doc_id") < col("y.doc_id"))
-          .groupBy(
-            col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
-            col("x.n_sh").as("s1"), col("y.n_sh").as("s2"))
+        pairsWithin(capHotKeys(shingleIndex(s, dir), HotKeyCap, "sh"),
+            "doc_id", Seq("sh"), Seq("n_sh"))
+          .groupBy(col("d1"), col("d2"),
+            col("n_sh1").as("s1"), col("n_sh2").as("s2"))
           .agg(count(lit(1)).as("inter"))
           .withColumn("jacc",
             col("inter").cast("double")
@@ -739,13 +754,8 @@ object Dedup {
           .select(col("source"), explode(shinglesOf(col("t"))).as("sh"))
           .distinct(), "q76:sourceShingles")
         val tot = srcSh.groupBy("source").agg(count(lit(1)).as("n"))
-        // renamed-projection self-join (see minhashPairs' comment)
-        val bSide = srcSh.select(col("source").as("source_b"),
-          col("sh").as("sh_b"))
-        srcSh
-          .join(bSide,
-            col("sh") === col("sh_b") && col("source") < col("source_b"))
-          .groupBy(col("source").as("source_a"), col("source_b"))
+        pairsWithin(srcSh, "source", Seq("sh"))
+          .groupBy(col("d1").as("source_a"), col("d2").as("source_b"))
           .agg(count(lit(1)).as("n_shared"))
           .join(tot.select(col("source").as("source_a"), col("n").as("n_a")), "source_a")
           .join(tot.select(col("source").as("source_b"), col("n").as("n_b")), "source_b")
@@ -947,7 +957,7 @@ object Dedup {
         // pinned: both sides of the chunk-collision self-join consume
         // this frame — lazy, the native SimHashSig expression (an md5
         // per token) ran twice over the corpus, once per side. The
-        // signature rides the join as two 32-bit integer halves (h1/h2
+        // signature rides the join as two 32-bit integer halves (hi/lo
         // — conv is exact on a 32-char binary string) instead of the
         // 64-char string: the candidate-pair exchange carries 16 bytes
         // of signature per side instead of ~72 (guide §2.3 narrower
@@ -960,25 +970,19 @@ object Dedup {
             explode(sequence(lit(0), lit(3))).as("c"))
             .withColumn("chunk", expr("substring(s, c * 16 + 1, 16)")),
           HotKeyCap, "c", "chunk")
-          .withColumn("h1", conv(substring(col("s"), 1, 32), 2, 10)
+          .withColumn("hi", conv(substring(col("s"), 1, 32), 2, 10)
             .cast("long"))
-          .withColumn("h2", conv(substring(col("s"), 33, 32), 2, 10)
+          .withColumn("lo", conv(substring(col("s"), 33, 32), 2, 10)
             .cast("long"))
           .drop("s"), "q80:chunks")
-        // renamed-projection self-join (see minhashPairs' comment);
         // hamming is a function of the pair, so the cheap bit_count
         // verify runs BEFORE the distinct — far survivors never enter
         // the dedup exchange (the old shape deduped first, then split
         // 64-char strings per surviving candidate)
-        val bSide = chunks.select(col("doc_id").as("d2"),
-          col("c").as("c_b"), col("chunk").as("chunk_b"),
-          col("h1").as("h1b"), col("h2").as("h2b"))
-        chunks.join(bSide,
-            col("c") === col("c_b") && col("chunk") === col("chunk_b")
-              && col("doc_id") < col("d2"))
-          .select(col("doc_id").as("d1"), col("d2"),
-            (bit_count(col("h1").bitwiseXOR(col("h1b"))) +
-              bit_count(col("h2").bitwiseXOR(col("h2b")))).as("hamming"))
+        pairsWithin(chunks, "doc_id", Seq("c", "chunk"), Seq("hi", "lo"))
+          .select(col("d1"), col("d2"),
+            (bit_count(col("hi1").bitwiseXOR(col("hi2"))) +
+              bit_count(col("lo1").bitwiseXOR(col("lo2")))).as("hamming"))
           .filter(col("hamming") <= 3)
           .distinct()
           .orderBy("d1", "d2")

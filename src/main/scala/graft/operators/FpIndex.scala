@@ -144,10 +144,10 @@ object FpIndex {
     * consumers + the caller usually appends right after — O(batch)
     * state, the legitimate use of localCheckpoint the corpus-wide form
     * was not); the history leg shuffles ONLY the batch fingerprints
-    * into the index's bucket layout; the within-batch leg self-joins
-    * the batch (renamed projection — see [[BandIndex.probeIndex]] on
-    * why not as("a")/as("b") aliases); the islands window carries only
-    * the sparse foreign hits.
+    * into the index's bucket layout; the within-batch leg is the
+    * keep-first owner rule ([[Winnow.foreignHits]]: one grouped min per
+    * hash, no pair join); the islands window carries only the sparse
+    * foreign hits.
     *
     * `excludeBatchFromHistory` is the streaming REPLAY seam
     * ([[graft.streaming.WinnowIndexSink]]): if a prior attempt appended
@@ -192,10 +192,7 @@ object FpIndex {
           Seq("hist_id"), "left_anti")
       else histLeg0
     val histHits = histLeg.select("doc_id", "pos")
-    val bSide = bfp.select(col("doc_id").as("other"), col("h").as("b_h"))
-    val batchHits = bfp.join(bSide,
-        col("h") === col("b_h") && col("other") < col("doc_id"))
-      .select("doc_id", "pos")
+    val batchHits = Winnow.foreignHits(bfp)
     val foreign = histHits.unionByName(batchHits).distinct()
     Winnow.islandSpans(foreign)
   }

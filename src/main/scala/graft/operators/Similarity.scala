@@ -233,13 +233,9 @@ object Similarity {
         val bucket = array_join(
           transform(sequence(lit(1), lit(8), lit(1)),
             i => when(element_at(col("v"), i) >= 0, "1").otherwise("0")), "")
-        val e = emb(s, dir).withColumn("bucket", bucket)
-        val a = e.select(col("vec_id").as("d1"), col("v").as("v1"),
-          col("nrm").as("n1"), col("bucket").as("b1"))
-        val b = e.select(col("vec_id").as("d2"), col("v").as("v2"),
-          col("nrm").as("n2"), col("bucket").as("b2"))
-        a.join(b, col("b1") === col("b2") && col("d1") < col("d2"))
-          .withColumn("cos", dot(col("v1"), col("v2")) / (col("n1") * col("n2")))
+        Dedup.pairsWithin(emb(s, dir).withColumn("bucket", bucket),
+            "vec_id", Seq("bucket"), Seq("v", "nrm"))
+          .withColumn("cos", dot(col("v1"), col("v2")) / (col("nrm1") * col("nrm2")))
           .filter(col("cos") >= 0.4)
           .select("d1", "d2", "cos")
           .orderBy("d1", "d2")
@@ -355,12 +351,12 @@ object Similarity {
      * per-cell, never per-corpus. Cells reuse q42's fixed centroid rows
      * and argmax-cosine assignment (one broadcast crossJoin folded by a
      * map-side-combined max_by — no window over the corpus); the
-     * within-cell pair join is a renamed-projection self-join on cell id
-     * (one shuffle, and the aliased-self-join hazard class this round
-     * retired cannot arise). The keep rule is deterministic one-shot
-     * keep-first: a row is removed iff some SMALLER id in its cell sits
-     * at cosine >= tau — the non-iterative pruning SemDeDup itself uses
-     * (transitive chains stay, matching the paper's per-pair semantics).
+     * within-cell prune is [[Clustering.semdedupFrom]], shared with
+     * q104/q113 (one shuffle on cell id). The keep rule is
+     * deterministic one-shot keep-first: a row is removed iff some
+     * SMALLER id in its cell sits at cosine >= tau — the non-iterative
+     * pruning SemDeDup itself uses (transitive chains stay, matching
+     * the paper's per-pair semantics).
      *
      * Scale: at 100 TB the fixed rows become trainCentroids' k-means
      * cells and tau comes from a held-out sweep; machinery is identical.
@@ -380,24 +376,9 @@ object Similarity {
           .groupBy(col("vec_id"))
           .agg(max_by(struct(col("c_id"), col("v"), col("nrm")),
             struct(col("csim"), (-col("c_id")).as("nc"))).as("b"))
-          .select(col("vec_id"), col("b.c_id").as("c_id"),
+          .select(col("vec_id"), col("b.c_id").as("cid"),
             col("b.v").as("v"), col("b.nrm").as("nrm")), "q89:assignment")
-        val a = assigned.select(col("vec_id").as("d1"), col("v").as("v1"),
-          col("nrm").as("n1"), col("c_id").as("c1"))
-        val b = assigned.select(col("vec_id").as("d2"), col("v").as("v2"),
-          col("nrm").as("n2"), col("c_id").as("c2"))
-        val removed = a.join(b, col("c1") === col("c2") && col("d1") < col("d2"))
-          .withColumn("cos",
-            aggregate(zip_with(col("v1"), col("v2"), (x, y) => x * y),
-              lit(0.0), (acc, x) => acc + x) / (col("n1") * col("n2")))
-          .filter(col("cos") >= 0.3)
-          .groupBy(col("d2").as("vec_id"))
-          .agg(min(col("d1")).as("dup_of"))
-        assigned.select(col("vec_id"), col("c_id"))
-          .join(removed, Seq("vec_id"), "left")
-          .select(col("vec_id"), col("c_id"), col("dup_of"),
-            col("dup_of").isNull.as("kept"))
-          .orderBy("vec_id")
+        Clustering.semdedupFrom(assigned).withColumnRenamed("cid", "c_id")
       },
       Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
              |n AS (SELECT vec_id, v,

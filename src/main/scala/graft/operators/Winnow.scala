@@ -223,14 +223,22 @@ object Winnow {
     * feeds it the persisted index's rows restricted to the pipeline
     * stage's survivors, so ownership is decided among LIVE docs only.
     */
-  private[graft] def foreignSpansOf(fp: DataFrame): DataFrame = {
-    val own = fp.groupBy("h").agg(min(col("doc_id")).as("owner"))
-    val fhits = fp.join(own, "h")
-      .filter(col("doc_id") =!= col("owner"))
-      .select("doc_id", "pos")
-    islandSpans(fhits)
+  private[graft] def foreignSpansOf(fp: DataFrame): DataFrame =
+    islandSpans(foreignHits(fp))
       .select(col("doc_id"), col("span_start").as("s"),
         col("span_end").as("e"))
+
+  /** The keep-first owner rule over a (doc_id, pos, h) fingerprint
+    * frame: the (doc_id, pos) hits whose hash some SMALLER doc_id also
+    * carries, i.e. every doc but the hash's minimum-id owner. One
+    * grouped min and a join back, never a pair per two holders, so a
+    * hot hash costs linear, not quadratic, rows.
+    */
+  private[graft] def foreignHits(fp: DataFrame): DataFrame = {
+    val own = fp.groupBy("h").agg(min(col("doc_id")).as("owner"))
+    fp.join(own, "h")
+      .filter(col("doc_id") =!= col("owner"))
+      .select("doc_id", "pos")
   }
 
   /** Splice span ranges out of each doc's text — the apply half of

@@ -22,8 +22,8 @@ import graft.operators.Dedup
   *   - docs with < 3 tokens have NO shingles and an empty band-key
   *     array, so they explode to no rows and never reach the stateful
   *     operator: they carry no near-dup signal.
-  *   - a band key hotter than `hotKeyCap` WITHIN one micro-batch is
-  *     boilerplate by definition (same argument as [[Dedup.HotKeyCap]]);
+  *   - a band key hotter than [[Dedup.HotKeyCap]] WITHIN one
+  *     micro-batch is boilerplate by definition (the batch path's cap);
   *     its rows are dropped for that batch and it claims no state, so a
   *     degenerate band cannot funnel unbounded rows through one group.
   *   - state carries (representative, lastSeenMs) and expires after
@@ -63,9 +63,6 @@ object DedupStream {
     *        representative older than this no longer claims new
     *        arrivals, and idle band state is evicted once the watermark
     *        passes its deadline (default 24 h)
-    * @param hotKeyCap max distinct docs one band key may contribute per
-    *        micro-batch before the band is treated as boilerplate and
-    *        skipped (default [[Dedup.HotKeyCap]])
     * @param lateness watermark delay for out-of-order arrivals. Rows whose
     *        event time trails the watermark are dropped by the ENGINE
     *        before the stateful operator — with a zero delay any row that
@@ -85,7 +82,6 @@ object DedupStream {
       spark: SparkSession,
       docs: DataFrame,
       ttlMs: Long = 24L * 3600 * 1000,
-      hotKeyCap: Int = Dedup.HotKeyCap,
       lateness: String = "10 minutes"): DataFrame = {
     import spark.implicits._
     bandHits(docs.withWatermark("ts", lateness))
@@ -105,7 +101,7 @@ object DedupStream {
             // within one batch the iterator preserves no global order, so
             // the smallest doc_id claims an unclaimed band (deterministic)
             val batch = rows.map(_.doc_id).distinct.sorted
-            if (batch.size > hotKeyCap) {
+            if (batch.size > Dedup.HotKeyCap) {
               // boilerplate band this batch: no signal, no state claim
               // (existing state keeps its deadline and expires if idle)
               Iterator.empty

@@ -22,11 +22,31 @@ class DedupCapSpec extends SparkSpec {
     val keys = capped.select("sh").distinct().as[String].collect().toSet
     assert(keys == Set("unique rare shingle"))
 
-    val pairs = capped.as("x").join(capped.as("y"),
-        col("x.sh") === col("y.sh") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id"), col("y.doc_id"))
+    val pairs = Dedup.pairsWithin(capped, "doc_id", Seq("sh"))
     // without the cap: C(100,2) + 1 = 4951 pairs; with it: just (1,2)
     assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)))
+  }
+
+  test("pairsWithin emits each same-key pair once per shared key, ordered, with both payloads") {
+    // docs 1,2 share keys a and b (multiplicity 2); 3 shares a only;
+    // 4 and 5 have null keys and must not pair with anything
+    val rows = Seq[(Long, String, Int)]((1L, "a", 10), (2L, "a", 20),
+      (3L, "a", 30), (1L, "b", 10), (2L, "b", 20),
+      (4L, null, 40), (5L, null, 50))
+    val ex = rows.toDF("doc_id", "sh", "w")
+    val got = Dedup.pairsWithin(ex, "doc_id", Seq("sh"), Seq("w"))
+    assert(got.columns.toSeq == Seq("d1", "d2", "w1", "w2"))
+    assert(got.as[(Long, Long, Int, Int)].collect().toSeq.sorted ==
+      Seq((1L, 2L, 10, 20), (1L, 2L, 10, 20), (1L, 3L, 10, 30), (2L, 3L, 20, 30)))
+    // a self-pair never appears, even for a doc listed twice under a key
+    val twice = Seq((1L, "a"), (1L, "a"), (2L, "a")).toDF("doc_id", "sh")
+    assert(Dedup.pairsWithin(twice, "doc_id", Seq("sh"))
+      .as[(Long, Long)].collect().toSeq == Seq((1L, 2L), (1L, 2L)))
+    // multi-column keys pair only on ALL columns; string ids order by value
+    val multi = Seq(("s2", 0, "k"), ("s1", 0, "k"), ("s3", 1, "k"), ("s4", 0, "j"))
+      .toDF("source", "c", "chunk")
+    assert(Dedup.pairsWithin(multi, "source", Seq("c", "chunk"))
+      .as[(String, String)].collect().toSeq == Seq(("s1", "s2")))
   }
 
   test("connectedComponents labels every vertex with its component minimum") {

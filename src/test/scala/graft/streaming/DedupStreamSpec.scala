@@ -102,14 +102,14 @@ class DedupStreamSpec extends SparkSpec {
   test("a band key hotter than the cap is skipped for that batch") {
     implicit val sql = spark.sqlContext
     val stream = MemoryStream[(Long, String, Timestamp)]
-    // 4 identical docs in one batch: every band key has 4 docs > cap 2
+    // cap + 1 identical docs in one batch: every band key is too hot
     val q = DedupStream.nearDupFlags(
-        spark, stream.toDF().toDF("id", "text", "ts"), hotKeyCap = 2)
+        spark, stream.toDF().toDF("id", "text", "ts"))
       .writeStream.format("memory").queryName("neardup_hot")
       .outputMode("append").start()
     try {
-      stream.addData((1L, original, at("10:00")), (2L, original, at("10:00")),
-        (3L, original, at("10:00")), (4L, original, at("10:00")))
+      stream.addData((1L to Dedup.HotKeyCap + 1L).map(i =>
+        (i, original, at("10:00"))): _*)
       q.processAllAvailable()
       assert(spark.table("neardup_hot").isEmpty,
         "boilerplate-hot band must be skipped, not flagged")

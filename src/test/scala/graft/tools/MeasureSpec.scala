@@ -155,6 +155,16 @@ class MeasureSpec extends SparkSpec {
     assert(needles.forall(hits(_).nonEmpty))
   }
 
+  test("src/main emits within-frame pairs only through Dedup.pairsWithin") {
+    val needles = Seq("< col(\"d2\")", "< col(\"doc_id\")", "< col(\"vec_id\")",
+      "< col(\"source_b\")", ".as(\"x\").join(", "col(\"x.", "col(\"y.")
+    val found = needles.flatMap(hits)
+    val (primitive, rest) = found.partition(_.contains("graft/operators/Dedup.scala:"))
+    assert(rest.isEmpty, rest)
+    // the scan sees the primitive's own predicate, so the guard is not vacuous
+    assert(primitive.size == 1, found)
+  }
+
   test("src/main starts streams, gates and commits sink batches only in the sink lifecycle") {
     val needles = Seq(".writeStream", "alreadyServed(", "VersionedPointer.commit(")
     val rest = needles.flatMap(hits)
