@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
@@ -44,41 +45,42 @@ object GraftFunctions {
     udf((s: String) => if (s == null) None
     else Some(DetailsLib.extractDrugDetails(s)))
 
-  /** Registers every function in `spark`'s session once; a later call on
-    * the same session is a no-op (replacing a function logs a WARN per
-    * name, and the band-key and boilerplate paths call this per plan).
+  /** Native codegen Expressions (preferred on hot paths), by SQL name. */
+  private val natives: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_normalize_basic_native" -> (e => graft.expressions.NormalizeBasic(e.head)),
+    "graft_winnow_fingerprints" -> (e => graft.expressions.WinnowFingerprints(e.head)),
+    "graft_simhash_sig" -> (e => graft.expressions.SimHashSig(e.head)),
+    "graft_minhash_bands" -> (e => graft.expressions.MinHashBands(e.head)),
+    "graft_boilerplate_clean" -> (e => graft.expressions.BoilerplateClean(e.head)),
+    "graft_span_splice" -> (e => graft.expressions.SpanSplice(e(0), e(1))))
+
+  private val udfs: Seq[(String, UserDefinedFunction)] = Seq(
+    "graft_normalize_text" -> normalizeText,
+    "graft_normalize_basic" -> normalizeBasic,
+    "graft_slug_id" -> slugId,
+    "graft_clean_atc" -> cleanAtc,
+    "graft_parse_dose" -> parseDose,
+    "graft_normalize_dose_ratio" -> normalizeDoseRatio,
+    "graft_normalize_weight_to_mg" -> normalizeWeightToMg,
+    "graft_extract_drug_details" -> extractDrugDetails)
+
+  /** Every SQL name [[register]] defines. */
+  val names: Seq[String] = natives.map(_._1) ++ udfs.map(_._1)
+
+  /** Registers every function in `spark`'s session; a call on a session
+    * that already has every one of [[names]] is a no-op (replacing a
+    * function logs a WARN per name, and the band-key and boilerplate
+    * paths call this per plan). A session missing any name — one that
+    * registered an older list — gets the missing ones.
     */
-  def register(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        FunctionIdentifier("graft_extract_drug_details"))) {
-      // native codegen Expression (preferred on hot paths)
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_normalize_basic_native",
-        exprs => graft.expressions.NormalizeBasic(exprs.head),
-        "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_winnow_fingerprints",
-        exprs => graft.expressions.WinnowFingerprints(exprs.head),
-        "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_simhash_sig",
-        exprs => graft.expressions.SimHashSig(exprs.head),
-        "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_minhash_bands",
-        exprs => graft.expressions.MinHashBands(exprs.head),
-        "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_boilerplate_clean",
-        exprs => graft.expressions.BoilerplateClean(exprs.head),
-        "scala_udf")
-      spark.udf.register("graft_normalize_text", normalizeText)
-      spark.udf.register("graft_normalize_basic", normalizeBasic)
-      spark.udf.register("graft_slug_id", slugId)
-      spark.udf.register("graft_clean_atc", cleanAtc)
-      spark.udf.register("graft_parse_dose", parseDose)
-      spark.udf.register("graft_normalize_dose_ratio", normalizeDoseRatio)
-      spark.udf.register("graft_normalize_weight_to_mg", normalizeWeightToMg)
-      spark.udf.register("graft_extract_drug_details", extractDrugDetails)
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    def missing(name: String) = !reg.functionExists(FunctionIdentifier(name))
+    natives.filter(n => missing(n._1)).foreach { case (name, build) =>
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
     }
+    udfs.filter(u => missing(u._1)).foreach { case (name, f) =>
+      spark.udf.register(name, f)
+    }
+  }
 }

@@ -93,20 +93,18 @@ object BloomIndex {
       SketchExact.bloomTest(spark, bloom(spark, dir)), spark.table(ensure(spark, dir)))
   }
 
-  /** Per-doc benchmark-hit counts (doc_id, n_hit; docs without a hit
-    * absent) for ANY (doc_id, shs) frame — shared with the streaming
-    * [[graft.streaming.DecontamSink]], whose batches are not the full
+  /** Per-doc (doc_id, n_sh, n_hit) for EVERY doc of ANY (doc_id, shs)
+    * frame — [[Dedup.decontamCounts]] against the persisted index, one
+    * pass over the shingle arrays; shared with q115's s4 and the
+    * streaming [[graft.streaming.DecontamSink]] /
+    * [[graft.streaming.CurationSink]], whose batches are not the full
     * corpus.
     */
   def probeHitsOf(spark: SparkSession, dir: String,
-      shingled: DataFrame): DataFrame = {
-    val name = ensure(spark, dir)
-    val mightContain = SketchExact.bloomTest(spark, bloom(spark, dir))
-    shingled.select(col("doc_id"), explode(col("shs")).as("sh"))
-      .filter(mightContain(col("sh")))
-      .join(spark.table(name), Seq("sh"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-  }
+      shingled: DataFrame): DataFrame =
+    Dedup.decontamCounts(shingled,
+      SketchExact.bloomTest(spark, bloom(spark, dir)),
+      spark.table(ensure(spark, dir)))
 
   /** The full q53-equivalent report from the persisted index. */
   def probe(spark: SparkSession, dir: String): DataFrame =

@@ -454,52 +454,42 @@ object CurationPipeline {
     }
 
     // s3: char-span dedup apply (q108) from the PERSISTED FpIndex,
-    // ownership decided among the stage's survivors only
+    // ownership decided among the stage's survivors only: one per-doc
+    // span collect, one join to the stage corpus, one splice kernel
+    // call per doc (spliceClean reads the span frame once, so no pin)
     val fp = s.table(FpIndex.ensure(s, dir))
       .join(base3.select("doc_id"), "doc_id")
-    val alld = base3.select(col("doc_id"), trim(col("text")).as("tx"))
-      .withColumn("n", length(col("tx")))
-    val s3 = pinStage("s3") {
-      // pin the SMALL foreign-span frame: spliceClean consumes its
-      // spans argument in three branches (gap fills, tails, stats) and
-      // Catalyst re-evaluates the whole ownership-aggregate + islands
-      // subtree — which re-reads the fp index and re-joins the survivor
-      // set — once per branch when left lazy (the round-16 s3
-      // measurement; the verdictBatch splice pin is the same rule one
-      // layer up). Built inside the pinStage thunk so a lake-mode
-      // resume never pays it.
-      val spans = Pin(Winnow.foreignSpansOf(fp), s"$qtag:${pfx}s3")
-      base3.drop("text")
-        .join(Winnow.spliceClean(alld, spans), "doc_id")
-        .withColumnRenamed("clean_text", "text")
-    }
+    val s3 = pinStage("s3")(Winnow.spliceClean(
+        base3.withColumn("tx", trim(col("text"))).drop("text"),
+        Winnow.foreignSpansOf(fp))
+      .withColumnRenamed("clean_text", "text"))
 
     // s4: decontamination apply (q105) against the PERSISTED benchmark
-    // BloomIndex, shingles from the SPLICED texts
+    // BloomIndex, shingles from the SPLICED texts. One frame of
+    // (doc_id, n_sh, n_hit) for every doc (BloomIndex.probeHitsOf:
+    // explode_outer of the bloom-filtered shingle array, a left confirm
+    // join, one group), so the shingle subtree is evaluated once.
+    // NOTE (round 16, measured and REJECTED): an ObjectHashAggregate
+    // variant — bloom as a collect_list(when(mightContain...))
+    // projection inside one per-doc aggregate, confirm join over the
+    // collected candidates — doubled the stage's exec time (q137 ps4
+    // 5.6 -> 10.8 exec-s); the list building cost more than the
+    // duplicated shingling it removed. The one-frame shape here builds
+    // no list: it replaced the two-pass "n_sh + left join +
+    // coalesce(n_hit, 0)" shape, whose shingles ran twice: 7 jobs to 5
+    // per traced corpus_curation run (400 docs, 4 vCPUs), with the
+    // stage's time unchanged within noise (0.53-0.64 exec-s both ways).
     val shingled = s3
       .select(col("doc_id"), split(trim(col("text")), graft.core.Ws.Plus).as("t"))
       .select(col("doc_id"), Dedup.shinglesOf(col("t")).as("shs"))
-    // NOTE (round-16, measured and REJECTED): a one-pass
-    // (n_sh, n_hit) variant — explode carrying size(shs), bloom as a
-    // collect_list(when(mightContain...)) projection inside one per-doc
-    // aggregate, confirm join over the collected candidates — was built
-    // to stop the two consumers below re-evaluating the shingle subtree
-    // twice. The call-site profile showed the stage's exec time DOUBLING (q137
-    // ps4 5.6 -> 10.8 exec-s): the per-doc ObjectHashAggregate
-    // (list building, two final aggregate evaluations over the shared
-    // exchange) costs more than the duplicated split+trigram+distinct
-    // it removes, at every scale the stage was measured. The two-pass
-    // shape below is the measured winner — don't re-litigate blind.
-    val verdicts = shingled.select(col("doc_id"), size(col("shs")).as("n_sh"))
-      .join(BloomIndex.probeHitsOf(s, dir, shingled), Seq("doc_id"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
+    val verdicts = BloomIndex.probeHitsOf(s, dir, shingled)
       .filter(!(col("n_sh") > 0 &&
         col("n_hit").cast("double") / col("n_sh").cast("double") >= 0.2))
-    val s4 = pinStage("s4")(s3.join(verdicts.select("doc_id", "n_sh", "n_hit"), "doc_id"))
+    val s4 = pinStage("s4")(s3.join(verdicts, "doc_id"))
 
     // s5: LM-quality filter (q111), LM trained on THIS stage's corpus
     val s5 = pinStage("s5")(s4.join(
-      TextAnalysis.lmFilterKeptOf(s4.select("doc_id", "text"), s"$qtag:${pfx}s5")
+      TextAnalysis.lmFilterKeptOf(s4.select("doc_id", "text"))
         .select("doc_id", "avg_mn"),
       "doc_id"))
 

@@ -145,7 +145,7 @@ object FpIndex {
     * state, the legitimate use of localCheckpoint the corpus-wide form
     * was not); the history leg shuffles ONLY the batch fingerprints
     * into the index's bucket layout; the within-batch leg is the
-    * keep-first owner rule ([[Winnow.foreignHits]]: one grouped min per
+    * keep-first owner rule ([[Winnow.foreignHits]]: one window min per
     * hash, no pair join); the islands window carries only the sparse
     * foreign hits.
     *

@@ -123,23 +123,37 @@ object TextAnalysis {
     * on the spliced texts), identical scoring to the corpus queries.
     */
   private[operators] def bigramLmPerDocOf(d: DataFrame): DataFrame = {
-    // deliberately LAZY (no token pin): the four branches — c12, c1,
-    // vocab, scoring — duplicate the tokenize subtree, but they run as
-    // CONCURRENT single-job branches, and at bench scale that beats a
-    // serialized pin job by ~0.3 s (measured both ways this round;
-    // steady-state repeat runs: lazy 1.15 s vs all-pinned 1.55 s / one-pin
-    // 1.40 s on q111). The FROZEN-model path, which must pin the model
-    // anyway and scores eagerly, uses [[lmModelWords]] — there the pin
-    // is free and the pass reduction is pure win (q118 0.72x).
-    lmScoreAgainst(d, {
-      val big = lmBigrams(d)
-      LmModel(
-        big.groupBy("w1", "w2").agg(count(lit(1)).as("c12")),
-        big.groupBy("w1").agg(count(lit(1)).as("c1")),
-        lmWords(d).select(explode(col("ws")).as("w"))
-          .agg(countDistinct(col("w")).as("v")))
-    })
+    // two tokenize branches, no model joins: c1 and c12 are windows over
+    // the bigram instances under ONE exchange on w1 (hash(w1) also
+    // satisfies the (w1, w2) partitioning, and TransposeWindow keeps the
+    // w1 window below), so every instance carries its own counts; only
+    // the vocabulary size is a second, broadcast branch. The
+    // model-and-join form tokenized in four branches (c12, c1, vocab,
+    // scoring) and joined c12 and c1 back; a token pin lost to those
+    // lazy branches (round 16, q111: lazy 1.15 s vs all-pinned 1.55 s).
+    // In q115's s5 the window form runs 9 jobs where the join form ran
+    // 13, at the same stage wall within noise (0.77-0.93 s both ways,
+    // traced corpus_curation runs, 400 docs, 4 vCPUs).
+    // The FROZEN-model path, which must pin the model anyway and scores
+    // eagerly, uses [[lmModelWords]].
+    val vocab = lmWords(d).select(explode(col("ws")).as("w"))
+      .agg(countDistinct(col("w")).as("v"))
+    lmBigrams(d)
+      .withColumn("c1", count(lit(1)).over(Window.partitionBy("w1")))
+      .withColumn("c12", count(lit(1)).over(Window.partitionBy("w1", "w2")))
+      .crossJoin(broadcast(vocab))
+      .select(col("doc_id"), microNats(col("c12"), col("c1")).as("mn"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bigrams"), sum(col("mn")).as("lm_micro_nats"))
   }
+
+  /** One bigram's add-1-smoothed log-probability in micro-nats,
+    * `round(ln((c12 + 1) / (c1 + v)) * 1e6)` — `v` is the vocabulary
+    * column beside the counts.
+    */
+  private def microNats(c12: Column, c1: Column): Column =
+    round(log((c12 + 1).cast("double") / (c1 + col("v")).cast("double")) * 1e6)
+      .cast("long")
 
   /** The corpus bigram LM as a FREEZABLE model: add-1-smoothed counts
     * (c12 per bigram, c1 per head word, vocab size) — the generation
@@ -227,10 +241,8 @@ object TextAnalysis {
       .join(model.c12, Seq("w1", "w2"), "left")
       .join(model.c1, Seq("w1"), "left")
       .crossJoin(broadcast(model.vocab))
-      .select(col("doc_id"),
-        round(log((coalesce(col("c12"), lit(0L)) + 1).cast("double") /
-          (coalesce(col("c1"), lit(0L)) + col("v")).cast("double")) * 1e6)
-          .cast("long").as("mn"))
+      .select(col("doc_id"), microNats(coalesce(col("c12"), lit(0L)),
+        coalesce(col("c1"), lit(0L))).as("mn"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum(col("mn")).as("lm_micro_nats"))
 
@@ -245,24 +257,20 @@ object TextAnalysis {
     * scored survivors (doc_id, n_bigrams, lm_micro_nats, avg_mn) at or
     * above the exact 20th-percentile micro-nat cutoff; unscorable docs
     * (no bigrams) drop. The Spark twin of [[LmFilterCtes]], shared by
-    * q111 and q115; `pinName` names the scored pin after the stage
-    * that owns it.
+    * q111 and q115.
     */
-  private[operators] def lmFilterKeptOf(d: DataFrame, pinName: String): DataFrame = {
-    // pinned: the scored frame (3 longs per doc) feeds BOTH the exact
-    // percentile cutoff and the filter — lazy, the whole scoring
-    // pipeline (bigram explode + model joins + per-doc aggregate) ran
-    // twice, once per consumer
-    val scored = Pin(bigramLmPerDocOf(d)
+  private[operators] def lmFilterKeptOf(d: DataFrame): DataFrame =
+    // one consumer of the scoring pass: the exact cutoff is a window
+    // over the whole scored frame, so the same rows are filtered
+    // against it without a pin or a second scoring branch
+    bigramLmPerDocOf(d)
       .filter(col("n_bigrams") > 0)
-      .withColumn("avg_mn", expr("lm_micro_nats div n_bigrams")), pinName)
-    val cut = scored.agg(
-      expr("percentile_disc(0.2) WITHIN GROUP (ORDER BY avg_mn)").as("cut"))
-    scored.crossJoin(broadcast(cut))
+      .withColumn("avg_mn", expr("lm_micro_nats div n_bigrams"))
+      .withColumn("cut", expr(
+        "percentile_disc(0.2) WITHIN GROUP (ORDER BY avg_mn) OVER ()"))
       .filter(col("avg_mn") >= col("cut"))
       .select(col("doc_id"), col("n_bigrams"), col("lm_micro_nats"),
         col("avg_mn"))
-  }
 
   /** q111's scored/cutoff CTE tail (integer micro-nat average, exact
     * 20th-percentile cutoff) — appended after a [[bigramLmCteOver]]
@@ -846,14 +854,15 @@ object TextAnalysis {
      * the gate is >= cutoff, so kept-set membership is exact. Docs with
      * no bigrams are unscorable and dropped, stated rather than
      * defaulted. Scale shape: everything up to per_doc is q73's plan;
-     * the percentile runs over DOC-level rows (corpus-sublinear) and
-     * the cutoff rides a 1-row broadcast back onto the scored frame —
+     * the percentile runs over DOC-level rows (corpus-sublinear) as one
+     * window over the scored frame, so the cutoff and the gate read one
+     * scoring pass —
      * at a doc count where even doc-level exact percentile hurts, q70's
      * approx_percentile twin is the documented fallback.
      */
     QueryDef(
       "q111_lm_filter_apply",
-      (s, dir) => lmFilterKeptOf(docs(s, dir), "q111:scored").orderBy("doc_id"),
+      (s, dir) => lmFilterKeptOf(docs(s, dir)).orderBy("doc_id"),
       Some(BigramLmCte + LmFilterCtes +
         """
           |SELECT s.doc_id, s.n_bigrams, s.lm_micro_nats, s.avg_mn

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Pin, QueryDef, Tables}
+import graft.core.{QueryDef, Tables}
 
 /** Winnowing fingerprints and cross-document duplicate-span detection —
   * the char-level exact-substring layer of the dedup family, between
@@ -231,57 +231,39 @@ object Winnow {
   /** The keep-first owner rule over a (doc_id, pos, h) fingerprint
     * frame: the (doc_id, pos) hits whose hash some SMALLER doc_id also
     * carries, i.e. every doc but the hash's minimum-id owner. One
-    * grouped min and a join back, never a pair per two holders, so a
-    * hot hash costs linear, not quadratic, rows.
+    * window min per hash, never a pair per two holders, so a hot hash
+    * costs linear, not quadratic, rows — and the frame is read once
+    * (a grouped min joined back read it twice: two scans of the
+    * h-bucketed index in q108 and q115's s3).
     */
-  private[graft] def foreignHits(fp: DataFrame): DataFrame = {
-    val own = fp.groupBy("h").agg(min(col("doc_id")).as("owner"))
-    fp.join(own, "h")
+  private[graft] def foreignHits(fp: DataFrame): DataFrame =
+    fp.withColumn("owner", min(col("doc_id")).over(Window.partitionBy("h")))
       .filter(col("doc_id") =!= col("owner"))
       .select("doc_id", "pos")
-  }
 
   /** Splice span ranges out of each doc's text — the apply half of
-    * q108, shared with the streaming [[graft.streaming.WinnowIndexSink]]
-    * so batch and stream splice identically. `alld` is (doc_id, tx, n)
-    * covering EVERY doc (spanless docs pass through unchanged); `spans`
-    * is (doc_id, s, e) char ranges. Kept pieces re-join in order via
-    * array_sort(collect_list) — pieces per doc are bounded by spans+1.
-    * Output: (doc_id, n_spans, n_chars_removed, clean_text).
+    * q108, shared with q115's s3 and the streaming
+    * [[graft.streaming.WinnowIndexSink]] / [[graft.streaming.CurationSink]]
+    * so batch and stream splice identically. `docs` carries `doc_id`
+    * and the trimmed text `tx` of EVERY doc (spanless docs pass through
+    * unchanged) plus any columns to carry; `spans` is (doc_id, s, e)
+    * char ranges. One narrow pass: each doc's spans are collected into
+    * one array (spans per doc are few — islands are > [[G]] apart), one
+    * left join brings them to their doc, and one
+    * [[graft.expressions.SpanSplice]] call per doc splices. Output:
+    * `docs`' columns without `tx`, then (n_spans, n_chars_removed,
+    * clean_text).
     */
-  private[graft] def spliceClean(alld: DataFrame, spans: DataFrame): DataFrame = {
-    val wspan = Window.partitionBy("doc_id").orderBy("s")
-    val pre = spans
-      .withColumn("ks", coalesce(lag(col("e"), 1).over(wspan), lit(0L)) + 1L)
-      .withColumn("ke", col("s") - 1L)
-      .select("doc_id", "ks", "ke")
-    val tailP = spans.groupBy("doc_id")
-      .agg((max(col("e")) + 1L).as("ks"))
-      .join(alld.select(col("doc_id"), col("n").cast("long").as("ke")),
-        "doc_id")
-      .select("doc_id", "ks", "ke")
-    val cleaned = pre.unionByName(tailP)
-      .filter(col("ke") >= col("ks"))
-      .join(alld.select("doc_id", "tx"), "doc_id")
-      .select(col("doc_id"), col("ks"),
-        expr("substring(tx, cast(ks as int), cast(ke - ks + 1 as int))")
-          .as("piece"))
-      .groupBy("doc_id")
-      .agg(array_join(
-        expr("transform(array_sort(collect_list(struct(ks, piece))), x -> x.piece)"),
-        "").as("ct"))
-    val stats = spans.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_spans"),
-        sum(col("e") - col("s") + 1L).as("n_removed"))
-    alld
-      .join(stats, Seq("doc_id"), "left")
-      .join(cleaned, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-        coalesce(col("n_removed"), lit(0L)).as("n_chars_removed"),
-        coalesce(col("ct"),
-          when(col("n_spans").isNull, col("tx")).otherwise(lit("")))
-          .as("clean_text"))
+  private[graft] def spliceClean(docs: DataFrame, spans: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    val perDoc = spans.groupBy("doc_id").agg(collect_list(
+      struct(col("s").cast("long").as("s"), col("e").cast("long").as("e")))
+      .as("spans"))
+    val carried = docs.columns.filterNot(_ == "tx").map(col).toSeq
+    docs.join(perDoc, Seq("doc_id"), "left")
+      .select(carried :+
+        call_function("graft_span_splice", col("tx"), col("spans")).as("c"): _*)
+      .select(carried :+ col("c.*"): _*)
   }
 
   /** Shared oracle prefix: the winnowed fingerprint set as CTE `sel`.
@@ -491,8 +473,8 @@ object Winnow {
      * is FOREIGN iff its doc is not the owner; foreign hits island into
      * spans (q107's gaps-and-islands over the SPARSE foreign set) and
      * each doc's foreign spans are spliced out of its text, kept pieces
-     * re-joined in order (the q37/q77 array_sort(collect_list) pattern —
-     * pieces per doc are bounded by spans+1). Owner docs keep their
+     * re-joined in order (one [[graft.expressions.SpanSplice]] call per
+     * doc over its collected spans). Owner docs keep their
      * text, so every duplicated region survives exactly once. Output is
      * the post-dedup corpus with evidence columns (n_spans,
      * n_chars_removed) and the spliced text itself hash-pinned by the
@@ -501,16 +483,12 @@ object Winnow {
     QueryDef(
       "q108_span_dedup_apply",
       (s, dir) => {
-        // same index-backed shape as q107: the ownership aggregate
-        // (min doc_id per h) and the join-back both run exchange-free
-        // on the bucketed scan. The span frame is pinned because
-        // spliceClean consumes it in three branches (gap fills, tails,
-        // stats) — lazy, the exchange-free-but-real detect subtree
-        // re-ran per branch (18 scans in the pre-round-16 plan; 3
-        // detect evaluations → 1)
+        // same index-backed shape as q107: the ownership rule runs
+        // exchange-free on the bucketed scan, and spliceClean reads the
+        // span frame once (one per-doc collect), so it needs no pin
         val fp = s.table(FpIndex.ensure(s, dir))
-        spliceClean(trimmed(s, dir),
-          Pin(foreignSpansOf(fp), "q108:spans")).orderBy("doc_id")
+        spliceClean(trimmed(s, dir).drop("n"), foreignSpansOf(fp))
+          .orderBy("doc_id")
       },
       Some(SelCte + alldCteOver("documents") + SpanApplyCtes +
         """

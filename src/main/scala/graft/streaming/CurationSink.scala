@@ -114,10 +114,13 @@ object CurationSink {
     *
     * The spliced frame is pinned: it is consumed by THREE downstream
     * branches (the decontam shingles, the LM scoring, and the final
-    * evidence join); left lazy, Catalyst evaluated the whole splice
-    * subtree — windows, span joins, text reassembly — once per branch
-    * (the round-16 measurement: q118's two verdict materializations
-    * were 56% of its executor time, ~2/3 of that re-splicing).
+    * evidence join); left lazy, Catalyst evaluates the splice subtree
+    * — span collect, doc join, kernel — once per branch (the round-16
+    * measurement, taken on the older relational splice: q118's two
+    * verdict materializations were 56% of its executor time, ~2/3 of
+    * that re-splicing). Decontam is one frame with `n_sh` and `n_hit`
+    * for every doc ([[BloomIndex.probeHitsOf]]), so the shingles are
+    * built once per batch.
     *
     * The fingerprint rows are returned so the probe→verdict→APPEND
     * callers ([[applyBatch]], [[graft.streaming.MultimodalCurationSink]],
@@ -136,27 +139,20 @@ object CurationSink {
     val spans = spans0
       .select(col("doc_id"), col("span_start").as("s"),
         col("span_end").as("e"))
-    val alld = docs
-      .select(col("doc_id"), trim(col("text")).as("tx"))
-      .withColumn("n", length(col("tx")))
-    val cleaned = Pin(Winnow.spliceClean(alld, spans), "CurationSink.splice")
+    val cleaned = Pin(Winnow.spliceClean(
+        docs.select(col("doc_id"), trim(col("text")).as("tx")), spans),
+      "CurationSink.splice")
     val cleanDocs = cleaned.select(col("doc_id"),
       col("clean_text").as("text"))
     // s4: decontam verdict on the SPLICED text (q115's stage order)
-    // against the stationary benchmark index
+    // against the stationary benchmark index — one frame of
+    // (doc_id, n_sh, n_hit) for every doc, the shingles evaluated once
     val shingled = cleanDocs
       .select(col("doc_id"),
         split(trim(col("text")), graft.core.Ws.Plus).as("t"))
       .select(col("doc_id"), Dedup.shinglesOf(col("t")).as("shs"))
-    // two consumers of `shingled` (n_sh + the probe's explode) — the
-    // one-pass aggregate variant was measured SLOWER (see the chain-s4
-    // note in [[graft.operators.CurationPipeline]]); keep the two-pass
-    // shape
-    val dec = shingled.select(col("doc_id"),
-        size(col("shs")).cast("long").as("n_sh"))
-      .join(BloomIndex.probeHitsOf(spark, benchDir, shingled),
-        Seq("doc_id"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
+    val dec = BloomIndex.probeHitsOf(spark, benchDir, shingled)
+      .withColumn("n_sh", col("n_sh").cast("long"))
     // s5: LM gate on the spliced text against the FROZEN model
     val lm = TextAnalysis.lmScoreAgainst(cleanDocs, art.lm)
       .withColumn("avg_mn", expr("lm_micro_nats div n_bigrams"))

@@ -62,11 +62,7 @@ object DecontamSink {
       val shingled = batch.select(docSchema.fieldNames.map(col): _*)
         .select(col("doc_id"),
           Dedup.shinglesOf(split(trim(col("text")), Ws.Plus)).as("shs"))
-      val hits = BloomIndex.probeHitsOf(spark, benchDir, shingled)
-      val verdicts = shingled
-        .select(col("doc_id"), size(col("shs")).as("n_sh"))
-        .join(hits, Seq("doc_id"), "left")
-        .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
+      val verdicts = BloomIndex.probeHitsOf(spark, benchDir, shingled)
         .withColumn("admit", !(col("n_sh") > 0 &&
           col("n_hit").cast("double") / col("n_sh").cast("double") >= 0.2))
         .withColumn("batch_id", lit(batchId))

@@ -70,14 +70,12 @@ object WinnowIndexSink {
       val spans = spans0
         .select(col("doc_id"), col("span_start").as("s"),
           col("span_end").as("e"))
-      val alld = docs
-        .select(col("doc_id"), trim(col("text")).as("tx"))
-        .withColumn("n", length(col("tx")))
       // probeSpans eagerly pins its (small) span result, so the splice
       // below reads only the stable batch source + the pinned spans —
       // the append cannot perturb it; both pins are released when the
       // scope closes, so no batch-sized state outlives this call
-      val out = Winnow.spliceClean(alld, spans)
+      val out = Winnow.spliceClean(
+          docs.select(col("doc_id"), trim(col("text")).as("tx")), spans)
         .withColumn("batch_id", lit(batchId))
       FpIndex.appendRows(spark, indexName, bfp)
       Seq(out)

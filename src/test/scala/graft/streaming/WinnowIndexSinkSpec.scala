@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{FpIndex, Winnow}
+import graft.operators.{FpIndex, RelationalSplice, Winnow}
 
 /** The continuous char-dedup sink: micro-batch cleaned docs must equal
   * the batch maintenance loop (probe → splice → append per batch,
@@ -53,7 +53,7 @@ class WinnowIndexSinkSpec extends SparkSpec {
       .select(col("doc_id"), col("span_start").as("s"), col("span_end").as("e"))
     val alld = df.select(col("doc_id"), trim(col("text")).as("tx"))
       .withColumn("n", length(col("tx")))
-    val out = cleanMap(Winnow.spliceClean(alld, spans).localCheckpoint(true))
+    val out = cleanMap(RelationalSplice.spliceClean(alld, spans).localCheckpoint(true))
     FpIndex.append(spark, name, df)
     out
   }

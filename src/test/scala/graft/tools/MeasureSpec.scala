@@ -165,6 +165,19 @@ class MeasureSpec extends SparkSpec {
     assert(primitive.size == 1, found)
   }
 
+  test("src/main splices spans only through the SpanSplice kernel") {
+    // the relational splice (lag window over the spans, gap/tail piece
+    // union, array_sort(collect_list) reassembly) lives only in the
+    // test oracle, RelationalSplice
+    val needles = Seq("lag(col(\"e\")", "struct(ks, piece)",
+      "col(\"ke\") >= col(\"ks\")")
+    val found = needles.flatMap(hits)
+    assert(found.isEmpty, found)
+    // the scan sees the kernel's one call site, so the guard is not vacuous
+    val calls = hits("\"graft_span_splice\"")
+    assert(calls.exists(_.contains("graft/operators/Winnow.scala:")), calls)
+  }
+
   test("src/main starts streams, gates and commits sink batches only in the sink lifecycle") {
     val needles = Seq(".writeStream", "alreadyServed(", "VersionedPointer.commit(")
     val rest = needles.flatMap(hits)
